@@ -241,15 +241,7 @@ object Scale {
     val maxScale = only.getOrElse(scaleArg.toInt)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     val load0 = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     // sf0.1 ships 5k docs / 2k vectors — that is scale x1

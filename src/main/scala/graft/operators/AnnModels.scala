@@ -1,135 +1,464 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, sum}
 
-/** Train-once registry for the ANN model relations (the IVF coarse
-  * centroids and the PQ codebook): Lloyd's runs at most once per
-  * (dataset, training constants) and the result persists as a parquet
-  * artifact; every later consumer — `sim_ann_ivf`, `sim_ann_pq`,
-  * `sim_ann_ivfpq`, `dedup_semantic`, `dedup_semantic_keep` — reads the
-  * artifact instead of re-training inside its own query. This is the
-  * deployment shape (a production pipeline trains a quantizer once and
-  * serves it for months), and it mirrors the persisted-index template
-  * `dedup_incremental_lsh` established for LSH signatures.
+import graft.sources.Tables
+
+/** The model registry: every per-corpus product the engine trains or
+  * builds once and serves to all later consumers (IVF/PQ quantizers, LMs,
+  * quality gates, dedup pair and label relations, tokenizer outputs,
+  * curation and build manifests).
   *
-  * Correctness is unchanged: training is deterministic on the 1/1024
-  * integer grid (see `Similarity.ivfParts`'s determinism note) and
-  * parquet round-trips IEEE doubles bit-exactly, so an artifact-served
-  * query is bit-identical to an inline-trained one (spec-asserted) and
-  * the DuckDB oracle — which replays training from scratch — still
-  * matches.
+  * The registry is ONE declarative table. Each [[Artifact]] names its own
+  * constants and its dependencies — other artifacts, shared constant
+  * groups ([[Consts]]) and source tables ([[Source]]). Its store key is
+  * hash(dataset dir, name, own constants, the keys of its deps)
+  * ([[keyOf]]), so editing any constant re-keys — and so retrains —
+  * exactly the artifacts downstream of it. The corpus fingerprint that
+  * gates serving covers the union of the source tables its deps reach.
   *
-  * Artifact root: `$SPARK_GRAFT_MODEL_DIR` when set (the cross-run
-  * deployment store), else a per-application temp directory (hermetic
-  * for tests/verify runs). Artifact names key on the dataset dir and the
-  * training constants ONLY — stable across corpus edits — while a
-  * freshness fingerprint of the backing table's files is stored INSIDE
-  * the artifact (the `_GRAFT_COMPLETE` marker, written last). A probe
-  * serves the artifact only when the marker exists AND its fingerprint
-  * matches the corpus's current one, so neither a constant bump nor an
-  * in-place corpus mutation serves a stale model. A retrain writes a
-  * NEW generation subdirectory under the same key and collects all but
-  * the previous one — a long-lived store holds at most TWO copies per
-  * (dataset, constants) regardless of how often the corpus mutates
-  * (ADVICE r10's unbounded growth, closed without the in-place
-  * overwrite that would break DataFrame handles live consumers still
-  * hold: a held handle stays readable across one retrain). All path
-  * probes go through the Hadoop FileSystem for the path's scheme — an
-  * object-store root works the same as a local one.
-  *
-  * Concurrency: training and generation GC are serialized per JVM
-  * (`synchronized`); the store assumes a SINGLE WRITER process (the
-  * deployment shape — one nightly driver owns the registry). Concurrent
-  * writer processes sharing one SPARK_GRAFT_MODEL_DIR would race the
-  * GC against each other's in-flight generation writes; readers-only
-  * sharing is safe (they touch committed generations, which survive one
-  * further retrain).
+  * Store protocol: `<root>/<name>-<key>/g-<fp-hash>[-k]/` holds one
+  * generation; `_GRAFT_COMPLETE` (written last, by rename) records the
+  * corpus fingerprint and the serving generation. A probe serves
+  * lock-free iff the marker matches the corpus's current fingerprint;
+  * otherwise the artifact trains under the JVM-wide monitor into a fresh
+  * generation, and GC keeps the current and the previous one (a held
+  * DataFrame survives one retrain). Root: `$SPARK_GRAFT_MODEL_DIR`, else a
+  * per-application temp dir. The store assumes a single writer process.
+  * Served relations are bit-identical to their builds (integer or exact
+  * double columns; parquet round-trips them exactly), which is what lets
+  * the DuckDB oracle replay training from scratch.
   */
 object AnnModels {
 
-  /** Training-run counters (spec-asserted: an existing artifact means
-    * ZERO additional training passes across all consumers). */
-  @volatile private[graft] var ivfTrains = 0
-  @volatile private[graft] var pqTrains = 0
-  @volatile private[graft] var lmTrains = 0
-  @volatile private[graft] var lm5Trains = 0
-  @volatile private[graft] var ppl5ScoreTrains = 0
-  @volatile private[graft] var langidTrains = 0
-  @volatile private[graft] var bpeTrains = 0
-  @volatile private[graft] var bpeBigTrains = 0
-  @volatile private[graft] var qualityTrains = 0
-  @volatile private[graft] var ingestGateTrains = 0
-  @volatile private[graft] var lshIndexBuilds = 0
-  @volatile private[graft] var phashIndexBuilds = 0
-  @volatile private[graft] var phashLabelBuilds = 0
-  @volatile private[graft] var audioLabelBuilds = 0
-  @volatile private[graft] var qualityLogitTrains = 0
-  @volatile private[graft] var trainedMarginTrains = 0
-  @volatile private[graft] var shinglePairBuilds = 0
-  @volatile private[graft] var pplScoreTrains = 0
+  /** A node of the registry's dependency graph. */
+  sealed trait Node {
+    def name: String
+    def deps: Seq[Node]
+  }
 
-  @volatile private[graft] var lrGateTrains = 0
-  @volatile private[graft] var verifiedPairBuilds = 0
-  @volatile private[graft] var survivorBuilds = 0
-  @volatile private[graft] var tokenTotalTrains = 0
-  @volatile private[graft] var dsirTrains = 0
-  @volatile private[graft] var alignScoreTrains = 0
-  @volatile private[graft] var ivfAssignTrains = 0
-  @volatile private[graft] var pqCodeTrains = 0
-  @volatile private[graft] var hammingDegenTrains = 0
-  @volatile private[graft] var hammingPairTrains = 0
-  @volatile private[graft] var lrMarginTrains = 0
-  @volatile private[graft] var ftMarginTrains = 0
-  @volatile private[graft] var uniTrains = 0
-  @volatile private[graft] var semanticLabelTrains = 0
-  @volatile private[graft] var funnelFlagBuilds = 0
-  @volatile private[graft] var knnGraphBuilds = 0
-  @volatile private[graft] var uniBigTrains = 0
-  @volatile private[graft] var langidScoreBuilds = 0
-  @volatile private[graft] var qualityScoreBuilds = 0
-  @volatile private[graft] var candPairBuilds = 0
-  @volatile private[graft] var candLabelBuilds = 0
-  @volatile private[graft] var gopherFlagBuilds = 0
-  @volatile private[graft] var dirtyGramBuilds = 0
-  @volatile private[graft] var calibKeepBuilds = 0
-  @volatile private[graft] var candSigBuilds = 0
-  @volatile private[graft] var candGramCountBuilds = 0
-  @volatile private[graft] var calibManifestBuilds = 0
-  @volatile private[graft] var buildManifestBuilds = 0
-  @volatile private[graft] var trainedManifestBuilds = 0
-  @volatile private[graft] var lrManifestBuilds = 0
-  @volatile private[graft] var bpeDocTokenBuilds = 0
-  @volatile private[graft] var trainedDocTokenBuilds = 0
-  @volatile private[graft] var trainedBigDocTokenBuilds = 0
-  @volatile private[graft] var bpeIdStreamBuilds = 0
-  @volatile private[graft] var bpeIdStreamBigBuilds = 0
-  @volatile private[graft] var dsirScoredBuilds = 0
-  @volatile private[graft] var substrStatBuilds = 0
-  @volatile private[graft] var dupStartBuilds = 0
-  @volatile private[graft] var boilerTopBuilds = 0
-  @volatile private[graft] var embedPairBuilds = 0
-  @volatile private[graft] var bandedPairBuilds = 0
-  @volatile private[graft] var resampleBuilds = 0
-  @volatile private[graft] var srcStatBuilds = 0
-  @volatile private[graft] var curateBuilds = 0
-  @volatile private[graft] var curateModelBuilds = 0
-  @volatile private[graft] var curateNearDupBuilds = 0
-  @volatile private[graft] var curateSemanticBuilds = 0
-  @volatile private[graft] var curateAlignedBuilds = 0
-  @volatile private[graft] var curateSourceBuilds = 0
-  @volatile private[graft] var bpeStaticVocabBuilds = 0
-  @volatile private[graft] var bpeStaticIdStreamBuilds = 0
-  @volatile private[graft] var bpeDecodeAuditBuilds = 0
-  @volatile private[graft] var interleaveOrderBuilds = 0
-  @volatile private[graft] var curriculumOrderBuilds = 0
+  /** A source table of the dataset dir: fingerprinted, never keyed on content. */
+  final case class Source(table: String) extends Node {
+    def name: String = table
+    def deps: Seq[Node] = Nil
+  }
 
-  /** The trigram LM's training constants, inlined into every key that
-    * depends on the LM's output (the registry's key discipline: change a
-    * constant → new key → retrain; an opaque version tag would let a
-    * persistent store serve stale-coefficient scores silently). */
-  private val LmParams = "n=3,i=500/375/125"
-  private val Lm5Params = "n=5,kn,d=1/2"
+  /** A named constant group. `material` renders the constants an artifact's
+    * content depends on; corpus-derived ones (the auto-sized IVF and graph
+    * geometries) read the dataset through fingerprint-keyed memos. */
+  final class Consts(val name: String, val deps: Seq[Node],
+      val material: (SparkSession, String) => String) extends Node
+
+  private def consts(name: String, deps: Node*)(material: => String): Consts =
+    new Consts(name, deps, (_, _) => material)
+
+  private def hashOf(material: String): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    md.digest(material.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+  }
+
+  /** Every artifact, in declaration (= dependency) order. */
+  private val registered = scala.collection.mutable.ArrayBuffer.empty[Artifact]
+  private[graft] def table: Seq[Artifact] = registered.toSeq
+
+  /** The build record: committed-or-attempted writes per artifact name. */
+  private val buildCounts = new ConcurrentHashMap[String, Integer]()
+  private[graft] def builds(name: String): Int = buildCounts.getOrDefault(name, 0)
+
+  /** (building artifact, artifact it served) pairs observed during builds —
+    * what a build actually reads, to check against its declared deps. */
+  private val observed = ConcurrentHashMap.newKeySet[(String, String)]()
+  private[graft] def readsWhileBuilding: Set[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    observed.asScala.toSet
+  }
+  private val building = new ThreadLocal[List[String]] {
+    override def initialValue(): List[String] = Nil
+  }
+
+  /** One registry entry. `apply(s, dir)` serves it, building it first when
+    * no fresh generation exists. Its own constants render at key time, like
+    * a constant group's material. */
+  sealed abstract class Artifact(val name: String, ownConsts: => String,
+      val deps: Seq[Node]) extends Node {
+    def consts: String = ownConsts
+
+    require(deps.forall(_ != null), s"$name: a dep is declared after it")
+    require(!registered.exists(_.name == name), s"duplicate artifact $name")
+    registered += this
+
+    /** This artifact's entry in the build record. */
+    def builds: Int = AnnModels.builds(name)
+
+    /** The source tables this artifact's content derives from. */
+    lazy val tables: Seq[String] =
+      closure(this).toSeq.collect { case Source(t) => t }.sorted
+
+    protected def serve(s: SparkSession, dir: String)(write: Path => Unit): Path = {
+      building.get.headOption.foreach(b => observed.add((b, name)))
+      val p = new Path(root(s), s"$name-${keyOf(this, dir, c => c.material(s, dir))}")
+      ensureGen(s, p, dir, tables.mkString(","), name)(write)
+    }
+  }
+
+  /** A single-relation artifact. `build` computes it; one-file models set
+    * `coalesce1`, corpus-sized relations keep their partitioning. */
+  final class Relation(name: String, consts: => String, deps: Seq[Node],
+      coalesce1: Boolean, val build: (SparkSession, String) => DataFrame)
+      extends Artifact(name, consts, deps) {
+    def apply(s: SparkSession, dir: String): DataFrame =
+      s.read.parquet(serve(s, dir) { genDir =>
+        val out = build(s, dir)
+        (if (coalesce1) out.coalesce(1) else out)
+          .write.mode("overwrite").parquet(genDir.toString)
+      }.toString)
+  }
+
+  /** A multi-relation artifact: `write` fills one subdirectory per part of
+    * the generation dir, so all parts commit under one marker. */
+  final class Parts(name: String, consts: => String, deps: Seq[Node],
+      val parts: Seq[String], val write: (SparkSession, String, Path) => Unit)
+      extends Artifact(name, consts, deps) {
+    def apply(s: SparkSession, dir: String): IndexedSeq[DataFrame] = {
+      val gen = serve(s, dir)(write(s, dir, _))
+      parts.map(part => s.read.parquet(new Path(gen, part).toString)).toIndexedSeq
+    }
+  }
+
+  private def Artifact(name: String, consts: => String, deps: Seq[Node],
+      coalesce1: Boolean = false)(build: (SparkSession, String) => DataFrame): Relation =
+    new Relation(name, consts, deps, coalesce1, build)
+
+  private def Parts(name: String, consts: => String, deps: Seq[Node], parts: String*)(
+      write: (SparkSession, String, Path) => Unit): Parts =
+    new Parts(name, consts, deps, parts, write)
+
+  /** `n` and everything it reaches through deps. */
+  private[graft] def closure(n: Node): Set[Node] =
+    n.deps.foldLeft(Set[Node](n))((acc, d) => acc ++ closure(d))
+
+  /** THE key function: hash(dir, name, own constants, deps' keys) for an
+    * artifact, hash(name, material, deps' keys) for a constant group. Pure
+    * in `material`, the seam the key spec substitutes. */
+  private[graft] def keyOf(node: Node, dir: String, material: Consts => String): String = {
+    val memo = scala.collection.mutable.HashMap.empty[Node, String]
+    def k(n: Node): String = memo.get(n) match {
+      case Some(v) => v
+      case None =>
+        val depKeys = n.deps.map(k).mkString(",")
+        val v = n match {
+          case Source(t) => t
+          case c: Consts => hashOf(s"${c.name}|${material(c)}|$depKeys")
+          case a: Artifact => hashOf(s"$dir|${a.name}|${a.consts}|$depKeys")
+        }
+        memo(n) = v
+        v
+    }
+    k(node)
+  }
+
+  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
+
+  private def writePart(df: DataFrame, genDir: Path, part: String): Unit =
+    df.write.mode("overwrite").parquet(new Path(genDir, part).toString)
+
+  // --- sources and shared constant groups --------------------------------
+
+  val Docs: Source = Source("documents")
+  val Emb: Source = Source("embeddings")
+
+  val Lm: Consts = consts("lm")("n=3,i=500/375/125")
+  val Lm5: Consts = consts("lm5")("n=5,kn,d=1/2")
+  val GopherRules: Consts = consts("gopher")(
+    s"rules=${hashOf(TextOps.gopherSql)},stop=${TextOps.GopherStop.mkString(",")}")
+  val GopherSeed: Consts = consts("seed", GopherRules)(s"min=${TextOps.QualitySeedMinFlags}")
+  val Markers: Consts = consts("markers")(
+    hashOf(TextOps.Markers.map { case (l, ws) => l + ":" + ws.mkString(",") }.mkString(";")))
+  val Stopwords: Consts = consts("stopwords", Markers)(hashOf(TextOps.AllStopwords.mkString(",")))
+  val QualityCoef: Consts = consts("qcoef", Stopwords)(
+    Seq(TextOps.QmBias, TextOps.QmStop, TextOps.QmRepUni, TextOps.QmRep3,
+      TextOps.QmPunct, TextOps.QmNll, TextOps.QmLenPerTok).mkString("/") +
+      s"x${TextOps.QmLenCap}")
+  val QualityFeatures: Consts = consts("qfeat", Stopwords)(
+    s"${TextOps.QualityFeatNames.mkString(",")},cap=${TextOps.QmLenCap}")
+  val LrFit: Consts = consts("lrfit")(
+    s"k=${TextOps.QualityLrIters},eta=${TextOps.QualityLrEtaNum}/${TextOps.QualityLrEtaDen}," +
+      "ctr=mean-clamp1e4,half=even")
+  val Minhash: Consts = consts("minhash")(
+    s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},cap=${Dedup.MaxBucket}")
+  val Hamming: Consts = consts("hamming")(
+    s"ham=${Dedup.MaxHamming},cap=${Dedup.MaxBucket},share=${Dedup.DegenShare}," +
+      s"blocks=${Dedup.BlockLayout}")
+  val Substr: Consts = consts("substr")(s"w=${Dedup.SubstrGram},h=xx64")
+  val Cosine: Consts = consts("cosine")(s"cap=${Dedup.LabelCap},cos=${Dedup.CosineThreshold}")
+  val IvfGeom: Consts = new Consts("ivfgeom", Seq(Emb), (s, dir) =>
+    s"i=${Similarity.KMeansIters},m=${Similarity.TrainMod},k=${Similarity.ivfK(s, dir)}")
+  val PqGeom: Consts = consts("pqgeom")(
+    s"i=${Similarity.PqIters},m=${Similarity.TrainMod},k=${Similarity.PqCentroids}," +
+      s"s=${Similarity.PqSubspaces}x${Similarity.PqSubDims}")
+  val GraphGeom: Consts = new Consts("graphgeom", Seq(Emb), { (s, dir) =>
+    val (tables, planes) = Similarity.graphSize(s, dir)
+    s"t=$tables,p=$planes,cap=${Similarity.GraphBucketCap},k=${Similarity.GraphK}," +
+      s"target=${Similarity.GraphSizeTarget}"
+  })
+  val BpeStatic: Consts = consts("bpestatic")(
+    hashOf(TextOps.BpeMerges.map(p => p._1 + "+" + p._2).mkString(";")))
+  val Pack: Consts = consts("pack")(
+    s"ntok=ws,pb=${Pipeline.PackBlock},ctx=${Pipeline.CtxTokens}")
+  val Shuffle: Consts = consts("shuffle")(s"sb=${Pipeline.ShuffleBlock},h=md5h64")
+  val CurateGates: Consts = consts("curate")(s"lang=en,q=${Pipeline.QualityThreshold},ex=md5min")
+
+  // --- embeddings: quantizers, assignments, pair and label relations -----
+
+  val ivfCentroids: Relation = Artifact("ivf", "", Seq(Emb, IvfGeom), coalesce1 = true)(
+    (s, dir) => Similarity.trainIvfCentroids(s, dir,
+      Similarity.KMeansIters, Similarity.TrainMod, Similarity.ivfK(s, dir)))
+  val pqCodebook: Relation =
+    Artifact("pq", "", Seq(Emb, PqGeom), coalesce1 = true)(Similarity.trainPqCodebook)
+  val pqCodes: Relation = Artifact("pqcodes", "round=4", Seq(pqCodebook))(Similarity.pqCodesInline)
+  val ivfAssign: Relation = Artifact("ivfasn", "round=4", Seq(ivfCentroids))(
+    (s, dir) => Similarity.ivfAssignWith(Tables.load(s, dir, "embeddings"), ivfCentroids(s, dir)))
+  val semanticLabels: Relation =
+    Artifact("semlab", "", Seq(ivfAssign, Cosine))(Dedup.semanticLabInline)
+  val embedPairs: Relation =
+    Artifact("embpairs", "", Seq(Emb, Cosine))(Dedup.embeddingNearDupInline)
+  val knnGraph: Relation = Artifact("knng", "", Seq(GraphGeom)) { (s, dir) =>
+    val (tables, planes) = Similarity.graphSize(s, dir)
+    Similarity.knnGraphTuned(s, dir, tables, planes, Similarity.GraphBucketCap)
+  }
+  val alignScores: Relation =
+    Artifact("align", "dims=64,round=4,bar=ceilhalf", Seq(Docs, Emb))(Multimodal.textAlignInline)
+
+  // --- language models and their scores ----------------------------------
+
+  /** Trigram LM counts (c3, c2, u) from one cached corpus snapshot. */
+  val trigramLm: Parts = Parts("lm", "", Seq(Docs, Lm), "c3", "c2", "u") { (s, dir, genDir) =>
+    val corpus = docs(s, dir).persist()
+    try {
+      val (c3, c2, u) = TextOps.trainNgramLmOf(corpus)
+      writePart(c3, genDir, "c3"); writePart(c2, genDir, "c2"); writePart(u, genDir, "u")
+    } finally corpus.unpersist(false)
+  }
+
+  /** The 5-gram Kneser-Ney LM's counts (c5, c4, c3, c2, u). */
+  val kn5Lm: Parts = Parts("lm5", "", Seq(Docs, Lm5), "c5", "c4", "c3", "c2", "u") {
+    (s, dir, genDir) =>
+      val corpus = docs(s, dir).persist()
+      try {
+        val (c5, c4, c3, c2, u) = TextOps.trainKn5LmOf(corpus)
+        Seq(c5 -> "c5", c4 -> "c4", c3 -> "c3", c2 -> "c2", u -> "u")
+          .foreach { case (df, part) => writePart(df, genDir, part) }
+      } finally corpus.unpersist(false)
+  }
+
+  val pplScores: Relation = Artifact("ppl", "", Seq(trigramLm))(TextOps.perplexityInline)
+  val ppl5Scores: Relation = Artifact("ppl5", "", Seq(kn5Lm))(TextOps.perplexityKn5Inline)
+
+  /** The corpus-side ingest admission model: the LM of source <> 'src0'
+    * (c3, c2, u) and the calibrated logit8 bar (thr, NULL on an empty
+    * corpus), all from ONE cached snapshot; thr scores against the
+    * persisted LM parts. */
+  val ingestGate: Parts = Parts("ig", "keep=half,excl=src0", Seq(Docs, Lm, QualityCoef),
+      "c3", "c2", "u", "thr") { (s, dir, genDir) =>
+    val corpus = docs(s, dir).filter(col("source") =!= "src0").persist()
+    try {
+      val (c3, c2, u) = TextOps.trainNgramLmOf(corpus)
+      writePart(c3, genDir, "c3"); writePart(c2, genDir, "c2"); writePart(u, genDir, "u")
+      val lm = Seq("c3", "c2", "u").map(p => s.read.parquet(new Path(genDir, p).toString))
+      val logits = TextOps.ingestLogits(corpus, lm(0), lm(1), lm(2)).persist()
+      try writePart(TextOps.calibratedThresholdOf(logits).coalesce(1), genDir, "thr")
+      finally logits.unpersist(false)
+    } finally corpus.unpersist(false)
+  }
+
+  // --- text scores, flags and learned quality gates ----------------------
+
+  val langidCentroids: Relation = Artifact("langid", s"b=${TextOps.LangidBuckets},half=even",
+    Seq(Docs), coalesce1 = true)((s, dir) => TextOps.trainLangidCentroids(docs(s, dir)))
+  val langidScores: Relation =
+    Artifact("lidsc", "", Seq(Docs, Markers))((s, dir) => TextOps.langidOf(docs(s, dir)))
+  /** Heuristic quality scores plus a trailing `source` column: the artifact
+    * doubles as the pack family's (source, doc_id, n_tok) spine, one row
+    * per document (Pipeline.docTokens counts exactly these rows). */
+  val qualityScores: Relation = Artifact("qsc", "coef=5/3/2+2e-1,r=4,src", Seq(Docs, Stopwords))(
+    (s, dir) => TextOps.qualityOf(docs(s, dir), withSource = true))
+  val gopherFlags: Relation = Artifact("gflags", "", Seq(Docs, GopherRules))(
+    (s, dir) => TextOps.gopherRulesOf(docs(s, dir)))
+  val qualityLogits: Relation = Artifact("qlog", "", Seq(pplScores, QualityCoef))(
+    (s, dir) => TextOps.qualityModelWith(docs(s, dir), pplScores(s, dir)))
+  val calibKeep: Relation = Artifact("calib", "rule=ceilhalf", Seq(qualityLogits))(
+    (s, dir) => TextOps.qualityCalibratedOf(qualityLogits(s, dir)))
+  val qualityCentroids: Relation = Artifact("qualcent", "",
+    Seq(pplScores, QualityFeatures, GopherSeed), coalesce1 = true)(TextOps.trainQualityCentroids)
+  val trainedMargins: Relation = Artifact("qtm", "fit=rocchio",
+    Seq(pplScores, qualityCentroids, QualityFeatures))(TextOps.qualityTrainedInline)
+  val lrMargins: Relation = Artifact("qlr", "fit=lr",
+    Seq(pplScores, QualityFeatures, GopherSeed, LrFit))(TextOps.qualityLrInline)
+  val lrGate: Relation = Artifact("qlrg", "fit=lr,excl=src0",
+    Seq(ingestGate, QualityFeatures, GopherSeed, LrFit), coalesce1 = true)(TextOps.qualityLrGateInline)
+  val ftMargins: Relation = Artifact("qft",
+    s"fit=lr-hash,b=${TextOps.FtBuckets},k=${TextOps.FtIters}," +
+      s"eta=${TextOps.FtEtaNum}/${TextOps.FtEtaDen},grams=1+2,half=even,norm=1e6",
+    Seq(Docs, GopherSeed))((s, dir) => TextOps.qualityFtInlineOf(docs(s, dir)))
+  val dirtyGrams: Relation =
+    Artifact("dirty", "g=5,bench=lt10", Seq(Docs))(Pipeline.decontaminateInline)
+  val tokenTotals: Relation = Artifact("toktot", "tok=ws", Seq(Docs), coalesce1 = true)(
+    // the ONE token counter the pack family budgets in, so chunk-id
+    // continuity between census, delta pack and full pack cannot drift
+    (s, dir) => docs(s, dir).groupBy("source").agg(sum(Pipeline.wsTokenCount).as("base_off")))
+
+  /** DSIR importance model: the per-bucket log-ratio table (lr) between the
+    * Gopher-seed target and the raw corpus, and the calibrated top-quartile
+    * logw6 bar (thr) scored under the persisted lr. */
+  private def dsirWriter(excludeSrc0: Boolean, buckets: Long)(
+      s: SparkSession, dir: String, genDir: Path): Unit = {
+    val corpus = if (excludeSrc0) docs(s, dir).filter(col("source") =!= "src0") else docs(s, dir)
+    // ONE cached (doc, bucket) relation feeds the model counts AND the
+    // threshold's scoring pass; released after the writes
+    val wt = TextOps.dsirWt(corpus, buckets).persist()
+    try {
+      writePart(TextOps.dsirLr(wt, buckets).coalesce(1), genDir, "lr")
+      val lr = s.read.parquet(new Path(genDir, "lr").toString)
+      val s6 = TextOps.dsirScores(wt.select(col("doc_id"), col("b"), col("occ")), lr).persist()
+      try writePart(TextOps.dsirThr(s6).coalesce(1), genDir, "thr")
+      finally s6.unpersist(false)
+    } finally wt.unpersist(false)
+  }
+  val dsirModel: Parts = Parts("dsir", s"b=${TextOps.DsirBuckets},keep=quarter",
+    Seq(Docs, GopherSeed), "lr", "thr")(dsirWriter(excludeSrc0 = false, TextOps.DsirBuckets))
+  val dsirModel8k: Parts = Parts("dsir8k", s"b=${TextOps.DsirBuckets8k},keep=quarter",
+    Seq(Docs, GopherSeed), "lr", "thr")(dsirWriter(excludeSrc0 = false, TextOps.DsirBuckets8k))
+  val dsirGate: Parts = Parts("dsirig", s"b=${TextOps.DsirBuckets},keep=quarter,excl=src0",
+    Seq(Docs, GopherSeed), "lr", "thr")(dsirWriter(excludeSrc0 = true, TextOps.DsirBuckets))
+  val dsirScored: Relation = Artifact("dsirsc", "", Seq(dsirModel))(TextOps.importanceDsirServe)
+  val dsirScored8k: Relation =
+    Artifact("dsirsc8k", "", Seq(dsirModel8k))(TextOps.importanceDsirServe8k)
+
+  // --- tokenizers ----------------------------------------------------------
+
+  val bpeMergeTable: Relation = Artifact("bpe", s"k=${TextOps.BpeTrainMerges}", Seq(Docs),
+    coalesce1 = true)(TextOps.bpeTrain)
+  val bpeMergeTableBig: Relation = Artifact("bpebig",
+    s"k=${TextOps.BpeTrainMergesBig},b=${TextOps.BpeTrainBatch}", Seq(Docs),
+    coalesce1 = true)(TextOps.bpeTrainBig)
+  val uniVocab: Relation = Artifact("uni",
+    s"l=${UnigramLm.UniMaxPieceLen},seed=${UnigramLm.UniSeedVocab}," +
+      s"v=${UnigramLm.UniVocab},em=${UnigramLm.UniIters},grid=1e6",
+    Seq(Docs), coalesce1 = true)((s, dir) => UnigramLm.uniTrainOf(docs(s, dir)))
+  val uniVocabBig: Relation = Artifact("unibig",
+    s"l=${UnigramLm.UniMaxPieceLen},seed=${UnigramLm.UniSeedVocabBig}," +
+      s"v=${UnigramLm.UniVocabBig},em=${UnigramLm.UniItersBig},grid=1e6",
+    Seq(Docs), coalesce1 = true)((s, dir) => UnigramLm.uniTrainOf(docs(s, dir),
+      UnigramLm.UniSeedVocabBig, UnigramLm.UniVocabBig, UnigramLm.UniItersBig))
+  val bpeStaticVocab: Relation = Artifact("bvoc", "", Seq(Docs, BpeStatic), coalesce1 = true)(
+    (s, dir) => TextOps.bpeVocabWith(docs(s, dir), TextOps.BpeMerges))
+  val bpeStaticIdStream: Relation = Artifact("bids", "", Seq(Docs, BpeStatic))(
+    (s, dir) => TextOps.bpeIdsWith(docs(s, dir), TextOps.BpeMerges))
+  val bpeDecodeAudit: Relation =
+    Artifact("bdec", "", Seq(bpeStaticVocab, bpeStaticIdStream))(TextOps.bpeDecodeInline)
+  val bpeTrainedIdStream: Relation = Artifact("btids", "", Seq(bpeMergeTable))(
+    (s, dir) => TextOps.bpeIdsWith(docs(s, dir), TextOps.trainedMerges(s, dir)))
+  val bpeTrainedIdStreamBig: Relation = Artifact("btidsbig", "", Seq(bpeMergeTableBig))(
+    (s, dir) => TextOps.bpeIdsWith(docs(s, dir), TextOps.trainedMergesBig(s, dir)))
+  val bpeDocTokens: Relation = Artifact("bdtok", "", Seq(Docs, BpeStatic))(
+    (s, dir) => Pipeline.docTokensWith(s, dir, TextOps.bpeCount(col("text"))))
+  val trainedDocTokens: Relation = Artifact("bdtok-t", "", Seq(bpeMergeTable))(
+    (s, dir) => Pipeline.docTokensWith(s, dir,
+      graft.functions.BpeExpressions.bpeCount(col("text"), TextOps.trainedMerges(s, dir))))
+  val trainedDocTokensBig: Relation = Artifact("bdtok-tb", "", Seq(bpeMergeTableBig))(
+    (s, dir) => Pipeline.docTokensWith(s, dir,
+      graft.functions.BpeExpressions.bpeCount(col("text"), TextOps.trainedMergesBig(s, dir))))
+
+  // --- near-dup indexes, pairs and labelings -------------------------------
+
+  /** The corpus (source <> 'src0') MinHash signature index (doc_id, band, h). */
+  val lshIndex: Relation = Artifact("lshidx", "excl=src0", Seq(Docs, Minhash))(
+    (s, dir) => Dedup.lshIndexOf(docs(s, dir).filter(col("source") =!= "src0")))
+  val candPairs: Relation = Artifact("mhcand", "", Seq(Docs, Minhash))(
+    (s, dir) => Dedup.minhashLshCapped(s, dir, Dedup.MaxBucket))
+  val bandedPairs: Relation = Artifact("mhband", s"r=${Dedup.BandRows}", Seq(Docs, Minhash))(
+    Dedup.minhashLshBandedInline)
+  val shinglePairs: Relation = Artifact("shpairs", "", Seq(Docs, Minhash))(
+    (s, dir) => Dedup.shingleInterPairsInline(s, dir))
+  val candSigs: Relation = Artifact("mhsig", "", Seq(candPairs))(Dedup.candSigsInline)
+  val candGramCounts: Relation = Artifact("mhgc", "", Seq(candPairs))(Dedup.candGramCountsInline)
+  val candLabels: Relation = Artifact("ccraw", "", Seq(candPairs))(
+    (s, dir) => Dedup.ccLabels(docs(s, dir).select(col("doc_id")), candPairs(s, dir)))
+  val verifiedPairs: Relation = Artifact("vpairs", s"j=${Dedup.JaccardThreshold}",
+    Seq(candPairs))(Dedup.minhashVerifiedInline)
+  val survivorLabels: Relation =
+    Artifact("cclab", "exact=md5", Seq(verifiedPairs))(Dedup.survivorLabelsOf)
+  val substrStats: Relation = Artifact("substat", "", Seq(Docs, Substr))(Dedup.substringDupInline)
+  val dupStarts: Relation = Artifact("dupstart", "", Seq(Docs, Substr))(Dedup.dupStartsInline)
+  val boilerTop: Relation = Artifact("boiltop", s"k=${Dedup.BoilerplateK}", Seq(Docs, Substr),
+    coalesce1 = true)(Dedup.boilerplateTopKInline)
+
+  /** Degenerate-block censuses (≤ 9 rows) and verified hamming pairs of
+    * the three 64-bit hash families: simhash, image phash, audio print. */
+  val simhashDegen: Relation = Artifact("dgsim", "", Seq(Docs, Hamming), coalesce1 = true)(
+    (s, dir) => Dedup.degenCensusOf(Dedup.simhashed(s, dir)))
+  val phashDegen: Relation = Artifact("dgph", "", Seq(Docs, Hamming), coalesce1 = true)(
+    (s, dir) => Dedup.degenCensusOf(Multimodal.phashed(s, dir)))
+  val audioDegen: Relation = Artifact("dgau", "", Seq(Docs, Hamming), coalesce1 = true)(
+    (s, dir) => Dedup.degenCensusOf(Multimodal.audioHashed(s, dir)))
+  val simhashPairs: Relation =
+    Artifact("hpsim", "", Seq(simhashDegen))((s, dir) => Dedup.simhashPairsInline(s, dir))
+  val phashPairs: Relation = Artifact("hpph", "", Seq(phashDegen))(Multimodal.phashPairsInline)
+  val audioPairs: Relation = Artifact("hpau", "", Seq(audioDegen))(Multimodal.audioPairsInline)
+  val phashLabels: Relation = Artifact("phlab", "", Seq(phashPairs))(Multimodal.phashLabelsOf)
+  val audioLabels: Relation = Artifact("aulab", "", Seq(audioPairs))(Multimodal.audioLabelsOf)
+  val phashIndex: Relation = Artifact("phidx", "blocks=3,excl=src0", Seq(Docs))(
+    (s, dir) => Multimodal.phashIndexOf(docs(s, dir).filter(col("source") =!= "src0")))
+  val resampleIndex: Relation = Artifact("rsmp", s"side=${Multimodal.MaxSide},pool=lum,h=md5",
+    Seq(Docs))(Multimodal.resizeSampleInline)
+
+  // --- curation, build manifests and loader orders -------------------------
+
+  val funnelFlags: Relation = Artifact("funfl", "",
+    Seq(langidScores, qualityScores, semanticLabels, alignScores, CurateGates))(
+    Pipeline.funnelFlagsInline)
+  val curateManifest: Relation = Artifact("curheur", "",
+    Seq(langidScores, qualityScores, CurateGates))(Pipeline.curateInline)
+  val curateModelManifest: Relation = Artifact("curmod", "rule=model0",
+    Seq(langidScores, qualityLogits, CurateGates))(Pipeline.curateModelInline)
+  val curateNearDupManifest: Relation =
+    Artifact("curnd", "", Seq(curateManifest, survivorLabels))(Pipeline.curateNearDupInline)
+  val curateSemanticManifest: Relation =
+    Artifact("cursem", "", Seq(curateManifest, semanticLabels))(Pipeline.curateSemanticInline)
+  val curateAlignedManifest: Relation = Artifact("curalg", "",
+    Seq(curateSemanticManifest, alignScores))(Pipeline.curateAlignedInline)
+  val srcStats: Relation = Artifact("srcst", "ntok=ws", Seq(gopherFlags, survivorLabels),
+    coalesce1 = true)(TextOps.sourceStatsInline)
+  val curateSourceManifest: Relation = Artifact("cursrc",
+    s"slack=${Pipeline.SourceDupSlackPpm},rule=half/2x",
+    Seq(srcStats, gopherFlags, survivorLabels))(Pipeline.curateSourceInline)
+
+  /** Build manifests: the Gopher / near-dup / contamination gates, the
+    * model-gate slot and the two-level pack over the qsc token spine. */
+  private val buildGates = Seq(gopherFlags, survivorLabels, dirtyGrams, qualityScores, Pack)
+  private def buildFlags = s"flags=${Pipeline.BuildGopherFlags.mkString(",")}"
+  val buildManifest: Relation = Artifact("bldmod", s"$buildFlags,rule=model0",
+    qualityLogits +: buildGates, coalesce1 = true)((s, dir) => Pipeline.buildWith(s, dir,
+      TextOps.qualityModel(s, dir).filter(col("model_keep") === 1).select("doc_id")))
+  val calibManifest: Relation = Artifact("bldcal", s"$buildFlags,rule=ceilhalf",
+    calibKeep +: buildGates, coalesce1 = true)((s, dir) => Pipeline.buildWith(s, dir,
+      TextOps.qualityCalibrated(s, dir).filter(col("calib_keep") === 1).select("doc_id")))
+  val trainedManifest: Relation = Artifact("bldqtm", s"$buildFlags,rule=margin0",
+    trainedMargins +: buildGates, coalesce1 = true)((s, dir) => Pipeline.buildWith(s, dir,
+      TextOps.qualityTrained(s, dir).filter(col("trained_keep") === 1).select("doc_id")))
+  val lrManifest: Relation = Artifact("bldqlr", s"$buildFlags,rule=z0",
+    lrMargins +: buildGates, coalesce1 = true)((s, dir) => Pipeline.buildWith(s, dir,
+      TextOps.qualityLr(s, dir).filter(col("lr_keep") === 1).select("doc_id")))
+  val interleaveOrder: Relation = Artifact("ilv", "temper=sqrt1e6,key=1e9div",
+    Seq(Docs, Shuffle))(Pipeline.interleaveInline)
+  val curriculumOrder: Relation =
+    Artifact("curric", "tiers=tertile", Seq(pplScores, Shuffle))(Pipeline.curriculumInline)
+
+  // --- store protocol --------------------------------------------------------
 
   private var rootOverride: Option[String] = None
 
@@ -145,1242 +474,15 @@ object AnnModels {
       new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-models-${s.sparkContext.applicationId}").toString)
 
-  /** The trained IVF coarse quantizer (cent_id, cent_emb) for `dir`.
-    * K is AUTO-SIZED from the corpus count (Similarity.ivfSizing) and
-    * baked into the store key, so a corpus that grows past a geometry
-    * threshold re-keys — and therefore retrains — the quantizer and
-    * every list-probing consumer downstream. */
-  def ivfCentroids(s: SparkSession, dir: String): DataFrame = {
-    val k = Similarity.ivfK(s, dir)
-    ensure(s, dir, "ivf", table = "embeddings",
-        params =
-        s"i=${Similarity.KMeansIters},m=${Similarity.TrainMod},k=$k") {
-      ivfTrains += 1
-      Similarity.trainIvfCentroids(s, dir,
-        Similarity.KMeansIters, Similarity.TrainMod, k)
-    }
-  }
-
-  /** The trained PQ codebook (m, cent_id, cent) for `dir`. */
-  private val PqParams =
-    s"i=${Similarity.PqIters},m=${Similarity.TrainMod},k=${Similarity.PqCentroids},s=${Similarity.PqSubspaces}x${Similarity.PqSubDims}"
-  def pqCodebook(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "pq", table = "embeddings", params = PqParams) {
-      pqTrains += 1
-      Similarity.trainPqCodebook(s, dir)
-    }
-
-  /** The corpus PQ ENCODING (vec_id, m, cent_id) — every vector's 16
-    * subspace codes under the persisted codebook (r15, the r14 verdict's
-    * one perf-weak item): the full-corpus encode pass ran on every
-    * sim_ann_pq/ivfpq/ivfpq_rerank invocation while the coarse-quantizer
-    * counterpart (ivfAssign) served flat; a production code store encodes
-    * once and serves queries from the 10-byte codes. Keyed on the SAME
-    * codebook params (the key discipline: a PQ-constant change re-keys
-    * codebook AND codes together); the coarse auto-K is deliberately NOT
-    * in the key — the encoding never consults the coarse quantizer, and
-    * corpus growth already re-fingerprints the marker. All-integer
-    * columns: bit-identical round-trip. Corpus-sized: natural
-    * partitioning. */
-  def pqCodes(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "pqcodes", table = "embeddings",
-        params = s"$PqParams,round=4", coalesce1 = false) {
-      pqCodeTrains += 1
-      Similarity.pqCodesInline(s, dir)
-    }
-
-  /** The interpolated-trigram LM of `dir`'s documents as THREE persisted
-    * relations (trigram counts c3, bigram counts c2, unigram counts u —
-    * vocab size and token total derive from u at scoring time, exact
-    * integers in any engine) — trained at most once per dataset. Direct
-    * consumers (r12): the [[pplScores]] trainer (which serves every
-    * corpus-scoring gated query downstream — the chain is
-    * lm → ppl → qlog/qtm) and the streaming admission paths; because the
-    * downstream keys inline [[LmParams]], a change to the LM constants
-    * re-keys — and therefore retrains — the whole chain, never just this
-    * trio (CCNet's deployment shape: the LM trains once and serves the
-    * filter for months). Counts are exact integers, so artifact-served
-    * scores are bit-identical. All three relations live under ONE artifact directory
-    * gated by a single marker, so a partially-written trio can never
-    * serve. The trigram relation is gram-vocabulary-sized (larger than
-    * the model artifacts but far below corpus size — distinct trigrams,
-    * not occurrences), so it keeps its natural partitioning. */
-  def trigramLm(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-      val p = new Path(root(s), key(dir, "lm", LmParams))
-      val parts = Seq("c3", "c2", "u")
-      val gen = ensureGen(s, p, dir, "documents") { genDir =>
-        lmTrains += 1
-        // one cached corpus snapshot feeds all three relation writes (a
-        // mid-train corpus edit cannot yield a mixed trio; released after
-        // the writes — lineage stays intact, so this is safe to drop)
-        val corpus = graft.sources.Tables.load(s, dir, "documents").persist()
-        try {
-          val (c3, c2, u) = TextOps.trainNgramLmOf(corpus)
-          Seq(c3, c2, u).zip(parts).foreach { case (df, part) =>
-            df.write.mode("overwrite")
-              .parquet(new Path(genDir, part).toString)
-          }
-        } finally corpus.unpersist(false)
-      }
-      val dfs = parts.map(part => s.read.parquet(new Path(gen, part).toString))
-      (dfs(0), dfs(1), dfs(2))
-  }
-
-  /** The 5-gram KNESER-NEY LM's five count relations (c5, c4, c3, c2, u)
-    * for `dir` (r13 depth probe, VERDICT r12 #6 — gated because the
-    * templated-pivot spec family shows strict separation gain: a corpus
-    * whose 4-gram type set ties the templated doc against the fluent ones
-    * still separates at order 5). The trigramLm recipe at order 5: one
-    * cached corpus snapshot feeds all five relation writes under one
-    * marker-gated generation. */
-  def kn5Lm(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val p = new Path(root(s), key(dir, "lm5", Lm5Params))
-    val parts = Seq("c5", "c4", "c3", "c2", "u")
-    val gen = ensureGen(s, p, dir, "documents") { genDir =>
-      lm5Trains += 1
-      val corpus = graft.sources.Tables.load(s, dir, "documents").persist()
-      try {
-        val (c5, c4, c3, c2, u) = TextOps.trainKn5LmOf(corpus)
-        Seq(c5, c4, c3, c2, u).zip(parts).foreach { case (df, part) =>
-          df.write.mode("overwrite").parquet(new Path(genDir, part).toString)
-        }
-      } finally corpus.unpersist(false)
-    }
-    val dfs = parts.map(part => s.read.parquet(new Path(gen, part).toString))
-    (dfs(0), dfs(1), dfs(2), dfs(3), dfs(4))
-  }
-
-  /** The corpus KN5 PERPLEXITY relation (doc_id, n_grams, avg_nll) — the
-    * 5-gram LM's scores persisted once per corpus state (the pplScores
-    * pattern at order 5: the eight-join scoring pass is the expensive
-    * sub-plan, the artifact is a cheap scan). avg_nll sits on the 1e6
-    * grid (an exact double) — bit-identical round-trip. */
-  def ppl5Scores(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "ppl5", Lm5Params, coalesce1 = false) {
-      ppl5ScoreTrains += 1
-      TextOps.perplexityKn5Inline(s, dir)
-    }
-
-  /** The trained Rocchio language-ID centroids (lang, b, w) for `dir` —
-    * the one trained model that previously re-trained per invocation
-    * (VERDICT r8 #3). Training is integer-exact (see
-    * `TextOps.trainLangidCentroids`), so artifact-served scoring is
-    * bit-identical to inline. */
-  def langidCentroids(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "langid", s"b=${TextOps.LangidBuckets},half=even") {
-      langidTrains += 1
-      TextOps.trainLangidCentroids(graft.sources.Tables.load(s, dir, "documents"))
-    }
-
-  /** The trained BPE merge table (rank, lhs, rhs, pair_count) for `dir` —
-    * the reference's DistributedCache train-then-ship shape: the table
-    * trains once, persists, and drives the native encoder chain
-    * (`TextOps.bpeTrainedIds`) instead of the static constant. Training is
-    * deterministic (count argmax with lexical tie-break), so the artifact
-    * is bit-identical to an inline train and the oracle can replay it. */
-  def bpeMergeTable(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bpe", s"k=${TextOps.BpeTrainMerges}") {
-      bpeTrains += 1
-      TextOps.bpeTrain(s, dir)
-    }
-
-  /** The trained UNIGRAM-LM vocabulary (token_id, piece, cnt, cost6) —
-    * the second tokenizer family (UnigramLm, r15), trained once per
-    * corpus state; the key inlines every trainer constant (piece-length
-    * cap, seed and final budgets, EM rounds, the 1e6 cost grid). */
-  def uniVocab(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "uni",
-        s"l=${UnigramLm.UniMaxPieceLen},seed=${UnigramLm.UniSeedVocab}," +
-          s"v=${UnigramLm.UniVocab},em=${UnigramLm.UniIters},grid=1e6") {
-      uniTrains += 1
-      UnigramLm.uniTrainOf(graft.sources.Tables.load(s, dir, "documents"))
-    }
-
-  /** The PRODUCTION-budget unigram-LM vocabulary (r16, VERDICT r15 #6) —
-    * the same trainer at [[UnigramLm.UniVocabBig]] pieces /
-    * [[UnigramLm.UniItersBig]] EM rounds under its own key (the
-    * bpeMergeTableBig discipline: the toy and production budgets coexist
-    * in a long-lived store). */
-  def uniVocabBig(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "unibig",
-        s"l=${UnigramLm.UniMaxPieceLen},seed=${UnigramLm.UniSeedVocabBig}," +
-          s"v=${UnigramLm.UniVocabBig},em=${UnigramLm.UniItersBig},grid=1e6") {
-      uniBigTrains += 1
-      UnigramLm.uniTrainOf(graft.sources.Tables.load(s, dir, "documents"),
-        UnigramLm.UniSeedVocabBig, UnigramLm.UniVocabBig, UnigramLm.UniItersBig)
-    }
-
-  /** The PRODUCTION-count trained BPE merge table — the batched trainer
-    * ([[TextOps.bpeTrainBig]], k=[[TextOps.BpeTrainMergesBig]]) persisted
-    * once and served to the `text_bpe_train_256` /
-    * `text_bpe_trained_ids_256` chain. Keyed on (k, batch) so the k=8
-    * artifact and this one can never shadow each other. */
-  def bpeMergeTableBig(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bpebig",
-        s"k=${TextOps.BpeTrainMergesBig},b=${TextOps.BpeTrainBatch}") {
-      bpeBigTrains += 1
-      TextOps.bpeTrainBig(s, dir)
-    }
-
-  /** The trained quality-gate Rocchio centroids (cls, n, w_*) for `dir` —
-    * integer-mean feature centroids per gopher-consensus class over the
-    * even-doc_id training half (see TextOps.trainQualityCentroids).
-    * Integer-exact training, so artifact-served scoring is bit-identical
-    * to inline and the oracle can replay the fit from the raw corpus. */
-  def qualityCentroids(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "qualcent",
-        s"feat=${TextOps.QualityFeatNames.size},half=even,cap=${TextOps.QmLenCap}") {
-      qualityTrains += 1
-      TextOps.trainQualityCentroids(s, dir)
-    }
-
-  /** The CORPUS-side ingest admission model — FOUR persisted relations:
-    * the interpolated-trigram LM of the corpus (source != 'src0': trigram
-    * counts, bigram counts, unigram counts) and the calibrated logit8
-    * threshold (the ceil(N/2)-th largest corpus logit — the corpus's own
-    * top-half bar).
-    * This is the admission-control deployment shape: the corpus trains
-    * the model ONCE, the artifacts serve every ingest batch / stream as
-    * static join sides (the lshIndex pattern applied to quality gating).
-    * Threshold is NULL when the corpus is empty (no corpus = no bar).
-    *
-    * Consistency (ADVICE r10): all four relations train from ONE
-    * persisted (cached) corpus snapshot (a concurrent corpus edit cannot
-    * produce an LM from one state and a threshold from another), live
-    * under ONE artifact directory, and the completion marker is written
-    * LAST — and only if the corpus fingerprint is still the one the
-    * snapshot was taken under. A mid-train mutation therefore leaves the
-    * artifact unmarked and the next access retrains. */
-  def ingestGate(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-      val p = new Path(root(s), key(dir, "ig", s"$LmParams,keep=half,excl=src0"))
-      val parts = Seq("c3", "c2", "u", "thr")
-      val gen = ensureGen(s, p, dir, "documents") { genDir =>
-        ingestGateTrains += 1
-        // ONE cached corpus snapshot feeds every relation below; released
-        // after the writes (cache, not a lineage-truncating checkpoint, so
-        // unpersist is safe and the corpus-sized copy never outlives the
-        // training pass)
-        val corpus = graft.sources.Tables.load(s, dir, "documents")
-          .filter(org.apache.spark.sql.functions.col("source") =!= "src0")
-          .persist()
-        try {
-          val (c3, c2, u) = TextOps.trainNgramLmOf(corpus)
-          // thr derives from the LM relations; materialize them first so
-          // the threshold pass reads the persisted LM instead of recounting
-          Seq(c3, c2, u).zip(parts.take(3)).foreach { case (df, part) =>
-            df.write.mode("overwrite")
-              .parquet(new Path(genDir, part).toString)
-          }
-          val lm = parts.take(3).map(part =>
-            s.read.parquet(new Path(genDir, part).toString))
-          // the logits subtree feeds the census, the count AND the
-          // threshold join — cache the (doc_id, logit8) pairs once
-          val logits = TextOps.ingestLogits(corpus, lm(0), lm(1), lm(2)).persist()
-          try {
-            TextOps.calibratedThresholdOf(logits).coalesce(1)
-              .write.mode("overwrite").parquet(new Path(genDir, parts(3)).toString)
-          } finally logits.unpersist(false)
-        } finally corpus.unpersist(false)
-      }
-      val dfs = parts.map(part => s.read.parquet(new Path(gen, part).toString))
-      (dfs(0), dfs(1), dfs(2), dfs(3))
-  }
-
-  /** The persisted CORPUS LSH signature index (doc_id, band, h) — the
-    * artifact `dedup_incremental_lsh` and the streaming ingest probe read
-    * instead of recomputing corpus signatures per batch (the nightly-index
-    * deployment shape Dedup.incrementalLshMatch documents). Corpus = every
-    * source except `src0`, the ingest-batch convention the incremental
-    * family established. Unlike the model artifacts this relation is
-    * corpus-signature-sized, so it keeps its natural partitioning (no
-    * single-file coalesce) — and the stable key matters most here: a
-    * nightly corpus edit re-uses the same store slot instead of
-    * accumulating one full index copy per edit. */
-  def lshIndex(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "lshidx",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},excl=src0", coalesce1 = false) {
-      lshIndexBuilds += 1
-      Dedup.lshIndexOf(graft.sources.Tables.load(s, dir, "documents")
-        .filter(org.apache.spark.sql.functions.col("source") =!= "src0"))
-    }
-
-  /** The persisted SURVIVOR LABELING (doc_id, cluster_id) — the verified
-    * near-dup CC relation (Dedup.survivorLabelsOf), the canonical-set
-    * table a dedup deployment persists nightly. The iterative CC chain
-    * (LSH candidates → Jaccard verify → min-label propagation) is the
-    * single most expensive sub-plan in the curation family and it feeds
-    * FOUR gated consumers (`dedup_survivors`, `pipeline_curate_neardup`,
-    * and the three `pipeline_build*` capstones) — serving it from the
-    * registry runs it once per corpus state instead of once per query.
-    * The key carries cap=MaxBucket because the content is CC over the
-    * MaxBucket-capped verified pairs (same dependence as vpairs): a
-    * deployment that bumps the cap against a long-lived model dir must
-    * re-key the WHOLE dependent chain, not just the pair relation.
-    * Corpus-sized, so it keeps its natural partitioning. */
-  /** The corpus VERIFIED near-dup PAIR relation (doc_a, doc_b, jaccard)
-    * — LSH candidates verified by exact n-gram Jaccard, computed once per
-    * corpus state (r13, the SURVEY §16.8 invariant: it feeds the gated
-    * `dedup_minhash_verified`, the source-overlap matrix AND the
-    * survivor-label trainer — three consumers re-ran the whole
-    * candidate+verify chain per query before this). jaccard is an exact
-    * round-4 double, ids are longs — bit-identical round-trip.
-    * Pair-sized (candidate-bounded): natural partitioning. */
-  def verifiedPairs(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "vpairs",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},j=${Dedup.JaccardThreshold},cap=${Dedup.MaxBucket}",
-        coalesce1 = false) {
-      verifiedPairBuilds += 1
-      Dedup.minhashVerifiedInline(s, dir)
-    }
-
-  def survivorLabels(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "cclab",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},j=${Dedup.JaccardThreshold},cap=${Dedup.MaxBucket}",
-        coalesce1 = false) {
-      survivorBuilds += 1
-      Dedup.survivorLabelsOf(s, dir)
-    }
-
-  /** The persisted perceptual-hash INDEX — the multimodal half of the
-    * nightly ingest story (VERDICT r11 #2): the corpus's 3-block
-    * pigeonhole rows (band, h, doc_id, phash), built once per corpus
-    * state (Multimodal.phashIndexOf over source != 'src0', the
-    * ingest-batch convention), probed by `stream_ingest_phash` and the
-    * restartable nightly step (EventStreams.runPhashStep) instead of
-    * re-decoding and re-hashing the corpus per batch — the lshIndex
-    * deployment shape on the perceptual column. Corpus-sized (3 rows per
-    * asset), so it keeps its natural partitioning. */
-  def phashIndex(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "phidx", "blocks=3,excl=src0", coalesce1 = false) {
-      phashIndexBuilds += 1
-      Multimodal.phashIndexOf(graft.sources.Tables.load(s, dir, "documents")
-        .filter(org.apache.spark.sql.functions.col("source") =!= "src0"))
-    }
-
-  /** The corpus PERPLEXITY relation (doc_id, n_grams, avg_nll) — the
-    * trigram LM's scores persisted once per corpus state (r12; CCNet's
-    * deployment shape end to end: the LM trains once, scores once, and
-    * the bucket split / curriculum / quality consumers read the scores).
-    * avg_nll sits on the 1e6 grid (an exact double), counts are longs —
-    * bit-identical round-trip. Corpus-sized: natural partitioning. */
-  def pplScores(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "ppl", LmParams, coalesce1 = false) {
-      pplScoreTrains += 1
-      TextOps.perplexityInline(s, dir)
-    }
-
-  /** The corpus QUALITY-LOGIT relation (doc_id, logit8, logit,
-    * model_keep) — the learned gate's scores persisted once per corpus
-    * state (the survivorLabels pattern, r12): the LM-joined scoring pass
-    * is the dominant sub-plan behind `text_quality_model`,
-    * `text_quality_calibrated`, `pipeline_curate_model` and the build
-    * capstones' calibrated gates; serving it runs that pass once per
-    * corpus state instead of once per query. Every column is a
-    * fixed-point long or an exact double (logit8 < 2^53), so the parquet
-    * round-trip is bit-identical. Corpus-sized: natural partitioning. */
-  def qualityLogits(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "qlog", s"$LmParams,coef=${TextOps.QmBias}/${TextOps.QmStop}/${TextOps.QmRepUni}/${TextOps.QmRep3}/${TextOps.QmPunct}/${TextOps.QmNll}/${TextOps.QmLenPerTok}x${TextOps.QmLenCap}",
-        coalesce1 = false) {
-      qualityLogitTrains += 1
-      TextOps.qualityModelInline(s, dir)
-    }
-
-  /** The corpus SHINGLE-PAIR STORE (doc_a, doc_b, na, nb, inter) — every
-    * shingle-sharing pair with its exact intersection count, the
-    * verified-pair table a dedup deployment persists nightly (r12): the
-    * posting-list expansion is the dominant sub-plan behind
-    * `dedup_ngram_jaccard`, `dedup_containment` and both LSH recall
-    * audits; serving it runs the expansion once per corpus state. Counts
-    * are exact integers. Pair-bounded by the salted census (never
-    * corpus²); natural partitioning. */
-  def shinglePairs(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "shpairs",
-        s"n=${Dedup.ShingleN},cap=${Dedup.MaxBucket}", coalesce1 = false) {
-      shinglePairBuilds += 1
-      Dedup.shingleInterPairsInline(s, dir)
-    }
-
-  /** The TRAINED gate's scored relation (doc_id, margin8, trained_keep)
-    * — [[qualityLogits]]'s twin for the in-engine-trained Rocchio gate
-    * (feeds `text_quality_trained`, `pipeline_build_trained` and the
-    * trained pack family). Exact longs; corpus-sized, natural
-    * partitioning. */
-  def trainedMargins(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "qtm",
-        s"fit=rocchio,feat=${TextOps.QualityFeatNames.size},half=even,cap=${TextOps.QmLenCap},seed=${TextOps.QualitySeedMinFlags},$LmParams",
-        coalesce1 = false) {
-      trainedMarginTrains += 1
-      TextOps.qualityTrainedInline(s, dir)
-    }
-
-  /** The persisted PERCEPTUAL cluster labeling (doc_id, cluster_id) —
-    * connected components over the phash hamming pairs (the
-    * survivorLabels pattern on the multimodal column, r12): the CC
-    * iteration is the expensive sub-plan behind BOTH `mm_phash_dedup`
-    * and `mm_phash_keep`, and a curation deployment persists the asset
-    * labeling nightly exactly like the text one. Corpus-sized, natural
-    * partitioning. */
-  def phashLabels(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "phlab",
-        s"blocks=3,ham=${Dedup.MaxHamming},cap=${Dedup.MaxBucket},degen=${Dedup.DegenShare}",
-        coalesce1 = false) {
-      phashLabelBuilds += 1
-      Multimodal.phashLabelsOf(s, dir)
-    }
-
-  /** The AUDIO-perceptual CC labeling (doc_id, cluster_id) — the phlab
-    * discipline on the Haitsma-Kalker fingerprint column (r14): one
-    * fingerprint pass + masked hamming pairs + star-contraction CC per
-    * corpus state, served to `mm_audio_dedup` and `mm_audio_keep`. The
-    * key carries every constant the content depends on (blocks, hamming
-    * bar, salt cap, degenerate share — the cclab lesson). */
-  def audioLabels(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "aulab",
-        s"blocks=3,ham=${Dedup.MaxHamming},cap=${Dedup.MaxBucket},degen=${Dedup.DegenShare}",
-        coalesce1 = false) {
-      audioLabelBuilds += 1
-      Multimodal.audioLabelsOf(s, dir)
-    }
-
-  /** The LOGISTIC gate's scored relation (doc_id, zlr10, lr_keep) —
-    * [[trainedMargins]]'s successor (r13): fixed-K batch-gradient
-    * logistic regression over the same hashed quality features against
-    * the same Gopher-seed labels, fit and scored once per corpus state.
-    * Exact longs; corpus-sized, natural partitioning. */
-  def lrMargins(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "qlr",
-        s"fit=lr,k=${TextOps.QualityLrIters},eta=${TextOps.QualityLrEtaNum}/${TextOps.QualityLrEtaDen},ctr=mean-clamp1e4,feat=${TextOps.QualityFeatNames.size},half=even,seed=${TextOps.QualitySeedMinFlags},$LmParams",
-        coalesce1 = false) {
-      lrMarginTrains += 1
-      TextOps.qualityLrInline(s, dir)
-    }
-
-  /** The INGEST LR ADMISSION MODEL (j, mu, w) — the trained logistic
-    * classifier's 7-row weight relation (j = 0 bias, j = 1..6 the
-    * QualityFeatNames order; exact longs on the fit's own grids), trained
-    * ONCE per corpus state on the ingest convention (source <> 'src0',
-    * nll feature under the SAME registry-served corpus LM the trigram
-    * gate uses — the `ig` artifact, so the LmParams key threads the
-    * dependency). Batch admission broadcasts these 13 longs and scores
-    * new documents with one feature pass — the production shape where
-    * the fastText/logistic quality classifier gates the crawl nightly. */
-  /** The HASHED-NGRAM gate's scored relation (doc_id, zft12, ft_keep) —
-    * the lrMargins discipline on the fastText-shaped fit (r15): the
-    * word+bigram bucket pass and the K-round fit run once per corpus
-    * state; consumers read exact longs. The key inlines every fit
-    * constant (width, rounds, eta, gram orders, normalization grid,
-    * train-half and seed conventions). */
-  def ftMargins(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "qft",
-        s"fit=lr-hash,b=${TextOps.FtBuckets},k=${TextOps.FtIters}," +
-          s"eta=${TextOps.FtEtaNum}/${TextOps.FtEtaDen},grams=1+2," +
-          s"half=even,seed=${TextOps.QualitySeedMinFlags},norm=1e6",
-        coalesce1 = false) {
-      ftMarginTrains += 1
-      TextOps.qualityFtInline(s, dir)
-    }
-
-  def lrGate(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "qlrg",
-        s"fit=lr,k=${TextOps.QualityLrIters},eta=${TextOps.QualityLrEtaNum}/${TextOps.QualityLrEtaDen},ctr=mean-clamp1e4,feat=${TextOps.QualityFeatNames.size},half=even,seed=${TextOps.QualitySeedMinFlags},excl=src0,$LmParams") {
-      lrGateTrains += 1
-      TextOps.qualityLrGateInline(s, dir)
-    }
-
-  /** The DEGENERATE-block census of a hamming family's hashed corpus —
-    * the ≤ 9 saturated (bi, bv) bucket values the pigeonhole mask drops
-    * (Dedup.degenCensusOf; r15, VERDICT r14 #4): a per-CORPUS-STATE
-    * value that was recomputed per invocation, costing every
-    * simhash/phash/audio pairing query a checkpoint + census aggregate
-    * even when the answer is "no degeneracy" (simhash/phash at every
-    * measured scale). Served, the clean-corpus hot path keeps the EXACT
-    * pre-mask plan and pays one ≤ 9-row artifact read. `kind`
-    * distinguishes the hash families (sim/ph/au — same block layout,
-    * different hash columns over the same documents table); collected to
-    * the driver because the plan BRANCHES on it (the bounded-collect
-    * discipline: the bound is structural, ≤ 3 values per block). */
-  def hammingDegen(s: SparkSession, dir: String, kind: String)
-      (census: => DataFrame): Seq[(Int, Long)] =
-    ensure(s, dir, s"dg$kind",
-        params = s"share=${Dedup.DegenShare},blocks=${Dedup.BlockLayout}") {
-      hammingDegenTrains += 1
-      census
-    }.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-
-  /** The VERIFIED hamming pair relation (doc_a, doc_b, hamming) of a hash
-    * family — the near-dup product the downstream consumers (CC labels,
-    * keep rules, curation gates) and the gated pairing queries themselves
-    * all read (r15): built per corpus STATE, so a pairing query costs one
-    * artifact read instead of the hash + census + salt + explode + verify
-    * chain per invocation — the minhashVerified serving discipline on the
-    * hamming engine. All-integer columns: bit-identical round-trip.
-    * Candidate-bounded size (≤ 3n·cap before verify): natural
-    * partitioning. The key inlines every constant the chain reads (mask
-    * share, block layout, salt cap, hamming radius) — a constant bump
-    * re-keys and retrains the pairs and, through their own keys, every
-    * label artifact downstream. */
-  def hammingPairsStore(s: SparkSession, dir: String, kind: String)
-      (train: => DataFrame): DataFrame =
-    ensure(s, dir, s"hp$kind",
-        params = s"ham=${Dedup.MaxHamming},cap=${Dedup.MaxBucket}," +
-          s"share=${Dedup.DegenShare},blocks=${Dedup.BlockLayout}",
-        coalesce1 = false) {
-      hammingPairTrains += 1
-      train
-    }
-
-  /** The corpus IVF ASSIGNMENT (vec_id, cent_id, ccos) — every vector's
-    * list under the trained coarse quantizer, with its round-4 cosine to
-    * that centroid (r13): the broadcast-join + per-vector argmax window
-    * behind it is the dominant sub-plan of every list-probing consumer
-    * (the ANN family, SemDeDup, prototype prune, the stratified/cluster
-    * samplers), so it assigns once per corpus state. ccos is an exact
-    * round-4 double, ids are longs — bit-identical round-trip.
-    * Corpus-sized: natural partitioning. */
-  def ivfAssign(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "ivfasn",
-        s"i=${Similarity.KMeansIters},m=${Similarity.TrainMod},k=${Similarity.ivfK(s, dir)},round=4",
-        table = "embeddings", coalesce1 = false) {
-      ivfAssignTrains += 1
-      Similarity.ivfAssignInline(s, dir)
-    }
-
-  /** The persisted SEMANTIC cluster labeling (doc_id, cluster_id) —
-    * connected components over the within-list thresholded cosine pairs
-    * (the survivorLabels pattern on the embedding column, r13): the
-    * salted pair join + CC iteration is the expensive sub-plan behind
-    * `dedup_semantic`, `dedup_semantic_keep` and both curation capstones
-    * that gate on them, and a SemDeDup deployment persists the vector
-    * labeling nightly exactly like the text one. Corpus-sized, natural
-    * partitioning. */
-  def semanticLabels(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "semlab",
-        s"i=${Similarity.KMeansIters},m=${Similarity.TrainMod},k=${Similarity.ivfK(s, dir)},cap=${Dedup.LabelCap},cos=${Dedup.CosineThreshold}",
-        table = "embeddings", coalesce1 = false) {
-      semanticLabelTrains += 1
-      Dedup.semanticLabInline(s, dir)
-    }
-
-  /** The corpus ALIGNMENT-SCORE relation (doc_id, align4, align_keep) —
-    * the cross-modal image-text gate's scores persisted once per corpus
-    * state (r13, closing the serving gap VERDICT r12 named the most
-    * expensive avoidable stage): the in-query chain decodes and
-    * perceptually hashes the ASSET corpus and joins the text embeddings —
-    * the heaviest per-query work in the multimodal family — and it feeds
-    * TWO gated consumers (`mm_text_align`, `pipeline_curate_aligned`)
-    * plus any future curation chain. align4 sits on the round-4 grid (an
-    * exact double), the flag is an int — bit-identical round-trip. Keyed
-    * on BOTH source tables: a documents OR embeddings edit retrains.
-    * Corpus-sized: natural partitioning. */
-  def alignScores(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "align",
-        "dims=64,round=4,bar=ceilhalf",
-        table = "documents,embeddings", coalesce1 = false) {
-      alignScoreTrains += 1
-      Multimodal.textAlignInline(s, dir)
-    }
-
-  /** Constant-material hash for score-relation keys: the marker/stopword
-    * word lists are code constants the artifact content depends on — a
-    * list edit must re-key, and hashing the material beats hand-counting
-    * it into the params string. */
-  private def constHash(material: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(material.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-  }
-
-  /** The corpus MARKER-LANGID relation (doc_id, pred_lang) — the
-    * heuristic gate's predictions scored once per corpus state (r16):
-    * a pure function of the text, but it fronts every curation consumer
-    * (the curate battery, the funnel flag build, the build capstones),
-    * each of which paid one full corpus-text scan per invocation. Keyed
-    * on a hash of the marker word lists (a list edit re-keys).
-    * Corpus-sized: natural partitioning. */
-  def langidScores(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "lidsc",
-        s"mk=${constHash(TextOps.Markers.map { case (l, ws) => l + ":" + ws.mkString(",") }.mkString(";"))}",
-        coalesce1 = false) {
-      langidScoreBuilds += 1
-      TextOps.langidInline(s, dir)
-    }
-
-  /** The corpus HEURISTIC-QUALITY relation (doc_id, n_tokens,
-    * avg_token_len, punct_ratio, stopword_ratio, repetition_ratio,
-    * quality_score) — [[langidScores]]' twin for the second
-    * per-invocation text scan of the curation family. Round-4 doubles
-    * and exact-decimal composites: bit-identical round-trip. The key
-    * carries the composite weights/rounding and the stopword-list
-    * hash. */
-  def qualityScores(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "qsc",
-        s"coef=5/3/2+2e-1,r=4,src,sw=${constHash(TextOps.AllStopwords.mkString(","))}",
-        coalesce1 = false) {
-      qualityScoreBuilds += 1
-      TextOps.qualityInline(s, dir)
-    }
-
-  /** The raw MinHash-LSH CANDIDATE pair relation (doc_a, doc_b) — the
-    * bucketed+salted candidate set every minhash-family consumer starts
-    * from (r16): the gated `dedup_minhash_lsh`, the candidate-graph CC
-    * labeling, both verification estimators (`dedup_jaccard_weighted`,
-    * `dedup_minhash_estimate`), the LSH recall audits AND the verified-
-    * pair builder each re-ran the signature pass + bucket census + salt
-    * + pair explode per invocation; the relation is a pure function of
-    * the corpus and the LSH constants, so it persists once per corpus
-    * state (the hammingPairsStore discipline on the minhash engine).
-    * All-long columns: bit-identical round-trip. Candidate-bounded size
-    * (≤ perms·cap per doc): natural partitioning. */
-  def candPairs(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "mhcand",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},cap=${Dedup.MaxBucket}",
-        coalesce1 = false) {
-      candPairBuilds += 1
-      Dedup.minhashLshInline(s, dir)
-    }
-
-  /** The candidate-doc MINHASH SIGNATURE relation (doc_id, sig) — the
-    * k-long signatures the agreement estimator compares, persisted once
-    * per corpus state (r17, VERDICT r16 #4 family): `dedup_minhash_estimate`
-    * re-scanned candidate text and re-ran the k-permutation hash per
-    * invocation for a relation that is a pure function of the corpus and
-    * the LSH constants. Long ids + long arrays: bit-identical round-trip.
-    * Candidate-bounded size: natural partitioning. */
-  def candSigs(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "mhsig",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},cap=${Dedup.MaxBucket}",
-        coalesce1 = false) {
-      candSigBuilds += 1
-      Dedup.candSigsInline(s, dir)
-    }
-
-  /** The candidate-doc WEIGHTED shingle-count relation (doc_id, g, c) —
-    * the multiset verifier's per-doc counts, persisted once per corpus
-    * state (r17, VERDICT r16 #4): `dedup_jaccard_weighted` re-shingled,
-    * re-hashed and re-counted candidate text on every invocation; the
-    * relation changes only with the corpus and the LSH constants. All-long
-    * columns: bit-identical round-trip. Candidate-doc-token-bounded size:
-    * natural partitioning. */
-  def candGramCounts(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "mhgc",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},cap=${Dedup.MaxBucket}",
-        coalesce1 = false) {
-      candGramCountBuilds += 1
-      Dedup.candGramCountsInline(s, dir)
-    }
-
-  /** The CANDIDATE-GRAPH CC labeling (doc_id, cluster_id) — min-id
-    * connected components over [[candPairs]], the raw-candidate twin of
-    * [[survivorLabels]] (r16): every `dedup_clusters` read re-ran the
-    * full star-contraction loop (the suite's single heaviest query) on
-    * an edge set that is itself a served artifact; the labeling is the
-    * nightly-persisted product of the same shape as the verified /
-    * semantic / perceptual labelings, all three of which already serve.
-    * All-long columns: bit-identical round-trip. Corpus-sized: natural
-    * partitioning. */
-  def candLabels(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "ccraw",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},cap=${Dedup.MaxBucket}",
-        coalesce1 = false) {
-      candLabelBuilds += 1
-      Dedup.clusterAssignInline(s, dir)
-    }
-
-  /** The corpus GOPHER-RULE flag relation (doc_id, n_words,
-    * mean_word_len, n_stop_hits, r_*, keep) — the heuristic battery's
-    * per-document verdicts persisted once per corpus state (r16):
-    * [[langidScores]]'/[[qualityScores]]' twin for the third
-    * per-invocation text scan of the curation family (the gated
-    * `text_gopher_rules`, all five `pipeline_build*` capstones and both
-    * corpus report cards read it). mean_word_len sits on the round-4
-    * grid (an exact double), everything else is int/long —
-    * bit-identical round-trip. Keyed on every rule constant and the
-    * stop-list hash (a list edit re-keys). Corpus-sized: natural
-    * partitioning. */
-  def gopherFlags(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "gflags",
-        // the SQL mirror embodies EVERY rule threshold (word-count bounds,
-        // mean-len band, symbol/alpha/bullet/ellipsis ratios, stop hits and
-        // the stop list) and is spec-pinned equal to the Spark chain —
-        // hashing it re-keys the artifact on ANY rule edit (ADVICE r16: the
-        // previous key covered only 3 of the 8 rule constants, so a
-        // threshold edit under a long-lived SPARK_GRAFT_MODEL_DIR served
-        // stale flags to all seven consumers)
-        s"rules=${constHash(TextOps.gopherSql)}," +
-          s"stop=${constHash(TextOps.GopherStop.mkString(","))}",
-        coalesce1 = false) {
-      gopherFlagBuilds += 1
-      TextOps.gopherRulesInline(s, dir)
-    }
-
-  /** The benchmark-CONTAMINATION relation (doc_id, n_shared_grams,
-    * n_bench_docs) — each corpus document's exact 5-gram overlap with
-    * the held-out benchmark set, persisted once per corpus state (r16):
-    * the gated `pipeline_decontaminate` and every `pipeline_build*`
-    * capstone re-exploded the corpus's distinct 5-grams per invocation
-    * for a relation that changes only when the documents table does.
-    * All-long columns: bit-identical round-trip. Hit-sized (only
-    * contaminated docs appear): natural partitioning. */
-  def dirtyGrams(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "dirty",
-        s"g=5,bench=lt10", coalesce1 = false) {
-      dirtyGramBuilds += 1
-      Pipeline.decontaminateInline(s, dir)
-    }
-
-  /** The CALIBRATED quality-gate relation (doc_id, logit8, calib_keep)
-    * — the top-half-of-own-distribution keep flags persisted once per
-    * corpus state (r16): the threshold is an order statistic of the
-    * served [[qualityLogits]], but selecting it re-ran the cumulative
-    * census + rank-target chain on every read of the three consumers
-    * (`text_quality_calibrated`, `pipeline_build_calibrated`,
-    * `pipeline_build_ordered`). Keyed on the logits' own params plus
-    * the keep rule. logit8 is an exact fixed-point long —
-    * bit-identical round-trip. Corpus-sized: natural partitioning. */
-  def calibKeep(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "calib",
-        s"$LmParams,coef=${TextOps.QmBias}/${TextOps.QmStop}/${TextOps.QmRepUni}/${TextOps.QmRep3}/${TextOps.QmPunct}/${TextOps.QmNll}/${TextOps.QmLenPerTok}x${TextOps.QmLenCap},rule=ceilhalf",
-        coalesce1 = false) {
-      calibKeepBuilds += 1
-      TextOps.qualityCalibratedOf(TextOps.qualityModel(s, dir))
-    }
-
-  /** The CALIBRATED build MANIFEST (source, chunk_id, n_docs, n_tokens,
-    * fill_ratio) — the composed capstone persisted once per corpus state
-    * (r17, VERDICT r16 #5): every gate in the chain already serves
-    * (gopherFlags, calibKeep, survivorLabels, dirtyGrams, qualityScores'
-    * n_tok spine), but `pipeline_build_calibrated` re-composed the gates
-    * + two-level pack per invocation, and `pipeline_build_ordered` — the
-    * heaviest untouched pipeline query — re-ran ALL of it again just to
-    * attach a loader order to the same 19-row manifest. The manifest is a
-    * pure function of the corpus and the gate/pack constants, all of
-    * which the key carries (the calibrated gate's LM+coef+rule, the full
-    * Gopher rule spec and the gating flag subset, the survivor-CC
-    * geometry, the contamination spec, the pack geometry). n_docs and
-    * n_tokens are exact longs; fill_ratio is a computed double and
-    * parquet stores doubles bit-exactly — bit-identical round-trip.
-    * Chunk-count-sized (|corpus| / 2048 rows): coalesce1. */
-  /** The per-document SUBWORD pack budgets (source, doc_id, n_tok) — one
-    * artifact per tokenizer budget (r17): the pack family's merge-table
-    * replay over every document's text ran per invocation for a relation
-    * that changes only with the corpus and the merge table (a deployment
-    * persists its tokenized corpus statistics exactly once per tokenizer
-    * release). All-integer counts: bit-identical round-trip.
-    * Corpus-sized: natural partitioning. Keys thread the merge-table
-    * artifact params, so a table change re-keys table AND spine. */
-  def bpeDocTokens(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bdtok",
-        s"mrg=${constHash(TextOps.BpeMerges.map(p => p._1 + "+" + p._2).mkString(";"))}",
-        coalesce1 = false) {
-      bpeDocTokenBuilds += 1
-      Pipeline.bpeDocTokensInline(s, dir)
-    }
-
-  def trainedDocTokens(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bdtok-t", s"k=${TextOps.BpeTrainMerges}",
-        coalesce1 = false) {
-      trainedDocTokenBuilds += 1
-      Pipeline.trainedDocTokensInline(s, dir)
-    }
-
-  def trainedDocTokensBig(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bdtok-tb",
-        s"k=${TextOps.BpeTrainMergesBig},b=${TextOps.BpeTrainBatch}",
-        coalesce1 = false) {
-      trainedBigDocTokenBuilds += 1
-      Pipeline.trainedBigDocTokensInline(s, dir)
-    }
-
-  /** The RESAMPLED-asset fingerprint index (doc_id, out_w, out_h,
-    * resample_md5) — the resized-asset store a vision pipeline
-    * materializes once per corpus state (r17): `mm_resize_sample`'s
-    * typed-closure decode + pooled-luminance resample re-ran per
-    * invocation (the one non-codegen hot path in the multimodal family).
-    * Ints + hex strings: bit-identical round-trip. Corpus-sized: natural
-    * partitioning. */
-  def resampleIndex(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "rsmp",
-        s"side=${Multimodal.MaxSide},pool=lum,h=md5", coalesce1 = false) {
-      resampleBuilds += 1
-      Multimodal.resizeSampleInline(s, dir)
-    }
-
-  /** The per-document duplicated-WINDOW stats (doc_id, n_windows,
-    * n_dup_windows, dup_ratio) — the ExactSubstr audit relation (r17):
-    * `dedup_substring` re-exploded every document's windows per
-    * invocation. dup_ratio is a floor-1e6-grid double (parquet stores
-    * doubles bit-exactly); counts are longs. Corpus-sized: natural
-    * partitioning. */
-  def substrStats(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "substat", s"w=${Dedup.SubstrGram},h=xx64",
-        coalesce1 = false) {
-      substrStatBuilds += 1
-      Dedup.substringDupInline(s, dir)
-    }
-
-  /** The cross-document duplicated WINDOW-START relation (doc_id, pos) —
-    * the shared census product behind the removal/span family (r17):
-    * `dedup_substring_rm`, `_spans` and `_rm_spans` each re-ran the full
-    * window explode + census per invocation; the relation is a pure
-    * function of the corpus and the window constants. All-int columns:
-    * bit-identical round-trip. Duplicated-window-bounded size: natural
-    * partitioning. */
-  def dupStarts(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "dupstart", s"w=${Dedup.SubstrGram},h=xx64",
-        coalesce1 = false) {
-      dupStartBuilds += 1
-      Dedup.dupStartsInline(s, dir)
-    }
-
-  /** The K-row BOILERPLATE census report (win_text, n_docs,
-    * n_occurrences) — the top-K cross-document-duplicated windows with
-    * text resolved (r17): the report a data engineer reads before
-    * substringRemove; the heavy census pass re-ran per invocation.
-    * Strings + longs: bit-identical round-trip. K rows: coalesce1. */
-  def boilerTop(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "boiltop",
-        s"w=${Dedup.SubstrGram},k=${Dedup.BoilerplateK}") {
-      boilerTopBuilds += 1
-      Dedup.boilerplateTopKInline(s, dir)
-    }
-
-  /** The EMBEDDING near-dup pair table (vec_a, vec_b, cos) — the
-    * SemDeDup-style relation a curation deployment persists nightly
-    * (r17): the salted block self-join + fused cosine re-ran per
-    * `dedup_embedding` invocation. cos is a round-4 double (parquet
-    * stores doubles bit-exactly); ids are longs. Pair-bounded size:
-    * natural partitioning. */
-  def embedPairs(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "embpairs",
-        s"cap=${Dedup.LabelCap},cos=${Dedup.CosineThreshold}",
-        table = "embeddings", coalesce1 = false) {
-      embedPairBuilds += 1
-      Dedup.embeddingNearDupInline(s, dir)
-    }
-
-  /** The BANDED MinHash-LSH candidate pair relation (doc_a, doc_b) —
-    * [[candPairs]]' precision-leaning b×r sibling (r17): the signature
-    * pass + bucket census + in-bucket pair explode re-ran per
-    * `dedup_minhash_banded` / recall-audit invocation. All-long columns.
-    * Candidate-bounded size: natural partitioning. */
-  def bandedPairs(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "mhband",
-        s"p=${Dedup.MinhashPerms},n=${Dedup.ShingleN},cap=${Dedup.MaxBucket}," +
-          s"r=${Dedup.BandRows}",
-        coalesce1 = false) {
-      bandedPairBuilds += 1
-      Dedup.minhashLshBandedInline(s, dir)
-    }
-
-  /** The trained-tokenizer ID STREAMS (doc_id, token_ids, n_tokens) —
-    * the tokenized corpus a deployment persists once per tokenizer
-    * release (r17): `text_bpe_trained_ids` / `_256` replayed the full
-    * merge chain over every document per invocation. Strings and ints:
-    * bit-identical round-trip. Corpus-sized: natural partitioning. Keys
-    * thread the merge-table artifact params. */
-  def bpeTrainedIdStream(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "btids", s"k=${TextOps.BpeTrainMerges}",
-        coalesce1 = false) {
-      bpeIdStreamBuilds += 1
-      TextOps.bpeTrainedIdsInline(s, dir)
-    }
-
-  def bpeTrainedIdStreamBig(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "btidsbig",
-        s"k=${TextOps.BpeTrainMergesBig},b=${TextOps.BpeTrainBatch}",
-        coalesce1 = false) {
-      bpeIdStreamBigBuilds += 1
-      TextOps.bpeTrainedIdsBigInline(s, dir)
-    }
-
-  /** The DSIR SCORED relations (doc_id, logw6, dsir_keep) — the
-    * per-document importance scores + keep flags under the persisted
-    * model and bar (r17): the model served since r12, but every
-    * `text_importance_dsir` / `_8k` read re-ran the corpus token explode
-    * + bucket shuffle; CCNet's deployment persists exactly these scores.
-    * Longs/ints only: bit-identical round-trip. Corpus-sized: natural
-    * partitioning. Keyed like the model (b/keep/seed), one per width. */
-  def dsirScored(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "dsirsc",
-        s"b=${TextOps.DsirBuckets},keep=quarter,seed=${TextOps.QualitySeedMinFlags}",
-        coalesce1 = false) {
-      dsirScoredBuilds += 1
-      TextOps.importanceDsirServe(s, dir)
-    }
-
-  def dsirScored8k(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "dsirsc",
-        s"b=${TextOps.DsirBuckets8k},keep=quarter,seed=${TextOps.QualitySeedMinFlags}",
-        coalesce1 = false) {
-      dsirScoredBuilds += 1
-      TextOps.importanceDsirServe8k(s, dir)
-    }
-
-  /** The build composition's SHARED key fragment — every gate/pack
-    * constant the manifest depends on besides the model-gate slot: the
-    * full Gopher rule spec + gating flag subset, the survivor-CC
-    * geometry, the contamination spec, the n_tok definition and the pack
-    * geometry. Each manifest artifact prepends its own model-gate
-    * params. */
-  private def buildKeyCommon: String =
-    s"g=${constHash(TextOps.gopherSql + ":" + Pipeline.BuildGopherFlags.mkString(","))}," +
-      s"cc=p${Dedup.MinhashPerms}n${Dedup.ShingleN}j${Dedup.JaccardThreshold}cap${Dedup.MaxBucket}," +
-      s"dirty=5lt10,ntok=ws,pb=${Pipeline.PackBlock},ctx=${Pipeline.CtxTokens}"
-
-  def calibManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bldcal",
-        s"$LmParams,coef=${TextOps.QmBias}/${TextOps.QmStop}/${TextOps.QmRepUni}/${TextOps.QmRep3}/${TextOps.QmPunct}/${TextOps.QmNll}/${TextOps.QmLenPerTok}x${TextOps.QmLenCap},rule=ceilhalf," +
-          buildKeyCommon) {
-      calibManifestBuilds += 1
-      Pipeline.buildCalibratedInline(s, dir)
-    }
-
-  /** [[calibManifest]]'s siblings (r17): the DEFAULT (fixed-coefficient
-    * model gate), TRAINED (Rocchio) and LOGISTIC build manifests — same
-    * rationale, the model-gate slot's own artifact params fill the key's
-    * first segment (qualityLogits' / trainedMargins' / lrMargins' key
-    * strings, so a gate-constant change re-keys gate AND manifest
-    * together). */
-  def buildManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bldmod",
-        s"$LmParams,coef=${TextOps.QmBias}/${TextOps.QmStop}/${TextOps.QmRepUni}/${TextOps.QmRep3}/${TextOps.QmPunct}/${TextOps.QmNll}/${TextOps.QmLenPerTok}x${TextOps.QmLenCap},rule=model0," +
-          buildKeyCommon) {
-      buildManifestBuilds += 1
-      Pipeline.buildInline(s, dir)
-    }
-
-  def trainedManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bldqtm",
-        s"fit=rocchio,feat=${TextOps.QualityFeatNames.size},half=even,cap=${TextOps.QmLenCap},seed=${TextOps.QualitySeedMinFlags},$LmParams,rule=margin0," +
-          buildKeyCommon) {
-      trainedManifestBuilds += 1
-      Pipeline.buildTrainedInline(s, dir)
-    }
-
-  def lrManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bldqlr",
-        s"fit=lr,k=${TextOps.QualityLrIters},eta=${TextOps.QualityLrEtaNum}/${TextOps.QualityLrEtaDen},ctr=mean-clamp1e4,feat=${TextOps.QualityFeatNames.size},half=even,seed=${TextOps.QualitySeedMinFlags},$LmParams,rule=z0," +
-          buildKeyCommon) {
-      lrManifestBuilds += 1
-      Pipeline.buildLrInline(s, dir)
-    }
-
-  /** The CURATION FUNNEL's per-document flag relation (doc_id, source,
-    * f1..f5) — the cumulative-gate spine `pipeline_funnel` and
-    * `pipeline_funnel_source` fold (r16, VERDICT r15 #1): the langid and
-    * heuristic-quality flags re-scanned corpus text on EVERY funnel
-    * invocation while the other three gates rode served artifacts;
-    * persisting the assembled relation makes a funnel report one
-    * artifact scan + one aggregate — the report shape a 100 TB
-    * deployment can afford to read nightly. Keyed on every constant a
-    * flag depends on (langid model geometry, the quality bar, the
-    * semantic-clustering geometry incl. the corpus-derived K, the
-    * alignment bar); keyed on BOTH tables because f4/f5 read the
-    * embeddings. All-integer columns: bit-identical round-trip.
-    * Corpus-sized: natural partitioning. */
-  def funnelFlags(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "funfl",
-        // f1/f2 depend on the marker lists and the quality coefficients,
-        // not just the bar — key them like curateKeyCommon does (the
-        // gopherFlags ADVICE-r16 class of gap: an uncovered constant +
-        // a long-lived SPARK_GRAFT_MODEL_DIR = silently stale flags)
-        s"lang=en,mk=${constHash(TextOps.Markers.map { case (l, ws) => l + ":" + ws.mkString(",") }.mkString(";"))}," +
-          s"coef=5/3/2+2e-1,r=4,sw=${constHash(TextOps.AllStopwords.mkString(","))}," +
-          s"q=${Pipeline.QualityThreshold}," +
-          s"sem=i${Similarity.KMeansIters}m${Similarity.TrainMod}k${Similarity.ivfK(s, dir)}" +
-          s"cap${Dedup.LabelCap}cos${Dedup.CosineThreshold}," +
-          "align=dims64r4ceilhalf",
-        table = "documents,embeddings", coalesce1 = false) {
-      funnelFlagBuilds += 1
-      Pipeline.funnelFlagsInline(s, dir)
-    }
-
-  /** The corpus K-NN GRAPH (src, dst, cos) — every vector's top-GraphK
-    * approximate neighbors, persisted once per corpus state (r16,
-    * VERDICT r15 #2): the graph is a per-corpus-state product exactly
-    * like the verified hamming pairs, but every `sim_knn_graph` read —
-    * and any downstream diversity-sampling/dedup consumer — re-paid the
-    * 30–60 s ×100 bucket-join build. The key carries the auto-sized
-    * geometry (tables × planes — corpus-count-derived, so growth past a
-    * sizing threshold re-keys), the salt cap and K. cos is a round-4
-    * double (exact), ids are longs — bit-identical round-trip.
-    * Corpus-sized: natural partitioning. */
-  def knnGraph(s: SparkSession, dir: String): DataFrame = {
-    val (tables, planes) = Similarity.graphSizing(
-      graft.sources.Tables.load(s, dir, "embeddings").count())
-    ensure(s, dir, "knng",
-        s"t=$tables,p=$planes,cap=${Similarity.GraphBucketCap}," +
-          s"k=${Similarity.GraphK},target=${Similarity.GraphSizeTarget}",
-        table = "embeddings", coalesce1 = false) {
-      knnGraphBuilds += 1
-      Similarity.knnGraphTuned(s, dir, tables, planes, Similarity.GraphBucketCap)
-    }
-  }
-
-  /** The curate family's SHARED key fragment — the language-marker list,
-    * the heuristic quality coefficients + stopword list, the quality bar
-    * and the exact-dedup keep rule every curate manifest depends on (the
-    * buildKeyCommon discipline: a gate-constant edit re-keys every
-    * manifest that composes the gate). */
-  private def curateKeyCommon: String =
-    s"lang=en,mk=${constHash(TextOps.Markers.map { case (l, ws) => l + ":" + ws.mkString(",") }.mkString(";"))}," +
-      s"coef=5/3/2+2e-1,r=4,sw=${constHash(TextOps.AllStopwords.mkString(","))}," +
-      s"q=${Pipeline.QualityThreshold},ex=md5min"
-
-  /** The CURATED document manifests — each curate capstone's survivor
-    * relation persisted once per corpus state (r17 batch 3): the curated
-    * dataset IS the product a curation deployment materializes (the
-    * buildManifest discipline one stage earlier); every gated read was
-    * re-composing id-sized joins of already-served gate artifacts per
-    * invocation. Strings/longs/round-4 doubles: bit-identical round-trip.
-    * Corpus-survivor-sized: natural partitioning. Keys thread every gate
-    * constant the composition touches ([[curateKeyCommon]] + the stage's
-    * own geometry). */
-  def curateManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "curheur", curateKeyCommon, coalesce1 = false) {
-      curateBuilds += 1
-      Pipeline.curateInline(s, dir)
-    }
-
-  def curateModelManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "curmod",
-        s"lang=en,mk=${constHash(TextOps.Markers.map { case (l, ws) => l + ":" + ws.mkString(",") }.mkString(";"))}," +
-          s"$LmParams,coef=${TextOps.QmBias}/${TextOps.QmStop}/${TextOps.QmRepUni}/${TextOps.QmRep3}/${TextOps.QmPunct}/${TextOps.QmNll}/${TextOps.QmLenPerTok}x${TextOps.QmLenCap},rule=model0,ex=md5min",
-        coalesce1 = false) {
-      curateModelBuilds += 1
-      Pipeline.curateModelInline(s, dir)
-    }
-
-  def curateNearDupManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "curnd",
-        s"$curateKeyCommon," +
-          s"cc=p${Dedup.MinhashPerms}n${Dedup.ShingleN}j${Dedup.JaccardThreshold}cap${Dedup.MaxBucket}",
-        coalesce1 = false) {
-      curateNearDupBuilds += 1
-      Pipeline.curateNearDupInline(s, dir)
-    }
-
-  def curateSemanticManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "cursem",
-        s"$curateKeyCommon," +
-          s"sem=i${Similarity.KMeansIters}m${Similarity.TrainMod}k${Similarity.ivfK(s, dir)}" +
-          s"cap${Dedup.LabelCap}cos${Dedup.CosineThreshold}",
-        table = "documents,embeddings", coalesce1 = false) {
-      curateSemanticBuilds += 1
-      Pipeline.curateSemanticInline(s, dir)
-    }
-
-  def curateAlignedManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "curalg",
-        s"$curateKeyCommon," +
-          s"sem=i${Similarity.KMeansIters}m${Similarity.TrainMod}k${Similarity.ivfK(s, dir)}" +
-          s"cap${Dedup.LabelCap}cos${Dedup.CosineThreshold}," +
-          "align=dims64r4ceilhalf",
-        table = "documents,embeddings", coalesce1 = false) {
-      curateAlignedBuilds += 1
-      Pipeline.curateAlignedInline(s, dir)
-    }
-
-  /** The per-source CORPUS REPORT CARD (source, n_docs, n_tokens, n_keep,
-    * n_neardup, keep_ppm, neardup_ppm) — the |sources|-row stats relation
-    * `text_source_stats` reports and source-level curation gates on
-    * (r17 batch 3): every read re-scanned corpus text for the token
-    * census. All-long columns: bit-identical round-trip. |sources| rows:
-    * one file. */
-  def srcStats(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "srcst",
-        s"ntok=ws,g=${constHash(TextOps.gopherSql)}," +
-          s"stop=${constHash(TextOps.GopherStop.mkString(","))}," +
-          s"cc=p${Dedup.MinhashPerms}n${Dedup.ShingleN}j${Dedup.JaccardThreshold}cap${Dedup.MaxBucket}") {
-      srcStatBuilds += 1
-      TextOps.sourceStatsInline(s, dir)
-    }
-
-  def curateSourceManifest(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "cursrc",
-        s"ntok=ws,g=${constHash(TextOps.gopherSql)}," +
-          s"stop=${constHash(TextOps.GopherStop.mkString(","))}," +
-          s"cc=p${Dedup.MinhashPerms}n${Dedup.ShingleN}j${Dedup.JaccardThreshold}cap${Dedup.MaxBucket}," +
-          s"slack=${Pipeline.SourceDupSlackPpm},rule=half/2x",
-        coalesce1 = false) {
-      curateSourceBuilds += 1
-      Pipeline.curateSourceInline(s, dir)
-    }
-
-  /** The STATIC-merge-table tokenizer artifacts — [[bpeTrainedIdStream]]'s
-    * siblings for the fixed [[TextOps.BpeMerges]] tokenizer (r17 batch 3):
-    * the vocabulary (corpus alphabet + merge products — model-sized, one
-    * file), the tokenized corpus id stream, and the decode round-trip
-    * audit table. Each gated read re-ran one or two full corpus-text
-    * scans (the vocab collect + the encode pass) for relations that
-    * change only with the corpus and the merge-table constant. Strings /
-    * ints only: bit-identical round-trip. Keyed on a hash of the full
-    * merge table (a rule edit re-keys all three together). */
-  private def bpeMergesKey: String =
-    s"mrg=${constHash(TextOps.BpeMerges.map(p => p._1 + "+" + p._2).mkString(";"))}"
-
-  def bpeStaticVocab(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bvoc", bpeMergesKey) {
-      bpeStaticVocabBuilds += 1
-      TextOps.bpeVocabInline(s, dir)
-    }
-
-  def bpeStaticIdStream(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bids", bpeMergesKey, coalesce1 = false) {
-      bpeStaticIdStreamBuilds += 1
-      TextOps.bpeIdsInline(s, dir)
-    }
-
-  def bpeDecodeAudit(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "bdec", bpeMergesKey, coalesce1 = false) {
-      bpeDecodeAuditBuilds += 1
-      TextOps.bpeDecodeInline(s, dir)
-    }
-
-  /** The persisted LOADER ORDERS (r17 batch 3) — the buildOrdered
-    * discipline applied to the two standalone ordering products: the
-    * mixture-interleaved stream order and the easy→hard curriculum
-    * order. Both are corpus permutations a data-loader consumes as
-    * written (the shuffled-manifest file a training run streams);
-    * every gated read re-ran the two-level rank machinery per
-    * invocation. All-long/string columns: bit-identical round-trip.
-    * Corpus-sized: natural partitioning. */
-  def interleaveOrder(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "ilv",
-        s"sb=${Pipeline.ShuffleBlock},temper=sqrt1e6,key=1e9div,h=md5h64",
-        coalesce1 = false) {
-      interleaveOrderBuilds += 1
-      Pipeline.interleaveInline(s, dir)
-    }
-
-  def curriculumOrder(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "curric",
-        s"$LmParams,tiers=tertile,sb=${Pipeline.ShuffleBlock},h=md5h64",
-        coalesce1 = false) {
-      curriculumOrderBuilds += 1
-      Pipeline.curriculumInline(s, dir)
-    }
-
-  /** Per-source corpus TOKEN totals (source, base_off) — the |sources|-row
-    * relation the nightly delta-pack step continues from
-    * (EventStreams.runPackDeltaStep): the already-packed corpus's token
-    * stream lengths, trained once per corpus state so the nightly step
-    * never re-scans the corpus (at 100 TB a per-night corpus pass is the
-    * cost this artifact exists to delete). Whitespace-token counts are
-    * exact integers — bit-identical round-trip. */
-  def tokenTotals(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, "toktot", "tok=ws") {
-      tokenTotalTrains += 1
-      import org.apache.spark.sql.functions.sum
-      graft.sources.Tables.load(s, dir, "documents")
-        .groupBy("source")
-        // the ONE token counter the pack family budgets in — shared, so
-        // chunk-id continuity between census, delta pack and full pack
-        // cannot drift
-        .agg(sum(Pipeline.wsTokenCount).as("base_off"))
-    }
-
-  /** The DSIR importance-selection model — TWO persisted relations: the
-    * <= DsirBuckets-row per-bucket log-ratio table (the hashed importance
-    * weights between the corpus's Gopher-seed target and the raw corpus)
-    * and the 1-row calibrated keep threshold (the corpus's own top-quartile
-    * logw6 bar). Trained once per corpus state; `text_importance_dsir`
-    * serves both as broadcast join sides — the train-once / score-many
-    * deployment shape of data selection (the ingestGate pattern applied
-    * to importance weighting).
-    *
-    * Consistency: both relations derive from ONE cached (doc, bucket,
-    * occ, tgt) relation (persist, released after the writes — never a
-    * lineage-truncating checkpoint, the registry-trainer discipline) —
-    * the threshold is computed from scores under the PERSISTED log-ratio
-    * table (read back before the scoring pass), so the pair can never
-    * mix corpus states; mid-train corpus edits are commitIfFresh's job,
-    * and the completion marker commits last (ensureGen). Training is
-    * integer/DECIMAL-exact and decimal(18,6) parquet round-trips exactly,
-    * so artifact-served selection is bit-identical to the inline fit. */
-  def dsirModel(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    dsirArtifact(s, dir, "dsir", excludeSrc0 = false)
-
-  /** [[dsirModel]] at the paper-realistic 8192-bucket feature width
-    * (VERDICT r11 #4) — a distinct store key (b=8192 in the params), so
-    * the two widths coexist; the artifact is 32× the 256-bucket one and
-    * still broadcast-sized. */
-  def dsirModel8k(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    dsirArtifact(s, dir, "dsir", excludeSrc0 = false,
-      buckets = TextOps.DsirBuckets8k)
-
-  /** The DSIR ADMISSION model — the same two relations as [[dsirModel]],
-    * trained on the corpus WITHOUT the ingest batch (source <> 'src0',
-    * the incremental-family convention): the corpus fits the importance
-    * weights and calibrates the bar against its OWN score distribution,
-    * and every ingest batch / stream is scored against the broadcast
-    * artifact (EventStreams.ingestDsirBatch / runIngestDsirStep). */
-  def dsirGate(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    dsirArtifact(s, dir, "dsirig", excludeSrc0 = true)
-
-  private def dsirArtifact(s: SparkSession, dir: String, kind: String,
-      excludeSrc0: Boolean,
-      buckets: Long = TextOps.DsirBuckets): (DataFrame, DataFrame) = {
-      val excl = if (excludeSrc0) ",excl=src0" else ""
-      val p = new Path(root(s), key(dir, kind,
-        s"b=$buckets,keep=quarter,seed=${TextOps.QualitySeedMinFlags}$excl"))
-      val gen = ensureGen(s, p, dir, "documents") { genDir =>
-        dsirTrains += 1
-        import org.apache.spark.sql.functions.col
-        val base = graft.sources.Tables.load(s, dir, "documents")
-        val corpus = if (excludeSrc0) base.filter(col("source") =!= "src0") else base
-        // ONE cached (doc, bucket) relation feeds the model counts AND the
-        // threshold's scoring pass; cache (not a lineage-truncating
-        // checkpoint, same discipline as the ingest-gate trainer) released
-        // after the writes, so the corpus-scale copy never outlives
-        // training. Mid-train corpus-edit consistency is commitIfFresh's
-        // job, not the cache's.
-        val wt = TextOps.dsirWt(corpus, buckets).persist()
-        try {
-          TextOps.dsirLr(wt, buckets).coalesce(1)
-            .write.mode("overwrite").parquet(new Path(genDir, "lr").toString)
-          val lr = s.read.parquet(new Path(genDir, "lr").toString)
-          val s6 = TextOps.dsirScores(
-            wt.select(col("doc_id"), col("b"), col("occ")), lr).persist()
-          try {
-            TextOps.dsirThr(s6).coalesce(1)
-              .write.mode("overwrite").parquet(new Path(genDir, "thr").toString)
-          } finally s6.unpersist(false)
-        } finally wt.unpersist(false)
-      }
-      (s.read.parquet(new Path(gen, "lr").toString),
-        s.read.parquet(new Path(gen, "thr").toString))
-    }
-
-  /** Corpus-freshness fingerprint of the table backing an artifact: the
-    * sorted (relative path, length, mtime) triples of every file under
-    * `dir/table.parquet`, RECURSIVELY (a partitioned/nested layout's leaf
-    * files under `key=value/` subdirectories are fingerprinted too —
-    * ADVICE r10), hashed into the completion marker. One recursive
-    * listing per artifact access — no data scan — and any in-place
-    * mutation of the corpus (appended part file, rewritten file, renamed
-    * subdirectory, touched bytes) changes it, so a stale model/index is
-    * not served against a corpus edited at the same path. This matters
-    * most for the LSH index: without it, `dedup_incremental_lsh` and the
-    * streaming ingest probe would miss every corpus document added after
-    * index build — silent wrong answers, not just staleness.
-    *
-    * Granularity caveat: a rewrite that preserves every file's relative
-    * path AND byte length within one filesystem mtime tick (1 ms on
-    * HDFS/local, 1 s on some object stores) is below this fingerprint's
-    * resolution — the standard mtime-based cache-validity trade, same as
-    * Spark's own FileStreamSource. A missing table fingerprints as
-    * "absent" (the training query will surface the real error). */
-  /** Corpus-state fingerprint over one or more tables (comma-separated):
-    * an artifact derived from several relations (e.g. the alignment
-    * scores: documents × embeddings) must retrain when ANY of them
-    * changes, so their per-table fingerprints concatenate into one key. */
-  /** The per-table fingerprint, exposed for corpus-derived memos that
-    * must share the registry's freshness discipline (Similarity.ivfK —
-    * ADVICE r15: a sizing memo keyed on the dir alone survives an
-    * in-place corpus edit the artifact fingerprints catch, silently
-    * splitting the geometry between key and content). */
+  /** Corpus-freshness fingerprint: the sorted (relative path, length,
+    * mtime) triples of every file under `dir/table.parquet`, RECURSIVELY
+    * (partitioned layouts' leaf files count). One listing per access, no
+    * data scan. A rewrite preserving every path and length within one
+    * mtime tick is below its resolution (the FileStreamSource trade). A
+    * missing table fingerprints as "absent". Several tables
+    * (comma-separated) concatenate their fingerprints. Exposed for
+    * corpus-derived memos that must share this freshness discipline
+    * (Similarity.embCount). */
   private[graft] def tableFingerprint(s: SparkSession, dir: String,
       table: String): String = fingerprint(s, dir, table)
 
@@ -1407,16 +509,6 @@ object AnnModels {
         buf.sorted.mkString("|")
       } else s"${p.getName}:${st.getLen}:${st.getModificationTime}"
     }
-  }
-
-  /** Stable artifact name: (dataset dir, training constants) only — the
-    * corpus fingerprint deliberately stays OUT of the name (it lives in
-    * the completion marker) so retraining overwrites in place. */
-  private def key(dir: String, kind: String, params: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val h = md.digest(s"$dir|$params".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    s"$kind-$h"
   }
 
   private def markerPath(p: Path) = new Path(p, "_GRAFT_COMPLETE")
@@ -1468,13 +560,6 @@ object AnnModels {
       } finally in.close()
     }
   }
-
-  /** An artifact serves iff its marker exists and records the corpus's
-    * CURRENT fingerprint. The marker is written last (after every
-    * relation's parquet commit), so it also subsumes the torn-write
-    * guard the per-directory _SUCCESS probe used to provide. */
-  private def complete(fs: FileSystem, p: Path, fp: String): Boolean =
-    readMarker(fs, p).exists(_._1 == fp)
 
   /** Mark the artifact complete — but only if the corpus still
     * fingerprints as it did when training started. A mid-train corpus
@@ -1557,7 +642,7 @@ object AnnModels {
     * then gets an artifact of the NEW state instead of a stale one);
     * after two failed attempts the freshest attempt serves — the marker
     * stays uncommitted, so the next access retrains. */
-  private def ensureGen(s: SparkSession, p: Path, dir: String, table: String)
+  private def ensureGen(s: SparkSession, p: Path, dir: String, table: String, name: String)
       (write: Path => Unit): Path = {
     // LOCK-FREE serve path (r12 review): the marker protocol makes an
     // unlocked freshness check safe — the marker is written LAST, names
@@ -1578,12 +663,12 @@ object AnnModels {
       // re-checks under the monitor and retrains if needed.
       case Some((mfp, gen)) if mfp == fp0 && fs.exists(new Path(p, gen)) =>
         new Path(p, gen)
-      case _ => ensureGenLocked(s, fs, p, dir, table)(write)
+      case _ => ensureGenLocked(s, fs, p, dir, table, name)(write)
     }
   }
 
   private def ensureGenLocked(s: SparkSession, fs: FileSystem, p: Path,
-      dir: String, table: String)(write: Path => Unit): Path =
+      dir: String, table: String, name: String)(write: Path => Unit): Path =
     synchronized {
       migrateLegacy(fs, p.getParent)
       var fp = fingerprint(s, dir, table)
@@ -1598,7 +683,9 @@ object AnnModels {
           while (!committed && attempts < 2) {
             attempts += 1
             gen = freshGenName(fs, p, fp)
-            write(new Path(p, gen))
+            buildCounts.merge(name, 1, (a, b) => a + b)
+            building.set(name :: building.get)
+            try write(new Path(p, gen)) finally building.set(building.get.tail)
             committed = commitIfFresh(s, fs, p, fp, gen, dir, table)
             if (!committed) fp = fingerprint(s, dir, table)
           }
@@ -1606,24 +693,5 @@ object AnnModels {
             gcGenerations(fs, p, Set(gen) ++ prevGen)
           new Path(p, gen) // serve what was actually written
       }
-    }
-
-  /** Serve the (dir, kind, params) artifact from the store, training
-    * (and persisting) only when no fresh artifact exists. Retraining
-    * writes a NEW generation under the same stable key and collects all
-    * but the previous one — the store never accumulates per-corpus-edit
-    * copies, and live readers survive one retrain. */
-  private def ensure(s: SparkSession, dir: String, kind: String, params: String,
-      table: String = "documents", coalesce1: Boolean = true)
-      (train: => DataFrame): DataFrame = {
-      val p = new Path(root(s), key(dir, kind, params))
-      val gen = ensureGen(s, p, dir, table) { genDir =>
-        // A model is a handful of rows; one file keeps the artifact tidy.
-        // Corpus-sized artifacts (the LSH index) keep their partitioning.
-        val out = train
-        (if (coalesce1) out.coalesce(1) else out)
-          .write.mode("overwrite").parquet(genDir.toString)
-      }
-      s.read.parquet(gen.toString)
     }
 }

@@ -90,15 +90,10 @@ object Dedup {
     * to a single quadratic task, and its near-dup pairs still surface. */
   def minhashLsh(s: SparkSession, dir: String): DataFrame =
     // r16: the default-cap candidate set is a registry artifact
-    // (AnnModels.candPairs — the hammingPairsStore discipline): six
+    // (AnnModels.candPairs — the hamming pair-store discipline): six
     // consumers re-ran the signature + census + salt + explode chain per
     // invocation. Non-default caps (the salting specs) build inline.
     AnnModels.candPairs(s, dir)
-
-  /** The candidate chain itself — what AnnModels.candPairs runs once per
-    * corpus state. */
-  private[graft] def minhashLshInline(s: SparkSession, dir: String): DataFrame =
-    minhashLshCapped(s, dir, MaxBucket)
 
   /** 64-bit SimHash per document (pure per-row expression, no shuffle).
     * 64 bits — not 16 — so the hamming-pigeonhole block space below stays
@@ -139,16 +134,21 @@ object Dedup {
     // minhashVerified serving discipline applied to the hamming family.
     // Non-default caps (the salting specs) build inline.
     if (maxBucket != MaxBucket) simhashPairsInline(s, dir, maxBucket)
-    else AnnModels.hammingPairsStore(s, dir, "sim")(
-      simhashPairsInline(s, dir, MaxBucket))
+    else AnnModels.simhashPairs(s, dir)
 
   private[graft] def simhashPairsInline(s: SparkSession, dir: String,
-      maxBucket: Int = MaxBucket): DataFrame = {
-    def hashed = docs(s, dir)
-      .select(col("doc_id"), ShingleExpressions.simhash64(col("text")).as("h"))
-    hammingPairs(hashed, maxBucket,
-      servedDegen = Some(AnnModels.hammingDegen(s, dir, "sim")(degenCensusOf(hashed))))
-  }
+      maxBucket: Int = MaxBucket): DataFrame =
+    hammingPairs(simhashed(s, dir), maxBucket,
+      servedDegen = Some(degenOf(AnnModels.simhashDegen(s, dir))))
+
+  /** The (doc_id, h) simhash relation the hamming engine pairs. */
+  private[graft] def simhashed(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir).select(col("doc_id"), ShingleExpressions.simhash64(col("text")).as("h"))
+
+  /** A served degenerate census, collected: the plan BRANCHES on it, and
+    * the bound is structural (≤ 3 values per block). */
+  private[graft] def degenOf(census: DataFrame): Seq[(Int, Long)] =
+    census.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
 
   /** Hamming-<= `MaxHamming` pairs over ANY (doc_id, h: 64-bit) relation —
     * the engine behind `simhashPairs`, reused verbatim by the multimodal
@@ -208,7 +208,7 @@ object Dedup {
     //
     // r15 (VERDICT r14 #4): the census is a per-CORPUS-STATE value, not a
     // per-invocation one — the gated corpus paths pass it in
-    // REGISTRY-SERVED (AnnModels.hammingDegen: ≤ 9 rows, trained once,
+    // REGISTRY-SERVED (AnnModels.simhashDegen etc.: ≤ 9 rows, trained once,
     // fingerprint-fresh), so the hot path pays one tiny artifact read
     // instead of a checkpoint + census aggregate per query; arbitrary
     // relations (spec corpora, ingest probes) census inline.
@@ -272,7 +272,7 @@ object Dedup {
     * (every doc emits exactly one row per block), so n = sum(bn)/3 — no
     * per-block rollup or broadcast join, and never a Window over bucket
     * members (the dense-bucket anti-pattern PlansSpec pins). Trained into
-    * the model store per corpus state by AnnModels.hammingDegen; called
+    * the model store per corpus state by AnnModels.simhashDegen etc.; called
     * inline for arbitrary relations (spec corpora, ingest probes). */
   private[graft] def degenCensusOf(hashed: DataFrame): DataFrame = {
     val census = hammingBlocked(hashed)
@@ -284,10 +284,9 @@ object Dedup {
   }
 
   /** The pigeonhole block layout (bits per block, low to high) as the
-    * registry-key token — interpolated into every AnnModels key whose
-    * artifact content depends on the split ([[AnnModels.hammingDegen]],
-    * [[AnnModels.hammingPairsStore]]), so a layout change here re-keys
-    * (and therefore rebuilds) the censuses and pair relations instead of
+    * registry-key token — part of the AnnModels `Hamming` constant group,
+    * so a layout change here re-keys (and therefore rebuilds) the
+    * degenerate censuses and pair relations downstream of it instead of
     * serving stale ones (ADVICE r15: the keys used to hardcode the
     * string). Must describe exactly what [[hammingBlocked]] computes. */
   private[graft] val BlockLayout = "22/21/21"
@@ -460,12 +459,6 @@ object Dedup {
     // on the candidate graph; the star-contraction loop runs once per
     // corpus state instead of on every read of the suite's heaviest query.
     AnnModels.candLabels(s, dir)
-
-  /** The labeling chain itself — what AnnModels.candLabels runs once per
-    * corpus state (the candidate pairs themselves serve from the
-    * registry, so a label rebuild reads the pair artifact). */
-  private[graft] def clusterAssignInline(s: SparkSession, dir: String): DataFrame =
-    ccLabels(docs(s, dir).select(col("doc_id")), minhashLsh(s, dir))
 
   /** Min-label connected components over an undirected candidate-pair list
     * (the engine behind `clusterAssign` and `survivors`; Multimodal's

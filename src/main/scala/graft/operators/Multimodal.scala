@@ -261,22 +261,20 @@ object Multimodal {
     * XOR-popcount verification only on candidates; never all-pairs). */
   def audioPairs(s: SparkSession, dir: String): DataFrame =
     // the verified pair relation is registry-served per corpus state
-    // (the minhashVerified discipline — see AnnModels.hammingPairsStore)
-    graft.operators.AnnModels.hammingPairsStore(s, dir, "au")(
-      audioPairsInline(s, dir))
+    // (the minhashVerified discipline)
+    graft.operators.AnnModels.audioPairs(s, dir)
 
-  private[graft] def audioPairsInline(s: SparkSession, dir: String): DataFrame = {
-    def hashed = audioFingerprint(s, dir)
-      .select(col("doc_id"), col("afp").as("h"))
-    Dedup.hammingPairs(hashed, servedDegen = Some(audioDegen(s, dir)))
-  }
+  private[graft] def audioPairsInline(s: SparkSession, dir: String): DataFrame =
+    Dedup.hammingPairs(audioHashed(s, dir), servedDegen = Some(audioDegen(s, dir)))
 
   /** The audio hash family's registry-served degenerate census (shared
     * by the pairing query and the CC-label trainer). */
   private[operators] def audioDegen(s: SparkSession, dir: String): Seq[(Int, Long)] =
-    graft.operators.AnnModels.hammingDegen(s, dir, "au")(
-      Dedup.degenCensusOf(audioFingerprint(s, dir)
-        .select(col("doc_id"), col("afp").as("h"))))
+    Dedup.degenOf(graft.operators.AnnModels.audioDegen(s, dir))
+
+  /** The (doc_id, h) audio-print relation the hamming engine pairs. */
+  private[operators] def audioHashed(s: SparkSession, dir: String): DataFrame =
+    audioFingerprint(s, dir).select(col("doc_id"), col("afp").as("h"))
 
   /** The AUDIO-perceptual CC labeling (doc_id, cluster_id) — the
     * [[phashLabelsOf]] recipe on the Haitsma-Kalker fingerprint column
@@ -482,20 +480,20 @@ object Multimodal {
     * fingerprint; one pairing engine serves both modalities. */
   def phashPairs(s: SparkSession, dir: String): DataFrame =
     // the verified pair relation is registry-served per corpus state
-    // (the minhashVerified discipline — see AnnModels.hammingPairsStore)
-    graft.operators.AnnModels.hammingPairsStore(s, dir, "ph")(
-      phashPairsInline(s, dir))
+    // (the minhashVerified discipline)
+    graft.operators.AnnModels.phashPairs(s, dir)
 
   private[graft] def phashPairsInline(s: SparkSession, dir: String): DataFrame =
-    Dedup.hammingPairs(phash(s, dir).select(col("doc_id"), col("phash").as("h")),
-      servedDegen = Some(phashDegen(s, dir)))
+    Dedup.hammingPairs(phashed(s, dir), servedDegen = Some(phashDegen(s, dir)))
 
   /** The image hash family's registry-served degenerate census (shared
     * by the pairing query and the CC-label trainer). */
   private[operators] def phashDegen(s: SparkSession, dir: String): Seq[(Int, Long)] =
-    graft.operators.AnnModels.hammingDegen(s, dir, "ph")(
-      Dedup.degenCensusOf(phash(s, dir)
-        .select(col("doc_id"), col("phash").as("h"))))
+    Dedup.degenOf(graft.operators.AnnModels.phashDegen(s, dir))
+
+  /** The (doc_id, h) image-hash relation the hamming engine pairs. */
+  private[operators] def phashed(s: SparkSession, dir: String): DataFrame =
+    phash(s, dir).select(col("doc_id"), col("phash").as("h"))
 
   /** Perceptual-hash image DEDUP — the image half of a multimodal
     * curation pipeline (the DataComp/LAION near-duplicate removal step:

@@ -215,10 +215,14 @@ object Pipeline {
       "3, 'exact_dedup', c3, 4, 'semantic', c4, 5, 'aligned', c5) " +
       "AS (stage, stage_name, n_docs)"
 
+  /** Retention against the stage-0 count; NULL on an empty corpus (the
+    * oracle's integer division by zero). */
+  private def retainedPpm = expr("IF(c0 = 0, NULL, n_docs * 1000000 DIV c0)")
+
   def funnel(s: SparkSession, dir: String): DataFrame =
     funnelCounts(funnelFlags(s, dir), Seq.empty)
       .select(expr(funnelStack), col("c0"))
-      .withColumn("retained_ppm", expr("n_docs * 1000000 DIV c0"))
+      .withColumn("retained_ppm", retainedPpm)
       .drop("c0")
 
   /** PER-SOURCE curation funnel — the funnel × source dimension, the
@@ -234,7 +238,7 @@ object Pipeline {
   def funnelSource(s: SparkSession, dir: String): DataFrame =
     funnelCounts(funnelFlags(s, dir), Seq("source"))
       .select(col("source"), expr(funnelStack), col("c0"))
-      .withColumn("retained_ppm", expr("n_docs * 1000000 DIV c0"))
+      .withColumn("retained_ppm", retainedPpm)
       .drop("c0")
 
   /** Near-dup slack of the source-level gate, ppm: a source may exceed
@@ -356,17 +360,6 @@ object Pipeline {
   private[graft] def docTokensWith(s: SparkSession, dir: String, tc: Column): DataFrame =
     graft.sources.Tables.load(s, dir, "documents")
       .select(col("source"), col("doc_id"), tc.as("n_tok"))
-
-  private[graft] def bpeDocTokensInline(s: SparkSession, dir: String): DataFrame =
-    docTokensWith(s, dir, TextOps.bpeCount(col("text")))
-
-  private[graft] def trainedDocTokensInline(s: SparkSession, dir: String): DataFrame =
-    docTokensWith(s, dir,
-      graft.functions.BpeExpressions.bpeCount(col("text"), TextOps.trainedMerges(s, dir)))
-
-  private[graft] def trainedBigDocTokensInline(s: SparkSession, dir: String): DataFrame =
-    docTokensWith(s, dir,
-      graft.functions.BpeExpressions.bpeCount(col("text"), TextOps.trainedMergesBig(s, dir)))
 
   /** The two-level packing planner over ANY (source, doc_id, n_tok)
     * relation — `pack` feeds it the whole corpus, `build` the curated
@@ -1034,10 +1027,6 @@ object Pipeline {
     // composition + pack re-ran per invocation.
     graft.operators.AnnModels.buildManifest(s, dir)
 
-  private[graft] def buildInline(s: SparkSession, dir: String): DataFrame =
-    buildWith(s, dir,
-      TextOps.qualityModel(s, dir).filter(col("model_keep") === 1).select("doc_id"))
-
   /** [[build]] with the CORPUS-CALIBRATED model gate — the variant that
     * stays non-degenerate on corpora the shipped fixed coefficients were
     * never calibrated for (SCALE.md r8 documents the fixed gate emptying
@@ -1051,12 +1040,6 @@ object Pipeline {
     // chunk-count-sized and a pure function of corpus + constants.
     graft.operators.AnnModels.calibManifest(s, dir)
 
-  /** The composition chain itself — what AnnModels.calibManifest runs
-    * once per corpus state. */
-  private[graft] def buildCalibratedInline(s: SparkSession, dir: String): DataFrame =
-    buildWith(s, dir,
-      TextOps.qualityCalibrated(s, dir).filter(col("calib_keep") === 1).select("doc_id"))
-
   /** [[build]] with the fully LEARNED quality gate (r10): the model slot
     * holds `text_quality_trained` — feature WEIGHTS Rocchio-fit in-engine
     * against Gopher seed labels and served from the registry — so the
@@ -1066,10 +1049,6 @@ object Pipeline {
   def buildTrained(s: SparkSession, dir: String): DataFrame =
     graft.operators.AnnModels.trainedManifest(s, dir) // r17: served, see build
 
-  private[graft] def buildTrainedInline(s: SparkSession, dir: String): DataFrame =
-    buildWith(s, dir,
-      TextOps.qualityTrained(s, dir).filter(col("trained_keep") === 1).select("doc_id"))
-
   /** [[build]] with the LOGISTIC quality gate (r13): the model slot holds
     * `text_quality_lr` — a fixed-K batch-gradient logistic fit against
     * Gopher seed labels, served from the registry — the production
@@ -1078,11 +1057,9 @@ object Pipeline {
   def buildLr(s: SparkSession, dir: String): DataFrame =
     graft.operators.AnnModels.lrManifest(s, dir) // r17: served, see build
 
-  private[graft] def buildLrInline(s: SparkSession, dir: String): DataFrame =
-    buildWith(s, dir,
-      TextOps.qualityLr(s, dir).filter(col("lr_keep") === 1).select("doc_id"))
-
-  private def buildWith(s: SparkSession, dir: String, model: DataFrame): DataFrame =
+  /** The manifest composition over a model-gate slot — what the
+    * AnnModels build manifests run once per corpus state. */
+  private[graft] def buildWith(s: SparkSession, dir: String, model: DataFrame): DataFrame =
     packOf(buildBase(s, dir, model))
 
   /** The curated (source, doc_id, n_tok) relation `build` packs — exposed

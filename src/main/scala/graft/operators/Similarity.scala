@@ -132,24 +132,27 @@ object Similarity {
     math.max(NumCentroids,
       math.ceil(math.sqrt(math.max(n, 1L) / 32.0)).toInt)
 
-  /** The auto-sized K of `dir`'s embeddings corpus — memoized per
-    * (applicationId, dir, corpus fingerprint) so the IVF family really
-    * does pay ONE footer-stats count job per corpus STATE, not one per
-    * registry-key construction (ivfCentroids + ivfAssign +
-    * semanticLabels + ivfParts each consult K). The fingerprint in the
-    * key (ADVICE r15) is the same file-listing hash the registry's
-    * completion markers use: an in-place embeddings edit — which the
-    * artifact markers already catch and retrain on — now re-keys the
-    * memo too, so key and content can never disagree on the geometry
-    * after an edit that crosses a sizing boundary. The fingerprint
-    * probe is a directory listing (no data scan), strictly cheaper than
-    * the count job it gates. */
-  private val ivfKMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), Int]()
-  def ivfK(s: SparkSession, dir: String): Int =
-    ivfKMemo.computeIfAbsent((s.sparkContext.applicationId, dir,
+  /** The row count of `dir`'s embeddings corpus — the one memo behind
+    * every corpus-derived registry key constant (the IVF K and the k-NN
+    * graph geometry), memoized per (applicationId, dir, corpus
+    * fingerprint) so those keys pay ONE footer-stats count job per corpus
+    * STATE, not one per key construction. The fingerprint in the key
+    * (ADVICE r15) is the same file-listing hash the registry's completion
+    * markers use: an in-place embeddings edit — which the artifact
+    * markers already catch and retrain on — re-keys the memo too, so key
+    * and content can never disagree on a geometry after an edit that
+    * crosses a sizing boundary. The fingerprint probe is a directory
+    * listing (no data scan), strictly cheaper than the count job it
+    * gates. */
+  private val embCountMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), Long]()
+  private[graft] def embCount(s: SparkSession, dir: String): Long =
+    embCountMemo.computeIfAbsent((s.sparkContext.applicationId, dir,
         AnnModels.tableFingerprint(s, dir, "embeddings")),
-      _ => ivfSizing(emb(s, dir).count()))
+      _ => emb(s, dir).count())
+
+  /** The auto-sized K of `dir`'s embeddings corpus. */
+  def ivfK(s: SparkSession, dir: String): Int = ivfSizing(embCount(s, dir))
 
   /** IVF-style ANN with a TRAINED coarse quantizer: `KMeansIters` Lloyd's
     * iterations over a deterministic `vec_id % TrainMod` training sample
@@ -243,10 +246,6 @@ object Similarity {
       .filter(col("arn") === 1)
       .select(col("vec_id"), col("cent_id"), col("ccos"))
   }
-
-  /** Inline trainer for [[AnnModels.ivfAssign]] (default constants). */
-  private[graft] def ivfAssignInline(s: SparkSession, dir: String): DataFrame =
-    ivfAssignWith(emb(s, dir), AnnModels.ivfCentroids(s, dir))
 
   /** The IVF coarse-quantizer training loop (`KMeansIters` deterministic
     * Lloyd's rounds over the `vec_id % trainMod` sample — see `annIvf`'s
@@ -538,18 +537,14 @@ object Similarity {
     * caller hand-applies the rule. */
   def knnGraph(s: SparkSession, dir: String): DataFrame =
     // REGISTRY-SERVED (r16, VERDICT r15 #2): the graph is a per-corpus-
-    // state product (the hammingPairsStore shape on the embedding
+    // state product (the hamming pair-store shape on the embedding
     // column) — built once via the auto-sized geometry, then every read
     // (the gated query, diversity sampling, embedding-dedup precursors)
     // is a bare artifact scan instead of a 30–60 s ×100 rebuild.
     AnnModels.knnGraph(s, dir)
 
-  /** The inline build at the auto-sized geometry — what the registry
-    * runs once per corpus state. */
-  private[graft] def knnGraphInline(s: SparkSession, dir: String): DataFrame = {
-    val (tables, planes) = graphSizing(emb(s, dir).count())
-    knnGraphTuned(s, dir, tables, planes, GraphBucketCap)
-  }
+  /** The auto-sized (tables, planes) geometry of `dir`'s corpus. */
+  def graphSize(s: SparkSession, dir: String): (Int, Int) = graphSizing(embCount(s, dir))
 
   /** `knnGraph` with the table/plane/cap knobs exposed — the gated query
     * uses the test-corpus constants above; a deployment (and the

@@ -42,9 +42,6 @@ object TextOps {
   def langid(s: SparkSession, dir: String): DataFrame =
     AnnModels.langidScores(s, dir)
 
-  private[graft] def langidInline(s: SparkSession, dir: String): DataFrame =
-    langidOf(docs(s, dir))
-
   private[graft] def langidOf(d: DataFrame): DataFrame = {
     val toks = wsTokens(col("text"))
     val scores = Markers.map { case (lang, words) => lang -> markerCount(toks, words) }
@@ -194,17 +191,8 @@ object TextOps {
     * round-trips bit-identically. */
   def quality(s: SparkSession, dir: String): DataFrame =
     // the artifact carries a trailing `source` column for the pack family
-    // (see qualityInline); the gated relation is the original 7-column shape
+    // (see AnnModels.qualityScores); the gated relation is the original 7-column shape
     AnnModels.qualityScores(s, dir).drop("source")
-
-  private[graft] def qualityInline(s: SparkSession, dir: String): DataFrame =
-    // withSource: the artifact doubles as the corpus (source, doc_id, n_tok)
-    // spine for the pack family (Pipeline.docTokens) — carrying the 20-value
-    // source label costs nothing and removes the doc_id join (and its
-    // Exchange) every pack/build consumer paid. Coverage is 1:1 by
-    // construction (one row per document, no filter in the chain below) —
-    // load-bearing: the pack manifests count exactly these rows.
-    qualityOf(docs(s, dir), withSource = true)
 
   private[graft] def qualityOf(d: DataFrame, withSource: Boolean = false): DataFrame = {
     val toks = wsTokens(col("text"))
@@ -285,11 +273,6 @@ object TextOps {
     // by seven consumers, each of which paid the full text scan per
     // invocation.
     AnnModels.gopherFlags(s, dir)
-
-  /** The battery itself — what AnnModels.gopherFlags runs once per
-    * corpus state. */
-  private[graft] def gopherRulesInline(s: SparkSession, dir: String): DataFrame =
-    gopherRulesOf(docs(s, dir))
 
   private[graft] def gopherRulesOf(d: DataFrame): DataFrame = {
     val toks = wsTokens(col("text"))
@@ -866,9 +849,6 @@ object TextOps {
   def bpeVocab(s: SparkSession, dir: String): DataFrame =
     AnnModels.bpeStaticVocab(s, dir) // r17 batch 3: model-sized, one file
 
-  private[graft] def bpeVocabInline(s: SparkSession, dir: String): DataFrame =
-    bpeVocabWith(docs(s, dir), BpeMerges)
-
   private[graft] def bpeVocabWith(d: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
     val s = d.sparkSession
@@ -916,9 +896,6 @@ object TextOps {
   def bpeIds(s: SparkSession, dir: String): DataFrame =
     AnnModels.bpeStaticIdStream(s, dir) // r17 batch 3: the tokenized corpus
 
-  private[graft] def bpeIdsInline(s: SparkSession, dir: String): DataFrame =
-    bpeIdsWith(docs(s, dir), BpeMerges)
-
   private[graft] def bpeIdsWith(d: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
     val vocab = bpeVocabWith(d, merges).select(col("token"), col("token_id")).collect()
@@ -958,9 +935,6 @@ object TextOps {
     // train → encode chain from the raw corpus.
     AnnModels.bpeTrainedIdStream(s, dir)
 
-  private[graft] def bpeTrainedIdsInline(s: SparkSession, dir: String): DataFrame =
-    bpeIdsWith(docs(s, dir), trainedMerges(s, dir))
-
   /** [[bpeTrainedIds]] at PRODUCTION merge count: the registry-persisted
     * 256-rule batched-trainer table drives the same native
     * encoder + vocab + id chain. The merge table is still model-sized
@@ -969,9 +943,6 @@ object TextOps {
     * (recursive CTE instead of per-rule unrolling) to follow k. */
   def bpeTrainedIdsBig(s: SparkSession, dir: String): DataFrame =
     AnnModels.bpeTrainedIdStreamBig(s, dir) // r17: served, see bpeTrainedIds
-
-  private[graft] def bpeTrainedIdsBigInline(s: SparkSession, dir: String): DataFrame =
-    bpeIdsWith(docs(s, dir), trainedMergesBig(s, dir))
 
   /** Rank-ordered collect of the production-count trained merge table —
     * [[trainedMerges]]'s contract at [[BpeTrainMergesBig]]. */
@@ -1166,7 +1137,7 @@ object TextOps {
   /** The full scoring pass against the persisted LM trio — what
     * AnnModels.pplScores runs ONCE per corpus state. */
   private[graft] def perplexityInline(s: SparkSession, dir: String): DataFrame = {
-    val (c3, c2, u) = AnnModels.trigramLm(s, dir)
+    val Seq(c3, c2, u) = AnnModels.trigramLm(s, dir)
     perplexityScore(docs(s, dir), c3, c2, u)
   }
 
@@ -1330,7 +1301,7 @@ object TextOps {
   /** The full KN5 chain (persisted LM relations + the eight-join scoring
     * pass) — what AnnModels.ppl5Scores runs ONCE per corpus state. */
   private[graft] def perplexityKn5Inline(s: SparkSession, dir: String): DataFrame = {
-    val (c5, c4, c3, c2, u) = AnnModels.kn5Lm(s, dir)
+    val Seq(c5, c4, c3, c2, u) = AnnModels.kn5Lm(s, dir)
     kn5Score(docs(s, dir), c5, c4, c3, c2, u)
   }
 
@@ -1495,7 +1466,7 @@ object TextOps {
     * model + the persisted bar; what [[AnnModels.dsirScored]] runs once
     * per corpus state (and the plan-contract pin). */
   private[graft] def importanceDsirServe(s: SparkSession, dir: String): DataFrame = {
-    val (lr, thr) = AnnModels.dsirModel(s, dir)
+    val Seq(lr, thr) = AnnModels.dsirModel(s, dir)
     dsirSelect(dsirScores(dsirOcc(docs(s, dir)), lr), thr)
   }
 
@@ -1506,7 +1477,7 @@ object TextOps {
     AnnModels.dsirScored8k(s, dir) // r17: served, see importanceDsir
 
   private[graft] def importanceDsirServe8k(s: SparkSession, dir: String): DataFrame = {
-    val (lr, thr) = AnnModels.dsirModel8k(s, dir)
+    val Seq(lr, thr) = AnnModels.dsirModel8k(s, dir)
     dsirSelect(dsirScores(dsirOcc(docs(s, dir), DsirBuckets8k), lr), thr)
   }
 
@@ -1700,22 +1671,17 @@ object TextOps {
     // read the artifact). The trainer below is the inline chain.
     AnnModels.qualityLogits(s, dir)
 
-  /** The full scoring chain (features + artifact-backed LM surprise) —
-    * what AnnModels.qualityLogits runs ONCE per corpus state. */
-  private[graft] def qualityModelInline(s: SparkSession, dir: String): DataFrame =
-    qualityModelWith(docs(s, dir), perplexity(s, dir))
-
   private[graft] def qualityModelOf(d: DataFrame): DataFrame =
     qualityModelWith(d, perplexityOf(d))
 
-  private def qualityModelWith(d: DataFrame, ppl: DataFrame): DataFrame = {
+  private[graft] def qualityModelWith(d: DataFrame, ppl: DataFrame): DataFrame = {
     def q4(c: Column): Column = floor(c * 1e4 + 0.5).cast("long")
     // Deliberately the FEATURE-JOIN form, not one fused [[logitBaseCol]]
     // projection: the fused expression falls out of whole-stage codegen
     // (HOF-heavy) and interpreted eval gets no common-subexpression
     // elimination, so "one scan" measured 2x SLOWER end-to-end than the
     // three smaller projections (7.1-8.9 s vs 3.7 s for the calibrated
-    // gate at sf0.1 — profiled, not guessed; tools/ProfileQuality). The
+    // gate at sf0.1 — profiled, not guessed). The
     // stream transform keeps logitBaseCol where a single per-row column
     // is structurally required, with the per-doc parity spec pinning the
     // two formulations equal.
@@ -1924,7 +1890,7 @@ object TextOps {
     * grid-quantized sigmoid per (doc, round), truncating-DIV updates
     * (spec: identical (mu, w) on both corpora).
     *
-    * MEASURED at ×100 (500k docs, ProfileLrCost): 17.1 s vs the loop's
+    * MEASURED at ×100 (500k docs): 17.1 s vs the loop's
     * 9.4 s — the driver round-trip was never the bottleneck (1 row per
     * round), while attaching the broadcast state row costs a
     * BroadcastNestedLoopJoin PER TRAINING ROW per round and breaks the
@@ -2184,9 +2150,6 @@ object TextOps {
     val occ = ftOcc6(d).localCheckpoint()
     qualityFtScoreWith(occ, qualityFtFit(occ, gopherSeedOf(d)))
   }
-
-  private[graft] def qualityFtInline(s: SparkSession, dir: String): DataFrame =
-    qualityFtInlineOf(docs(s, dir))
 
   /** The HASHED-NGRAM learned quality gate (fastText shape) —
     * registry-served scores (AnnModels.ftMargins): the trained-margin
@@ -3159,7 +3122,7 @@ object TextOps {
     * scores against — j = 0 is the bias (mu 0), j = 1..6 the
     * QualityFeatNames order. */
   private[graft] def qualityLrGateInline(s: SparkSession, dir: String): DataFrame = {
-    val (c3, c2, u, _) = AnnModels.ingestGate(s, dir)
+    val Seq(c3, c2, u, _) = AnnModels.ingestGate(s, dir)
     val corpus = docs(s, dir).filter(col("source") =!= "src0")
     val feats = qualityFeaturesOf(corpus, perplexityScore(corpus, c3, c2, u))
       .localCheckpoint()

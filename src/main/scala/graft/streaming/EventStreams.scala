@@ -604,7 +604,7 @@ object EventStreams {
     * oracle-replayed form; [[startIngestGateStream]] is the same
     * computation as a streaming query. */
   def ingestGateBatch(s: SparkSession, dir: String): DataFrame = {
-    val (c3, c2, u, thr) = graft.operators.AnnModels.ingestGate(s, dir)
+    val Seq(c3, c2, u, thr) = graft.operators.AnnModels.ingestGate(s, dir)
     val batch = Tables.load(s, dir, "documents").filter(col("source") === "src0")
     graft.operators.TextOps.ingestLogits(batch, c3, c2, u)
       .crossJoin(broadcast(thr))
@@ -625,7 +625,7 @@ object EventStreams {
     * gated, oracle-replayed form; [[runIngestLrStep]] is the restartable
     * nightly streaming form over the same scoring path. */
   def ingestLrBatch(s: SparkSession, dir: String): DataFrame = {
-    val (c3, c2, u, _) = graft.operators.AnnModels.ingestGate(s, dir)
+    val Seq(c3, c2, u, _) = graft.operators.AnnModels.ingestGate(s, dir)
     val model = graft.operators.AnnModels.lrGate(s, dir)
     lrVerdicts(Tables.load(s, dir, "documents").filter(col("source") === "src0"),
       c3, c2, u, model)
@@ -658,7 +658,7 @@ object EventStreams {
   def runIngestLrStep(s: SparkSession, corpusDir: String, dropDir: String,
       checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit = {
     if (!hasDrops(s, dropDir, glob)) return // no drops tonight — no-op, not a crash
-    val (c3, c2, u, _) = graft.operators.AnnModels.ingestGate(s, corpusDir)
+    val Seq(c3, c2, u, _) = graft.operators.AnnModels.ingestGate(s, corpusDir)
     val model = graft.operators.AnnModels.lrGate(s, corpusDir)
     val rawSchema = s.read.option("pathGlobFilter", glob).parquet(dropDir).schema
     val stream = s.readStream.schema(rawSchema).option("pathGlobFilter", glob)
@@ -692,7 +692,7 @@ object EventStreams {
     * oracle-replayed form; [[runIngestDsirStep]] is the restartable
     * nightly streaming form over the same scoring path. */
   def ingestDsirBatch(s: SparkSession, dir: String): DataFrame = {
-    val (lr, thr) = graft.operators.AnnModels.dsirGate(s, dir)
+    val Seq(lr, thr) = graft.operators.AnnModels.dsirGate(s, dir)
     dsirVerdicts(
       Tables.load(s, dir, "documents").filter(col("source") === "src0"), lr, thr)
   }
@@ -726,7 +726,7 @@ object EventStreams {
   def runIngestDsirStep(s: SparkSession, corpusDir: String, dropDir: String,
       checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit = {
     if (!hasDrops(s, dropDir, glob)) return // no drops tonight — no-op, not a crash
-    val (lr, thr) = graft.operators.AnnModels.dsirGate(s, corpusDir)
+    val Seq(lr, thr) = graft.operators.AnnModels.dsirGate(s, corpusDir)
     val rawSchema = s.read.option("pathGlobFilter", glob).parquet(dropDir).schema
     val stream = s.readStream.schema(rawSchema).option("pathGlobFilter", glob)
       .parquet(dropDir)
@@ -837,7 +837,7 @@ object EventStreams {
   def runIngestGateStep(s: SparkSession, corpusDir: String, dropDir: String,
       checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit = {
     if (!hasDrops(s, dropDir, glob)) return // no drops tonight — no-op, not a crash
-    val (c3, c2, u, thr) = graft.operators.AnnModels.ingestGate(s, corpusDir)
+    val Seq(c3, c2, u, thr) = graft.operators.AnnModels.ingestGate(s, corpusDir)
     val rawSchema = s.read.option("pathGlobFilter", glob).parquet(dropDir).schema
     val stream = s.readStream.schema(rawSchema).option("pathGlobFilter", glob)
       .parquet(dropDir)
@@ -1126,7 +1126,7 @@ object EventStreams {
   }
 
   def startIngestGateStream(s: SparkSession, dir: String, name: String): StreamingQuery = {
-    val (c3, c2, u, thr) = graft.operators.AnnModels.ingestGate(s, dir)
+    val Seq(c3, c2, u, thr) = graft.operators.AnnModels.ingestGate(s, dir)
     val rawSchema = s.read.option("pathGlobFilter", "documents.parquet").parquet(dir).schema
     val stream = s.readStream.schema(rawSchema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)

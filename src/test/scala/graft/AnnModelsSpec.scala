@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.DataFrame
 import graft.operators.{AnnModels, Dedup, Similarity}
 
-/** The persisted-model contract (VERDICT r6 #2): Lloyd's runs at most ONCE
-  * per (dataset, constants) across every consumer, later consumers read the
-  * parquet artifact, and artifact-served queries are bit-identical to
-  * inline training (the oracle replays training from scratch, so parity
-  * here is what keeps the correctness gate meaningful).
+/** The persisted-model contract: every registry artifact builds at most
+  * ONCE per (dataset, constants) across all consumers, later consumers read
+  * the parquet artifact, served relations are bit-identical to their builds
+  * (the oracle replays training from scratch, so parity here is what keeps
+  * the correctness gate meaningful), and every key covers every constant
+  * and artifact its content depends on.
   */
 class AnnModelsSpec extends SparkSpec {
 
@@ -22,55 +23,29 @@ class AnnModelsSpec extends SparkSpec {
     d.toString
   }
 
-  test("IVF centroids train exactly once per dataset; the artifact serves all later reads") {
-    AnnModels.withRoot(freshRoot("ivf")) {
-      val t0 = AnnModels.ivfTrains
-      val first = rows(AnnModels.ivfCentroids(spark, sf))
-      assert(AnnModels.ivfTrains == t0 + 1, "first access must train")
-      val second = AnnModels.ivfCentroids(spark, sf)
-      assert(AnnModels.ivfTrains == t0 + 1, "second access must serve the artifact, not retrain")
-      assert(second.inputFiles.nonEmpty &&
-        second.inputFiles.forall(_.contains("graft-annmodels-ivf")),
-        s"artifact read must scan the model store, got ${second.inputFiles.mkString(",")}")
-      assert(rows(second) == first, "artifact round-trip changed the model")
-    }
-  }
-
-  test("artifact-served centroids are bit-identical to inline training") {
-    AnnModels.withRoot(freshRoot("parity")) {
-      val ivfArtifact = rows(AnnModels.ivfCentroids(spark, sf))
-      val ivfInline = rows(Similarity.trainIvfCentroids(spark, sf,
-        Similarity.KMeansIters, Similarity.TrainMod, Similarity.ivfK(spark, sf)))
-      assert(ivfArtifact == ivfInline, "IVF artifact diverges from inline training")
-      val pqArtifact = rows(AnnModels.pqCodebook(spark, sf))
-      val pqInline = rows(Similarity.trainPqCodebook(spark, sf))
-      assert(pqArtifact == pqInline, "PQ artifact diverges from inline training")
-    }
-  }
-
   test("all five model consumers share one IVF training pass and one PQ training pass") {
     AnnModels.withRoot(freshRoot("share")) {
-      val (i0, p0) = (AnnModels.ivfTrains, AnnModels.pqTrains)
+      val (i0, p0) = (AnnModels.ivfCentroids.builds, AnnModels.pqCodebook.builds)
       Similarity.annIvf(spark, sf).collect()
       Similarity.annPq(spark, sf).collect()
       Similarity.annIvfPq(spark, sf).collect()
       Dedup.semanticDedup(spark, sf).collect()
       Dedup.semanticDedupKeep(spark, sf).collect()
-      assert(AnnModels.ivfTrains == i0 + 1,
-        s"expected ONE IVF training pass across consumers, got ${AnnModels.ivfTrains - i0}")
-      assert(AnnModels.pqTrains == p0 + 1,
-        s"expected ONE PQ training pass across consumers, got ${AnnModels.pqTrains - p0}")
+      assert(AnnModels.ivfCentroids.builds == i0 + 1,
+        s"expected ONE IVF training pass across consumers, got ${AnnModels.ivfCentroids.builds - i0}")
+      assert(AnnModels.pqCodebook.builds == p0 + 1,
+        s"expected ONE PQ training pass across consumers, got ${AnnModels.pqCodebook.builds - p0}")
     }
   }
 
   test("trigram LM trains once per dataset and artifact scores are bit-identical") {
     AnnModels.withRoot(freshRoot("lm")) {
-      val t0 = AnnModels.lmTrains
+      val t0 = AnnModels.trigramLm.builds
       val first = rows(graft.operators.TextOps.perplexity(spark, sf))
-      assert(AnnModels.lmTrains == t0 + 1, "first access must train the LM")
+      assert(AnnModels.trigramLm.builds == t0 + 1, "first access must train the LM")
       // artifact-served run: no retraining, identical scores
       val second = rows(graft.operators.TextOps.perplexity(spark, sf))
-      assert(AnnModels.lmTrains == t0 + 1, "second access must serve the artifact")
+      assert(AnnModels.trigramLm.builds == t0 + 1, "second access must serve the artifact")
       assert(second == first, "artifact round-trip changed perplexity scores")
       // inline training (the df-based spec path) agrees exactly
       val inline = rows(graft.operators.TextOps.perplexityOf(
@@ -79,18 +54,18 @@ class AnnModelsSpec extends SparkSpec {
       // the downstream model consumers share the one trained LM
       graft.operators.TextOps.qualityModel(spark, sf).collect()
       graft.operators.Pipeline.curateModel(spark, sf).collect()
-      assert(AnnModels.lmTrains == t0 + 1,
-        s"LM consumers retrained: ${AnnModels.lmTrains - t0} passes")
+      assert(AnnModels.trigramLm.builds == t0 + 1,
+        s"LM consumers retrained: ${AnnModels.trigramLm.builds - t0} passes")
     }
   }
 
   test("langid centroids train once; artifact-served scoring is bit-identical to inline") {
     AnnModels.withRoot(freshRoot("langid")) {
-      val t0 = AnnModels.langidTrains
+      val t0 = AnnModels.langidCentroids.builds
       val first = rows(graft.operators.TextOps.langidModel(spark, sf))
-      assert(AnnModels.langidTrains == t0 + 1, "first access must train the centroids")
+      assert(AnnModels.langidCentroids.builds == t0 + 1, "first access must train the centroids")
       val second = rows(graft.operators.TextOps.langidModel(spark, sf))
-      assert(AnnModels.langidTrains == t0 + 1, "second access must serve the artifact")
+      assert(AnnModels.langidCentroids.builds == t0 + 1, "second access must serve the artifact")
       assert(second == first, "artifact round-trip changed predictions")
       val inline = rows(graft.operators.TextOps.langidModelOf(
         graft.sources.Tables.load(spark, sf, "documents")))
@@ -100,11 +75,11 @@ class AnnModelsSpec extends SparkSpec {
 
   test("BPE merge table trains once; the trained table drives the encoder chain") {
     AnnModels.withRoot(freshRoot("bpe")) {
-      val t0 = AnnModels.bpeTrains
+      val t0 = AnnModels.bpeMergeTable.builds
       val first = rows(graft.operators.TextOps.bpeTrainedIds(spark, sf))
-      assert(AnnModels.bpeTrains == t0 + 1, "first access must train the merge table")
+      assert(AnnModels.bpeMergeTable.builds == t0 + 1, "first access must train the merge table")
       val second = rows(graft.operators.TextOps.bpeTrainedIds(spark, sf))
-      assert(AnnModels.bpeTrains == t0 + 1, "second access must serve the artifact")
+      assert(AnnModels.bpeMergeTable.builds == t0 + 1, "second access must serve the artifact")
       assert(second == first, "artifact round-trip changed the id stream")
       assert(rows(AnnModels.bpeMergeTable(spark, sf)) ==
         rows(graft.operators.TextOps.bpeTrain(spark, sf)),
@@ -117,11 +92,11 @@ class AnnModelsSpec extends SparkSpec {
 
   test("quality centroids train once; the trained gate splits the corpus") {
     AnnModels.withRoot(freshRoot("qual")) {
-      val t0 = AnnModels.qualityTrains
+      val t0 = AnnModels.qualityCentroids.builds
       val first = rows(graft.operators.TextOps.qualityTrained(spark, sf))
-      assert(AnnModels.qualityTrains == t0 + 1, "first access must train the centroids")
+      assert(AnnModels.qualityCentroids.builds == t0 + 1, "first access must train the centroids")
       val second = rows(graft.operators.TextOps.qualityTrained(spark, sf))
-      assert(AnnModels.qualityTrains == t0 + 1, "second access must serve the artifact")
+      assert(AnnModels.qualityCentroids.builds == t0 + 1, "second access must serve the artifact")
       assert(second == first, "artifact round-trip changed the gate")
       // non-degenerate on the shipped corpus: the learned hyperplane keeps
       // some and drops some (the >=6-of-7 seed split generalizes)
@@ -172,11 +147,11 @@ class AnnModelsSpec extends SparkSpec {
         (1L, "srcA", shared),
         (2L, "srcA", "unrelated corpus filler content nine ten eleven twelve"),
         (10L, "src0", shared)))
-      val b0 = AnnModels.lshIndexBuilds
+      val b0 = AnnModels.lshIndex.builds
       val first = graft.streaming.EventStreams.incrementalVsIndex(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(first == Set((10L, 1L, 0)), s"probe matches the one corpus copy: $first")
-      assert(AnnModels.lshIndexBuilds == b0 + 1)
+      assert(AnnModels.lshIndex.builds == b0 + 1)
       // MUTATE the corpus IN PLACE at the same path: add corpus doc 5 with
       // the shared text. Without the freshness fingerprint the persisted
       // index still exists for this (dir, params) key and doc 5 would be
@@ -188,7 +163,7 @@ class AnnModelsSpec extends SparkSpec {
         (10L, "src0", shared)))
       val second = graft.streaming.EventStreams.incrementalVsIndex(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(AnnModels.lshIndexBuilds == b0 + 2,
+      assert(AnnModels.lshIndex.builds == b0 + 2,
         "in-place mutation must retrain the index")
       assert(second == Set((10L, 2L, 0)),
         s"retrained index must surface the backfilled corpus doc: $second")
@@ -217,17 +192,17 @@ class AnnModelsSpec extends SparkSpec {
         (1L, "srcA", shared),
         (2L, "srcA", "unrelated corpus asset content nine ten eleven twelve"),
         (10L, "src0", shared)))
-      val b0 = AnnModels.phashIndexBuilds
+      val b0 = AnnModels.phashIndex.builds
       val first = graft.streaming.EventStreams.phashVsIndex(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(first == Set((10L, 1L, 0)), s"probe matches the one corpus copy: $first")
-      assert(AnnModels.phashIndexBuilds == b0 + 1)
+      assert(AnnModels.phashIndex.builds == b0 + 1)
       // artifact-served form == the in-query form, and serving never retrains
       val inQuery = graft.operators.Multimodal.phashIncremental(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(inQuery == first, "artifact-served probe diverged from the in-query form")
       graft.streaming.EventStreams.phashVsIndex(spark, dir).collect()
-      assert(AnnModels.phashIndexBuilds == b0 + 1, "second probe must serve the artifact")
+      assert(AnnModels.phashIndex.builds == b0 + 1, "second probe must serve the artifact")
       // in-place corpus backfill: a second copy of the shared payload must
       // retrain the index and surface in the next probe
       writeDocs(Seq(
@@ -237,7 +212,7 @@ class AnnModelsSpec extends SparkSpec {
         (10L, "src0", shared)))
       val second = graft.streaming.EventStreams.phashVsIndex(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(AnnModels.phashIndexBuilds == b0 + 2,
+      assert(AnnModels.phashIndex.builds == b0 + 2,
         "in-place mutation must retrain the index")
       assert(second == Set((10L, 2L, 0)),
         s"retrained index must surface the backfilled corpus asset: $second")
@@ -246,12 +221,12 @@ class AnnModelsSpec extends SparkSpec {
 
   test("phash labels artifact: one CC run serves both phash dedup and keep-best-copy") {
     AnnModels.withRoot(freshRoot("phlab")) {
-      val b0 = AnnModels.phashLabelBuilds
+      val b0 = AnnModels.phashLabels.builds
       val dedup = graft.operators.Multimodal.phashDedup(spark, sf).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(AnnModels.phashLabelBuilds == b0 + 1, "first consumer must build the labeling")
+      assert(AnnModels.phashLabels.builds == b0 + 1, "first consumer must build the labeling")
       graft.operators.Multimodal.phashKeep(spark, sf).collect()
-      assert(AnnModels.phashLabelBuilds == b0 + 1,
+      assert(AnnModels.phashLabels.builds == b0 + 1,
         "the second consumer must serve the same artifact")
       // served labels are bit-identical to the inline CC run
       val inline = graft.operators.Multimodal.phashLabelsOf(spark, sf).collect()
@@ -267,35 +242,35 @@ class AnnModelsSpec extends SparkSpec {
   test("quality logits and trained margins: registry-served, bit-identical to inline") {
     val T = graft.operators.TextOps
     AnnModels.withRoot(freshRoot("qlog")) {
-      val a0 = AnnModels.qualityLogitTrains
+      val a0 = AnnModels.qualityLogits.builds
       val served = rows(T.qualityModel(spark, sf))
-      assert(AnnModels.qualityLogitTrains == a0 + 1, "first consumer must score the corpus")
-      assert(served == rows(T.qualityModelInline(spark, sf)),
+      assert(AnnModels.qualityLogits.builds == a0 + 1, "first consumer must score the corpus")
+      assert(served == rows(AnnModels.qualityLogits.build(spark, sf)),
         "artifact-served logits diverged from the inline scoring chain")
       T.qualityCalibrated(spark, sf).collect()
       graft.operators.Pipeline.curateModel(spark, sf).collect()
-      assert(AnnModels.qualityLogitTrains == a0 + 1,
+      assert(AnnModels.qualityLogits.builds == a0 + 1,
         "calibrated gate and curation must serve the one scored relation")
-      val b0 = AnnModels.trainedMarginTrains
+      val b0 = AnnModels.trainedMargins.builds
       val servedT = rows(T.qualityTrained(spark, sf))
-      assert(AnnModels.trainedMarginTrains == b0 + 1)
+      assert(AnnModels.trainedMargins.builds == b0 + 1)
       assert(servedT == rows(T.qualityTrainedInline(spark, sf)),
         "artifact-served margins diverged from the inline trained chain")
       graft.operators.Pipeline.buildTrained(spark, sf).collect()
-      assert(AnnModels.trainedMarginTrains == b0 + 1,
+      assert(AnnModels.trainedMargins.builds == b0 + 1,
         "the build capstone must serve the trained relation")
     }
   }
 
   test("shingle-pair store: one posting-list expansion serves all four verifiers") {
     AnnModels.withRoot(freshRoot("shpairs")) {
-      val b0 = AnnModels.shinglePairBuilds
+      val b0 = AnnModels.shinglePairs.builds
       val jac = rows(Dedup.ngramJaccard(spark, sf))
-      assert(AnnModels.shinglePairBuilds == b0 + 1, "first consumer must build the store")
+      assert(AnnModels.shinglePairs.builds == b0 + 1, "first consumer must build the store")
       Dedup.containment(spark, sf).collect()
       Dedup.lshRecall(spark, sf).collect()
       Dedup.lshRecallBanded(spark, sf).collect()
-      assert(AnnModels.shinglePairBuilds == b0 + 1,
+      assert(AnnModels.shinglePairs.builds == b0 + 1,
         "all verifiers must serve the one pair store")
       // served pairs are bit-identical to the inline expansion
       assert(rows(AnnModels.shinglePairs(spark, sf)) ==
@@ -307,15 +282,15 @@ class AnnModelsSpec extends SparkSpec {
 
   test("verified pairs: one candidate+verify chain serves the gated query, the overlap matrix and the CC trainer") {
     AnnModels.withRoot(freshRoot("vpairs")) {
-      val v0 = AnnModels.verifiedPairBuilds
+      val v0 = AnnModels.verifiedPairs.builds
       val served = rows(Dedup.minhashVerified(spark, sf))
-      assert(AnnModels.verifiedPairBuilds == v0 + 1, "first consumer must run the chain")
+      assert(AnnModels.verifiedPairs.builds == v0 + 1, "first consumer must run the chain")
       assert(served == rows(Dedup.minhashVerifiedInline(spark, sf)),
         "artifact-served verified pairs diverged from the inline chain")
       assert(served.nonEmpty, "construction check: the corpus has verified pairs")
       Dedup.sourceOverlap(spark, sf).collect()
       Dedup.survivors(spark, sf).collect()
-      assert(AnnModels.verifiedPairBuilds == v0 + 1,
+      assert(AnnModels.verifiedPairs.builds == v0 + 1,
         "the overlap matrix and the survivor trainer must serve the one pair relation")
     }
   }
@@ -323,15 +298,15 @@ class AnnModelsSpec extends SparkSpec {
   test("perplexity scores: one scoring pass serves the bucket, curriculum and gate consumers") {
     val T = graft.operators.TextOps
     AnnModels.withRoot(freshRoot("ppl")) {
-      val p0 = AnnModels.pplScoreTrains
+      val p0 = AnnModels.pplScores.builds
       val served = rows(T.perplexity(spark, sf))
-      assert(AnnModels.pplScoreTrains == p0 + 1, "first consumer must score the corpus")
+      assert(AnnModels.pplScores.builds == p0 + 1, "first consumer must score the corpus")
       assert(served == rows(T.perplexityInline(spark, sf)),
         "artifact-served scores diverged from the inline scoring pass")
       T.perplexityBucket(spark, sf).collect()
       graft.operators.Pipeline.curriculum(spark, sf).collect()
       T.qualityModel(spark, sf).collect()
-      assert(AnnModels.pplScoreTrains == p0 + 1,
+      assert(AnnModels.pplScores.builds == p0 + 1,
         "bucket, curriculum and quality consumers must serve the one scored relation")
     }
   }
@@ -353,11 +328,11 @@ class AnnModelsSpec extends SparkSpec {
       .toDF("doc_id", "source", "text")
       .write.partitionBy("source").mode("overwrite").parquet(table)
     AnnModels.withRoot(freshRoot("nested")) {
-      val b0 = AnnModels.lshIndexBuilds
+      val b0 = AnnModels.lshIndex.builds
       val first = graft.streaming.EventStreams.incrementalVsIndex(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(first == Set((10L, 0L, 1)), s"no corpus copy of the probe text yet: $first")
-      assert(AnnModels.lshIndexBuilds == b0 + 1)
+      assert(AnnModels.lshIndex.builds == b0 + 1)
       // mutate ONE nested partition in place: a leaf file with a copy of
       // the shared text lands under source=srcA/ WITHOUT any top-level
       // file changing (the directory entry itself is not a file, so the
@@ -372,7 +347,7 @@ class AnnModelsSpec extends SparkSpec {
         java.nio.file.Paths.get(table, "source=srcA", "part-backfill.parquet"))
       val second = graft.streaming.EventStreams.incrementalVsIndex(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(AnnModels.lshIndexBuilds == b0 + 2,
+      assert(AnnModels.lshIndex.builds == b0 + 2,
         "a nested partition rewrite must invalidate the persisted index")
       assert(second == Set((10L, 1L, 0)),
         s"retrained index must surface the rewritten partition's doc: $second")
@@ -441,9 +416,9 @@ class AnnModelsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val root = freshRoot("marker")
     AnnModels.withRoot(root) {
-      val t0 = AnnModels.ingestGateTrains
+      val t0 = AnnModels.ingestGate.builds
       val first = rows(graft.streaming.EventStreams.ingestGateBatch(spark, dir))
-      assert(AnnModels.ingestGateTrains == t0 + 1)
+      assert(AnnModels.ingestGate.builds == t0 + 1)
       // simulate a crash after the relations were written but before the
       // completion marker: a partially-committed artifact must retrain,
       // never serve (the mixed-state guard — ADVICE r10 atomicity)
@@ -452,7 +427,7 @@ class AnnModelsSpec extends SparkSpec {
       assert(marker.exists(), "training must leave a completion marker")
       assert(marker.delete())
       val second = rows(graft.streaming.EventStreams.ingestGateBatch(spark, dir))
-      assert(AnnModels.ingestGateTrains == t0 + 2,
+      assert(AnnModels.ingestGate.builds == t0 + 2,
         "an unmarked artifact must retrain, not serve")
       assert(second == first)
       // and the four relations live under ONE marker-gated generation dir
@@ -466,24 +441,24 @@ class AnnModelsSpec extends SparkSpec {
 
   test("survivor labeling trains once; all curation consumers serve the artifact") {
     AnnModels.withRoot(freshRoot("cclab")) {
-      val b0 = AnnModels.survivorBuilds
+      val b0 = AnnModels.survivorLabels.builds
       val first = rows(Dedup.survivors(spark, sf))
-      assert(AnnModels.survivorBuilds == b0 + 1, "first access must run the CC chain")
+      assert(AnnModels.survivorLabels.builds == b0 + 1, "first access must run the CC chain")
       // every other consumer of the canonical set serves the artifact
       graft.operators.Pipeline.curateNearDup(spark, sf).collect()
       graft.operators.Pipeline.build(spark, sf).collect()
       val second = rows(Dedup.survivors(spark, sf))
-      assert(AnnModels.survivorBuilds == b0 + 1,
-        s"curation consumers re-ran CC: ${AnnModels.survivorBuilds - b0} passes")
+      assert(AnnModels.survivorLabels.builds == b0 + 1,
+        s"curation consumers re-ran CC: ${AnnModels.survivorLabels.builds - b0} passes")
       assert(second == first, "artifact round-trip changed the survivor set")
     }
   }
 
   test("DSIR model trains once; artifact-served selection is bit-identical to the inline fit") {
     AnnModels.withRoot(freshRoot("dsir")) {
-      val t0 = AnnModels.dsirTrains
+      val t0 = AnnModels.dsirModel.builds
       val served = rows(graft.operators.TextOps.importanceDsir(spark, sf))
-      assert(AnnModels.dsirTrains == t0 + 1, "first access must train")
+      assert(AnnModels.dsirModel.builds == t0 + 1, "first access must train")
       // DECIMAL(18,6) log-ratios and long thresholds parquet round-trip
       // exactly, so the artifact-served chain must reproduce the inline
       // fit bit for bit — the property that lets the oracle replay
@@ -492,7 +467,7 @@ class AnnModelsSpec extends SparkSpec {
         graft.sources.Tables.load(spark, sf, "documents")))
       assert(served == inline, "artifact-served selection diverged from the inline fit")
       graft.operators.TextOps.importanceDsir(spark, sf).collect()
-      assert(AnnModels.dsirTrains == t0 + 1,
+      assert(AnnModels.dsirModel.builds == t0 + 1,
         "second access must serve the artifact, not retrain")
     }
   }
@@ -501,22 +476,23 @@ class AnnModelsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     AnnModels.withRoot(freshRoot("dsir8k")) {
       val T = graft.operators.TextOps
-      val t0 = AnnModels.dsirTrains
+      val (w0, n0) = (AnnModels.dsirModel8k.builds, AnnModels.dsirModel.builds)
       val wide = T.importanceDsir8k(spark, sf)
       val wideRows = rows(wide)
-      assert(AnnModels.dsirTrains == t0 + 1, "first 8k access must train")
+      assert(AnnModels.dsirModel8k.builds == w0 + 1, "first 8k access must train")
       // bit-identical to the inline fit at the same width (the oracle
       // replays the full train, so this is what keeps the gate meaningful)
       val inline = rows(T.importanceDsirOf(
         graft.sources.Tables.load(spark, sf, "documents"), T.DsirBuckets8k))
       assert(wideRows == inline, "8k artifact-served selection diverged from inline fit")
       T.importanceDsir8k(spark, sf).collect()
-      assert(AnnModels.dsirTrains == t0 + 1, "second access must serve the artifact")
+      assert(AnnModels.dsirModel8k.builds == w0 + 1, "second access must serve the artifact")
       // the 256-bucket model lives under a DIFFERENT key: training it is a
       // separate pass and the two widths coexist in one store
       val narrow = T.importanceDsir(spark, sf)
       narrow.collect()
-      assert(AnnModels.dsirTrains == t0 + 2, "the two widths must not share a key")
+      assert(AnnModels.dsirModel.builds == n0 + 1 && AnnModels.dsirModel8k.builds == w0 + 1,
+        "the two widths must not share a key")
       // realistic width must never REGRESS seed enrichment on the shipped
       // corpus (measured: the shipped vocabulary does not alias at 256
       // buckets, so the two selections coincide exactly — the strict
@@ -677,11 +653,11 @@ class AnnModelsSpec extends SparkSpec {
   test("logistic margins: registry-served, bit-identical to inline, one " +
       "fit across the gate and build consumers") {
     AnnModels.withRoot(freshRoot("qlr")) {
-      val t0 = AnnModels.lrMarginTrains
+      val t0 = AnnModels.lrMargins.builds
       val served = rows(graft.operators.TextOps.qualityLr(spark, sf))
-      assert(AnnModels.lrMarginTrains == t0 + 1, "first access must fit")
+      assert(AnnModels.lrMargins.builds == t0 + 1, "first access must fit")
       graft.SparkEntry.queries("pipeline_build_lr")(spark, sf).collect()
-      assert(AnnModels.lrMarginTrains == t0 + 1,
+      assert(AnnModels.lrMargins.builds == t0 + 1,
         "the build consumer must serve the artifact, not refit")
       assert(served == rows(graft.operators.TextOps.qualityLrInline(spark, sf)),
         "served logistic margins diverge from inline")
@@ -691,18 +667,18 @@ class AnnModelsSpec extends SparkSpec {
   test("ivf assignment and semantic labels: registry-served, bit-identical " +
       "to inline, one training pass across all consumers") {
     AnnModels.withRoot(freshRoot("semserve")) {
-      val (a0, l0) = (AnnModels.ivfAssignTrains, AnnModels.semanticLabelTrains)
+      val (a0, l0) = (AnnModels.ivfAssign.builds, AnnModels.semanticLabels.builds)
       // consumers: the dedup pair, both narrow assignment readers, a sampler
       Dedup.semanticDedup(spark, sf).collect()
       Dedup.semanticDedupKeep(spark, sf).collect()
       Similarity.prototypePrune(spark, sf).collect()
       Similarity.annIvf(spark, sf).collect()
-      assert(AnnModels.ivfAssignTrains == a0 + 1,
-        s"expected ONE assignment pass, got ${AnnModels.ivfAssignTrains - a0}")
-      assert(AnnModels.semanticLabelTrains == l0 + 1,
-        s"expected ONE semantic labeling, got ${AnnModels.semanticLabelTrains - l0}")
+      assert(AnnModels.ivfAssign.builds == a0 + 1,
+        s"expected ONE assignment pass, got ${AnnModels.ivfAssign.builds - a0}")
+      assert(AnnModels.semanticLabels.builds == l0 + 1,
+        s"expected ONE semantic labeling, got ${AnnModels.semanticLabels.builds - l0}")
       assert(rows(AnnModels.ivfAssign(spark, sf)) ==
-        rows(Similarity.ivfAssignInline(spark, sf)),
+        rows(AnnModels.ivfAssign.build(spark, sf)),
         "served assignment diverges from inline")
       assert(rows(AnnModels.semanticLabels(spark, sf)) ==
         rows(Dedup.semanticLabInline(spark, sf)),
@@ -710,24 +686,14 @@ class AnnModelsSpec extends SparkSpec {
     }
   }
 
-  test("hashed-ngram gate margins: registry-served, bit-identical to " +
-      "inline, one fit per corpus state") {
-    AnnModels.withRoot(freshRoot("ftserve")) {
-      val t0 = AnnModels.ftMarginTrains
-      val served = rows(graft.operators.TextOps.qualityFt(spark, sf))
-      assert(AnnModels.ftMarginTrains == t0 + 1, "first access must fit")
-      assert(rows(graft.operators.TextOps.qualityFt(spark, sf)) == served)
-      assert(AnnModels.ftMarginTrains == t0 + 1,
-        "second access must serve the artifact, not refit")
-      assert(served == rows(graft.operators.TextOps.qualityFtInline(spark, sf)),
-        "served hashed-ngram margins diverge from inline")
-    }
-  }
-
   test("hamming pairs + degenerate census: registry-served, bit-identical " +
       "to inline, ONE build per hash family across all consumers") {
     AnnModels.withRoot(freshRoot("hamserve")) {
-      val (p0, d0) = (AnnModels.hammingPairTrains, AnnModels.hammingDegenTrains)
+      def pairBuilds = AnnModels.simhashPairs.builds + AnnModels.phashPairs.builds +
+        AnnModels.audioPairs.builds
+      def degenBuilds = AnnModels.simhashDegen.builds + AnnModels.phashDegen.builds +
+        AnnModels.audioDegen.builds
+      val (p0, d0) = (pairBuilds, degenBuilds)
       // the three gated pairing queries + the CC-label consumers that
       // must ride the SAME served pair artifacts
       graft.operators.Dedup.simhashPairs(spark, sf).collect()
@@ -735,10 +701,10 @@ class AnnModelsSpec extends SparkSpec {
       graft.operators.Multimodal.audioPairs(spark, sf).collect()
       graft.operators.Multimodal.audioDedup(spark, sf).collect()
       graft.operators.Multimodal.phashDedup(spark, sf).collect()
-      assert(AnnModels.hammingPairTrains == p0 + 3,
-        s"expected ONE pair build per hash family (sim/ph/au), got ${AnnModels.hammingPairTrains - p0}")
-      assert(AnnModels.hammingDegenTrains == d0 + 3,
-        s"expected ONE degenerate census per hash family, got ${AnnModels.hammingDegenTrains - d0}")
+      assert(pairBuilds == p0 + 3,
+        s"expected ONE pair build per hash family (sim/ph/au), got ${pairBuilds - p0}")
+      assert(degenBuilds == d0 + 3,
+        s"expected ONE degenerate census per hash family, got ${degenBuilds - d0}")
       assert(rows(graft.operators.Dedup.simhashPairs(spark, sf)) ==
         rows(graft.operators.Dedup.simhashPairsInline(spark, sf)),
         "served simhash pairs diverge from inline")
@@ -748,7 +714,7 @@ class AnnModelsSpec extends SparkSpec {
       assert(rows(graft.operators.Multimodal.phashPairs(spark, sf)) ==
         rows(graft.operators.Multimodal.phashPairsInline(spark, sf)),
         "served phash pairs diverge from inline")
-      assert(AnnModels.hammingPairTrains == p0 + 3,
+      assert(pairBuilds == p0 + 3,
         "re-reading the artifacts must not rebuild the pair relations")
     }
   }
@@ -756,17 +722,17 @@ class AnnModelsSpec extends SparkSpec {
   test("PQ corpus codes: registry-served, bit-identical to inline, ONE " +
       "encoding pass across the whole PQ family") {
     AnnModels.withRoot(freshRoot("pqcodes")) {
-      val c0 = AnnModels.pqCodeTrains
+      val c0 = AnnModels.pqCodes.builds
       // all three PQ-family consumers: compressed scan, IVFADC, rerank
       Similarity.annPq(spark, sf).collect()
       Similarity.annIvfPq(spark, sf).collect()
       Similarity.annIvfPqRerank(spark, sf).collect()
-      assert(AnnModels.pqCodeTrains == c0 + 1,
-        s"expected ONE corpus encoding pass, got ${AnnModels.pqCodeTrains - c0}")
+      assert(AnnModels.pqCodes.builds == c0 + 1,
+        s"expected ONE corpus encoding pass, got ${AnnModels.pqCodes.builds - c0}")
       assert(rows(AnnModels.pqCodes(spark, sf)) ==
         rows(Similarity.pqCodesInline(spark, sf)),
         "served PQ codes diverge from inline encoding")
-      assert(AnnModels.pqCodeTrains == c0 + 1,
+      assert(AnnModels.pqCodes.builds == c0 + 1,
         "re-reading the artifact must not re-encode")
     }
   }
@@ -785,13 +751,13 @@ class AnnModelsSpec extends SparkSpec {
     }
     cp("documents"); cp("embeddings")
     AnnModels.withRoot(freshRoot("align")) {
-      val t0 = AnnModels.alignScoreTrains
+      val t0 = AnnModels.alignScores.builds
       val served = rows(graft.operators.Multimodal.textAlign(spark, dir))
-      assert(AnnModels.alignScoreTrains == t0 + 1, "first access must train")
+      assert(AnnModels.alignScores.builds == t0 + 1, "first access must train")
       assert(served == rows(graft.operators.Multimodal.textAlignInline(spark, dir)),
         "served alignment scores diverge from inline")
       graft.SparkEntry.queries("pipeline_curate_aligned")(spark, dir).collect()
-      assert(AnnModels.alignScoreTrains == t0 + 1,
+      assert(AnnModels.alignScores.builds == t0 + 1,
         "the curation consumer must serve the artifact, not retrain")
       // touch ONLY the embeddings table: the documents fingerprint is
       // unchanged, but the artifact depends on both — must retrain
@@ -800,7 +766,7 @@ class AnnModelsSpec extends SparkSpec {
         java.nio.file.attribute.FileTime.fromMillis(
           java.nio.file.Files.getLastModifiedTime(embFile).toMillis + 60000))
       graft.operators.Multimodal.textAlign(spark, dir).collect()
-      assert(AnnModels.alignScoreTrains == t0 + 2,
+      assert(AnnModels.alignScores.builds == t0 + 2,
         "an embeddings-only edit must invalidate the alignment artifact")
     }
   }
@@ -808,15 +774,15 @@ class AnnModelsSpec extends SparkSpec {
   test("funnel flags: registry-served, bit-identical to inline, ONE build " +
       "across both funnel queries") {
     AnnModels.withRoot(freshRoot("funfl")) {
-      val b0 = AnnModels.funnelFlagBuilds
+      val b0 = AnnModels.funnelFlags.builds
       graft.operators.Pipeline.funnel(spark, sf).collect()
       graft.operators.Pipeline.funnelSource(spark, sf).collect()
-      assert(AnnModels.funnelFlagBuilds == b0 + 1,
-        s"expected ONE flag build across both funnels, got ${AnnModels.funnelFlagBuilds - b0}")
+      assert(AnnModels.funnelFlags.builds == b0 + 1,
+        s"expected ONE flag build across both funnels, got ${AnnModels.funnelFlags.builds - b0}")
       assert(rows(AnnModels.funnelFlags(spark, sf)) ==
         rows(graft.operators.Pipeline.funnelFlagsInline(spark, sf)),
         "served funnel flags diverge from the inline build")
-      assert(AnnModels.funnelFlagBuilds == b0 + 1,
+      assert(AnnModels.funnelFlags.builds == b0 + 1,
         "re-reading the artifact must not rebuild the flags")
     }
   }
@@ -824,7 +790,7 @@ class AnnModelsSpec extends SparkSpec {
   test("langid + quality score relations: registry-served, bit-identical " +
       "to inline, ONE text scan each across the whole curate battery") {
     AnnModels.withRoot(freshRoot("scores")) {
-      val (l0, q0) = (AnnModels.langidScoreBuilds, AnnModels.qualityScoreBuilds)
+      val (l0, q0) = (AnnModels.langidScores.builds, AnnModels.qualityScores.builds)
       // the heaviest per-invocation consumers: three curate variants +
       // both funnels + the gated scoring queries themselves
       graft.operators.TextOps.langid(spark, sf).collect()
@@ -832,21 +798,21 @@ class AnnModelsSpec extends SparkSpec {
       graft.operators.Pipeline.curate(spark, sf).collect()
       graft.operators.Pipeline.curateNearDup(spark, sf).collect()
       graft.operators.Pipeline.funnel(spark, sf).collect()
-      assert(AnnModels.langidScoreBuilds == l0 + 1,
-        s"expected ONE langid scan, got ${AnnModels.langidScoreBuilds - l0}")
-      assert(AnnModels.qualityScoreBuilds == q0 + 1,
-        s"expected ONE quality scan, got ${AnnModels.qualityScoreBuilds - q0}")
+      assert(AnnModels.langidScores.builds == l0 + 1,
+        s"expected ONE langid scan, got ${AnnModels.langidScores.builds - l0}")
+      assert(AnnModels.qualityScores.builds == q0 + 1,
+        s"expected ONE quality scan, got ${AnnModels.qualityScores.builds - q0}")
       assert(rows(graft.operators.TextOps.langid(spark, sf)) ==
-        rows(graft.operators.TextOps.langidInline(spark, sf)),
+        rows(AnnModels.langidScores.build(spark, sf)),
         "served langid predictions diverge from inline")
       // the artifact carries a trailing source column (the pack family's
       // spine); full-width parity against the inline chain, and the gated
       // 7-column relation is exactly the projection
       assert(rows(AnnModels.qualityScores(spark, sf)) ==
-        rows(graft.operators.TextOps.qualityInline(spark, sf)),
+        rows(AnnModels.qualityScores.build(spark, sf)),
         "served quality scores diverge from inline")
       assert(rows(graft.operators.TextOps.quality(spark, sf)) ==
-        rows(graft.operators.TextOps.qualityInline(spark, sf).drop("source")),
+        rows(AnnModels.qualityScores.build(spark, sf).drop("source")),
         "gated quality relation diverges from the inline projection")
       // coverage contract (ADVICE r16): docTokens IS the artifact, so the
       // pack family counts exactly one spine row per document — a future
@@ -855,8 +821,8 @@ class AnnModelsSpec extends SparkSpec {
       assert(graft.operators.Pipeline.docTokens(spark, sf).count() ==
         graft.sources.Tables.load(spark, sf, "documents").count(),
         "docTokens must cover every document 1:1")
-      assert(AnnModels.langidScoreBuilds == l0 + 1 &&
-        AnnModels.qualityScoreBuilds == q0 + 1,
+      assert(AnnModels.langidScores.builds == l0 + 1 &&
+        AnnModels.qualityScores.builds == q0 + 1,
         "re-reads must not re-scan")
     }
   }
@@ -864,21 +830,21 @@ class AnnModelsSpec extends SparkSpec {
   test("candidate signatures + weighted gram counts: registry-served, " +
       "bit-identical to inline, ONE build each across both verifiers") {
     AnnModels.withRoot(freshRoot("candsig")) {
-      val (s0, g0) = (AnnModels.candSigBuilds, AnnModels.candGramCountBuilds)
+      val (s0, g0) = (AnnModels.candSigs.builds, AnnModels.candGramCounts.builds)
       Dedup.minhashEstimate(spark, sf).collect()
       Dedup.weightedJaccard(spark, sf).collect()
-      assert(AnnModels.candSigBuilds == s0 + 1,
-        s"expected ONE signature build, got ${AnnModels.candSigBuilds - s0}")
-      assert(AnnModels.candGramCountBuilds == g0 + 1,
-        s"expected ONE gram-count build, got ${AnnModels.candGramCountBuilds - g0}")
+      assert(AnnModels.candSigs.builds == s0 + 1,
+        s"expected ONE signature build, got ${AnnModels.candSigs.builds - s0}")
+      assert(AnnModels.candGramCounts.builds == g0 + 1,
+        s"expected ONE gram-count build, got ${AnnModels.candGramCounts.builds - g0}")
       assert(rows(AnnModels.candSigs(spark, sf)) ==
         rows(Dedup.candSigsInline(spark, sf)),
         "served candidate signatures diverge from inline")
       assert(rows(AnnModels.candGramCounts(spark, sf)) ==
         rows(Dedup.candGramCountsInline(spark, sf)),
         "served gram counts diverge from inline")
-      assert(AnnModels.candSigBuilds == s0 + 1 &&
-        AnnModels.candGramCountBuilds == g0 + 1,
+      assert(AnnModels.candSigs.builds == s0 + 1 &&
+        AnnModels.candGramCounts.builds == g0 + 1,
         "re-reads must not rebuild")
     }
   }
@@ -886,15 +852,15 @@ class AnnModelsSpec extends SparkSpec {
   test("calibrated build manifest: registry-served, bit-identical to " +
       "inline, ONE composition across calibrated + ordered builds") {
     AnnModels.withRoot(freshRoot("bldcal")) {
-      val m0 = AnnModels.calibManifestBuilds
+      val m0 = AnnModels.calibManifest.builds
       graft.operators.Pipeline.buildCalibrated(spark, sf).collect()
       graft.operators.Pipeline.buildOrdered(spark, sf).collect()
-      assert(AnnModels.calibManifestBuilds == m0 + 1,
-        s"expected ONE manifest composition, got ${AnnModels.calibManifestBuilds - m0}")
+      assert(AnnModels.calibManifest.builds == m0 + 1,
+        s"expected ONE manifest composition, got ${AnnModels.calibManifest.builds - m0}")
       assert(rows(graft.operators.Pipeline.buildCalibrated(spark, sf)) ==
-        rows(graft.operators.Pipeline.buildCalibratedInline(spark, sf)),
+        rows(AnnModels.calibManifest.build(spark, sf)),
         "served manifest diverges from the inline composition")
-      assert(AnnModels.calibManifestBuilds == m0 + 1,
+      assert(AnnModels.calibManifest.builds == m0 + 1,
         "re-reads must not re-compose")
     }
   }
@@ -902,9 +868,9 @@ class AnnModelsSpec extends SparkSpec {
   test("r17 served dedup relations: bit-identical to inline, ONE build " +
       "each across all consumers") {
     AnnModels.withRoot(freshRoot("r17dedup")) {
-      val (s0, d0, b0, e0, n0) = (AnnModels.substrStatBuilds,
-        AnnModels.dupStartBuilds, AnnModels.boilerTopBuilds,
-        AnnModels.embedPairBuilds, AnnModels.bandedPairBuilds)
+      val (s0, d0, b0, e0, n0) = (AnnModels.substrStats.builds,
+        AnnModels.dupStarts.builds, AnnModels.boilerTop.builds,
+        AnnModels.embedPairs.builds, AnnModels.bandedPairs.builds)
       Dedup.substringDup(spark, sf).collect()
       Dedup.substringRemove(spark, sf).collect()
       Dedup.substringSpans(spark, sf).collect()
@@ -912,12 +878,12 @@ class AnnModelsSpec extends SparkSpec {
       Dedup.boilerplateTopK(spark, sf).collect()
       Dedup.embeddingNearDup(spark, sf).collect()
       Dedup.minhashLshBanded(spark, sf).collect()
-      assert(AnnModels.substrStatBuilds == s0 + 1, "ONE substring-stat build")
-      assert(AnnModels.dupStartBuilds == d0 + 1,
-        s"ONE dup-start census across rm/spans/rm_spans, got ${AnnModels.dupStartBuilds - d0}")
-      assert(AnnModels.boilerTopBuilds == b0 + 1, "ONE boilerplate census")
-      assert(AnnModels.embedPairBuilds == e0 + 1, "ONE embedding pair build")
-      assert(AnnModels.bandedPairBuilds == n0 + 1, "ONE banded pair build")
+      assert(AnnModels.substrStats.builds == s0 + 1, "ONE substring-stat build")
+      assert(AnnModels.dupStarts.builds == d0 + 1,
+        s"ONE dup-start census across rm/spans/rm_spans, got ${AnnModels.dupStarts.builds - d0}")
+      assert(AnnModels.boilerTop.builds == b0 + 1, "ONE boilerplate census")
+      assert(AnnModels.embedPairs.builds == e0 + 1, "ONE embedding pair build")
+      assert(AnnModels.bandedPairs.builds == n0 + 1, "ONE banded pair build")
       assert(rows(Dedup.substringDup(spark, sf)) ==
         rows(Dedup.substringDupInline(spark, sf)),
         "served substring stats diverge from inline")
@@ -940,40 +906,40 @@ class AnnModelsSpec extends SparkSpec {
       "scores: bit-identical to inline, ONE build each") {
     AnnModels.withRoot(freshRoot("r17build")) {
       assert(rows(graft.operators.Pipeline.build(spark, sf)) ==
-        rows(graft.operators.Pipeline.buildInline(spark, sf)),
+        rows(AnnModels.buildManifest.build(spark, sf)),
         "served default build manifest diverges from inline")
       assert(rows(graft.operators.Pipeline.buildTrained(spark, sf)) ==
-        rows(graft.operators.Pipeline.buildTrainedInline(spark, sf)),
+        rows(AnnModels.trainedManifest.build(spark, sf)),
         "served trained build manifest diverges from inline")
       assert(rows(graft.operators.Pipeline.buildLr(spark, sf)) ==
-        rows(graft.operators.Pipeline.buildLrInline(spark, sf)),
+        rows(AnnModels.lrManifest.build(spark, sf)),
         "served lr build manifest diverges from inline")
-      val (p0, t0, g0) = (AnnModels.bpeDocTokenBuilds,
-        AnnModels.trainedDocTokenBuilds, AnnModels.trainedBigDocTokenBuilds)
+      val (p0, t0, g0) = (AnnModels.bpeDocTokens.builds,
+        AnnModels.trainedDocTokens.builds, AnnModels.trainedDocTokensBig.builds)
       assert(rows(graft.operators.Pipeline.packBpe(spark, sf)) ==
         rows(graft.operators.Pipeline.packOf(
-          graft.operators.Pipeline.bpeDocTokensInline(spark, sf))),
+          AnnModels.bpeDocTokens.build(spark, sf))),
         "served BPE pack diverges from the inline budget")
       assert(rows(graft.operators.Pipeline.packTrained(spark, sf)) ==
         rows(graft.operators.Pipeline.packOf(
-          graft.operators.Pipeline.trainedDocTokensInline(spark, sf))),
+          AnnModels.trainedDocTokens.build(spark, sf))),
         "served trained pack diverges from the inline budget")
       assert(rows(graft.operators.Pipeline.packTrainedBig(spark, sf)) ==
         rows(graft.operators.Pipeline.packOf(
-          graft.operators.Pipeline.trainedBigDocTokensInline(spark, sf))),
+          AnnModels.trainedDocTokensBig.build(spark, sf))),
         "served 256-rule pack diverges from the inline budget")
       graft.operators.Pipeline.packBpe(spark, sf).collect()
       graft.operators.Pipeline.packTrained(spark, sf).collect()
       graft.operators.Pipeline.packTrainedBig(spark, sf).collect()
-      assert(AnnModels.bpeDocTokenBuilds == p0 + 1 &&
-        AnnModels.trainedDocTokenBuilds == t0 + 1 &&
-        AnnModels.trainedBigDocTokenBuilds == g0 + 1,
+      assert(AnnModels.bpeDocTokens.builds == p0 + 1 &&
+        AnnModels.trainedDocTokens.builds == t0 + 1 &&
+        AnnModels.trainedDocTokensBig.builds == g0 + 1,
         "re-reads must not re-count token budgets")
       assert(rows(graft.operators.TextOps.bpeTrainedIds(spark, sf)) ==
-        rows(graft.operators.TextOps.bpeTrainedIdsInline(spark, sf)),
+        rows(AnnModels.bpeTrainedIdStream.build(spark, sf)),
         "served trained id stream diverges from inline")
       assert(rows(graft.operators.TextOps.bpeTrainedIdsBig(spark, sf)) ==
-        rows(graft.operators.TextOps.bpeTrainedIdsBigInline(spark, sf)),
+        rows(AnnModels.bpeTrainedIdStreamBig.build(spark, sf)),
         "served 256-rule id stream diverges from inline")
       assert(rows(graft.operators.TextOps.importanceDsir(spark, sf)) ==
         rows(graft.operators.TextOps.importanceDsirServe(spark, sf)),
@@ -990,10 +956,10 @@ class AnnModelsSpec extends SparkSpec {
   test("r17 batch-3 served curate manifests + source report: bit-identical " +
       "to inline, ONE build each across all consumers") {
     AnnModels.withRoot(freshRoot("r17curate")) {
-      val (c0, m0, n0, se0, al0, so0, st0) = (AnnModels.curateBuilds,
-        AnnModels.curateModelBuilds, AnnModels.curateNearDupBuilds,
-        AnnModels.curateSemanticBuilds, AnnModels.curateAlignedBuilds,
-        AnnModels.curateSourceBuilds, AnnModels.srcStatBuilds)
+      val (c0, m0, n0, se0, al0, so0, st0) = (AnnModels.curateManifest.builds,
+        AnnModels.curateModelManifest.builds, AnnModels.curateNearDupManifest.builds,
+        AnnModels.curateSemanticManifest.builds, AnnModels.curateAlignedManifest.builds,
+        AnnModels.curateSourceManifest.builds, AnnModels.srcStats.builds)
       import graft.operators.{Pipeline, TextOps}
       assert(rows(Pipeline.curate(spark, sf)) ==
         rows(Pipeline.curateInline(spark, sf)),
@@ -1021,13 +987,13 @@ class AnnModelsSpec extends SparkSpec {
       // curate; aligned composes the served semantic)
       Pipeline.curateAligned(spark, sf).collect()
       Pipeline.curateNearDup(spark, sf).collect()
-      assert(AnnModels.curateBuilds == c0 + 1, "ONE curate build")
-      assert(AnnModels.curateModelBuilds == m0 + 1, "ONE model-gate build")
-      assert(AnnModels.curateNearDupBuilds == n0 + 1, "ONE near-dup build")
-      assert(AnnModels.curateSemanticBuilds == se0 + 1, "ONE semantic build")
-      assert(AnnModels.curateAlignedBuilds == al0 + 1, "ONE aligned build")
-      assert(AnnModels.curateSourceBuilds == so0 + 1, "ONE source build")
-      assert(AnnModels.srcStatBuilds == st0 + 1,
+      assert(AnnModels.curateManifest.builds == c0 + 1, "ONE curate build")
+      assert(AnnModels.curateModelManifest.builds == m0 + 1, "ONE model-gate build")
+      assert(AnnModels.curateNearDupManifest.builds == n0 + 1, "ONE near-dup build")
+      assert(AnnModels.curateSemanticManifest.builds == se0 + 1, "ONE semantic build")
+      assert(AnnModels.curateAlignedManifest.builds == al0 + 1, "ONE aligned build")
+      assert(AnnModels.curateSourceManifest.builds == so0 + 1, "ONE source build")
+      assert(AnnModels.srcStats.builds == st0 + 1,
         "ONE source-stat build across the report + source-curation reads")
     }
   }
@@ -1035,15 +1001,15 @@ class AnnModelsSpec extends SparkSpec {
   test("r17 batch-3 served tokenizer artifacts + loader orders: " +
       "bit-identical to inline, ONE build each") {
     AnnModels.withRoot(freshRoot("r17tok")) {
-      val (v0, i0, d0, il0, cu0) = (AnnModels.bpeStaticVocabBuilds,
-        AnnModels.bpeStaticIdStreamBuilds, AnnModels.bpeDecodeAuditBuilds,
-        AnnModels.interleaveOrderBuilds, AnnModels.curriculumOrderBuilds)
+      val (v0, i0, d0, il0, cu0) = (AnnModels.bpeStaticVocab.builds,
+        AnnModels.bpeStaticIdStream.builds, AnnModels.bpeDecodeAudit.builds,
+        AnnModels.interleaveOrder.builds, AnnModels.curriculumOrder.builds)
       import graft.operators.{Pipeline, TextOps}
       assert(rows(TextOps.bpeVocab(spark, sf)) ==
-        rows(TextOps.bpeVocabInline(spark, sf)),
+        rows(AnnModels.bpeStaticVocab.build(spark, sf)),
         "served static vocab diverges from inline")
       assert(rows(TextOps.bpeIds(spark, sf)) ==
-        rows(TextOps.bpeIdsInline(spark, sf)),
+        rows(AnnModels.bpeStaticIdStream.build(spark, sf)),
         "served static id stream diverges from inline")
       assert(rows(TextOps.bpeDecode(spark, sf)) ==
         rows(TextOps.bpeDecodeInline(spark, sf)),
@@ -1056,42 +1022,28 @@ class AnnModelsSpec extends SparkSpec {
         "served curriculum order diverges from inline")
       TextOps.bpeDecode(spark, sf).collect()
       TextOps.bpeIds(spark, sf).collect()
-      assert(AnnModels.bpeStaticVocabBuilds == v0 + 1,
+      assert(AnnModels.bpeStaticVocab.builds == v0 + 1,
         "ONE vocab build across the vocab read + decode-audit build")
-      assert(AnnModels.bpeStaticIdStreamBuilds == i0 + 1, "ONE id-stream build")
-      assert(AnnModels.bpeDecodeAuditBuilds == d0 + 1, "ONE decode-audit build")
-      assert(AnnModels.interleaveOrderBuilds == il0 + 1, "ONE interleave build")
-      assert(AnnModels.curriculumOrderBuilds == cu0 + 1, "ONE curriculum build")
-    }
-  }
-
-  test("knn graph: registry-served, bit-identical to inline, ONE build " +
-      "per corpus state") {
-    AnnModels.withRoot(freshRoot("knng")) {
-      val b0 = AnnModels.knnGraphBuilds
-      val served = rows(Similarity.knnGraph(spark, sf))
-      assert(AnnModels.knnGraphBuilds == b0 + 1, "first access must build")
-      assert(rows(Similarity.knnGraph(spark, sf)) == served)
-      assert(AnnModels.knnGraphBuilds == b0 + 1,
-        "second access must serve the artifact, not rebuild")
-      assert(served == rows(Similarity.knnGraphInline(spark, sf)),
-        "served knn graph diverges from the inline build")
+      assert(AnnModels.bpeStaticIdStream.builds == i0 + 1, "ONE id-stream build")
+      assert(AnnModels.bpeDecodeAudit.builds == d0 + 1, "ONE decode-audit build")
+      assert(AnnModels.interleaveOrder.builds == il0 + 1, "ONE interleave build")
+      assert(AnnModels.curriculumOrder.builds == cu0 + 1, "ONE curriculum build")
     }
   }
 
   test("production-budget unigram vocabulary: own key, ONE train, " +
       "coexists with the toy budget") {
     AnnModels.withRoot(freshRoot("unibig")) {
-      val (t0, b0) = (AnnModels.uniTrains, AnnModels.uniBigTrains)
+      val (t0, b0) = (AnnModels.uniVocab.builds, AnnModels.uniVocabBig.builds)
       val big = rows(graft.operators.UnigramLm.unigramVocabBig(spark, sf))
-      assert(AnnModels.uniBigTrains == b0 + 1, "first access must train")
+      assert(AnnModels.uniVocabBig.builds == b0 + 1, "first access must train")
       graft.operators.UnigramLm.unigramIdsBig(spark, sf).count()
-      assert(AnnModels.uniBigTrains == b0 + 1,
+      assert(AnnModels.uniVocabBig.builds == b0 + 1,
         "the id consumer must serve the artifact, not retrain")
       // the toy-budget artifact is a DIFFERENT key: reading it trains the
       // small model without touching the big one
       graft.operators.UnigramLm.unigramVocab(spark, sf).count()
-      assert(AnnModels.uniTrains == t0 + 1 && AnnModels.uniBigTrains == b0 + 1,
+      assert(AnnModels.uniVocab.builds == t0 + 1 && AnnModels.uniVocabBig.builds == b0 + 1,
         "the two budgets must live under distinct keys")
       assert(big == rows(graft.operators.UnigramLm.uniTrainOf(
           graft.sources.Tables.load(spark, sf, "documents"),
@@ -1175,11 +1127,11 @@ class AnnModelsSpec extends SparkSpec {
 
   test("non-default training parameters bypass the artifact store") {
     AnnModels.withRoot(freshRoot("bypass")) {
-      val t0 = AnnModels.ivfTrains
+      val t0 = AnnModels.ivfCentroids.builds
       // iters=0 (the untrained-init recall baseline) must not read or
       // write the default-keyed artifact
       Similarity.annIvfIters(spark, sf, 0).collect()
-      assert(AnnModels.ivfTrains == t0, "non-default variant touched the registry")
+      assert(AnnModels.ivfCentroids.builds == t0, "non-default variant touched the registry")
     }
   }
 
@@ -1188,22 +1140,22 @@ class AnnModelsSpec extends SparkSpec {
   test("minhash candidate pairs build once; served pairs are bit-identical " +
       "to the inline LSH chain and feed the CC labeling without a rebuild") {
     AnnModels.withRoot(freshRoot("mhcand")) {
-      val (c0, l0) = (AnnModels.candPairBuilds, AnnModels.candLabelBuilds)
+      val (c0, l0) = (AnnModels.candPairs.builds, AnnModels.candLabels.builds)
       val served = rows(Dedup.minhashLsh(spark, sf))
-      assert(AnnModels.candPairBuilds == c0 + 1, "first access must build")
-      assert(served == rows(Dedup.minhashLshInline(spark, sf)),
+      assert(AnnModels.candPairs.builds == c0 + 1, "first access must build")
+      assert(served == rows(AnnModels.candPairs.build(spark, sf)),
         "artifact-served candidate pairs diverged from the inline LSH chain")
       assert(served.nonEmpty, "construction check: the corpus has candidates")
       // every minhash-family consumer rides the ONE pair build
       Dedup.weightedJaccard(spark, sf).collect()
       Dedup.minhashEstimate(spark, sf).collect()
       val labels = rows(Dedup.clusterAssign(spark, sf))
-      assert(AnnModels.candPairBuilds == c0 + 1,
-        s"expected ONE candidate build across consumers, got ${AnnModels.candPairBuilds - c0}")
-      assert(AnnModels.candLabelBuilds == l0 + 1, "labels must build once")
-      assert(labels == rows(Dedup.clusterAssignInline(spark, sf)),
+      assert(AnnModels.candPairs.builds == c0 + 1,
+        s"expected ONE candidate build across consumers, got ${AnnModels.candPairs.builds - c0}")
+      assert(AnnModels.candLabels.builds == l0 + 1, "labels must build once")
+      assert(labels == rows(AnnModels.candLabels.build(spark, sf)),
         "artifact-served CC labeling diverged from the inline star loop")
-      assert(AnnModels.candLabelBuilds == l0 + 1,
+      assert(AnnModels.candLabels.builds == l0 + 1,
         "the inline parity run must not write the registry")
     }
   }
@@ -1213,9 +1165,9 @@ class AnnModelsSpec extends SparkSpec {
     AnnModels.withRoot(freshRoot("curation")) {
       val T = graft.operators.TextOps
       val P = graft.operators.Pipeline
-      val (g0, d0, k0) = (AnnModels.gopherFlagBuilds, AnnModels.dirtyGramBuilds,
-        AnnModels.calibKeepBuilds)
-      assert(rows(T.gopherRules(spark, sf)) == rows(T.gopherRulesInline(spark, sf)),
+      val (g0, d0, k0) = (AnnModels.gopherFlags.builds, AnnModels.dirtyGrams.builds,
+        AnnModels.calibKeep.builds)
+      assert(rows(T.gopherRules(spark, sf)) == rows(AnnModels.gopherFlags.build(spark, sf)),
         "artifact-served gopher flags diverged from the inline battery")
       assert(rows(P.decontaminate(spark, sf)) == rows(P.decontaminateInline(spark, sf)),
         "artifact-served contamination hits diverged from the inline explode")
@@ -1225,12 +1177,91 @@ class AnnModelsSpec extends SparkSpec {
       // the build capstone reads all three — no rebuild on a second pass
       P.build(spark, sf).collect()
       P.buildCalibrated(spark, sf).collect()
-      assert(AnnModels.gopherFlagBuilds == g0 + 1,
-        s"expected ONE gopher build, got ${AnnModels.gopherFlagBuilds - g0}")
-      assert(AnnModels.dirtyGramBuilds == d0 + 1,
-        s"expected ONE contamination build, got ${AnnModels.dirtyGramBuilds - d0}")
-      assert(AnnModels.calibKeepBuilds == k0 + 1,
-        s"expected ONE calibrated build, got ${AnnModels.calibKeepBuilds - k0}")
+      assert(AnnModels.gopherFlags.builds == g0 + 1,
+        s"expected ONE gopher build, got ${AnnModels.gopherFlags.builds - g0}")
+      assert(AnnModels.dirtyGrams.builds == d0 + 1,
+        s"expected ONE contamination build, got ${AnnModels.dirtyGrams.builds - d0}")
+      assert(AnnModels.calibKeep.builds == k0 + 1,
+        s"expected ONE calibrated build, got ${AnnModels.calibKeep.builds - k0}")
     }
+  }
+
+  // --- the declarative table: keys, builds and declared deps ---------------
+
+  test("every registry artifact builds once on first serve, not on the second, " +
+      "and serves exactly its build's rows") {
+    val root = freshRoot("table")
+    AnnModels.withRoot(root) {
+      def record = AnnModels.table.map(a => a.name -> a.builds).toMap
+      // table order is dependency order: each first serve builds ONLY its
+      // own artifact, because everything it reads was served before it
+      AnnModels.table.foreach { a =>
+        val b0 = record
+        val served = a match {
+          case r: AnnModels.Relation => Seq(rows(r(spark, sf)))
+          case p: AnnModels.Parts => p(spark, sf).map(rows)
+        }
+        val built = record.collect { case (n, c) if c != b0(n) => n -> (c - b0(n)) }
+        assert(built == Map(a.name -> 1), s"${a.name}: first serve built $built")
+        val again = a match {
+          case r: AnnModels.Relation => r(spark, sf).inputFiles.toSeq
+          case p: AnnModels.Parts => p(spark, sf).flatMap(_.inputFiles)
+        }
+        assert(record == b0.updated(a.name, b0(a.name) + 1),
+          s"${a.name}: second serve rebuilt")
+        assert(again.nonEmpty && again.forall(_.contains("graft-annmodels-table")),
+          s"${a.name}: a serve must scan the model store, got ${again.mkString(",")}")
+        val inline = a match {
+          case r: AnnModels.Relation => Seq(rows(r.build(spark, sf)))
+          case p: AnnModels.Parts =>
+            val out = new org.apache.hadoop.fs.Path(freshRoot(s"parts-${p.name}"), "g")
+            p.write(spark, sf, out)
+            p.parts.map(part => rows(spark.read.parquet(s"$out/$part")))
+        }
+        assert(served == inline, s"${a.name}: served rows diverge from its build")
+      }
+    }
+    // every artifact a build served is one its key covers
+    val byName = AnnModels.table.map(a => a.name -> a).toMap
+    val undeclared = AnnModels.readsWhileBuilding.filterNot { case (b, read) =>
+      AnnModels.closure(byName(b)).exists {
+        case a: AnnModels.Artifact => a.name == read
+        case _ => false
+      }
+    }
+    assert(AnnModels.readsWhileBuilding.contains(("calib", "qlog")),
+      "construction check: the build record observes what builds read")
+    assert(undeclared.isEmpty, s"builds read undeclared artifacts: $undeclared")
+  }
+
+  test("key spec: editing a constant group re-keys exactly its transitive " +
+      "dependents, and a dataset dir keys separately") {
+    import AnnModels.Consts
+    val groups = AnnModels.table.flatMap(AnnModels.closure)
+      .collect { case c: Consts => c }.distinct
+    def keys(edited: Option[Consts], dir: String = "/data"): Map[String, String] =
+      AnnModels.table.map(a => a.name -> AnnModels.keyOf(a, dir,
+        c => if (edited.contains(c)) "edited" else c.name)).toMap
+    val base = keys(None)
+    def rekeyed(g: Consts): Set[String] = {
+      val k = keys(Some(g))
+      base.keySet.filter(n => k(n) != base(n))
+    }
+    assert(groups.size >= 20, s"constant groups: ${groups.map(_.name)}")
+    groups.foreach { g =>
+      val downstream = AnnModels.table.filter(AnnModels.closure(_).contains(g)).map(_.name).toSet
+      assert(downstream.nonEmpty, s"${g.name} keys nothing")
+      assert(rekeyed(g) == downstream, s"${g.name}: re-keyed ${rekeyed(g)}, expected $downstream")
+    }
+    // the key gaps the hand-written params strings left open
+    assert(Set("qualcent", "qtm", "qlr", "qft", "qlrg", "dsir", "dsir8k", "dsirig",
+        "dsirsc", "dsirsc8k", "bldqtm", "bldqlr").subsetOf(rekeyed(AnnModels.GopherRules)))
+    assert(Set("qualcent", "qtm").subsetOf(rekeyed(AnnModels.Lm)))
+    assert(Set("qlog", "calib", "qualcent", "bldcal", "bldmod", "curmod")
+      .subsetOf(rekeyed(AnnModels.Stopwords)))
+    // the dataset dir is part of every artifact key
+    val other = keys(None, "/other")
+    assert(AnnModels.table.forall(a => other(a.name) != base(a.name)))
+    assert(base.values.toSet.size == base.size, "two artifacts share a key")
   }
 }

@@ -197,7 +197,7 @@ class BpeSpec extends SparkSpec {
   test("production-count trained chain: one registry train serves table and ids") {
     val root = java.nio.file.Files.createTempDirectory("graft-bpe-big").toString
     graft.operators.AnnModels.withRoot(root) {
-      val t0 = graft.operators.AnnModels.bpeBigTrains
+      val t0 = graft.operators.AnnModels.bpeMergeTableBig.builds
       val table = graft.operators.AnnModels.bpeMergeTableBig(spark, sf)
         .orderBy("rank").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
@@ -224,8 +224,8 @@ class BpeSpec extends SparkSpec {
       // the ids query reuses the SAME artifact — zero extra training passes
       val ids = TextOps.bpeTrainedIdsBig(spark, sf)
       assert(ids.filter(col("n_tokens") > 0).count() > 0)
-      assert(graft.operators.AnnModels.bpeBigTrains == t0 + 1,
-        s"big table must train exactly once, got ${graft.operators.AnnModels.bpeBigTrains - t0}")
+      assert(graft.operators.AnnModels.bpeMergeTableBig.builds == t0 + 1,
+        s"big table must train exactly once, got ${graft.operators.AnnModels.bpeMergeTableBig.builds - t0}")
     }
   }
 

@@ -445,9 +445,9 @@ class CurationOpsSpec extends SparkSpec {
     val scored = TextOps.perplexityKn5(spark, sf).collect()
     assert(scored.length > 0 && scored.forall(r =>
       !r.getDouble(2).isNaN && !r.getDouble(2).isInfinite && r.getDouble(2) > 0))
-    val t0 = AnnModels.lm5Trains
+    val t0 = AnnModels.kn5Lm.builds
     TextOps.perplexityKn5(spark, sf).collect()
-    assert(AnnModels.lm5Trains == t0, "second access must serve the persisted LM")
+    assert(AnnModels.kn5Lm.builds == t0, "second access must serve the persisted LM")
   }
 
   test("pipeline_curate_aligned = curate_semantic restricted to the alignment keep set") {

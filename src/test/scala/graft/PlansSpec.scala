@@ -52,7 +52,7 @@ class PlansSpec extends SparkSpec {
       TextOps.tokens(spark, sf), TextOps.fingerprint(spark, sf),
       TextOps.repetition(spark, sf), TextOps.pii(spark, sf),
       TextOps.piiRedact(spark, sf), TextOps.gopherRules(spark, sf),
-      TextOps.bpeEncode(spark, sf), TextOps.bpeIdsInline(spark, sf)).foreach { df =>
+      TextOps.bpeEncode(spark, sf), graft.operators.AnnModels.bpeStaticIdStream.build(spark, sf)).foreach { df =>
       // bpeIds is pinned on the INLINE chain (r17 batch 3 serves the gated
       // entry as an artifact read — itself Exchange-free, asserted below)
       val p = plan(df)
@@ -238,7 +238,7 @@ class PlansSpec extends SparkSpec {
     // Two narrow scans: the signature pass and the bucket census. What must
     // NEVER appear is a shuffle join of the signature relation against
     // itself (the candidates-by-self-join shape).
-    val p = plan(Dedup.minhashLshInline(spark, sf))
+    val p = plan(graft.operators.AnnModels.candPairs.build(spark, sf))
     assert("FileScan parquet".r.findAllIn(p).size == 2, s"expected signature + census scans:\n$p")
     assert(!p.contains("SortMergeJoin"), s"signature relation self-joined through a shuffle:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"bucket counts are not broadcast back:\n$p")
@@ -668,7 +668,7 @@ class PlansSpec extends SparkSpec {
     // the registry pair artifact since r15 (asserted below), so the
     // census-broadcast discipline is pinned on the trainer it rides.
     Seq("dedup_simhash_pairs (inline)" -> plan(Dedup.simhashPairsInline(spark, sf)),
-        "sim_knn_graph (inline)" -> plan(Similarity.knnGraphInline(spark, sf)),
+        "sim_knn_graph (inline)" -> plan(graft.operators.AnnModels.knnGraph.build(spark, sf)),
         "dedup_embedding (inline)" -> plan(Dedup.embeddingNearDupInline(spark, sf))).foreach { case (name, p) =>
       assert(!p.contains("Window"), s"$name plans a windowed bucket census:\n$p")
       assert(p.contains("BroadcastHashJoin"), s"$name bucket counts are not broadcast back:\n$p")

@@ -124,7 +124,7 @@ class SimilaritySpec extends SparkSpec {
     // the BUILD ranks through the custom operator; the gated entry is a
     // registry-served artifact read (r16), so the plan contract pins the
     // inline trainer
-    assert(Similarity.knnGraphInline(spark, sf)
+    assert(graft.operators.AnnModels.knnGraph.build(spark, sf)
         .queryExecution.executedPlan.toString.contains("TopKPerKey"),
       "knn graph build must rank through the custom physical operator")
     val maxDeg = g.groupBy("src").count().agg(max("count")).collect().head.getLong(0)
@@ -225,7 +225,7 @@ class SimilaritySpec extends SparkSpec {
     assert(kept.nonEmpty)
     // recompute every member's assignment independently of the pruning
     // path (inline trainer, not the served artifact the pruner reads)
-    val all = Similarity.ivfAssignInline(spark, sf)
+    val all = graft.operators.AnnModels.ivfAssign.build(spark, sf)
       .select(col("vec_id"), col("cent_id"), floor(col("ccos") * 1e4 + 0.5).cast("long"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     val keptByC = kept.groupBy(_._2)

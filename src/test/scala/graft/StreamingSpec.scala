@@ -345,7 +345,7 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, "documents.parquet"))
     val root = java.nio.file.Files.createTempDirectory("graft-inclsh-models").toString
     graft.operators.AnnModels.withRoot(root) {
-      val b0 = graft.operators.AnnModels.lshIndexBuilds
+      val b0 = graft.operators.AnnModels.lshIndex.builds
       val q = EventStreams.startIncrementalLshStream(spark, dir, "inc_lsh_sink")
       try q.processAllAvailable()
       finally q.stop()
@@ -362,15 +362,15 @@ class StreamingSpec extends SparkSpec {
       assert(fromStream == batch, s"rollup diverged: $fromStream vs $batch")
       assert(batch == Set((10L, 2L, 0), (11L, 0L, 1), (12L, 0L, 1)), s"batch semantics: $batch")
       // ONE index build serves both the stream and the batch probe
-      assert(graft.operators.AnnModels.lshIndexBuilds == b0 + 1,
-        s"index rebuilt: ${graft.operators.AnnModels.lshIndexBuilds - b0} builds")
+      assert(graft.operators.AnnModels.lshIndex.builds == b0 + 1,
+        s"index rebuilt: ${graft.operators.AnnModels.lshIndex.builds - b0} builds")
     }
   }
 
   test("ingest admission gate: true stream equals the batch analog, one training") {
     val root = java.nio.file.Files.createTempDirectory("graft-ingate-models").toString
     graft.operators.AnnModels.withRoot(root) {
-      val t0 = graft.operators.AnnModels.ingestGateTrains
+      val t0 = graft.operators.AnnModels.ingestGate.builds
       val batch = EventStreams.ingestGateBatch(spark, sf).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(batch.nonEmpty, "the shipped corpus has src0 ingest docs")
@@ -383,7 +383,7 @@ class StreamingSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(stream == batch,
         s"stream admission must equal the batch analog: ${stream.diff(batch)} / ${batch.diff(stream)}")
-      assert(graft.operators.AnnModels.ingestGateTrains == t0 + 1,
+      assert(graft.operators.AnnModels.ingestGate.builds == t0 + 1,
         "ONE corpus training must serve both the stream and the batch gate")
     }
   }
@@ -416,7 +416,7 @@ class StreamingSpec extends SparkSpec {
     }
     val root = java.nio.file.Files.createTempDirectory("graft-ingate-step-models").toString
     graft.operators.AnnModels.withRoot(root) {
-      val t0 = graft.operators.AnnModels.ingestGateTrains
+      val t0 = graft.operators.AnnModels.ingestGate.builds
       writeSingle(dropDir, "d0.parquet", Seq(
         (10L, "src0", "the quick brown fox jumps over the lazy dog and the cat"),
         (11L, "src0", "@@ ## $$ %% ^^ && ** (( )) __ ++ ~~")))
@@ -436,7 +436,7 @@ class StreamingSpec extends SparkSpec {
         "processed files must never re-score (no duplicate verdicts)")
       assert(a2(12L) == 1, s"second fluent doc admitted: $a2")
       // ONE corpus training served both runs
-      assert(graft.operators.AnnModels.ingestGateTrains == t0 + 1,
+      assert(graft.operators.AnnModels.ingestGate.builds == t0 + 1,
         "the registry model must train once across nightly runs")
       // the step's verdicts equal the batch analog run over the same drops
       val batchDir = s"$base/all"
@@ -479,7 +479,7 @@ class StreamingSpec extends SparkSpec {
     }
     val root = java.nio.file.Files.createTempDirectory("graft-phash-step-models").toString
     graft.operators.AnnModels.withRoot(root) {
-      val b0 = graft.operators.AnnModels.phashIndexBuilds
+      val b0 = graft.operators.AnnModels.phashIndex.builds
       writeSingle(dropDir, "d0.parquet", Seq(
         (10L, "src0", payloadA), (11L, "src0", "novel drop payload one two three")))
       EventStreams.runPhashStep(spark, corpusDir, dropDir, cp, out)
@@ -495,7 +495,7 @@ class StreamingSpec extends SparkSpec {
       assert(spark.read.parquet(out).count() == 3,
         "processed files must never re-score (no duplicate verdicts)")
       // ONE index build served both nightly runs
-      assert(graft.operators.AnnModels.phashIndexBuilds == b0 + 1,
+      assert(graft.operators.AnnModels.phashIndex.builds == b0 + 1,
         "the persisted index must build once across nightly runs")
       // the step's verdicts equal the batch analog over the same drops
       val batchDir = s"$base/all"
@@ -542,7 +542,7 @@ class StreamingSpec extends SparkSpec {
     }
     val root = java.nio.file.Files.createTempDirectory("graft-dsir-step-models").toString
     graft.operators.AnnModels.withRoot(root) {
-      val t0 = graft.operators.AnnModels.dsirTrains
+      val t0 = graft.operators.AnnModels.dsirGate.builds
       writeSingle(dropDir, "d0.parquet", dropRows0)
       EventStreams.runIngestDsirStep(spark, corpusDir, dropDir, cp, out)
       val a1 = verdicts()
@@ -554,7 +554,7 @@ class StreamingSpec extends SparkSpec {
       assert(a2.keySet == Set(10L, 11L, 12L), s"run 2 adds only the new drop: $a2")
       assert(spark.read.parquet(out).count() == 3,
         "processed files must never re-score (no duplicate verdicts)")
-      assert(graft.operators.AnnModels.dsirTrains == t0 + 1,
+      assert(graft.operators.AnnModels.dsirGate.builds == t0 + 1,
         "the registry importance model must train once across nightly runs")
       // nightly verdicts equal the batch analog over the same drops — the
       // gated, oracle-replayed path (one scoring implementation, no drift)
@@ -602,7 +602,7 @@ class StreamingSpec extends SparkSpec {
     }
     val root = java.nio.file.Files.createTempDirectory("graft-lr-step-models").toString
     graft.operators.AnnModels.withRoot(root) {
-      val t0 = graft.operators.AnnModels.lrGateTrains
+      val t0 = graft.operators.AnnModels.lrGate.builds
       writeSingle(dropDir, "d0.parquet", dropRows0)
       EventStreams.runIngestLrStep(spark, corpusDir, dropDir, cp, out)
       val a1 = verdicts()
@@ -613,7 +613,7 @@ class StreamingSpec extends SparkSpec {
       assert(a2.keySet == Set(10L, 11L, 12L), s"run 2 adds only the new drop: $a2")
       assert(spark.read.parquet(out).count() == 3,
         "processed files must never re-score (no duplicate verdicts)")
-      assert(graft.operators.AnnModels.lrGateTrains == t0 + 1,
+      assert(graft.operators.AnnModels.lrGate.builds == t0 + 1,
         "the registry LR model must train once across nightly runs")
       val batchDir = s"$base/all"
       writeSingle(batchDir, "documents.parquet", corpusRows ++ dropRows0 ++ dropRows1)
@@ -746,7 +746,7 @@ class StreamingSpec extends SparkSpec {
     }
     val root = java.nio.file.Files.createTempDirectory("graft-packstep-models").toString
     graft.operators.AnnModels.withRoot(root) {
-      val t0 = graft.operators.AnnModels.tokenTotalTrains
+      val t0 = graft.operators.AnnModels.tokenTotals.builds
       // drop 1: srcA doc of 300 tokens — fills chunk 1 (cum 800→1100:
       // starts at position 800, chunk 800 DIV 512 = 1)
       writeSingle(dropDir, "d0.parquet", Seq((10L, "srcA", words(300))))
@@ -775,7 +775,7 @@ class StreamingSpec extends SparkSpec {
         ("srcC", 0L) -> (1L, 50L)),
         s"drop 2 must continue from corpus + drop 1: $m2")
       // ONE corpus token census served every step
-      assert(graft.operators.AnnModels.tokenTotalTrains == t0 + 1,
+      assert(graft.operators.AnnModels.tokenTotals.builds == t0 + 1,
         "the corpus totals must train once across nightly runs")
       // the manifest equals the batch-analog: full pack over corpus+drops,
       // restricted to dropped docs (delta ids follow corpus ids per source)
@@ -861,11 +861,11 @@ class StreamingSpec extends SparkSpec {
       else spark.read.parquet(s"$base/$out").select("doc_id").collect().map(_.getLong(0)).toSet
     val root = java.nio.file.Files.createTempDirectory("graft-quintet-models").toString
     graft.operators.AnnModels.withRoot(root) {
-      val t0 = (graft.operators.AnnModels.ingestGateTrains,
-        graft.operators.AnnModels.dsirTrains,
-        graft.operators.AnnModels.lshIndexBuilds,
-        graft.operators.AnnModels.phashIndexBuilds,
-        graft.operators.AnnModels.tokenTotalTrains)
+      val t0 = (graft.operators.AnnModels.ingestGate.builds,
+        graft.operators.AnnModels.dsirGate.builds,
+        graft.operators.AnnModels.lshIndex.builds,
+        graft.operators.AnnModels.phashIndex.builds,
+        graft.operators.AnnModels.tokenTotals.builds)
       // night 1: a corpus-duplicate fluent doc + a novel garbage doc
       writeSingle(dropDir, "d0.parquet", Seq(
         (10L, "src0", fluent), (11L, "src0", "@@ ## $$ %% ^^ && ** (( )) __ ++ ~~")))
@@ -916,11 +916,11 @@ class StreamingSpec extends SparkSpec {
         .map(_.split("\\s+").length).sum
       assert(packed == dropToks, s"pack conserves drop tokens: $packed vs $dropToks")
       // ONE training per model served all five steps across both nights
-      val t1 = (graft.operators.AnnModels.ingestGateTrains,
-        graft.operators.AnnModels.dsirTrains,
-        graft.operators.AnnModels.lshIndexBuilds,
-        graft.operators.AnnModels.phashIndexBuilds,
-        graft.operators.AnnModels.tokenTotalTrains)
+      val t1 = (graft.operators.AnnModels.ingestGate.builds,
+        graft.operators.AnnModels.dsirGate.builds,
+        graft.operators.AnnModels.lshIndex.builds,
+        graft.operators.AnnModels.phashIndex.builds,
+        graft.operators.AnnModels.tokenTotals.builds)
       assert(t1 == (t0._1 + 1, t0._2 + 1, t0._3 + 1, t0._4 + 1, t0._5 + 1),
         s"each registry model must train exactly once: $t0 -> $t1")
       // crash mid-cycle: two steps re-deliver night 2's drop from stale

@@ -81,13 +81,13 @@ class UnigramSpec extends SparkSpec {
 
   test("registry serving: one training pass, served == inline") {
     AnnModels.withRoot(freshRoot("serve")) {
-      val t0 = AnnModels.uniTrains
+      val t0 = AnnModels.uniVocab.builds
       val served = UnigramLm.unigramVocab(spark, sf).collect()
         .map(_.toSeq).toSet
-      assert(AnnModels.uniTrains == t0 + 1, "first access must train")
+      assert(AnnModels.uniVocab.builds == t0 + 1, "first access must train")
       UnigramLm.unigramIds(spark, sf).count()
       UnigramLm.unigramFertility(spark, sf).count()
-      assert(AnnModels.uniTrains == t0 + 1,
+      assert(AnnModels.uniVocab.builds == t0 + 1,
         "the id and fertility consumers must serve the artifact, not retrain")
       val inline = UnigramLm.uniTrainOf(
         graft.sources.Tables.load(spark, sf, "documents")).collect()
