@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.hash52
-import graft.operators.{Dedup, Pipeline, Similarity, Tera}
+import graft.operators.Tera
 
 /** Scale-stress harness: generate synthetic corpora at 1x/10x/100x the
   * shipped sf0.1 size with the library's own deterministic generators, run
@@ -95,138 +95,140 @@ object Scale {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
   }
 
-  /** The operators whose scaling the harness certifies: every candidate-
-    * pair path family (minhash+verify, CC survivors, substring windows,
-    * LSH index match, knn buckets, IVF-PQ, SemDeDup) plus the composed
-    * curation capstone. `sim_knn_graph` is the GATED entry point itself:
-    * since round 7 it auto-sizes its table geometry from the corpus count
+  /** The gated queries whose scaling the harness certifies, each named
+    * once and timed in this order: every candidate-pair path family
+    * (minhash+verify, CC survivors, substring windows, LSH index match,
+    * knn buckets, IVF-PQ, SemDeDup) plus the composed curation capstones.
+    * Each runs through its `SparkEntry.queries` entry, so the harness
+    * measures exactly what a deployment runs — e.g. `sim_knn_graph`
+    * since round 7 auto-sizes its table geometry from the corpus count
     * (Similarity.graphSizing — planesPerTable ~ log2(N / bucket cap),
-    * tables trimmed to the 64-bit signature budget), so the harness
-    * measures exactly what a deployment runs. At a FIXED 32 buckets a
+    * tables trimmed to the 64-bit signature budget). At a FIXED 32 buckets a
     * 100x corpus saturates every bucket to the salt cap — bounded, but
     * with the candidate constant the rule avoids (the first harness run
     * measured it at 32x wall-clock). */
-  def ops(mult: Int): Seq[(String, (SparkSession, String) => DataFrame)] =
-    Seq(
-      "dedup_substring" -> (Dedup.substringDup _),
-      "dedup_substring_rm" -> (Dedup.substringRemove _),
-      "dedup_minhash_verified" -> (Dedup.minhashVerified _),
-      "dedup_survivors" -> (Dedup.survivors _),
-      "dedup_incremental_lsh" -> (Dedup.incrementalLsh _),
-      "pipeline_curate_neardup" -> (Pipeline.curateNearDup _),
-      "dedup_semantic" -> (Dedup.semanticDedup _),
-      "sim_ann_ivfpq" -> (Similarity.annIvfPq _),
-      "sim_knn_graph" -> (Similarity.knnGraph _),
-      // round-8 additions: the two-level-rank family's new consumers and
-      // the end-to-end build capstone (composes the heaviest chains)
-      "pipeline_curriculum" -> (Pipeline.curriculum _),
-      "pipeline_interleave" -> (Pipeline.interleave _),
-      "pipeline_build" -> (Pipeline.build _),
-      // round 9: the corpus-calibrated gate variant — the manifest must be
-      // NON-EMPTY here (the fixed-coefficient gate's empty ×10/×100
-      // manifest is the depth gap this closes; SCALE.md r8)
-      "pipeline_build_calibrated" -> (Pipeline.buildCalibrated _),
-      // round 9: the calibrated gate alone (census threshold selection),
-      // the trained-tokenizer chain (registry artifact + native encoder +
-      // pack), and the persisted-index ingest probe — ordered after
-      // build_calibrated so the LM artifact is warm when the gate re-runs
-      "text_quality_calibrated" -> (graft.operators.TextOps.qualityCalibrated _),
-      "text_bpe_trained_ids" -> (graft.operators.TextOps.bpeTrainedIds _),
-      "pipeline_pack_trained" -> (Pipeline.packTrained _),
-      "stream_dedup_incremental" -> (graft.streaming.EventStreams.incrementalVsIndex _),
-      // round 10: the learned components at production shape — the
-      // 256-merge batched-trainer chain, the Rocchio-trained quality
-      // gate, and the corpus-calibrated ingest admission gate (all
-      // registry-served; first-touch rows carry their one-time training)
-      "text_bpe_trained_ids_256" -> (graft.operators.TextOps.bpeTrainedIdsBig _),
-      "text_quality_trained" -> (graft.operators.TextOps.qualityTrained _),
-      "stream_ingest_gate" -> (graft.streaming.EventStreams.ingestGateBatch _),
-      // round 11: the ordered-dataset capstone — the calibrated manifest
-      // plus the chunk-granularity interleave rank; its extra cost over
-      // build_calibrated must stay manifest-sized (rows = corpus/2048)
-      "pipeline_build_ordered" -> (Pipeline.buildOrdered _),
-      // round 11: the nightly continuation pack (cost ∝ delta, the top
-      // doc_id fifth) and the token-budget census (one aggregation pass)
-      "pipeline_pack_delta" -> ((s: SparkSession, d: String) => Pipeline.packDelta(s, d)),
-      "pipeline_token_budget" -> (Pipeline.tokenBudget _),
-      // round 11: DSIR importance selection — two corpus scans, one
-      // token-bounded (doc, bucket) shuffle, a 256-row model broadcast and
-      // the census order statistic; registry-served, so first-touch rows
-      // carry the one-time model fit and served rows are the scoring pass
-      "text_importance_dsir" -> (graft.operators.TextOps.importanceDsir _),
-      // round 12: the paper-width DSIR form — same width-independent plan
-      // (broadcast model relation, token-bounded shuffle); the 8192-row
-      // artifact must stay broadcast-sized at every corpus scale
-      "text_importance_dsir_8k" -> (graft.operators.TextOps.importanceDsir8k _),
-      // round 11: perceptual dedup CC — pairs stay pigeonhole-bucketed and
-      // salt-capped, CC state bounded by edge-touched assets; must stay
-      // far from quadratic even when the generated corpus has phash
-      // near-pairs
-      "mm_phash_dedup" -> (graft.operators.Multimodal.phashDedup _),
-      // round 11: DSIR admission — first-touch carries the corpus fit,
-      // served rows are the batch-sized scoring pass (cost ∝ batch)
-      "stream_ingest_dsir" -> (graft.streaming.EventStreams.ingestDsirBatch _),
-      // round 12: perceptual ingest probe — first-touch builds the
-      // pigeonhole phash index, served is |batch| hashes + one equijoin
-      "stream_ingest_phash" -> (graft.streaming.EventStreams.phashVsIndex _),
-      // round 12: cross-modal alignment gate — partition-parallel phash,
-      // id-keyed embeddings join, histogram census + broadcast bar
-      "mm_text_align" -> (graft.operators.Multimodal.textAlign _),
-      // round 11: temperature sampling — assignment join (registry-served
-      // centroids) + bounded heaps + a capped-relation rank; must track
-      // the assignment scan, not the window
-      "pipeline_sample_cluster" -> (Pipeline.sampleCluster _),
-      // round 13: multiset verification — same candidate-bounded shape as
-      // minhash_verified (the pair join streams (pair, gram) rows pruned
-      // by the hash join), must track the candidate count, never corpus²
-      "dedup_jaccard_weighted" -> (Dedup.weightedJaccard _),
-      // round 13: atomic FFD packing — ONE bounded-group shuffle; the fold
-      // state is ≤ FfdBlock entries per shard regardless of corpus size
-      "pipeline_pack_ffd" -> ((s: SparkSession, d: String) => Pipeline.packFfd(s, d)),
-      // round 13: source-level gate — the per-source rollup rides the
-      // served survivor labels; the gate itself is O(sources) + broadcast
-      "pipeline_curate_source" -> (Pipeline.curateSource _),
-      // round 13: LR admission — first-touch carries the one-time fit
-      // (bounded driver-side rounds over the even-id half), served rows
-      // are one feature pass over the batch
-      "stream_ingest_lr" -> (graft.streaming.EventStreams.ingestLrBatch _),
-      // round 13: audio fingerprint pairing — pigeonhole-bucketed and
-      // salt-capped like simhash/phash; linear in assets by construction
-      "mm_audio_pairs" -> (graft.operators.Multimodal.audioPairs _),
-      // round 15: the PQ family's remaining two gated entries — with the
-      // corpus encoding registry-served (AnnModels.pqCodes) their served
-      // rows must drop to the ivf family's flat line; first-touch carries
-      // the one-time encode
-      "sim_ann_pq" -> (Similarity.annPq _),
-      "sim_ann_ivfpq_rerank" -> (Similarity.annIvfPqRerank _),
-      // round 15 (VERDICT r14 #7): the r14 additions' scale rows — all
-      // ride served artifacts (audio CC labels, the dupSpans relation,
-      // the funnelFlags spine), so anything non-flat is a finding
-      "mm_audio_dedup" -> (graft.operators.Multimodal.audioDedup _),
-      "mm_audio_keep" -> (graft.operators.Multimodal.audioKeep _),
-      "dedup_substring_rm_spans" -> (Dedup.substringRemoveSpans _),
-      "pipeline_funnel_source" -> (Pipeline.funnelSource _),
-      // round 17 (VERDICT r16 #9): the d91d04c/r17 serving wave's heaviest
-      // reads — the raw-candidate CC labeling, both minhash verifiers and
-      // the banded variant; all artifact reads now, so anything non-flat
-      // ×1→×100 is a finding (first-touch carries the one-time build)
-      "dedup_clusters" -> (Dedup.clusterAssign _),
-      "dedup_minhash_lsh" -> (Dedup.minhashLsh _),
-      "dedup_minhash_estimate" -> (Dedup.minhashEstimate _),
-      "dedup_minhash_banded" -> (Dedup.minhashLshBanded _),
-      "dedup_boilerplate" -> (Dedup.boilerplateTopK _),
-      "dedup_embedding" -> (Dedup.embeddingNearDup _),
-      // round 17 batch 3: the curate manifests and the loader orders are
-      // served corpus products now — their served rows must go flat
-      // ×1→×100 (curate_neardup read 2.4 s at ×100 when it still
-      // re-composed per invocation); first-touch carries the one-time
-      // composition
-      "pipeline_curate_neardup" -> (Pipeline.curateNearDup _),
-      "pipeline_curate_semantic" -> (Pipeline.curateSemantic _),
-      "pipeline_curate_aligned" -> (Pipeline.curateAligned _),
-      "pipeline_interleave" -> (Pipeline.interleave _),
-      "pipeline_curriculum" -> (Pipeline.curriculum _),
-      "text_bpe_ids" -> (graft.operators.TextOps.bpeIds _))
+  val opNames: Seq[String] = Seq(
+    "dedup_substring",
+    "dedup_substring_rm",
+    "dedup_minhash_verified",
+    "dedup_survivors",
+    "dedup_incremental_lsh",
+    // the curate manifests and the loader orders are served corpus
+    // products: their served rows must go flat ×1→×100 (curate_neardup
+    // read 2.4 s at ×100 when it still re-composed per invocation);
+    // first-touch carries the one-time composition
+    "pipeline_curate_neardup",
+    "dedup_semantic",
+    "sim_ann_ivfpq",
+    "sim_knn_graph",
+    // round-8 additions: the two-level-rank family's new consumers and
+    // the end-to-end build capstone (composes the heaviest chains)
+    "pipeline_curriculum",
+    "pipeline_interleave",
+    "pipeline_build",
+    // round 9: the corpus-calibrated gate variant — the manifest must be
+    // NON-EMPTY here (the fixed-coefficient gate's empty ×10/×100
+    // manifest is the depth gap this closes; SCALE.md r8)
+    "pipeline_build_calibrated",
+    // round 9: the calibrated gate alone (census threshold selection),
+    // the trained-tokenizer chain (registry artifact + native encoder +
+    // pack), and the persisted-index ingest probe — ordered after
+    // build_calibrated so the LM artifact is warm when the gate re-runs
+    "text_quality_calibrated",
+    "text_bpe_trained_ids",
+    "pipeline_pack_trained",
+    "stream_dedup_incremental",
+    // round 10: the learned components at production shape — the
+    // 256-merge batched-trainer chain, the Rocchio-trained quality
+    // gate, and the corpus-calibrated ingest admission gate (all
+    // registry-served; first-touch rows carry their one-time training)
+    "text_bpe_trained_ids_256",
+    "text_quality_trained",
+    "stream_ingest_gate",
+    // round 11: the ordered-dataset capstone — the calibrated manifest
+    // plus the chunk-granularity interleave rank; its extra cost over
+    // build_calibrated must stay manifest-sized (rows = corpus/2048)
+    "pipeline_build_ordered",
+    // round 11: the nightly continuation pack (cost ∝ delta, the top
+    // doc_id fifth) and the token-budget census (one aggregation pass)
+    "pipeline_pack_delta",
+    "pipeline_token_budget",
+    // round 11: DSIR importance selection — two corpus scans, one
+    // token-bounded (doc, bucket) shuffle, a 256-row model broadcast and
+    // the census order statistic; registry-served, so first-touch rows
+    // carry the one-time model fit and served rows are the scoring pass
+    "text_importance_dsir",
+    // round 12: the paper-width DSIR form — same width-independent plan
+    // (broadcast model relation, token-bounded shuffle); the 8192-row
+    // artifact must stay broadcast-sized at every corpus scale
+    "text_importance_dsir_8k",
+    // round 11: perceptual dedup CC — pairs stay pigeonhole-bucketed and
+    // salt-capped, CC state bounded by edge-touched assets; must stay
+    // far from quadratic even when the generated corpus has phash
+    // near-pairs
+    "mm_phash_dedup",
+    // round 11: DSIR admission — first-touch carries the corpus fit,
+    // served rows are the batch-sized scoring pass (cost ∝ batch)
+    "stream_ingest_dsir",
+    // round 12: perceptual ingest probe — first-touch builds the
+    // pigeonhole phash index, served is |batch| hashes + one equijoin
+    "stream_ingest_phash",
+    // round 12: cross-modal alignment gate — partition-parallel phash,
+    // id-keyed embeddings join, histogram census + broadcast bar
+    "mm_text_align",
+    // round 11: temperature sampling — assignment join (registry-served
+    // centroids) + bounded heaps + a capped-relation rank; must track
+    // the assignment scan, not the window
+    "pipeline_sample_cluster",
+    // round 13: multiset verification — same candidate-bounded shape as
+    // minhash_verified (the pair join streams (pair, gram) rows pruned
+    // by the hash join), must track the candidate count, never corpus²
+    "dedup_jaccard_weighted",
+    // round 13: atomic FFD packing — ONE bounded-group shuffle; the fold
+    // state is ≤ FfdBlock entries per shard regardless of corpus size
+    "pipeline_pack_ffd",
+    // round 13: source-level gate — the per-source rollup rides the
+    // served survivor labels; the gate itself is O(sources) + broadcast
+    "pipeline_curate_source",
+    // round 13: LR admission — first-touch carries the one-time fit
+    // (bounded driver-side rounds over the even-id half), served rows
+    // are one feature pass over the batch
+    "stream_ingest_lr",
+    // round 13: audio fingerprint pairing — pigeonhole-bucketed and
+    // salt-capped like simhash/phash; linear in assets by construction
+    "mm_audio_pairs",
+    // round 15: the PQ family's remaining two gated entries — with the
+    // corpus encoding registry-served (AnnModels.pqCodes) their served
+    // rows must drop to the ivf family's flat line; first-touch carries
+    // the one-time encode
+    "sim_ann_pq",
+    "sim_ann_ivfpq_rerank",
+    // round 15 (VERDICT r14 #7): the r14 additions' scale rows — all
+    // ride served artifacts (audio CC labels, the dupSpans relation,
+    // the funnelFlags spine), so anything non-flat is a finding
+    "mm_audio_dedup",
+    "mm_audio_keep",
+    "dedup_substring_rm_spans",
+    "pipeline_funnel_source",
+    // round 17 (VERDICT r16 #9): the d91d04c/r17 serving wave's heaviest
+    // reads — the raw-candidate CC labeling, both minhash verifiers and
+    // the banded variant; all artifact reads now, so anything non-flat
+    // ×1→×100 is a finding (first-touch carries the one-time build)
+    "dedup_clusters",
+    "dedup_minhash_lsh",
+    "dedup_minhash_estimate",
+    "dedup_minhash_banded",
+    "dedup_boilerplate",
+    "dedup_embedding",
+    // round 17 batch 3: the remaining curate manifests (see
+    // curate_neardup above)
+    "pipeline_curate_semantic",
+    "pipeline_curate_aligned",
+    "text_bpe_ids")
+
+  /** The timed operators, each run through its gated query. */
+  def ops: Seq[(String, (SparkSession, String) => DataFrame)] =
+    opNames.map(n => n -> SparkEntry.queries(n))
 
   def main(args: Array[String]): Unit = {
     val outBase = args.headOption.getOrElse("/tmp/graft_scale")
@@ -275,12 +277,12 @@ object Scale {
     // measures — in the fresh-JVM-per-point sweep every JVM warms itself,
     // so an x100-only run doesn't charge JIT to its first-touch rows
     ensureCorpus(s"$outBase/x1", 5000L, 2000L)
-    ops(1).foreach { case (n, fn) =>
+    ops.foreach { case (n, fn) =>
       if (selected(n)) fn(spark, s"$outBase/x1").count() }
     for ((tag, mult, nDocs, nVecs) <- scales) {
       val dir = s"$outBase/$tag"
       ensureCorpus(dir, nDocs, nVecs)
-      for ((name, fn) <- ops(mult) if selected(name)) {
+      for ((name, fn) <- ops if selected(name)) {
         // Measurement isolation: localCheckpoint blocks from the PREVIOUS
         // operator otherwise stay persisted and squeeze this one's
         // execution memory — at x100 that turned an 8 s pipeline into a

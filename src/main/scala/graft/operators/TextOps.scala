@@ -1878,74 +1878,13 @@ object TextOps {
     * Scale: each round is ONE map-side aggregate over the (checkpointed,
     * 8-narrow-column) training half — K scans of a compact relation, no
     * shuffle beyond the 1-row aggregate; the collected state is 13 longs
-    * (model-sized, the broadcast-artifact discipline). */
-  /** SINGLE-ACTION form of the LR fit (r14, VERDICT r13 #6): the whole
-    * K-round recurrence is ONE lazily built plan collected once — the
-    * state (6 means + 7 weights, 13 longs) rides a 1-row relation that
-    * cross-joins (broadcast) into each round's gradient aggregate and
-    * updates in the SAME aggregate row (state carried via first(), so
-    * round k references round k−1 exactly once — linear plan depth, no
-    * driver round-trips). The arithmetic is byte-for-byte the driver-loop
-    * form the oracle unrolls as CTEs: exact long logits, one
-    * grid-quantized sigmoid per (doc, round), truncating-DIV updates
-    * (spec: identical (mu, w) on both corpora).
-    *
-    * MEASURED at ×100 (500k docs): 17.1 s vs the loop's
-    * 9.4 s — the driver round-trip was never the bottleneck (1 row per
-    * round), while attaching the broadcast state row costs a
-    * BroadcastNestedLoopJoin PER TRAINING ROW per round and breaks the
-    * aggregate out of single-stage codegen. Kept as the alternative form
-    * (it is the right shape if the collected state ever outgrows the
-    * driver, e.g. K features ≫ 13 longs); [[qualityLrFit]] — the loop —
-    * stays the serving path. */
-  private[graft] def qualityLrFitPlan(feats: DataFrame, labels: DataFrame,
-      iters: Int = QualityLrIters, etaNum: Long = QualityLrEtaNum,
-      etaDen: Long = QualityLrEtaDen): (Array[Long], Array[Long]) = {
-    val half = feats.join(labels, Seq("doc_id"))
-      .filter(col("doc_id") % 2 === 0)
-      .localCheckpoint()
-    val fIdx = QualityFeatNames.zipWithIndex
-    val wNames = (0 to QualityFeatNames.size).map(j => s"w$j")
-    // state row 0: mu_j = (Σ_train f_j) DIV n (0 on an empty half), w = 0
-    var st = half.agg(count(lit(1)).as("n"),
-        fIdx.map { case (f, _) => sum(col(f)).as(s"m$f") }: _*)
-      .select(fIdx.map { case (f, i) =>
-          when(col("n") > 0, expr(s"m$f DIV n")).otherwise(lit(0L)).as(s"mu$i") } ++
-        wNames.map(wn => lit(0L).as(wn)): _*)
-    for (_ <- 1 to iters) {
-      val x = fIdx.map { case (f, i) =>
-        greatest(least(col(f) - col(s"mu$i"), lit(10000L)), lit(-10000L)) }
-      val z = fIdx.map { case (_, i) => x(i) * col(s"w${i + 1}") }
-        .reduce(_ + _) + col("w0") * lit(10000L)
-      val p6 = floor(lit(1000000.0) /
-        (lit(1.0) + exp(-(z.cast("double") / lit(1e10)))) + lit(0.5)).cast("long")
-      val resid = col("cls") * lit(1000000L) - p6
-      val carry = (fIdx.map { case (_, i) => s"mu$i" } ++ wNames)
-        .map(c => first(col(c)).as(c))
-      st = half.crossJoin(broadcast(st))
-        .agg(count(lit(1)).as("n"),
-          sum(resid * lit(10000L)).as("g0") +:
-            fIdx.map { case (_, i) => sum(resid * x(i)).as(s"g${i + 1}") } ++:
-            carry: _*)
-        .select(fIdx.map { case (_, i) => coalesce(col(s"mu$i"), lit(0L)).as(s"mu$i") } ++
-          wNames.zipWithIndex.map { case (wn, j) =>
-            when(col("n") > 0, col(wn) +
-              expr(s"($etaNum * g$j) DIV ($etaDen * n * 10000)"))
-              .otherwise(coalesce(col(wn), lit(0L))).as(wn) }: _*)
-    }
-    val row = st.collect().head
-    val mu = QualityFeatNames.indices.map(i => row.getLong(i)).toArray
-    val w = wNames.indices.map(j => row.getLong(QualityFeatNames.size + j)).toArray
-    (mu, w)
-  }
-
-  /** The DRIVER-LOOP form — K rounds of collect-update-resubmit, each a
-    * 1-row map-side aggregate over the checkpointed training half. This
-    * IS the serving path: at ×100 it beats the single-action plan 9.4 s
-    * to 17.1 s (see [[qualityLrFitPlan]]'s measurement note), because the
-    * per-round driver state is 13 longs while the in-plan alternative
-    * pays a per-row broadcast-state join. Parity between the two forms is
-    * spec-asserted; the oracle unrolls exactly this arithmetic as CTEs. */
+    * (model-sized, the broadcast-artifact discipline). The fit is a
+    * DRIVER LOOP — K rounds of collect-update-resubmit — and the oracle
+    * unrolls exactly this arithmetic as CTEs. A single-action form (the
+    * state row cross-joined into each round's aggregate) measured 17.1 s
+    * against the loop's 9.4 s at ×100 (500k docs): the driver round-trip
+    * is 1 row per round, while the in-plan state costs a
+    * BroadcastNestedLoopJoin per training row per round. */
   private[graft] def qualityLrFit(feats: DataFrame, labels: DataFrame,
       iters: Int = QualityLrIters, etaNum: Long = QualityLrEtaNum,
       etaDen: Long = QualityLrEtaDen): (Array[Long], Array[Long]) = {

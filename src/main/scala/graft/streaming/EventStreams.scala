@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import graft.functions._
+import graft.operators.{AnnModels, Dedup, Multimodal, Pipeline, TextOps}
 import graft.sources.Tables
 
 /** Section D of SURVEY §2: Structured Streaming over the `events` table.
@@ -14,6 +16,12 @@ import graft.sources.Tables
   * batch queries (oracle-checked) and streaming queries (spec-checked with a
   * memory sink) share one implementation — no drift between the paths.
   *
+  * Every streaming decision lives in one helper: how drops are found and
+  * read ([[fileStream]], [[eventStream]]), how a one-shot run ends
+  * ([[availableNow]], [[toMemory]]), and how a nightly batch lands exactly
+  * once ([[runNightly]], [[writeBatchPartition]]). Each `start*Stream` /
+  * `run*Step` is its own transform plus one of those calls.
+  *
   * Scale: windowed aggregation state is bounded by the watermark; the typed
   * sessionizer keeps one open session per key, the shape
   * (flat)MapGroupsWithState maintains in the state store.
@@ -22,18 +30,145 @@ object EventStreams {
 
   val SessionGapUs: Long = 30L * 60 * 1000000 // 30 minutes
 
-  /** Normalize the raw events `ts` to a watermarkable TIMESTAMP: a LONG
-    * column is the nanosAsLong read of TIMESTAMP(NANOS) parquet (truncate
-    * to micros, the batch loader's rule — Tables.load); anything else is a
-    * timestamp already (TIMESTAMP(MICROS) parquet) and only needs the cast
-    * to the with-local-tz type watermarks require (session tz is UTC, so
-    * wall-clock matches the batch path's TIMESTAMP_NTZ). */
-  private def tsAsTimestamp(df: DataFrame): DataFrame =
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ => df.withColumn("ts", col("ts").cast("timestamp"))
+  // --- stream plumbing -------------------------------------------------------
+
+  /** File-stream source over the parquet files under `dir` (recursively)
+    * whose file NAME matches `glob` — the files [[hasDrops]] counts — with
+    * the schema read from those files. `maxFilesPerTrigger` > 0 caps the
+    * files each micro-batch takes. */
+  private def fileStream(s: SparkSession, dir: String, glob: String,
+      maxFilesPerTrigger: Int = 0): DataFrame = {
+    val schema = s.read.option("pathGlobFilter", glob).parquet(dir).schema
+    val reader = s.readStream.schema(schema).option("pathGlobFilter", glob)
+    (if (maxFilesPerTrigger > 0) reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
+     else reader).parquet(dir)
+  }
+
+  /** Event time of a raw events relation: `ts` as a watermarkable
+    * TIMESTAMP under a 1-hour watermark. A LONG column is the nanosAsLong
+    * read of TIMESTAMP(NANOS) parquet (truncate to micros, the batch
+    * loader's rule — Tables.load); anything else is a timestamp already
+    * (TIMESTAMP(MICROS) parquet) and only needs the cast to the
+    * with-local-tz type watermarks require (session tz is UTC, so
+    * wall-clock matches the batch path's TIMESTAMP_NTZ). A column aliased
+    * from `ts` keeps the watermark. */
+  private def withEventTime(raw: DataFrame): DataFrame = {
+    val ts = raw.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType => expr("timestamp_micros(ts div 1000)")
+      case _ => col("ts").cast("timestamp")
     }
+    raw.withColumn("ts", ts).withWatermark("ts", "1 hour")
+  }
+
+  /** Watermarked events source: the events files under `dir`. */
+  private def eventStream(s: SparkSession, dir: String,
+      glob: String = "events.parquet"): DataFrame =
+    withEventTime(fileStream(s, dir, glob))
+
+  /** Start one AvailableNow run of `w` — every file present at start, then
+    * stop — resuming from `checkpoint` when one is given. */
+  private def availableNow(w: DataStreamWriter[_], checkpoint: Option[String]): StreamingQuery = {
+    checkpoint.foreach(w.option("checkpointLocation", _))
+    w.trigger(Trigger.AvailableNow()).start()
+  }
+
+  /** One-shot spec path: `df` into the in-memory table `name`; the caller
+    * awaits the returned query, then reads the table. */
+  private def toMemory(df: DataFrame, name: String, mode: String = "append",
+      checkpoint: Option[String] = None): StreamingQuery =
+    availableNow(df.writeStream.outputMode(mode).format("memory").queryName(name), checkpoint)
+
+  /** The nightly-step contract, stated once for every `run*Step`:
+    *  - drops are the files under `dropDir` whose name matches `glob`,
+    *    found recursively (a `day=…/` partitioned layout counts);
+    *  - a night with no drops does nothing: no schema probe, no query, no
+    *    sink output, no registry read (`sink` is only built past the
+    *    guard, so the artifacts it loads are too);
+    *  - otherwise `sink` over the drop stream runs ONE AvailableNow pass
+    *    that resumes from `checkpoint` — every piece of stream state (which
+    *    files were taken, operator state) lives there, not in the JVM — and
+    *    the call returns when the pass ends. */
+  private def runNightly(s: SparkSession, dropDir: String, glob: String,
+      checkpoint: String)(sink: DataFrame => DataStreamWriter[_]): Unit =
+    if (hasDrops(s, dropDir, glob))
+      availableNow(sink(fileStream(s, dropDir, glob)), Some(checkpoint)).awaitTermination()
+
+  /** Land one micro-batch's `rows` in the `batch=<batchId>` partition of
+    * `outPath` under dynamic partition overwrite. foreachBatch is
+    * at-least-once — a crash between the sink write and the checkpoint
+    * commit replays the micro-batch on restart — so a replayed batch
+    * REPLACES its own partition instead of appending a second copy,
+    * making the sink exactly-once end to end (ADVICE r10). The partition
+    * column doubles as provenance: which nightly trigger wrote a row. */
+  private def writeBatchPartition(rows: DataFrame, batchId: Long, outPath: String): Unit =
+    rows.withColumn("batch", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch")
+      .parquet(outPath)
+
+  /** The verdict steps (gate, LR, DSIR, phash): each micro-batch's src0
+    * documents go through `scorer` — built once, past the empty-night
+    * guard — into their own `batch=<id>` partition. Stateless by
+    * construction: scoring runs per micro-batch on the SHARED batch path,
+    * so the only durable state is the file-source checkpoint (which files
+    * were processed) — a checkpoint reused nightly for years stays
+    * file-list-sized. A re-dropped file is never re-scored; a re-dropped
+    * document in a NEW file scores again (each drop is its own decision). */
+  private def runVerdictStep(s: SparkSession, dropDir: String, glob: String,
+      checkpoint: String, outPath: String)(scorer: => DataFrame => DataFrame): Unit =
+    runNightly(s, dropDir, glob, checkpoint) { drops =>
+      val score = scorer
+      drops.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        writeBatchPartition(score(src0(batch)), batchId, outPath)
+      }
+    }
+
+  /** Ids of the `batch=<id>` directories directly under `dir`, ascending;
+    * empty when `dir` is absent. */
+  private def batchIds(fs: FileSystem, dir: Path): Seq[Long] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.collect {
+      case st if st.isDirectory && st.getPath.getName.startsWith("batch=") =>
+        st.getPath.getName.stripPrefix("batch=").toLong
+    }.sorted
+
+  /** True iff `dropDir` exists and holds at least one file matching
+    * `glob` — the nightly steps' pre-flight (a night with no drops must
+    * no-op, not throw from the schema probe; ADVICE r10). RECURSIVE, and
+    * matched on the file NAME, mirroring exactly what the streaming file
+    * source's `pathGlobFilter` would discover — a partitioned drop
+    * layout (files under date=.../ subdirectories) counts as drops, not
+    * as an empty night. One listing, no data scan. */
+  private def hasDrops(s: SparkSession, dropDir: String, glob: String): Boolean = {
+    val p = new Path(dropDir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.exists(p) && {
+      val matcher = java.nio.file.FileSystems.getDefault
+        .getPathMatcher(s"glob:$glob")
+      val it = fs.listFiles(p, true)
+      var found = false
+      while (!found && it.hasNext) {
+        val name = it.next().getPath.getName
+        found = matcher.matches(java.nio.file.Paths.get(name))
+      }
+      found
+    }
+  }
+
+  /** The ingest convention: source 'src0' is the arriving batch, every
+    * other source is the corpus. */
+  private def src0(docs: DataFrame): DataFrame = docs.filter(col("source") === "src0")
+
+  /** The admission rule, stated once: admit iff `score` meets the corpus
+    * bar `thr` (a one-row relation); a NULL bar — empty corpus — admits
+    * everything. */
+  private def admit(scores: DataFrame, score: String, thr: DataFrame): DataFrame =
+    scores.crossJoin(broadcast(thr))
+      .select(col("doc_id"), col(score),
+        when(col("thr").isNull || col(score) >= col("thr"), 1).otherwise(0).as("admit"))
+
+  // --- events ----------------------------------------------------------------
 
   case class Ev(user_id: Long, event_id: Long, us: Long, cents: Long)
   /** Stream-side event carrying the watermark column: EventTimeTimeout
@@ -141,27 +276,19 @@ object EventStreams {
     * "sessionizer checkpoint restart"). */
   def sessionizeStreamDS(s: SparkSession, dir: String,
       glob: String = "events.parquet",
-      gapUs: Long = SessionGapUs): Dataset[SessionRow] = {
+      gapUs: Long = SessionGapUs): Dataset[SessionRow] =
+    sessionsOf(s, eventStream(s, dir, glob), gapUs)
+
+  /** The sessionizer's stream transform over watermarked events. */
+  private def sessionsOf(s: SparkSession, events: DataFrame,
+      gapUs: Long): Dataset[SessionRow] = {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState}
-    val rawSchema = s.read.option("pathGlobFilter", glob).parquet(dir).schema
-    // LONG ts = nanosAsLong read of TIMESTAMP(NANOS); timestamp ts =
-    // TIMESTAMP(MICROS) parquet (same type-driven rule as Tables.load).
-    val usCol =
-      if (rawSchema("ts").dataType == org.apache.spark.sql.types.LongType)
-        expr("ts div 1000")
-      else expr("unix_micros(cast(ts as timestamp))")
-    val typed = s.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
-      .withColumn("us", usCol)
-      .withColumn("ets", expr("timestamp_micros(us)"))
-      .withWatermark("ets", "1 hour")
-      .select(col("user_id"), col("event_id"), col("us"),
-        (dec(col("value"), 10, 2) * 100).cast("long").as("cents"), col("ets")).as[EvW]
     val gapMs = gapUs / 1000
-    val sessions = typed
+    events
+      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
+        (dec(col("value"), 10, 2) * 100).cast("long").as("cents"), col("ts").as("ets"))
+      .as[EvW]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user: Long, it: Iterator[EvW], state: GroupState[SessionRow]) =>
@@ -186,123 +313,36 @@ object EventStreams {
             closed.iterator
           }
       }
-    sessions
   }
 
   /** Streaming sessionizer → memory sink (one-shot spec path). */
   def startSessionizeStream(s: SparkSession, dir: String, name: String,
       gapUs: Long = SessionGapUs, glob: String = "events.parquet",
-      checkpoint: Option[String] = None): StreamingQuery = {
-    val sink = sessionizeStreamDS(s, dir, glob, gapUs).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-    checkpoint.foreach(cp => sink.option("checkpointLocation", cp))
-    sink.start()
-  }
+      checkpoint: Option[String] = None): StreamingQuery =
+    toMemory(sessionizeStreamDS(s, dir, glob, gapUs).toDF(), name, checkpoint = checkpoint)
 
-  /** One restartable AvailableNow pass of the sessionizer: resume state from
-    * `checkpoint`, ingest any files under `dir` matching `glob` that the
-    * checkpoint has not seen, append newly closed / timed-out sessions to the
-    * `outPath` parquet sink, and stop. This is the production shape for an
-    * event pipeline fed by periodic file drops: each scheduled run picks up
-    * the new files, the watermark advances, pending event-time timeouts fire,
-    * and state for completed sessions is dropped — across process restarts,
-    * because every piece of state lives in the checkpoint, not the JVM. */
+  /** Nightly sessionizer: newly closed / timed-out sessions of the drops
+    * under `dir` append to the `outPath` parquet sink. This is the
+    * production shape for an event pipeline fed by periodic file drops:
+    * each scheduled run picks up the new files, the watermark advances,
+    * pending event-time timeouts fire, and state for completed sessions is
+    * dropped — across process restarts, because the open sessions live in
+    * the checkpoint. */
   def runSessionizeStep(s: SparkSession, dir: String, checkpoint: String,
       outPath: String, glob: String = "*.parquet",
-      gapUs: Long = SessionGapUs): Unit = {
-    val q = sessionizeStreamDS(s, dir, glob, gapUs).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      gapUs: Long = SessionGapUs): Unit =
+    runNightly(s, dir, glob, checkpoint)(drops =>
+      sessionsOf(s, withEventTime(drops), gapUs).writeStream
+        .format("parquet").option("path", outPath))
 
-  /** Stream-stream interval join: purchases matched to same-user views in
-    * the preceding hour. Watermarks on both sides bound the join state the
-    * way a production stream-stream join must. */
-  def startStreamStreamJoin(s: SparkSession, dir: String, name: String): StreamingQuery = {
-    val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-    def src = s.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .transform(tsAsTimestamp)
-    val views = src.filter(col("event_type") === "view")
+  /** Purchases matched to same-user views in the preceding hour. Plans as
+    * an equi-join on user with the time range as a residual; on streams,
+    * the watermarks on both sides bound the join state the way a
+    * production stream-stream join must. */
+  private def intervalJoin(purchaseEvents: DataFrame, viewEvents: DataFrame): DataFrame = {
+    val views = viewEvents.filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("ts").as("view_ts"), col("event_id").as("view_id"))
-      .withWatermark("view_ts", "1 hour")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts").as("purchase_ts"), col("event_id").as("purchase_id"))
-      .withWatermark("purchase_ts", "1 hour")
-    purchases.join(views,
-        expr("v_user = user_id AND view_ts BETWEEN purchase_ts - INTERVAL 1 HOUR AND purchase_ts"))
-      .select(col("purchase_id"), col("view_id"), col("user_id"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Streaming exact dedup: watermarked dropDuplicates — state holds one
-    * entry per key inside the watermark horizon (bounded, unlike an
-    * unbounded batch distinct). */
-  def startDedupStream(s: SparkSession, dir: String, name: String): StreamingQuery = {
-    val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-    s.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .transform(tsAsTimestamp)
-      .withWatermark("ts", "1 hour")
-      .select(col("user_id"), col("event_type"), col("ts"))
-      .dropDuplicates("user_id", "event_type")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Streaming entry: file-stream over the events parquet, shared transform,
-    * memory sink. Returns the started query; caller does
-    * processAllAvailable() then reads table `name`. */
-  def startWindowAggStream(s: SparkSession, dir: String, name: String): StreamingQuery = {
-    val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-    // Watermarks require TIMESTAMP (with local tz); session tz is UTC so the
-    // wall-clock matches the batch path's TIMESTAMP_NTZ.
-    // File-stream sources want a directory; glob-filter to the events table.
-    val stream = s.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .transform(tsAsTimestamp)
-      .withWatermark("ts", "1 hour")
-    windowAgg(stream)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Batch analog of the stream-stream interval join (same predicate as
-    * startStreamStreamJoin): purchases matched to same-user views in the
-    * preceding hour. Plans as an equi-join on user with the time range as a
-    * residual — one shuffle on user_id, state bounded by user cardinality
-    * per window. */
-  def intervalJoinBatch(events: DataFrame): DataFrame = {
-    val views = events.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"), col("event_id").as("view_id"))
-    val purchases = events.filter(col("event_type") === "purchase")
+    val purchases = purchaseEvents.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("purchase_ts"), col("event_id").as("purchase_id"))
     purchases.join(views,
         col("v_user") === col("user_id") &&
@@ -310,6 +350,27 @@ object EventStreams {
           col("view_ts") <= col("purchase_ts"))
       .select(col("purchase_id"), col("view_id"), col("user_id"))
   }
+
+  /** Stream-stream interval join over two reads of the events stream. */
+  def startStreamStreamJoin(s: SparkSession, dir: String, name: String): StreamingQuery =
+    toMemory(intervalJoin(eventStream(s, dir), eventStream(s, dir)), name)
+
+  /** Batch analog of the stream-stream interval join — one shuffle on
+    * user_id, state bounded by user cardinality per window. */
+  def intervalJoinBatch(events: DataFrame): DataFrame = intervalJoin(events, events)
+
+  /** Streaming exact dedup: watermarked dropDuplicates — state holds one
+    * entry per key inside the watermark horizon (bounded, unlike an
+    * unbounded batch distinct). */
+  def startDedupStream(s: SparkSession, dir: String, name: String): StreamingQuery =
+    toMemory(eventStream(s, dir).select(col("user_id"), col("event_type"), col("ts"))
+      .dropDuplicates("user_id", "event_type"), name)
+
+  /** Streaming entry: watermarked events stream, shared transform, memory
+    * sink. Returns the started query; caller does processAllAvailable()
+    * then reads table `name`. */
+  def startWindowAggStream(s: SparkSession, dir: String, name: String): StreamingQuery =
+    toMemory(windowAgg(eventStream(s, dir)), name)
 
   /** Batch analog of the streaming exact dedup: one row per
     * (user_id, event_type) carrying the earliest timestamp — the
@@ -356,6 +417,13 @@ object EventStreams {
   /** Heavy hitters per window: top event types per tumbling hour. */
   val WindowTopK = 3
 
+  /** Hourly counts per event_type (works on batch or stream). */
+  private def hourlyTypeCounts(events: DataFrame): DataFrame =
+    events
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("w.start").as("win_start"), col("event_type"), col("n"))
+
   /** Per-window top-k (batch analog, gated): hourly counts per event_type
     * ranked through the custom TopKPerKey operator — bounded heaps per
     * window, the shuffle carries at most k rows per window per partition
@@ -364,11 +432,7 @@ object EventStreams {
     * to the streaming surface. */
   def windowTopKBatch(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val counts = events
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("win_start"), col("event_type"), col("n"))
-    graft.plans.TopKPerKey.topKPerKey(counts, Seq("win_start"),
+    graft.plans.TopKPerKey.topKPerKey(hourlyTypeCounts(events), Seq("win_start"),
         Seq(col("n").desc, col("event_type").asc), WindowTopK)
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("win_start")).orderBy(col("n").desc, col("event_type").asc)))
@@ -379,46 +443,19 @@ object EventStreams {
     * windows emit); the bounded rank applies over the sink table, the same
     * post-sink step a dashboard reader runs (StreamingSpec compares it to
     * the batch analog). */
-  def startWindowTopKStream(s: SparkSession, dir: String, name: String): StreamingQuery = {
-    val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-    s.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .transform(tsAsTimestamp)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("win_start"), col("event_type"), col("n"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+  def startWindowTopKStream(s: SparkSession, dir: String, name: String): StreamingQuery =
+    toMemory(hourlyTypeCounts(eventStream(s, dir)), name)
 
   /** Streaming variant: Spark's native HLL++ approx_count_distinct per
     * watermarked window — the engine-native estimator for the true stream
     * path (the KMV batch analog above is the oracle-replayable one). */
-  def startWindowDistinctStream(s: SparkSession, dir: String, name: String): StreamingQuery = {
-    val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-    s.readStream
-      .schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .transform(tsAsTimestamp)
-      .withWatermark("ts", "1 hour")
+  def startWindowDistinctStream(s: SparkSession, dir: String, name: String): StreamingQuery =
+    toMemory(eventStream(s, dir)
       .groupBy(window(col("ts"), "1 hour").as("w"))
       .agg(approx_count_distinct(col("user_id")).as("approx_users"))
-      .select(col("w.start").as("win_start"), col("approx_users"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      .select(col("w.start").as("win_start"), col("approx_users")), name)
+
+  // --- documents: dedup probes -----------------------------------------------
 
   /** First-claim banded-LSH NEAR-dup novelty over an ordered document
     * stream (arrival order = doc_id — the ingest contract the synthetic
@@ -436,7 +473,6 @@ object EventStreams {
     * rollup. Docs too short to shingle have no bands and are trivially
     * novel (left join keeps them). */
   def dedupLshNovelty(docs: DataFrame): DataFrame = {
-    import graft.operators.Dedup
     val sig = Dedup.lshIndexOf(docs)
     val owners = sig.groupBy("band", "h").agg(min(col("doc_id")).as("owner"))
     val perDoc = sig.join(owners, Seq("band", "h"))
@@ -463,27 +499,15 @@ object EventStreams {
     * table — the stream_topk post-sink pattern, spec-compared to the batch
     * analog (StreamingSpec). */
   def startDedupLshStream(s: SparkSession, dir: String, name: String,
-      glob: String = "documents.parquet", maxFilesPerTrigger: Int = 0): StreamingQuery = {
-    val rawSchema = s.read.option("pathGlobFilter", glob).parquet(dir).schema
-    var reader = s.readStream.schema(rawSchema).option("pathGlobFilter", glob)
-    if (maxFilesPerTrigger > 0)
-      reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    reader.parquet(dir)
+      glob: String = "documents.parquet", maxFilesPerTrigger: Int = 0): StreamingQuery =
+    toMemory(fileStream(s, dir, glob, maxFilesPerTrigger)
       .withColumn("ets", expr("timestamp_micros(doc_id * 1000000)"))
       .withWatermark("ets", "1 hour")
       .select(col("doc_id"), col("ets"),
         posexplode(ShingleExpressions.minhashSig(col("text"),
-          graft.operators.Dedup.MinhashPerms, graft.operators.Dedup.ShingleN))
-          .as(Seq("band", "h")))
+          Dedup.MinhashPerms, Dedup.ShingleN)).as(Seq("band", "h")))
       .dropDuplicatesWithinWatermark("band", "h")
-      .select(col("doc_id"), col("band"), col("h"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      .select(col("doc_id"), col("band"), col("h")), name)
 
   /** INCREMENTAL ingest probe vs the PERSISTED corpus index — the batch
     * analog of the nightly/streaming reality: the corpus's LSH signatures
@@ -495,25 +519,9 @@ object EventStreams {
     * deployment cost model is now real: |batch| signature passes + one
     * artifact scan, never a corpus recompute. */
   def incrementalVsIndex(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.incrementalLshMatch(
+    Dedup.incrementalLshMatch(
       Tables.load(s, dir, "documents").filter(col("source") === "src0"),
-      graft.operators.AnnModels.lshIndex(s, dir))
-
-  /** INCREMENTAL perceptual ingest probe vs the PERSISTED phash index —
-    * [[incrementalVsIndex]] on the multimodal column (the missing half of
-    * the nightly ingest story, VERDICT r11 #2): the corpus's pigeonhole
-    * index rows were decoded + hashed once at index-build time and persist
-    * as a parquet artifact (AnnModels.phashIndex); each ingest batch
-    * hashes only its OWN assets and equijoins the artifact under the
-    * shared salted-bucket policy with XOR-popcount verification.
-    * Identical result to `mm_phash_incremental` (the artifact replays
-    * phashIndexOf exactly — deterministic hashes, parquet-exact longs),
-    * but the deployment cost model is real: |batch| decodes + one
-    * artifact scan, never a corpus re-hash. */
-  def phashVsIndex(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Multimodal.phashIncrementalMatch(
-      Tables.load(s, dir, "documents").filter(col("source") === "src0"),
-      graft.operators.AnnModels.phashIndex(s, dir))
+      AnnModels.lshIndex(s, dir))
 
   /** True-stream form of the incremental probe: the ingest stream explodes
     * to banded signatures and joins the persisted index as a STREAM-STATIC
@@ -536,10 +544,8 @@ object EventStreams {
     * stream==batch parity holds on ANY corpus, not just sparse ones. */
   private def incrementalLshTransform(stream: DataFrame,
       index: DataFrame): DataFrame = {
-    import graft.operators.Dedup
     val (idxBounded, dense) = Dedup.saltedIndexSide(index)
-    val sigs = stream
-      .filter(col("source") === "src0")
+    val sigs = src0(stream)
       .select(col("doc_id"),
         posexplode(ShingleExpressions.minhashSig(col("text"),
           Dedup.MinhashPerms, Dedup.ShingleN))
@@ -553,198 +559,82 @@ object EventStreams {
 
   def startIncrementalLshStream(s: SparkSession, dir: String, name: String,
       maxFilesPerTrigger: Int = 0): StreamingQuery = {
-    val index = graft.operators.AnnModels.lshIndex(s, dir)
-    val rawSchema = s.read.option("pathGlobFilter", "documents.parquet").parquet(dir).schema
-    var reader = s.readStream.schema(rawSchema).option("pathGlobFilter", "documents.parquet")
-    if (maxFilesPerTrigger > 0)
-      reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    incrementalLshTransform(reader.parquet(dir), index)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val index = AnnModels.lshIndex(s, dir)
+    toMemory(incrementalLshTransform(
+      fileStream(s, dir, "documents.parquet", maxFilesPerTrigger), index), name)
   }
 
-  /** One restartable AvailableNow pass of the incremental ingest probe —
-    * the nightly production shape: resume from `checkpoint`, ingest any
-    * files under `dropDir` matching `glob` the checkpoint has not seen,
-    * probe them against `indexDir`'s persisted LSH index, and append only
-    * NEW (doc_id, corpus_id) match pairs to the parquet sink. A pair
-    * already claimed by an earlier run is never re-emitted even if its
-    * document is re-dropped — the dedup state lives in the checkpoint,
-    * not the JVM (the runSessionizeStep recipe applied to ingest dedup;
-    * spec drives two drops across two steps). */
+  /** Nightly incremental ingest probe: drops are probed against
+    * `indexDir`'s persisted LSH index, and only NEW (doc_id, corpus_id)
+    * match pairs append to the parquet sink. A pair already claimed by an
+    * earlier run is never re-emitted even if its document is re-dropped —
+    * the pair-dedup state lives in the checkpoint (spec drives two drops
+    * across two steps). */
   def runIncrementalLshStep(s: SparkSession, indexDir: String, dropDir: String,
-      checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit = {
-    if (!hasDrops(s, dropDir, glob)) return // no drops tonight — no-op, not a crash
-    val index = graft.operators.AnnModels.lshIndex(s, indexDir)
-    val rawSchema = s.read.option("pathGlobFilter", glob).parquet(dropDir).schema
-    val stream = s.readStream.schema(rawSchema).option("pathGlobFilter", glob)
-      .parquet(dropDir)
-    val q = incrementalLshTransform(stream, index)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit =
+    runNightly(s, dropDir, glob, checkpoint)(drops =>
+      incrementalLshTransform(drops, AnnModels.lshIndex(s, indexDir)).writeStream
+        .format("parquet").option("path", outPath))
+
+  /** INCREMENTAL perceptual ingest probe vs the PERSISTED phash index —
+    * [[incrementalVsIndex]] on the multimodal column (the missing half of
+    * the nightly ingest story, VERDICT r11 #2): the corpus's pigeonhole
+    * index rows were decoded + hashed once at index-build time and persist
+    * as a parquet artifact (AnnModels.phashIndex); each ingest batch
+    * hashes only its OWN assets and equijoins the artifact under the
+    * shared salted-bucket policy with XOR-popcount verification.
+    * Identical result to `mm_phash_incremental` (the artifact replays
+    * phashIndexOf exactly — deterministic hashes, parquet-exact longs),
+    * but the deployment cost model is real: |batch| decodes + one
+    * artifact scan, never a corpus re-hash. */
+  def phashVsIndex(s: SparkSession, dir: String): DataFrame =
+    phashScorer(s, dir)(src0(Tables.load(s, dir, "documents")))
+
+  /** The ONE phash probe path (batch analog and nightly step share it). */
+  private def phashScorer(s: SparkSession, dir: String): DataFrame => DataFrame = {
+    val index = AnnModels.phashIndex(s, dir)
+    batch => Multimodal.phashIncrementalMatch(batch, index)
   }
+
+  /** Nightly PERCEPTUAL ingest probe — the multimodal member of the
+    * nightly triad (admission gate → text dedup probe → phash probe →
+    * delta pack): drops' assets are hashed and probed against the
+    * corpus's PERSISTED phash index (built once per corpus state, never a
+    * per-night corpus re-hash); verdicts (doc_id, n_matches, is_novel)
+    * land in `batch=<id>` partitions. */
+  def runPhashStep(s: SparkSession, corpusDir: String, dropDir: String,
+      checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit =
+    runVerdictStep(s, dropDir, glob, checkpoint, outPath)(phashScorer(s, corpusDir))
+
+  // --- documents: admission gates --------------------------------------------
 
   /** CALIBRATED INGEST ADMISSION GATE — the quality-side twin of the
     * incremental LSH probe: the corpus trains the quality model ONCE
     * (bigram LM + the calibrated top-half logit8 threshold, persisted by
     * AnnModels.ingestGate), and every ingest batch / stream is scored
     * against those REGISTRY-SERVED artifacts as static join sides. A doc
-    * is admitted iff its logit8 meets the corpus's own bar (NULL bar —
-    * empty corpus — admits everything). This batch analog is the gated,
-    * oracle-replayed form; [[startIngestGateStream]] is the same
-    * computation as a streaming query. */
-  def ingestGateBatch(s: SparkSession, dir: String): DataFrame = {
-    val Seq(c3, c2, u, thr) = graft.operators.AnnModels.ingestGate(s, dir)
-    val batch = Tables.load(s, dir, "documents").filter(col("source") === "src0")
-    graft.operators.TextOps.ingestLogits(batch, c3, c2, u)
-      .crossJoin(broadcast(thr))
-      .select(col("doc_id"), col("logit8"),
-        when(col("thr").isNull || col("logit8") >= col("thr"), 1).otherwise(0).as("admit"))
+    * is admitted iff its logit8 meets the corpus's own bar. This batch
+    * analog is the gated, oracle-replayed form; [[startIngestGateStream]]
+    * is the same computation as a streaming query and
+    * [[runIngestGateStep]] the nightly step over the same scoring path. */
+  def ingestGateBatch(s: SparkSession, dir: String): DataFrame =
+    gateScorer(s, dir)(src0(Tables.load(s, dir, "documents")))
+
+  /** The ONE calibrated-gate scoring path (batch analog and nightly step
+    * share it): logit8 under the persisted LM, gated on the persisted bar. */
+  private def gateScorer(s: SparkSession, dir: String): DataFrame => DataFrame = {
+    val Seq(c3, c2, u, thr) = AnnModels.ingestGate(s, dir)
+    batch => admit(TextOps.ingestLogits(batch, c3, c2, u), "logit8", thr)
   }
 
-  /** LOGISTIC ADMISSION GATE — the trained-classifier form of the
-    * admission family (the production shape: CCNet/DataComp gate the
-    * crawl with a trained linear classifier, not a heuristic threshold):
-    * the corpus trains the LR model ONCE (AnnModels.lrGate — the
-    * qualityLr fit on the ingest convention, nll under the served corpus
-    * LM), and every ingest batch is scored by broadcasting the 13-long
-    * weight relation and running one feature pass — admit iff the exact
-    * fixed-point logit is non-negative (σ(z) >= 1/2). Unseen grams smooth
-    * open-vocabulary through perplexityScore's left joins; nothing about
-    * the corpus is re-read at admission time. This batch analog is the
-    * gated, oracle-replayed form; [[runIngestLrStep]] is the restartable
-    * nightly streaming form over the same scoring path. */
-  def ingestLrBatch(s: SparkSession, dir: String): DataFrame = {
-    val Seq(c3, c2, u, _) = graft.operators.AnnModels.ingestGate(s, dir)
-    val model = graft.operators.AnnModels.lrGate(s, dir)
-    lrVerdicts(Tables.load(s, dir, "documents").filter(col("source") === "src0"),
-      c3, c2, u, model)
-  }
-
-  /** The ONE LR admission scoring path (batch analog and nightly step
-    * share it): features of `batch` under the persisted LM, scored with
-    * the persisted (mu, w) — a bounded 13-long driver value, the
-    * broadcast-model discipline. */
-  private def lrVerdicts(batch: DataFrame, c3: DataFrame, c2: DataFrame,
-      u: DataFrame, model: DataFrame): DataFrame = {
-    val rows = model.collect().sortBy(_.getInt(0))
-    val mu = rows.drop(1).map(_.getLong(1))
-    val w = rows.map(_.getLong(2))
-    val feats = graft.operators.TextOps.qualityFeaturesOf(batch,
-      graft.operators.TextOps.perplexityScore(batch, c3, c2, u))
-    graft.operators.TextOps.qualityLrScoreWith(feats, mu, w)
-      .select(col("doc_id"), col("zlr10"), col("lr_keep").as("admit"))
-  }
-
-  /** One restartable AvailableNow pass of the LR admission gate — the
-    * [[runIngestDsirStep]] recipe applied to the trained classifier:
-    * resume from `checkpoint`, score unseen drops against `corpusDir`'s
-    * registry-served LM + LR model, land verdicts in idempotent
-    * `batch=<batchId>` partitions (dynamic partition overwrite — a
-    * replayed batch overwrites its own partition). Stateless by
-    * construction: scoring runs per micro-batch through foreachBatch on
-    * the SHARED batch path; the only durable state is the file-source
-    * checkpoint. Missing or drop-free `dropDir` is a no-op. */
-  def runIngestLrStep(s: SparkSession, corpusDir: String, dropDir: String,
-      checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit = {
-    if (!hasDrops(s, dropDir, glob)) return // no drops tonight — no-op, not a crash
-    val Seq(c3, c2, u, _) = graft.operators.AnnModels.ingestGate(s, corpusDir)
-    val model = graft.operators.AnnModels.lrGate(s, corpusDir)
-    val rawSchema = s.read.option("pathGlobFilter", glob).parquet(dropDir).schema
-    val stream = s.readStream.schema(rawSchema).option("pathGlobFilter", glob)
-      .parquet(dropDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        lrVerdicts(batch.filter(col("source") === "src0").toDF(), c3, c2, u, model)
-          .withColumn("batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch")
-          .parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** DSIR ADMISSION GATE — importance resampling as admission control,
-    * the data-selection twin of [[ingestGateBatch]]: the corpus (source
-    * <> 'src0') trains the hashed importance model ONCE (the full-domain
-    * log-ratio table + the corpus's own top-quartile bar, persisted by
-    * AnnModels.dsirGate), and every ingest batch is scored against the
-    * broadcast artifact — admit iff the batch document's per-token mean
-    * log importance meets the corpus's bar (NULL bar — empty corpus —
-    * admits everything). The batch-side cost is one scan + one
-    * token-bounded (doc, bucket) shuffle; nothing about the corpus is
-    * re-read at admission time. This batch analog is the gated,
-    * oracle-replayed form; [[runIngestDsirStep]] is the restartable
-    * nightly streaming form over the same scoring path. */
-  def ingestDsirBatch(s: SparkSession, dir: String): DataFrame = {
-    val Seq(lr, thr) = graft.operators.AnnModels.dsirGate(s, dir)
-    dsirVerdicts(
-      Tables.load(s, dir, "documents").filter(col("source") === "src0"), lr, thr)
-  }
-
-  /** The ONE DSIR admission scoring path (batch analog and nightly step
-    * share it — no drift): score `batch` under the persisted log-ratio
-    * table, gate on the persisted bar. */
-  private def dsirVerdicts(batch: DataFrame, lr: DataFrame,
-      thr: DataFrame): DataFrame =
-    graft.operators.TextOps.dsirScores(
-        graft.operators.TextOps.dsirOcc(batch), lr)
-      .crossJoin(broadcast(thr))
-      .select(col("doc_id"), col("logw6"),
-        when(col("thr").isNull || col("logw6") >= col("thr"), 1).otherwise(0).as("admit"))
-
-  /** One restartable AvailableNow pass of the DSIR admission gate — the
-    * [[runIngestGateStep]] recipe applied to importance selection:
-    * resume from `checkpoint`, score any files under `dropDir` the
-    * checkpoint has not seen against `corpusDir`'s registry-served
-    * importance model, and land each micro-batch's verdicts in a
-    * `batch=<batchId>` partition under dynamic partition overwrite (a
-    * replayed batch OVERWRITES its own partition — exactly-once end to
-    * end; the partition doubles as scoring provenance). Scoring runs per
-    * micro-batch through foreachBatch on the SHARED batch path
-    * ([[dsirVerdicts]]) — stateless by construction: the DSIR score
-    * needs two chained aggregations (per-bucket counts, then the
-    * per-document mean), which Structured Streaming's incremental
-    * planner cannot run in one query anyway; the only durable state is
-    * the file-source checkpoint. A missing or drop-free `dropDir` is a
-    * no-op, not a crash. */
-  def runIngestDsirStep(s: SparkSession, corpusDir: String, dropDir: String,
-      checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit = {
-    if (!hasDrops(s, dropDir, glob)) return // no drops tonight — no-op, not a crash
-    val Seq(lr, thr) = graft.operators.AnnModels.dsirGate(s, corpusDir)
-    val rawSchema = s.read.option("pathGlobFilter", glob).parquet(dropDir).schema
-    val stream = s.readStream.schema(rawSchema).option("pathGlobFilter", glob)
-      .parquet(dropDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        dsirVerdicts(batch.filter(col("source") === "src0").toDF(), lr, thr)
-          .withColumn("batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch")
-          .parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  /** Nightly admission gate: drops are scored against `corpusDir`'s
+    * registry-served model through [[gateScorer]] — the exact arithmetic
+    * of [[ingestGateBatch]] — and verdicts land in `batch=<id>`
+    * partitions. Admission is per-arrival, not per-identity; the dedup
+    * family owns identity. */
+  def runIngestGateStep(s: SparkSession, corpusDir: String, dropDir: String,
+      checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit =
+    runVerdictStep(s, dropDir, glob, checkpoint, outPath)(gateScorer(s, corpusDir))
 
   /** True-stream form of the admission gate: ONE streaming aggregation —
     * the per-row (non-LM) logit part rides the trigram explode
@@ -782,9 +672,9 @@ object EventStreams {
       (col("ntok") + col("v"))
     val nll = round(-log(lit(0.5) * p3 + lit(0.375) * p2 + lit(0.125) * p1), 6)
     val avg = floor(col("tot").cast("double") / col("nb") * 1e6 + 0.5) / 1e6
-    stream.filter(col("source") === "src0")
+    val logits = src0(stream)
       .select(col("doc_id"),
-        graft.operators.TextOps.logitBaseCol.as("base"),
+        TextOps.logitBaseCol.as("base"),
         explode(when(size(gs) > 0, gs)
           .otherwise(array(lit(null).cast("string")))).as("g3"))
       .withColumn("p", split(col("g3"), " "))
@@ -803,112 +693,97 @@ object EventStreams {
         count(col("g3")).as("nb"),
         sum(when(col("g3").isNotNull, nll.cast("decimal(18,6)"))).as("tot"))
       .select(col("doc_id"),
-        (col("base") + lit(graft.operators.TextOps.QmNll) *
+        (col("base") + lit(TextOps.QmNll) *
           coalesce(when(col("nb") > 0, floor(avg * 1e4 + 0.5).cast("long")), lit(0L)))
           .as("logit8"))
-      .crossJoin(broadcast(thr))
-      .select(col("doc_id"), col("logit8"),
-        when(col("thr").isNull || col("logit8") >= col("thr"), 1).otherwise(0).as("admit"))
+    admit(logits, "logit8", thr)
   }
 
-  /** One restartable AvailableNow pass of the admission gate — the
-    * nightly production shape (runIncrementalLshStep's recipe applied to
-    * quality admission): resume from `checkpoint`, score any files under
-    * `dropDir` the checkpoint has not seen against `corpusDir`'s
-    * registry-served model, and append each new batch's verdicts to the
-    * parquet sink. Scoring runs per micro-batch through foreachBatch with
-    * the BATCH scoring path (exact same arithmetic as [[ingestGateBatch]]
-    * — one implementation, no drift), so the step is STATELESS: the only
-    * durable state is the file-source checkpoint (which files were
-    * processed), never per-document aggregates — a checkpoint reused
-    * nightly for years stays file-list-sized. A re-dropped file is never
-    * re-scored; a re-dropped document in a NEW file scores again (each
-    * drop is its own admission decision — admission is per-arrival, not
-    * per-identity; the dedup family owns identity).
-    *
-    * Sink idempotency (ADVICE r10): foreachBatch is at-least-once — a
-    * crash between the sink write and the checkpoint commit replays the
-    * micro-batch on restart. Verdicts therefore land in a
-    * `batch=<batchId>` partition under dynamic partition overwrite: a
-    * replayed batch OVERWRITES its own partition instead of appending a
-    * second copy, making the sink exactly-once end to end. The partition
-    * column doubles as provenance (which nightly trigger scored a doc).
-    * A missing or drop-free `dropDir` is a no-op, not a crash. */
-  def runIngestGateStep(s: SparkSession, corpusDir: String, dropDir: String,
-      checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit = {
-    if (!hasDrops(s, dropDir, glob)) return // no drops tonight — no-op, not a crash
-    val Seq(c3, c2, u, thr) = graft.operators.AnnModels.ingestGate(s, corpusDir)
-    val rawSchema = s.read.option("pathGlobFilter", glob).parquet(dropDir).schema
-    val stream = s.readStream.schema(rawSchema).option("pathGlobFilter", glob)
-      .parquet(dropDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.TextOps
-          .ingestLogits(batch.filter(col("source") === "src0"), c3, c2, u)
-          .crossJoin(broadcast(thr))
-          .select(col("doc_id"), col("logit8"),
-            when(col("thr").isNull || col("logit8") >= col("thr"), 1).otherwise(0).as("admit"),
-            lit(batchId).as("batch"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch")
-          .parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  def startIngestGateStream(s: SparkSession, dir: String, name: String): StreamingQuery = {
+    val Seq(c3, c2, u, thr) = AnnModels.ingestGate(s, dir)
+    toMemory(ingestGateTransform(fileStream(s, dir, "documents.parquet"), c3, c2, u, thr),
+      name, mode = "update")
   }
 
-  /** One restartable AvailableNow pass of the PERCEPTUAL ingest probe —
-    * the multimodal member of the nightly triad (admission gate → text
-    * dedup probe → phash probe → delta pack): resume from `checkpoint`,
-    * take any drop files the checkpoint has not seen, hash their assets
-    * and probe them against the corpus's PERSISTED phash index
-    * (AnnModels.phashIndex — built once per corpus state, never a
-    * per-night corpus re-hash). Verdicts (doc_id, n_matches, is_novel)
-    * land in a `batch=<batchId>` partition under dynamic partition
-    * overwrite — the runIngestGateStep idempotency recipe, so a replayed
-    * micro-batch (the foreachBatch at-least-once window) overwrites its
-    * own partition instead of appending a second copy. A missing or
-    * drop-free `dropDir` is a no-op, not a crash. */
-  def runPhashStep(s: SparkSession, corpusDir: String, dropDir: String,
-      checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit = {
-    if (!hasDrops(s, dropDir, glob)) return // no drops tonight — no-op, not a crash
-    val index = graft.operators.AnnModels.phashIndex(s, corpusDir)
-    val rawSchema = s.read.option("pathGlobFilter", glob).parquet(dropDir).schema
-    val stream = s.readStream.schema(rawSchema).option("pathGlobFilter", glob)
-      .parquet(dropDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Multimodal
-          .phashIncrementalMatch(batch.filter(col("source") === "src0"), index)
-          .withColumn("batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch")
-          .parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  /** LOGISTIC ADMISSION GATE — the trained-classifier form of the
+    * admission family (the production shape: CCNet/DataComp gate the
+    * crawl with a trained linear classifier, not a heuristic threshold):
+    * the corpus trains the LR model ONCE (AnnModels.lrGate — the
+    * qualityLr fit on the ingest convention, nll under the served corpus
+    * LM), and every ingest batch is scored by broadcasting the 13-long
+    * weight relation and running one feature pass — admit iff the exact
+    * fixed-point logit is non-negative (σ(z) >= 1/2). Unseen grams smooth
+    * open-vocabulary through perplexityScore's left joins; nothing about
+    * the corpus is re-read at admission time. This batch analog is the
+    * gated, oracle-replayed form; [[runIngestLrStep]] is the restartable
+    * nightly streaming form over the same scoring path. */
+  def ingestLrBatch(s: SparkSession, dir: String): DataFrame =
+    lrScorer(s, dir)(src0(Tables.load(s, dir, "documents")))
+
+  /** The ONE LR admission scoring path (batch analog and nightly step
+    * share it): features of a batch under the persisted LM, scored with
+    * the persisted (mu, w) — a bounded 13-long driver value, the
+    * broadcast-model discipline. */
+  private def lrScorer(s: SparkSession, dir: String): DataFrame => DataFrame = {
+    val Seq(c3, c2, u, _) = AnnModels.ingestGate(s, dir)
+    val rows = AnnModels.lrGate(s, dir).collect().sortBy(_.getInt(0))
+    val mu = rows.drop(1).map(_.getLong(1))
+    val w = rows.map(_.getLong(2))
+    batch => TextOps.qualityLrScoreWith(
+        TextOps.qualityFeaturesOf(batch, TextOps.perplexityScore(batch, c3, c2, u)), mu, w)
+      .select(col("doc_id"), col("zlr10"), col("lr_keep").as("admit"))
   }
 
-  /** One restartable AvailableNow pass of the INCREMENTAL PACKER — the
-    * third nightly step, completing the ingest triad (admission gate →
-    * dedup probe → delta pack): resume from `checkpoint`, take any files
-    * under `dropDir` the checkpoint has not seen, and chunk their
-    * documents CONTINUING each source's token stream — the corpus's
-    * per-source token totals come from the registry
+  /** Nightly LR admission gate: drops are scored against `corpusDir`'s
+    * registry-served LM + LR model through [[lrScorer]]; verdicts land in
+    * `batch=<id>` partitions. */
+  def runIngestLrStep(s: SparkSession, corpusDir: String, dropDir: String,
+      checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit =
+    runVerdictStep(s, dropDir, glob, checkpoint, outPath)(lrScorer(s, corpusDir))
+
+  /** DSIR ADMISSION GATE — importance resampling as admission control,
+    * the data-selection twin of [[ingestGateBatch]]: the corpus (source
+    * <> 'src0') trains the hashed importance model ONCE (the full-domain
+    * log-ratio table + the corpus's own top-quartile bar, persisted by
+    * AnnModels.dsirGate), and every ingest batch is scored against the
+    * broadcast artifact — admit iff the batch document's per-token mean
+    * log importance meets the corpus's bar. The batch-side cost is one
+    * scan + one token-bounded (doc, bucket) shuffle; nothing about the
+    * corpus is re-read at admission time. This batch analog is the gated,
+    * oracle-replayed form; [[runIngestDsirStep]] is the restartable
+    * nightly streaming form over the same scoring path. */
+  def ingestDsirBatch(s: SparkSession, dir: String): DataFrame =
+    dsirScorer(s, dir)(src0(Tables.load(s, dir, "documents")))
+
+  /** The ONE DSIR admission scoring path (batch analog and nightly step
+    * share it — no drift): score a batch under the persisted log-ratio
+    * table, gate on the persisted bar. */
+  private def dsirScorer(s: SparkSession, dir: String): DataFrame => DataFrame = {
+    val Seq(lr, thr) = AnnModels.dsirGate(s, dir)
+    batch => admit(TextOps.dsirScores(TextOps.dsirOcc(batch), lr), "logw6", thr)
+  }
+
+  /** Nightly DSIR admission gate: drops are scored against `corpusDir`'s
+    * registry-served importance model through [[dsirScorer]]; verdicts
+    * land in `batch=<id>` partitions. The DSIR score needs two chained
+    * aggregations (per-bucket counts, then the per-document mean), which
+    * Structured Streaming's incremental planner cannot run in one query
+    * anyway — per-micro-batch batch scoring is the only form. */
+  def runIngestDsirStep(s: SparkSession, corpusDir: String, dropDir: String,
+      checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit =
+    runVerdictStep(s, dropDir, glob, checkpoint, outPath)(dsirScorer(s, corpusDir))
+
+  // --- documents: delta pack and sink compaction -----------------------------
+
+  /** Nightly INCREMENTAL PACKER — the third nightly step, completing the
+    * ingest triad (admission gate → dedup probe → delta pack): chunk the
+    * drops' documents CONTINUING each source's token stream — the
+    * corpus's per-source token totals come from the registry
     * (AnnModels.tokenTotals — trained once per corpus state, so the
     * nightly step never re-scans the corpus), and earlier drops'
     * contributions come from the manifest the step itself has already
-    * written (one tiny aggregation over prior batch partitions). Chunk
-    * ids therefore continue exactly where the corpus + all prior drops
-    * left off — the append-only concat-and-chunk model
+    * written. Chunk ids therefore continue exactly where the corpus + all
+    * prior drops left off — the append-only concat-and-chunk model
     * (Pipeline.packDelta's batch semantics, made restartable).
     *
     * Prior-drop totals are O(|sources|), not O(history) (ADVICE r11):
@@ -924,11 +799,9 @@ object EventStreams {
     * A store written before the sidecar existed falls back to the full
     * manifest aggregation once, then converges.
     *
-    * Sink idempotency: the runIngestGateStep recipe — each micro-batch's
-    * manifest rows land in a `batch=<batchId>` partition under dynamic
-    * partition overwrite, and both the prior-totals sidecar pick and the
-    * fallback aggregation read only batch < batchId, so a replayed
-    * micro-batch (the foreachBatch at-least-once window) neither
+    * Sink idempotency: manifest rows land through [[writeBatchPartition]],
+    * and both the prior-totals sidecar pick and the fallback aggregation
+    * read only batch < batchId, so a replayed micro-batch neither
     * double-writes nor double-counts its own crashed attempt — a crash
     * before the sidecar write replays against the previous generation; a
     * crash after it replays with its own generation excluded by the
@@ -938,38 +811,27 @@ object EventStreams {
     * by (source, chunk_id), the grouping the manifest is keyed on
     * anyway. */
   def runPackDeltaStep(s: SparkSession, corpusDir: String, dropDir: String,
-      checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit = {
-    if (!hasDrops(s, dropDir, glob)) return // no drops tonight — no-op, not a crash
-    val corpusBase = graft.operators.AnnModels.tokenTotals(s, corpusDir)
-    val rawSchema = s.read.option("pathGlobFilter", glob).parquet(dropDir).schema
-    val stream = s.readStream.schema(rawSchema).option("pathGlobFilter", glob)
-      .parquet(dropDir)
-    val outP = new org.apache.hadoop.fs.Path(outPath)
-    val fs = outP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val totalsPath = outPath + ".totals"
-    val totP = new org.apache.hadoop.fs.Path(totalsPath)
-    def batchDirs(p: org.apache.hadoop.fs.Path): Seq[Long] =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.collect {
-        case st if st.isDirectory && st.getPath.getName.startsWith("batch=") =>
-          st.getPath.getName.stripPrefix("batch=").toLong
-      }
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      checkpoint: String, outPath: String, glob: String = "*.parquet"): Unit =
+    runNightly(s, dropDir, glob, checkpoint) { drops =>
+      val corpusBase = AnnModels.tokenTotals(s, corpusDir)
+      val outP = new Path(outPath)
+      val fs = outP.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val totalsPath = outPath + ".totals"
+      val totP = new Path(totalsPath)
+      drops.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val delta = batch.select(col("source"), col("doc_id"),
-          graft.operators.Pipeline.wsTokenCount.as("n_tok"))
+          Pipeline.wsTokenCount.as("n_tok"))
         // prior totals: the newest CUMULATIVE sidecar generation with
         // batch < batchId (excluding own replayed generation) — an
         // O(|sources|) read. Fallback for pre-sidecar stores only: one
         // full aggregation over prior manifest partitions (probing for
         // batch= dirs keeps a zero-row first night — _SUCCESS but no
         // partitions — from wedging the read).
-        val priorGens = batchDirs(totP).filter(_ < batchId)
-        val hasPriorManifest = batchDirs(outP).exists(_ < batchId)
+        val priorGens = batchIds(fs, totP).filter(_ < batchId)
         val prior =
           if (priorGens.nonEmpty)
             s.read.parquet(s"$totalsPath/batch=${priorGens.max}")
-          else if (hasPriorManifest)
+          else if (batchIds(fs, outP).exists(_ < batchId))
             s.read.parquet(outPath).filter(col("batch") < batchId)
               .groupBy("source").agg(sum(col("n_tokens")).as("prior_toks"))
           else
@@ -978,12 +840,7 @@ object EventStreams {
           .select(col("source"),
             (coalesce(col("base_off"), lit(0L)) + coalesce(col("prior_toks"), lit(0L)))
               .as("base_off"))
-        graft.operators.Pipeline.packOf(delta, baseOff = Some(base))
-          .withColumn("batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch")
-          .parquet(outPath)
+        writeBatchPartition(Pipeline.packOf(delta, baseOff = Some(base)), batchId, outPath)
         // fold this batch into the cumulative sidecar (written AFTER the
         // manifest, so a crash between the two replays from the previous
         // generation and rewrites both identically), then GC generations
@@ -995,16 +852,9 @@ object EventStreams {
               .as("prior_toks"))
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$totalsPath/batch=$batchId")
-        if (priorGens.nonEmpty)
-          priorGens.filter(_ < priorGens.max).foreach(b =>
-            fs.delete(new org.apache.hadoop.fs.Path(totP, s"batch=$b"), true))
-        ()
+        priorGens.dropRight(1).foreach(b => fs.delete(new Path(totP, s"batch=$b"), true))
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** How many of the NEWEST `batch=` partitions a compaction pass leaves
     * untouched: the two-generation registry discipline — the newest night
@@ -1038,14 +888,14 @@ object EventStreams {
     * partitions) I/O, no corpus-side reads. */
   def runCompactionStep(s: SparkSession, outPath: String,
       keepNights: Int = CompactKeepNights): Unit = {
-    val outP = new org.apache.hadoop.fs.Path(outPath)
+    val outP = new Path(outPath)
     val fs = outP.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(outP)) return
-    val staging = new org.apache.hadoop.fs.Path(outPath + ".compact")
-    val marker = new org.apache.hadoop.fs.Path(staging, "_COMPACT_COVERS")
+    val staging = new Path(outPath + ".compact")
+    val marker = new Path(staging, "_COMPACT_COVERS")
     def swap(covered: Seq[Long]): Unit = {
       val target = covered.max
-      val stagedPart = new org.apache.hadoop.fs.Path(staging, s"batch=$target")
+      val stagedPart = new Path(staging, s"batch=$target")
       // Once the deletes below run, the staged partition is the ONLY copy
       // of the covered rows — so the live partitions are only ever touched
       // while it is still present. If it is absent, a previous run already
@@ -1054,14 +904,14 @@ object EventStreams {
       // deletes here would destroy the consolidated partition itself.
       if (fs.exists(stagedPart)) {
         covered.foreach { b =>
-          val p = new org.apache.hadoop.fs.Path(outP, s"batch=$b")
+          val p = new Path(outP, s"batch=$b")
           if (fs.exists(p) && !fs.delete(p, true))
             throw new java.io.IOException(s"compaction: cannot delete $p")
         }
         // rename failure reports as `false` on HDFS/local — abort BEFORE
         // the staging delete so the staged rows (now the only copy)
         // survive for the next resume
-        if (!fs.rename(stagedPart, new org.apache.hadoop.fs.Path(outP, s"batch=$target")))
+        if (!fs.rename(stagedPart, new Path(outP, s"batch=$target")))
           throw new java.io.IOException(
             s"compaction: rename $stagedPart failed; staged rows preserved for resume")
       }
@@ -1075,68 +925,26 @@ object EventStreams {
       swap(txt.trim.split(",").map(_.toLong).toSeq)
       return
     }
-    val bs = fs.listStatus(outP).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("batch=") =>
-        st.getPath.getName.stripPrefix("batch=").toLong
-    }.sorted
-    val covered = bs.dropRight(keepNights)
+    val covered = batchIds(fs, outP).dropRight(keepNights)
     if (covered.size < 2) return // nothing to consolidate tonight
-    val target = covered.max
     fs.delete(staging, true)
     // explicit partition-dir reads: the batch column lives in the dir
     // name, so the staged files carry exactly the data columns and the
     // renamed dir re-keys every row as batch=<target>
     s.read.parquet(covered.map(b => s"$outPath/batch=$b"): _*)
       .write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(staging, s"batch=$target").toString)
+      .parquet(new Path(staging, s"batch=${covered.max}").toString)
     // temp + rename: the marker is the commit point of the whole swap, so
     // it must appear atomically — a torn in-place write could name a
     // PARTIAL covered set, and resuming against it deletes partitions
     // whose rows live only in the staged union (the _GRAFT_COMPLETE
     // discipline from AnnModels.commitIfFresh, applied here)
-    val tmp = new org.apache.hadoop.fs.Path(staging, "_COMPACT_COVERS.tmp")
+    val tmp = new Path(staging, "_COMPACT_COVERS.tmp")
     val out = fs.create(tmp, true)
     try out.write(covered.mkString(",").getBytes("UTF-8")) finally out.close()
     if (!fs.rename(tmp, marker))
       throw new java.io.IOException(s"compaction: marker rename failed at $marker")
     swap(covered)
-  }
-
-  /** True iff `dropDir` exists and holds at least one file matching
-    * `glob` — the nightly steps' pre-flight (a night with no drops must
-    * no-op, not throw from the schema probe; ADVICE r10). RECURSIVE, and
-    * matched on the file NAME, mirroring exactly what the streaming file
-    * source's `pathGlobFilter` would discover — a partitioned drop
-    * layout (files under date=.../ subdirectories) counts as drops, not
-    * as an empty night. One listing, no data scan. */
-  private def hasDrops(s: SparkSession, dropDir: String, glob: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dropDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.exists(p) && {
-      val matcher = java.nio.file.FileSystems.getDefault
-        .getPathMatcher(s"glob:$glob")
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val name = it.next().getPath.getName
-        found = matcher.matches(java.nio.file.Paths.get(name))
-      }
-      found
-    }
-  }
-
-  def startIngestGateStream(s: SparkSession, dir: String, name: String): StreamingQuery = {
-    val Seq(c3, c2, u, thr) = graft.operators.AnnModels.ingestGate(s, dir)
-    val rawSchema = s.read.option("pathGlobFilter", "documents.parquet").parquet(dir).schema
-    val stream = s.readStream.schema(rawSchema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    ingestGateTransform(stream, c3, c2, u, thr)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
   }
 
   // --- wiring (batch analogs, oracle-checked) ------------------------------

@@ -123,6 +123,15 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.priorRoundArtifact(dir.resolve("missing").toString).isEmpty)
   }
 
+  test("Scale times each gated query it names exactly once") {
+    val names = Scale.opNames
+    assert(names.distinct == names,
+      s"timed twice: ${names.diff(names.distinct).distinct.mkString(", ")}")
+    val ungated = names.filterNot(SparkEntry.queries.contains)
+    assert(ungated.isEmpty, s"not gated queries: ${ungated.mkString(", ")}")
+    assert(names.size == 50)
+  }
+
   test("existingLoadAvg parses the stamped field and tolerates garbage") {
     val dir = java.nio.file.Files.createTempDirectory("benchspec")
     val p = dir.resolve("a.json")

@@ -514,16 +514,6 @@ class CurationOpsSpec extends SparkSpec {
       .select(avg(when(col("lr_keep") === col("cls"), 1.0).otherwise(0.0)))
       .collect().head.getDouble(0)
     assert(realAcc >= 0.95, s"seed agreement regressed: $realAcc")
-    // the r14 single-action plan form is bit-identical to the serving
-    // driver-loop fit the oracle unrolls — on BOTH the synthetic matrix
-    // (which drives negative gradients through the truncating DIV) and
-    // the shipped corpus
-    val (pmu, pw) = TextOps.qualityLrFitPlan(feats, labels)
-    assert(mu.sameElements(pmu) && w.sameElements(pw),
-      s"plan fit (${pmu.toSeq}, ${pw.toSeq}) != loop fit (${mu.toSeq}, ${w.toSeq})")
-    val (rpmu, rpw) = TextOps.qualityLrFitPlan(realFeats, realLabels)
-    assert(rmu.sameElements(rpmu) && rw.sameElements(rpw),
-      s"shipped-corpus plan fit (${rpmu.toSeq}, ${rpw.toSeq}) != loop fit (${rmu.toSeq}, ${rw.toSeq})")
   }
 
   test("source-level gate: junk and mirror-heavy sources drop whole; good sources keep gopher-passing docs") {

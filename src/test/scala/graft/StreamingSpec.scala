@@ -634,15 +634,24 @@ class StreamingSpec extends SparkSpec {
       EventStreams.runIncrementalLshStep(spark, sf, s"$base/absent", s"$base/cp2", s"$base/out2")
       EventStreams.runPackDeltaStep(spark, sf, s"$base/absent", s"$base/cp4", s"$base/out4")
       EventStreams.runIngestDsirStep(spark, sf, s"$base/absent", s"$base/cp5", s"$base/out5")
+      EventStreams.runSessionizeStep(spark, s"$base/absent", s"$base/cp6", s"$base/out6")
+      EventStreams.runIngestLrStep(spark, sf, s"$base/absent", s"$base/cp7", s"$base/out7")
+      EventStreams.runPhashStep(spark, sf, s"$base/absent", s"$base/cp8", s"$base/out8")
       // existing but glob-empty dropDir (only a non-matching file)
       val empty = s"$base/empty"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(empty))
       java.nio.file.Files.write(java.nio.file.Paths.get(empty, "README.txt"),
         "not a drop".getBytes)
       EventStreams.runIngestGateStep(spark, sf, empty, s"$base/cp3", s"$base/out3")
+      EventStreams.runSessionizeStep(spark, empty, s"$base/cp9", s"$base/out9")
+      EventStreams.runIngestLrStep(spark, sf, empty, s"$base/cp10", s"$base/out10")
+      EventStreams.runPhashStep(spark, sf, empty, s"$base/cp11", s"$base/out11")
       assert(!new java.io.File(s"$base/out1").exists() &&
         !new java.io.File(s"$base/out3").exists(),
         "a no-drop night must leave no sink output")
+      assert(Seq(6, 7, 8, 9, 10, 11).forall(i =>
+        !new java.io.File(s"$base/out$i").exists() && !new java.io.File(s"$base/cp$i").exists()),
+        "a no-drop night must start no query and leave no sink output")
     }
   }
 
