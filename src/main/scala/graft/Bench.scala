@@ -146,6 +146,39 @@ object Bench {
       s""""queries_median":$med,"contended":false,""" +
       s""""live_run":"contended (load $liveLoad), demoted to $demotedTo"}"""
 
+  /** Wall seconds of `body`, or None when it throws: a failed query has no
+    * timing, so it can never read as the fastest one. */
+  private[graft] def timed(body: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { body; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case _: Throwable => None }
+  }
+
+  /** One timed pass: per query (cold, best-of-2 warm) seconds, the
+    * median-of-3 warm seconds of the heavy tail, and the names that threw. */
+  private[graft] case class Pass(results: Seq[(String, (Double, Double))],
+      medians: Seq[(String, Double)], failed: Seq[String])
+
+  /** Time `queries` in the order given: a cold sample and two warm ones
+    * each, then a third warm sample for the `heavyN` slowest by warm time.
+    * A query that throws in any sample is listed in `failed` and appears
+    * in no timing, so no total counts it. */
+  private[graft] def timePass(queries: Seq[(String, () => Unit)], heavyN: Int): Pass = {
+    val samples = queries.map { case (name, run) =>
+      (name, run, Iterator.fill(3)(timed(run())).takeWhile(_.isDefined).flatten.toSeq)
+    }
+    val ok = samples.collect { case (name, run, Seq(c, w1, w2)) => (name, run, c, w1, w2) }
+    val heavy = ok.sortBy(t => -math.min(t._4, t._5)).take(heavyN).map {
+      case (name, run, _, w1, w2) => name -> timed(run()).map(w3 => Seq(w1, w2, w3).sorted.apply(1))
+    }
+    val failed = (samples.collect { case (name, _, ts) if ts.size < 3 => name } ++
+      heavy.collect { case (name, None) => name }).toSet
+    Pass(
+      ok.collect { case (name, _, c, w1, w2) if !failed(name) => name -> ((c, math.min(w1, w2))) },
+      heavy.collect { case (name, Some(m)) => name -> m },
+      queries.map(_._1).filter(failed))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -169,29 +202,21 @@ object Bench {
     // Cold = first timed pass at the target SF (includes per-query codegen);
     // warm = best-of-2 after it (steady-state throughput, GC/scheduler noise
     // minimized). Both are reported so rounds are comparable either way;
-    // headline "value" is the warm total.
-    def timed(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
-    }
+    // headline "value" is the warm total. Each sample times `.count()`.
+    def run(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)(): Unit =
+      fn(spark, sfDir).count()
     // Sorted order: map-hash iteration reshuffles when queries are added,
     // which made round-over-round artifacts hard to diff (and moved the
-    // first-query JIT cost to a random victim).
-    val base = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      (name, fn, timed(fn), timed(fn), timed(fn))
-    }
-    // Cross-session totals vary ±8% and single warm samples flip sign
-    // between runs — so the HEAVY tail (where per-query deltas matter)
-    // gets a THIRD warm sample and reports the median of three: one
-    // outlier sample can no longer fake a regression or an improvement
-    // on exactly the queries rounds are compared by.
+    // first-query JIT cost to a random victim). Totals vary ±8% from run
+    // to run and single warm samples flip sign between runs — so the HEAVY
+    // tail (where per-query deltas matter) gets a THIRD warm sample and
+    // reports the median of three: one outlier sample can no longer fake a
+    // regression or an improvement on exactly the queries rounds are
+    // compared by.
     val MedianQueries = 15
-    val heavy = base.sortBy(t => -math.min(t._4, t._5)).take(MedianQueries)
-    val medians: Seq[(String, Double)] = heavy.map { case (name, fn, _, w1, w2) =>
-      name -> Seq(w1, w2, timed(fn)).sorted.apply(1)
-    }
-    val results = base.map { case (name, _, c, w1, w2) => name -> ((c, math.min(w1, w2))) }
+    val Pass(results, medians, failed) = timePass(
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) => name -> run(fn) _ },
+      MedianQueries)
     // CONTROL BLOCK (r13, VERDICT r12 #8): a fixed set of queries whose
     // CODE no round touches, re-measured best-of-3 at the END of the run
     // (fully warm) and stamped into the artifact — so round-over-round
@@ -205,8 +230,9 @@ object Bench {
     // one round's median to 5 shared controls instead of corrupting it.
     val ControlQueries = Seq("mr_wordcount", "mr_sort", "q_local_supplier",
       "q_join_salted", "q_waiting_suppliers", "q_market_share")
-    val controls = ControlQueries.flatMap(n => SparkEntry.queries.get(n).map { fn =>
-      n -> Seq(timed(fn), timed(fn), timed(fn)).min
+    val controls = ControlQueries.flatMap(n => SparkEntry.queries.get(n).flatMap { fn =>
+      val ts = Seq.fill(3)(timed(run(fn)()))
+      if (ts.forall(_.isDefined)) Some(n -> ts.flatten.min) else None
     })
     def r3(d: Double): Double = math.round(d * 1000) / 1000.0
     val ctlObj = controls
@@ -214,6 +240,7 @@ object Bench {
     def obj(sel: ((Double, Double)) => Double): String = results
       .map { case (k, v) => s"\"" + k + "\":" + r3(sel(v)) }.mkString("{", ",", "}")
     val medObj = medians.map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+    val failedArr = failed.map(k => s"\"" + k + "\"").mkString("[", ",", "]")
     val coldTotal = results.map(_._2._1).sum
     val warmTotal = results.map(_._2._2).sum
     val medTotal = medians.map(_._2).sum
@@ -244,7 +271,7 @@ object Bench {
     // artifact goes out first on stdout AND to a file, and the LAST line is
     // a compact, complete JSON — headline totals plus the heavy-tail
     // medians — guaranteed to fit the archived tail and parse.
-    val full = s"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"load_avg_start":${r3(loadAvg)},"cold_total":${r3(coldTotal)},"queries_cold":${obj(_._1)},"queries":${obj(_._2)},"queries_median":$medObj,"median_heavy_total":${r3(medTotal)},"controls":$ctlObj,"controls_protocol":"best-of-3, end of run",$ctlNormFields"value":${r3(warmTotal)}}"""
+    val full = s"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"load_avg_start":${r3(loadAvg)},"cold_total":${r3(coldTotal)},"queries_cold":${obj(_._1)},"queries":${obj(_._2)},"queries_median":$medObj,"median_heavy_total":${r3(medTotal)},"controls":$ctlObj,"controls_protocol":"best-of-3, end of run",$ctlNormFields"failed":$failedArr,"value":${r3(warmTotal)}}"""
     println(full)
     // Self-defense: a contended run (load > 2.0 at start) must not clobber a
     // clean artifact — rounds 6 and 8 both lost their idle-box numbers to a
@@ -270,7 +297,7 @@ object Bench {
     // demoted, echo the kept clean artifact's numbers (same query set
     // required) so the round artifact and the clean file can't disagree;
     // otherwise the live numbers, with contended affirmatively stamped.
-    val liveLine = s"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"value":${r3(warmTotal)},"cold_total":${r3(coldTotal)},"median_heavy_total":${r3(medTotal)},"load_avg_start":${r3(loadAvg)},"n_queries":${results.size},"full_artifact":"$fullPath","controls":$ctlObj,"queries_median":$medObj,$ctlNormFields"contended":${loadAvg > ContendedLoad}}"""
+    val liveLine = s"""{"metric":"total","unit":"sec","sf":"$sfDir","cpus":$cpus,"value":${r3(warmTotal)},"cold_total":${r3(coldTotal)},"median_heavy_total":${r3(medTotal)},"load_avg_start":${r3(loadAvg)},"n_queries":${results.size},"full_artifact":"$fullPath","controls":$ctlObj,"queries_median":$medObj,$ctlNormFields"failed":$failedArr,"contended":${loadAvg > ContendedLoad}}"""
     // A cpus-demoted run reports its OWN numbers (the driver's low-core
     // scaling pass reads them from stdout); only a contention demote
     // re-emits the kept clean artifact.

@@ -169,16 +169,6 @@ object ShingleBytes {
     starts.toArray
   }
 
-  def unsignedLess(a: Array[Byte], b: Array[Byte]): Boolean = {
-    var i = 0
-    while (i < a.length && i < b.length) {
-      val x = a(i) & 0xff; val y = b(i) & 0xff
-      if (x != y) return x < y
-      i += 1
-    }
-    a.length < b.length
-  }
-
   /** Big-endian 64-bit read (matches parsing the hex string left to right). */
   def longBE(bytes: Array[Byte], off: Int): Long = {
     var v = 0L

@@ -24,10 +24,6 @@ package object functions {
   /** Lowercase hex md5 of a string column; mirror: md5(c). */
   def md5Hex(c: Column): Column = md5(c.cast("binary"))
 
-  /** Seeded portable hash: md5 of "<seed>|<value>". */
-  def seededHash(seed: Int, c: Column): Column =
-    md5(concat(lit(s"$seed|"), c).cast("binary"))
-
   /** Oracle-SQL fragment parsing `digits` hex chars of SQL expression `m`
     * (1-based index `from`) as an integer — the ONE hex parser every oracle
     * builder shares (Dedup 64-bit halves, Extras 52-bit sketch hashes,

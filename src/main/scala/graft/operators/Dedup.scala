@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions._
@@ -89,10 +89,9 @@ object Dedup {
     * salt arithmetic — so one degenerate bucket can never pin a 100 TB run
     * to a single quadratic task, and its near-dup pairs still surface. */
   def minhashLsh(s: SparkSession, dir: String): DataFrame =
-    // r16: the default-cap candidate set is a registry artifact
-    // (AnnModels.candPairs — the hamming pair-store discipline): six
-    // consumers re-ran the signature + census + salt + explode chain per
-    // invocation. Non-default caps (the salting specs) build inline.
+    // r16: the candidate set is a registry artifact (AnnModels.candPairs
+    // — the hamming pair-store discipline): its six consumers share one
+    // signature + census + salt + explode chain per corpus state.
     AnnModels.candPairs(s, dir)
 
   /** 64-bit SimHash per document (pure per-row expression, no shuffle).
@@ -112,7 +111,7 @@ object Dedup {
     *
     * Boilerplate-heavy corpora still concentrate organic near-dup clusters
     * into single buckets, so oversized buckets are SALTED into
-    * ceil(n/maxBucket) md5-hash groups — pairs expand only
+    * ceil(n/MaxBucket) md5-hash groups — pairs expand only
     * within a group (bounded quadratic work, cross-salt pairs forgone)
     * rather than dropping the bucket and silently losing exactly the dense
     * regions dedup exists for.
@@ -126,20 +125,15 @@ object Dedup {
     * salt is even computed. The census pass recomputes the per-doc simhash
     * (embarrassingly parallel CPU); that trade is strictly better at scale
     * than a windowed buffer of the densest buckets. */
-  def simhashPairs(s: SparkSession, dir: String,
-      maxBucket: Int = MaxBucket): DataFrame =
-    // Default cap → the verified pair relation is itself a registry
-    // artifact (r15, VERDICT r14 #4's endpoint): the per-invocation cost
-    // of the gated query drops to one artifact read — the
-    // minhashVerified serving discipline applied to the hamming family.
-    // Non-default caps (the salting specs) build inline.
-    if (maxBucket != MaxBucket) simhashPairsInline(s, dir, maxBucket)
-    else AnnModels.simhashPairs(s, dir)
+  def simhashPairs(s: SparkSession, dir: String): DataFrame =
+    // the verified pair relation is itself a registry artifact (r15,
+    // VERDICT r14 #4's endpoint): the per-invocation cost of the gated
+    // query is one artifact read — the minhashVerified serving discipline
+    // applied to the hamming family.
+    AnnModels.simhashPairs(s, dir)
 
-  private[graft] def simhashPairsInline(s: SparkSession, dir: String,
-      maxBucket: Int = MaxBucket): DataFrame =
-    hammingPairs(simhashed(s, dir), maxBucket,
-      servedDegen = Some(degenOf(AnnModels.simhashDegen(s, dir))))
+  private[graft] def simhashPairsInline(s: SparkSession, dir: String): DataFrame =
+    hammingPairs(simhashed(s, dir), degenOf(AnnModels.simhashDegen(s, dir)))
 
   /** The (doc_id, h) simhash relation the hamming engine pairs. */
   private[graft] def simhashed(s: SparkSession, dir: String): DataFrame =
@@ -150,11 +144,6 @@ object Dedup {
   private[graft] def degenOf(census: DataFrame): Seq[(Int, Long)] =
     census.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
 
-  /** Hamming-<= `MaxHamming` pairs over ANY (doc_id, h: 64-bit) relation —
-    * the engine behind `simhashPairs`, reused verbatim by the multimodal
-    * perceptual-hash pairing (Multimodal.phashPairs): 3-block pigeonhole
-    * candidates under the shared salted-census policy, XOR-popcount verify
-    * on candidates only. */
   /** A block value is DEGENERATE when its bucket holds more than this
     * share of the corpus (bn · DegenShare > n): a saturated value (the
     * all-zero upper fingerprint windows of short audio assets) carries no
@@ -168,10 +157,16 @@ object Dedup {
     * untouched by construction. */
   val DegenShare = 4L
 
-  private[operators] def hammingPairs(hashed: DataFrame,
-      maxBucket: Int = MaxBucket, maskDegenerate: Boolean = true,
-      servedDegen: Option[Seq[(Int, Long)]] = None): DataFrame =
-    hammingCandidates(hashed, maxBucket, maskDegenerate, servedDegen)
+  /** Hamming-<= `MaxHamming` pairs over ANY (doc_id, h: 64-bit) relation —
+    * the engine behind `simhashPairs`, reused verbatim by the multimodal
+    * perceptual-hash pairing (Multimodal.phashPairs): 3-block pigeonhole
+    * candidates under the shared salted-census policy, XOR-popcount verify
+    * on candidates only. `degen` is the relation's degenerate-block census
+    * ([[degenOf]] of [[degenCensusOf]], registry-served on the gated
+    * paths); an empty census masks nothing. */
+  private[graft] def hammingPairs(hashed: DataFrame, degen: Seq[(Int, Long)],
+      maxBucket: Int = MaxBucket): DataFrame =
+    hammingCandidates(hashed, degen, maxBucket)
       .select(col("doc_a"), col("doc_b"),
         expr("CAST(bit_count(ha ^ hb) AS INT)").as("hamming"))
       .filter(col("hamming") <= MaxHamming)
@@ -179,9 +174,8 @@ object Dedup {
   /** [[hammingPairs]]' candidate relation BEFORE the XOR-popcount verify
     * — (doc_a, ha, doc_b, hb), distinct — exposed so the mask spec and
     * the scale profiler can measure candidate volume directly. */
-  private[graft] def hammingCandidates(hashed: DataFrame,
-      maxBucket: Int = MaxBucket, maskDegenerate: Boolean = true,
-      servedDegen: Option[Seq[(Int, Long)]] = None): DataFrame = {
+  private[graft] def hammingCandidates(hashed: DataFrame, degen: Seq[(Int, Long)],
+      maxBucket: Int = MaxBucket): DataFrame = {
     // the ONE pigeonhole split (hammingBlocked) — the block constants
     // live in exactly one Scala site plus the SQL mirror.
     def blockedOf = hammingBlocked(hashed)
@@ -207,16 +201,10 @@ object Dedup {
     // generated via clean buckets (spec).
     //
     // r15 (VERDICT r14 #4): the census is a per-CORPUS-STATE value, not a
-    // per-invocation one — the gated corpus paths pass it in
+    // per-invocation one — every gated corpus path passes it in
     // REGISTRY-SERVED (AnnModels.simhashDegen etc.: ≤ 9 rows, trained once,
     // fingerprint-fresh), so the hot path pays one tiny artifact read
-    // instead of a checkpoint + census aggregate per query; arbitrary
-    // relations (spec corpora, ingest probes) census inline.
-    val degen: Seq[(Int, Long)] =
-      if (!maskDegenerate) Seq.empty
-      else servedDegen.getOrElse(
-        degenCensusOf(hashed).collect()
-          .map(r => (r.getInt(0), r.getLong(1))).toSeq)
+    // instead of a checkpoint + census aggregate per query.
     val blocked =
       if (degen.isEmpty) blockedOf // the exact pre-mask plan: the salt
         // census and bucket join recompute the hash chain (embarrassingly
@@ -332,21 +320,6 @@ object Dedup {
   def lshRecall(s: SparkSession, dir: String): DataFrame =
     lshRecallOf(s, dir, minhashLsh(s, dir))
 
-  /** SAMPLED form of the recall audit — the stated 100 TB cost model: the
-    * truth side's quadratic term (posting-list pair expansion) runs on the
-    * hash-sampled subcorpus hash52(doc_id) % sampleMod == 0, so it costs
-    * ~1/sampleMod² of the full audit while the candidate generator stays
-    * whole-corpus; recall measured over sampled truth pairs estimates
-    * global recall (the sample is id-assignment-independent by hashing).
-    * sampleMod = 1 IS the gated `dedup_lsh_recall` (spec-asserted
-    * identical); a 100 TB deployment runs sampleMod ~ 10³-10⁴. */
-  def lshRecallSampled(s: SparkSession, dir: String, sampleMod: Int): DataFrame =
-    lshRecallOf(s, dir, minhashLsh(s, dir), sampleMod)
-
-  /** [[lshRecallSampled]] over the banded generator. */
-  def lshRecallBandedSampled(s: SparkSession, dir: String, sampleMod: Int): DataFrame =
-    lshRecallOf(s, dir, minhashLshBanded(s, dir), sampleMod)
-
   /** The same audit over the BANDED (b=4×r=2) generator — side by side
     * with [[lshRecall]] this is the b×r trade made measurable: r=2 AND-
     * amplification suppresses low-similarity candidates (cheaper
@@ -356,8 +329,8 @@ object Dedup {
     lshRecallOf(s, dir, minhashLshBanded(s, dir))
 
   private def lshRecallOf(s: SparkSession, dir: String,
-      candidates: DataFrame, sampleMod: Int = 1): DataFrame = {
-    val truth = shingleInterPairs(s, dir, sampleMod)
+      candidates: DataFrame): DataFrame = {
+    val truth = shingleInterPairs(s, dir)
       .select(col("doc_a"), col("doc_b"),
         least(expr(s"(inter * $RecallBands) DIV (na + nb - inter)"),
           lit(RecallBands - 1)).cast("int").as("sim_band"))
@@ -400,27 +373,16 @@ object Dedup {
     * 52-bit space collides routinely (and an intra-doc collision could
     * even self-pair a document); 2^-64 per pair keeps the ratios exact
     * modulo vanishing probability. The oracle hashes identically. */
-  private def shingleInterPairs(s: SparkSession, dir: String,
-      sampleMod: Int = 1): DataFrame =
-    // the whole-corpus pair store is REGISTRY-SERVED (r12 — one
-    // posting-list expansion per corpus state; four gated consumers:
-    // jaccard, containment, both recall audits). The hash-sampled audit
-    // variants compute their subcorpus truth inline — a different
-    // relation, not a cache miss.
-    if (sampleMod <= 1) AnnModels.shinglePairs(s, dir)
-    else shingleInterPairsInline(s, dir, sampleMod)
+  private def shingleInterPairs(s: SparkSession, dir: String): DataFrame =
+    // the pair store is REGISTRY-SERVED (r12 — one posting-list expansion
+    // per corpus state; four gated consumers: jaccard, containment, both
+    // recall audits)
+    AnnModels.shinglePairs(s, dir)
 
   /** The posting-list pair-verification engine — what
-    * AnnModels.shinglePairs runs ONCE per corpus state (sampleMod = 1). */
-  private[graft] def shingleInterPairsInline(s: SparkSession, dir: String,
-      sampleMod: Int = 1): DataFrame = {
-    // sampleMod > 1: the quadratic pair expansion runs on the hash-sampled
-    // subcorpus only (both endpoints sampled) — the recall audits'
-    // documented cost knob; 1 = whole corpus (every other consumer).
-    val base =
-      if (sampleMod <= 1) docs(s, dir)
-      else docs(s, dir).filter(pmod(hash52(col("doc_id")), lit(sampleMod.toLong)) === 0)
-    val sh = base
+    * AnnModels.shinglePairs runs ONCE per corpus state. */
+  private[graft] def shingleInterPairsInline(s: SparkSession, dir: String): DataFrame = {
+    val sh = docs(s, dir)
       .repartition(col("doc_id"))
       .select(col("doc_id"),
         array_distinct(ShingleExpressions.shingles(col("text"), ShingleN)).as("sh"))
@@ -433,8 +395,7 @@ object Dedup {
     // within each (posting list, salt) group (sorted, so doc_a < doc_b by
     // construction), then one aggregation counts shared shingles per pair.
     sh.join(broadcast(dense), Seq("g"), "left")
-      .withColumn("salt", pmod(hash52(col("doc_id")),
-        coalesce(expr(s"(bn + ${MaxBucket - 1L}) DIV ${MaxBucket.toLong}"), lit(1L))))
+      .withColumn("salt", pmod(hash52(col("doc_id")), saltGroups))
       .groupBy("g", "salt")
       .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ds"))
       .filter(size(col("ds")) > 1 && size(col("ds")) <= lit(2L * MaxBucket))
@@ -734,8 +695,7 @@ object Dedup {
     val dense = bb.groupBy("band", "h1", "h2").agg(count(lit(1)).as("bn"))
       .filter(col("bn") > MaxBucket)
     bb.join(broadcast(dense), Seq("band", "h1", "h2"), "left")
-      .withColumn("salt", pmod(hash52(col("doc_id")),
-        coalesce(expr(s"(bn + ${MaxBucket - 1L}) DIV ${MaxBucket.toLong}"), lit(1L))))
+      .withColumn("salt", pmod(hash52(col("doc_id")), saltGroups))
       .groupBy("band", "h1", "h2", "salt")
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) > 1 && size(col("ids")) <= lit(2L * MaxBucket))
@@ -1320,6 +1280,47 @@ object Dedup {
       .select(col("doc_id"), col("source"))
   }
 
+  /** ceil(bn/MaxBucket) salt groups of a census-joined bucket row; 1 for
+    * a bucket under the cap (absent from the dense census). */
+  private def saltGroups: Column =
+    coalesce(expr(s"(bn + ${MaxBucket - 1L}) DIV ${MaxBucket.toLong}"), lit(1L))
+
+  /** The ONE salted-index policy both the batch ([[incrementalLshMatch]])
+    * and streaming (EventStreams.incrementalLshTransform) probe forms
+    * apply, so a degenerate dense bucket is capped identically on both
+    * paths: index rows of an oversized (band, h) bucket salt into
+    * ceil(bn/cap) hash52 groups, and any salt group still above 2x cap
+    * (an adversarial single-hash pile-up hash52 cannot spread) is dropped
+    * from the index side entirely. Returns (bounded index keyed
+    * (band, h, salt) -> corpus_id, dense-bucket census for the probe side).
+    * `keep` rides extra columns (e.g. the full 64-bit hash a pigeonhole
+    * probe must verify against) through the policy untouched. */
+  private[graft] def saltedIndexSide(index: DataFrame,
+      keep: Seq[String] = Nil): (DataFrame, DataFrame) = {
+    val dense = index.groupBy("band", "h").agg(count(lit(1)).as("bn"))
+      .filter(col("bn") > MaxBucket)
+    val idxSalted = index.join(broadcast(dense), Seq("band", "h"), "left")
+      .withColumn("salt", pmod(hash52(col("doc_id")), saltGroups))
+    val oversized = idxSalted.groupBy("band", "h", "salt")
+      .agg(count(lit(1)).as("gn")).filter(col("gn") > 2L * MaxBucket)
+    val idxBounded = idxSalted
+      .join(broadcast(oversized), Seq("band", "h", "salt"), "left_anti")
+      .select(Seq(col("band"), col("h"), col("salt"),
+        col("doc_id").as("corpus_id")) ++ keep.map(col): _*)
+    (idxBounded, dense)
+  }
+
+  /** Probe-side half of the shared policy: each probe signature row fans
+    * out to EVERY salt group of its bucket (replication lands on the small
+    * batch side and only for dense buckets), so a probe can never miss an
+    * index partner because of the salt. */
+  private[graft] def saltedProbeSide(sigs: DataFrame, dense: DataFrame,
+      keep: Seq[String] = Nil): DataFrame =
+    sigs.join(broadcast(dense), Seq("band", "h"), "left")
+      .withColumn("salt", explode(sequence(lit(0L), saltGroups - 1)))
+      .select(Seq(col("band"), col("h"), col("salt"),
+        col("doc_id")) ++ keep.map(col): _*)
+
   /** Incremental NEAR-dup ingestion: match a new batch against a PERSISTED
     * corpus LSH index (`lshIndexOf` written to parquet) — the nightly
     * reality `incremental` (exact-hash) cannot cover. The corpus side is
@@ -1336,53 +1337,9 @@ object Dedup {
     * groups is total (a batch doc can never miss an index partner because
     * of the salt). Output: per batch doc, the distinct-corpus-match count
     * and a novelty flag. */
-  /** The ONE salted-index policy both the batch ([[incrementalLshMatch]])
-    * and streaming (EventStreams.incrementalLshTransform) probe forms
-    * apply, so a degenerate dense bucket is capped identically on both
-    * paths: index rows of an oversized (band, h) bucket salt into
-    * ceil(bn/cap) hash52 groups, and any salt group still above 2x cap
-    * (an adversarial single-hash pile-up hash52 cannot spread) is dropped
-    * from the index side entirely. Returns (bounded index keyed
-    * (band, h, salt) -> corpus_id, dense-bucket census for the probe side).
-    * `keep` rides extra columns (e.g. the full 64-bit hash a pigeonhole
-    * probe must verify against) through the policy untouched. */
-  private[graft] def saltedIndexSide(index: DataFrame,
-      maxBucket: Int = MaxBucket,
-      keep: Seq[String] = Nil): (DataFrame, DataFrame) = {
-    val nGroups = coalesce(
-      expr(s"(bn + ${maxBucket - 1L}) DIV ${maxBucket.toLong}"), lit(1L))
-    val dense = index.groupBy("band", "h").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > maxBucket)
-    val idxSalted = index.join(broadcast(dense), Seq("band", "h"), "left")
-      .withColumn("salt", pmod(hash52(col("doc_id")), nGroups))
-    val oversized = idxSalted.groupBy("band", "h", "salt")
-      .agg(count(lit(1)).as("gn")).filter(col("gn") > 2L * maxBucket)
-    val idxBounded = idxSalted
-      .join(broadcast(oversized), Seq("band", "h", "salt"), "left_anti")
-      .select(Seq(col("band"), col("h"), col("salt"),
-        col("doc_id").as("corpus_id")) ++ keep.map(col): _*)
-    (idxBounded, dense)
-  }
-
-  /** Probe-side half of the shared policy: each probe signature row fans
-    * out to EVERY salt group of its bucket (replication lands on the small
-    * batch side and only for dense buckets), so a probe can never miss an
-    * index partner because of the salt. */
-  private[graft] def saltedProbeSide(sigs: DataFrame, dense: DataFrame,
-      maxBucket: Int = MaxBucket,
-      keep: Seq[String] = Nil): DataFrame = {
-    val nGroups = coalesce(
-      expr(s"(bn + ${maxBucket - 1L}) DIV ${maxBucket.toLong}"), lit(1L))
-    sigs.join(broadcast(dense), Seq("band", "h"), "left")
-      .withColumn("salt", explode(sequence(lit(0L), nGroups - 1)))
-      .select(Seq(col("band"), col("h"), col("salt"),
-        col("doc_id")) ++ keep.map(col): _*)
-  }
-
-  def incrementalLshMatch(batch: DataFrame, index: DataFrame,
-      maxBucket: Int = MaxBucket): DataFrame = {
-    val (idxBounded, dense) = saltedIndexSide(index, maxBucket)
-    val probes = saltedProbeSide(lshIndexOf(batch), dense, maxBucket)
+  def incrementalLshMatch(batch: DataFrame, index: DataFrame): DataFrame = {
+    val (idxBounded, dense) = saltedIndexSide(index)
+    val probes = saltedProbeSide(lshIndexOf(batch), dense)
     val matches = probes.join(idxBounded, Seq("band", "h", "salt"))
       .filter(col("doc_id") =!= col("corpus_id"))
       .select(col("doc_id"), col("corpus_id")).distinct()

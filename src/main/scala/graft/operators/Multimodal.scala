@@ -265,7 +265,7 @@ object Multimodal {
     graft.operators.AnnModels.audioPairs(s, dir)
 
   private[graft] def audioPairsInline(s: SparkSession, dir: String): DataFrame =
-    Dedup.hammingPairs(audioHashed(s, dir), servedDegen = Some(audioDegen(s, dir)))
+    Dedup.hammingPairs(audioHashed(s, dir), audioDegen(s, dir))
 
   /** The audio hash family's registry-served degenerate census (shared
     * by the pairing query and the CC-label trainer). */
@@ -484,7 +484,7 @@ object Multimodal {
     graft.operators.AnnModels.phashPairs(s, dir)
 
   private[graft] def phashPairsInline(s: SparkSession, dir: String): DataFrame =
-    Dedup.hammingPairs(phashed(s, dir), servedDegen = Some(phashDegen(s, dir)))
+    Dedup.hammingPairs(phashed(s, dir), phashDegen(s, dir))
 
   /** The image hash family's registry-served degenerate census (shared
     * by the pairing query and the CC-label trainer). */

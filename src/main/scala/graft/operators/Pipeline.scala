@@ -316,22 +316,24 @@ object Pipeline {
     * map-side. Output values are bit-identical to the single-window form. */
   val CtxTokens = 512
 
-  /** Default docs per prefix-sum block — the TEST-corpus size (500 docs →
-    * 8 blocks, so the two-level decomposition is exercised, not skipped).
-    * `pack` takes the block size as a parameter because the broadcast-back
-    * of level-2 offsets is only valid when `docs / packBlock` rows fit the
-    * driver: a deployment sizes packBlock ≈ corpusDocs / 10^6 (e.g. 10^5 at
-    * 10^11 docs → 10^6 offset rows of 24 bytes), keeping level-1 windows
-    * cache-sized AND the offsets relation broadcastable by construction. A
-    * third level repeats the same decomposition if a source ever exceeds
-    * packBlock^2 docs. */
+  /** Docs per prefix-sum block — the TEST-corpus size (500 docs → 8
+    * blocks, so the two-level decomposition is exercised, not skipped).
+    * One constant for the whole pack family (`pack`, `packDelta`, `shard`,
+    * `build`); the registry's `Pack` key group carries it, so editing it
+    * re-keys every served pack product. The broadcast-back of level-2
+    * offsets is only valid while `docs / PackBlock` rows stay
+    * broadcastable: a deployment sizes it ≈ corpusDocs / 10^6 (e.g. 10^5
+    * at 10^11 docs → 10^6 offset rows of 24 bytes), keeping level-1
+    * windows cache-sized AND the offsets relation broadcastable by
+    * construction. A third level repeats the same decomposition if a
+    * source ever exceeds PackBlock^2 docs. */
   val PackBlock = 64
 
-  /** Default token-budget column: whitespace tokens. `pack` and `shard`
-    * parameterize on it so a pipeline that budgets in REAL subword tokens
-    * passes `TextOps.bpeCount(col("text"))` instead (packBpe below) —
-    * the counter is a per-row expression either way, so the distributed
-    * prefix-sum shape is untouched. */
+  /** The whitespace token-budget column. A pipeline that budgets in REAL
+    * subword tokens counts with `TextOps.bpeCount(col("text"))` instead
+    * (packBpe below, through [[docTokensWith]]) — the counter is a per-row
+    * expression either way, so the distributed prefix-sum shape is
+    * untouched. */
   private[graft] def wsTokenCount: Column =
     size(graft.functions.wsTokens(col("text"))).cast("long")
 
@@ -349,14 +351,12 @@ object Pipeline {
     graft.operators.AnnModels.qualityScores(s, dir)
       .select(col("source"), col("doc_id"), col("n_tokens").cast("long").as("n_tok"))
 
-  def pack(s: SparkSession, dir: String, packBlock: Int = PackBlock,
-      tokenCount: Option[Column] = None): DataFrame =
-    packOf(tokenCount.fold(docTokens(s, dir))(tc =>
-      docTokensWith(s, dir, tc)), packBlock)
+  def pack(s: SparkSession, dir: String): DataFrame =
+    packOf(docTokens(s, dir))
 
   /** The (source, doc_id, n_tok) spine under an ARBITRARY per-row token
-    * counter — the generic `pack` parameter path and the inline builder
-    * behind the served subword-budget spines below. */
+    * counter — the inline build behind the served subword-budget
+    * spines (AnnModels.bpeDocTokens and the trained-table twins). */
   private[graft] def docTokensWith(s: SparkSession, dir: String, tc: Column): DataFrame =
     graft.sources.Tables.load(s, dir, "documents")
       .select(col("source"), col("doc_id"), tc.as("n_tok"))
@@ -364,7 +364,7 @@ object Pipeline {
   /** The two-level packing planner over ANY (source, doc_id, n_tok)
     * relation — `pack` feeds it the whole corpus, `build` the curated
     * survivor set. */
-  private[graft] def packOf(rel: DataFrame, packBlock: Int = PackBlock,
+  private[graft] def packOf(rel: DataFrame,
       baseOff: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // ONE pass for the token counter: base feeds BOTH the block-local
@@ -375,7 +375,7 @@ object Pipeline {
     // merge-table replay per document — and for build's curated input —
     // the whole gate chain — the second pass is the real cost at scale.
     // The checkpoint rows are (source, doc_id, n_tok, blk): tiny.
-    val base = rel.withColumn("blk", expr(s"doc_id DIV $packBlock"))
+    val base = rel.withColumn("blk", expr(s"doc_id DIV $PackBlock"))
       .localCheckpoint()
     // Level 1: running sum inside each (source, block) — bounded partitions.
     val wLocal = Window.partitionBy(col("source"), col("blk")).orderBy(col("doc_id"))
@@ -450,17 +450,17 @@ object Pipeline {
     * driver loop; shards pack embarrassingly parallel exactly like the
     * writer tasks they model. The fold state is (bin loads, assignment)
     * lists ≤ FfdBlock entries; everything downstream is id-sized. */
-  def packFfd(s: SparkSession, dir: String, ffdBlock: Int = FfdBlock): DataFrame =
+  def packFfd(s: SparkSession, dir: String): DataFrame =
     // the bin rollup groups on (source, blk, bin) — a superset of the
     // fold's (source, blk) shuffle keys, so Catalyst reuses the one
     // exchange (grouping on the derived bin_id would force a second one:
     // the partitioner can't prove bin_id determines blk) — and projects
     // the stable bin_id afterwards
-    ffdAssign(s, dir, ffdBlock)
+    ffdAssign(s, dir)
       .groupBy(col("source"), col("blk"), col("bin"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
       .select(col("source"),
-        (col("blk") * ffdBlock + col("bin") - 1).as("bin_id"),
+        (col("blk") * FfdBlock + col("bin") - 1).as("bin_id"),
         col("n_docs"), col("n_tokens"),
         greatest(lit(CtxTokens.toLong) - col("n_tokens"), lit(0L)).as("padding"),
         (col("n_tokens") > CtxTokens).cast("int").as("oversize"))
@@ -472,13 +472,12 @@ object Pipeline {
     * gated report. A bin is oversize only when a single document exceeds
     * the context (FFD opens a fresh bin for a doc that fits nowhere, and
     * an over-context doc fits nowhere), so the per-doc flag IS the bin
-    * flag. bin_id = blk·ffdBlock + bin − 1: bin-per-shard count is
+    * flag. bin_id = blk·FfdBlock + bin − 1: bin-per-shard count is
     * bounded by docs-per-shard, so the id is unique per source and
     * stable across re-partitions. */
-  private[graft] def ffdAssign(s: SparkSession, dir: String,
-      ffdBlock: Int = FfdBlock): DataFrame = {
+  private[graft] def ffdAssign(s: SparkSession, dir: String): DataFrame = {
     val base = docTokens(s, dir)
-      .withColumn("blk", expr(s"doc_id DIV $ffdBlock"))
+      .withColumn("blk", expr(s"doc_id DIV $FfdBlock"))
     // First bin (1-based) the current doc fits into; 0 = none. Evaluated
     // per step over the ≤FfdBlock-long loads list — the whole FFD is
     // O(docs·bins) comparisons inside one codegen'd expression.
@@ -502,7 +501,7 @@ object Pipeline {
       .select(col("source"), col("blk"), col("bin"),
         expr("element_at(sorted, cast(i + 1 as int)).doc_id").as("doc_id"),
         expr("element_at(sorted, cast(i + 1 as int)).tok").as("n_tok"),
-        (col("blk") * ffdBlock + col("bin") - 1).as("bin_id"))
+        (col("blk") * FfdBlock + col("bin") - 1).as("bin_id"))
       .withColumn("oversize", (col("n_tok") > CtxTokens).cast("int"))
   }
 
@@ -518,9 +517,8 @@ object Pipeline {
     * manifest parity). Scale: one hash repartition on (source, bin_id)
     * co-locates each bin in one task — every bin writes one file, a task
     * writes many bins; no global sort, no driver-side loop. */
-  def writeFfdPack(s: SparkSession, dir: String, dst: String,
-      ffdBlock: Int = FfdBlock): Unit = {
-    val asg = ffdAssign(s, dir, ffdBlock)
+  def writeFfdPack(s: SparkSession, dir: String, dst: String): Unit = {
+    val asg = ffdAssign(s, dir)
       .select(col("doc_id"), col("bin_id"), col("oversize"))
     graft.sources.Tables.load(s, dir, "documents")
       .join(asg, Seq("doc_id"))
@@ -564,25 +562,25 @@ object Pipeline {
     *  level 0 — per-(source, n_tok) size histogram, windowed per source over
     *    <= |distinct sizes| rows for the cumulative larger-size offset;
     *  level 1 — row_number only within (source, n_tok, doc_id-block) — <=
-    *    `packBlock` rows per window partition by construction (blocks are
+    *    `PackBlock` rows per window partition by construction (blocks are
     *    global doc_id ranges, so a subgroup's block can only be smaller);
     *  level 2 — per-block subtotals windowed per (source, n_tok), a
-    *    relation no larger than the histogram and packBlock-fold smaller
+    *    relation no larger than the histogram and PackBlock-fold smaller
     *    than any group that actually needs splitting.
     * The two offset relations combine on (source, n_tok) and join back on
     * (source, n_tok, blk) — the level-1 window's OWN partitioning, so the
     * planner reuses that exchange; nothing here is force-broadcast (unlike
-    * pack's corpus/packBlock offsets, these aggregates scale with distinct
+    * pack's corpus/PackBlock offsets, these aggregates scale with distinct
     * sizes and can exceed any driver bound on diverse corpora). All three
     * window inputs are aggregates or bounded blocks; the raw doc stream is
     * never window-partitioned by (source) or (source, n_tok) alone
     * (plan-asserted). */
-  def shard(s: SparkSession, dir: String, packBlock: Int = PackBlock): DataFrame = {
+  def shard(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.wsTokens
     val base = graft.sources.Tables.load(s, dir, "documents")
       .select(col("source"), col("doc_id"), size(wsTokens(col("text"))).cast("long").as("n_tok"))
-      .withColumn("blk", expr(s"doc_id DIV $packBlock"))
+      .withColumn("blk", expr(s"doc_id DIV $PackBlock"))
     // Level 0: docs with a strictly larger n_tok in the same source rank
     // first — a cumulative count over the per-source SIZE HISTOGRAM.
     val wSize = Window.partitionBy(col("source")).orderBy(col("n_tok").desc)
@@ -740,7 +738,7 @@ object Pipeline {
     * the oracle replays the full cumsum and filters), so a nightly
     * deployment's manifest converges to the from-scratch one while paying
     * O(delta + sources), not O(corpus), per night. */
-  def packDelta(s: SparkSession, dir: String, packBlock: Int = PackBlock): DataFrame = {
+  def packDelta(s: SparkSession, dir: String): DataFrame = {
     // one id-sized pass (r16: n_tok rides the served artifact join, no
     // text scan at all): the compact (source, doc_id, n_tok) relation
     // feeds the split point, the per-source base totals AND the delta
@@ -752,7 +750,7 @@ object Pipeline {
       .groupBy("source").agg(sum(col("n_tok")).as("base_off"))
     val delta = withSp.filter(col("doc_id") >= col("sp"))
       .select(col("source"), col("doc_id"), col("n_tok"))
-    packOf(delta, packBlock, baseOff = Some(baseOff))
+    packOf(delta, Some(baseOff))
   }
 
   /** Domain-mixture sampling: each source gets a deterministic keep-rate

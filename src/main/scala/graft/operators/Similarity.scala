@@ -171,16 +171,21 @@ object Similarity {
     * <=16 centroids + one 64-row-per-vector explode/agg on the sample.
     * Corpus assignment is one broadcast pass (|corpus| x 16 fused-codegen
     * cosines); the candidate join touches only probed lists — the 100 TB
-    * path where brute force cannot run. */
+    * path where brute force cannot run.
+    *
+    * The quantizer is always the registry's: `AnnModels.ivfCentroids`
+    * (trained at most once per corpus state, K from [[ivfSizing]]) and its
+    * corpus assignment `AnnModels.ivfAssign`. */
   def annIvf(s: SparkSession, dir: String): DataFrame =
-    annIvfIters(s, dir, KMeansIters)
+    annIvfWith(s, dir, AnnModels.ivfCentroids(s, dir), AnnModels.ivfAssign(s, dir))
 
-  /** Same query with a configurable training depth (0 = untrained init —
-    * the round-1 baseline, kept for the recall-improvement spec). */
-  def annIvfIters(s: SparkSession, dir: String, iters: Int,
-      nprobe: Int = NumProbes, trainMod: Int = TrainMod,
-      numCentroids: Int = 0): DataFrame = {
-    val (assign, probes) = ivfParts(s, dir, iters, nprobe, trainMod, numCentroids)
+  /** [[annIvf]] under an explicit quantizer — `cent` (cent_id, cent_emb)
+    * and its narrow corpus assignment (vec_id, cent_id, ccos). The gated
+    * query passes the served pair; the recall spec scores an untrained
+    * baseline built from [[trainIvfCentroids]] and [[ivfAssignWith]]. */
+  private[graft] def annIvfWith(s: SparkSession, dir: String,
+      cent: DataFrame, asn: DataFrame): DataFrame = {
+    val (assign, probes) = ivfPartsWith(s, dir, cent, asn)
     val scored = assign.join(probes, Seq("cent_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -191,42 +196,27 @@ object Similarity {
   /** The trained coarse quantizer's two products, shared by `annIvf` (exact
     * rerank inside probed lists) and `annIvfPq` (ADC inside probed lists):
     * `assign` = (vec_id, embedding, cent_id) corpus→list assignment;
-    * `probes` = (query_id, q_emb, cent_id), each query's nprobe lists. */
-  private[operators] def ivfParts(s: SparkSession, dir: String, iters: Int = KMeansIters,
-      nprobe: Int = NumProbes, trainMod: Int = TrainMod,
-      numCentroids: Int = 0): (DataFrame, DataFrame) = {
+    * `probes` = (query_id, q_emb, cent_id), each query's NumProbes lists. */
+  private[operators] def ivfParts(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    ivfPartsWith(s, dir, AnnModels.ivfCentroids(s, dir), AnnModels.ivfAssign(s, dir))
+
+  private def ivfPartsWith(s: SparkSession, dir: String,
+      cent: DataFrame, asn: DataFrame): (DataFrame, DataFrame) = {
     val e = emb(s, dir)
-    // numCentroids = 0 means AUTO (the ivfSizing rule — the gated path).
-    // Default training constants → the persisted model artifact (train at
-    // most once per dataset, across ALL consumers and queries — AnnModels,
-    // which derives the auto K itself for its store key);
-    // non-default (the recall specs' untrained/deep/explicit-K variants)
-    // trains inline, localCheckpoint'd so Lloyd's lineage doesn't re-run
-    // per consumer. Either way `cent` is a materialized <= K rows.
-    val isDefault =
-      iters == KMeansIters && trainMod == TrainMod && numCentroids == 0
-    lazy val k = if (numCentroids > 0) numCentroids else ivfK(s, dir)
-    val cent =
-      if (isDefault) AnnModels.ivfCentroids(s, dir)
-      else trainIvfCentroids(s, dir, iters, trainMod, k).localCheckpoint()
-    // Default constants → the corpus ASSIGNMENT is itself a registry
-    // artifact (r13): the broadcast-join + per-vector argmax window is the
-    // dominant sub-plan of every list-probing consumer (ANN family,
-    // SemDeDup, prototype prune, the cluster samplers), so it runs once
-    // per corpus state and consumers re-attach the embedding column with
-    // an id-equijoin against the corpus table — scan + join, no window.
-    val assign =
-      if (isDefault)
-        AnnModels.ivfAssign(s, dir).join(e, Seq("vec_id"))
-          .select(col("vec_id"), col("embedding"), col("cent_id"), col("ccos"))
-      else ivfAssignWith(e, cent).join(e, Seq("vec_id"))
-        .select(col("vec_id"), col("embedding"), col("cent_id"), col("ccos"))
+    // The corpus ASSIGNMENT is a registry artifact (r13): the
+    // broadcast-join + per-vector argmax window is the dominant sub-plan of
+    // every list-probing consumer (ANN family, SemDeDup, prototype prune,
+    // the cluster samplers), so it runs once per corpus state and consumers
+    // re-attach the embedding column with an id-equijoin against the
+    // corpus table — scan + join, no window.
+    val assign = asn.join(e, Seq("vec_id"))
+      .select(col("vec_id"), col("embedding"), col("cent_id"), col("ccos"))
     val probes = e.filter(col("vec_id") < NumQueries).join(broadcast(cent))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("cent_id"),
         round(cosineSim(col("embedding"), col("cent_emb")), 4).as("ccos"))
       .withColumn("prn", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("cent_id").asc)))
-      .filter(col("prn") <= nprobe)
+      .filter(col("prn") <= NumProbes)
       .select(col("query_id"), col("q_emb"), col("cent_id"))
     (assign, probes)
   }
@@ -250,8 +240,8 @@ object Similarity {
   /** The IVF coarse-quantizer training loop (`KMeansIters` deterministic
     * Lloyd's rounds over the `vec_id % trainMod` sample — see `annIvf`'s
     * determinism note): extracted so `AnnModels` can run it ONCE per
-    * dataset and persist the <= numCentroids-row result, while the
-    * non-default spec variants still train inline. Returns
+    * dataset and persist the <= numCentroids-row result; the recall and
+    * sizing specs call it directly for their variant quantizers. Returns
     * (cent_id, cent_emb); lazily planned — callers materialize. */
   private[graft] def trainIvfCentroids(s: SparkSession, dir: String,
       iters: Int, trainMod: Int, numCentroids: Int): DataFrame = {
@@ -484,7 +474,6 @@ object Similarity {
     * disconnects exactly the vectors that most need dedup) while per-group
     * quadratic work stays bounded. */
   val GraphPlanesPerTable = 5
-  val GraphNumPlanes = NumTables * GraphPlanesPerTable
   val GraphBucketCap = 192
 
   /** The LSH-table geometry for a corpus of `n` vectors — the documented

@@ -671,19 +671,24 @@ object TextOps {
     * 100 TB shape: the corpus is touched ONCE (word-frequency aggregate);
     * every iteration then runs on the VOCAB relation (distinct words ×
     * symbol strings, millions of rows at web scale, never corpus-sized) —
-    * pair counts are a vocab-sized aggregate, the argmax is a sort-limit-1
-    * on the even smaller pair-count relation, and the driver sees exactly
-    * ONE row per iteration (the winning pair — the same scalar-only
-    * driver-interaction rule as ccLabels' convergence probe). The merge
+    * pair counts are a vocab-sized aggregate, the argmax is a sort-limit
+    * on the even smaller pair-count relation, and only a 4-row candidate
+    * page per iteration is collected (model-sized — the same bounded
+    * collect rule as ccLabels' convergence probe). The merge
     * apply is one builtin `replace` over the boundary-wrapped symbol
     * string ([[BpeOpen]]/[[BpeClose]] delimiters, exactly the encoder's
     * representation); `localCheckpoint` truncates the k-iteration lineage.
     * No word-end marker, matching this repo's encoder formulation.
     * Overlapping pair occurrences all count ("aaa" contributes (a,a)
     * twice), as in the reference implementation; the merge APPLY is
-    * greedy left-to-right non-overlapping — both mirrored by the oracle. */
+    * greedy left-to-right non-overlapping — both mirrored by the oracle.
+    *
+    * The loop is [[bpeTrainBatchedOn]] at batch 1: a round's first
+    * candidate is always accepted, so one merge per round IS the
+    * sequential learn_bpe loop, and the unrolled-CTE oracle replays it as
+    * such. */
   def bpeTrain(s: SparkSession, dir: String): DataFrame =
-    bpeTrainOn(docs(s, dir), BpeTrainMerges)
+    bpeTrainBatchedOn(docs(s, dir), BpeTrainMerges, 1)._1
 
   /** The batched trainer at production merge count — the table
     * `AnnModels.bpeMergeTableBig` persists and the `_256` gated chain
@@ -691,53 +696,11 @@ object TextOps {
   def bpeTrainBig(s: SparkSession, dir: String): DataFrame =
     bpeTrainBatchedOn(docs(s, dir), BpeTrainMergesBig, BpeTrainBatch)._1
 
-  private[graft] def bpeTrainOn(d: DataFrame, k: Int): DataFrame = {
-    val spark = d.sparkSession
-    var vocab = d
-      .select(explode(wsTokens(col("text"))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("f"))
-      .select(col("f"), regexp_replace(col("w"), "(?s)(.)", s"\\$BpeOpen$$1$BpeClose").as("s"))
-      .localCheckpoint()
-    val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
-    var done = false
-    var rank = 1
-    while (rank <= k && !done) {
-      val syms = regexp_extract_all(col("s"), lit("\\|([^;]*);"), lit(1))
-      val prs = when(size(syms) > 1,
-        transform(sequence(lit(1), size(syms) - 1),
-          i => struct(element_at(syms, i).as("a"), element_at(syms, i + 1).as("b"))))
-        .otherwise(array().cast("array<struct<a:string,b:string>>"))
-      val best = vocab
-        .select(col("f"), explode(prs).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("f")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (best.isEmpty) done = true
-      else {
-        val (a, b, cnt) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((rank, a, b, cnt))
-        val prev = vocab
-        vocab = vocab.select(col("f"),
-          call_function("replace", col("s"),
-            lit(s"$BpeOpen$a$BpeClose$BpeOpen$b$BpeClose"),
-            lit(s"$BpeOpen$a$b$BpeClose")).as("s"))
-          .localCheckpoint()
-        // the superseded checkpoint would otherwise stay persisted for all
-        // k rounds — the accumulating-blocks spill hazard Scale.main works
-        // around for cross-operator runs
-        prev.unpersist()
-        rank += 1
-      }
-    }
-    import spark.implicits._
-    merges.toSeq.toDF("rank", "lhs", "rhs", "pair_count")
-  }
-
   /** BATCHED BPE training — the path to a real ~32k-merge tokenizer:
-    * [[bpeTrainOn]] costs one Spark job per merge (a 32k-vocab train would
-    * be 32k sequential driver round-trips — the same class of wall-clock
-    * bottleneck the replace-chain fold had before BpeCountExpr). Here each
+    * one merge per round costs one Spark job per merge (a 32k-vocab train
+    * would be 32k sequential collect round-trips — the same class of
+    * wall-clock bottleneck the replace-chain fold had before
+    * BpeCountExpr). Here each
     * ROUND recomputes pair counts once, pulls the top `4·batch` candidates
     * (driver sees a bounded candidate page, never the pair relation), and
     * greedily accepts up to `batch` of them in (count desc, lhs, rhs) order
@@ -760,8 +723,8 @@ object TextOps {
     * materializations, not O(k). Deterministic: the ordering and the
     * disjointness rule reference only exact counts and lexical order. The
     * result is a valid rank-ordered merge table for
-    * [[graft.functions.BpeExpressions]] (spec-asserted, including
-    * batch=1 ≡ sequential), and the whole loop is oracle-replayable at ANY
+    * [[graft.functions.BpeExpressions]] (spec-asserted; batch 1 is the
+    * sequential loop [[bpeTrain]] runs), and the whole loop is oracle-replayable at ANY
     * k by ONE recursive CTE ([[bpeTrainBatchedCtes]]) — the gate that
     * takes the trained tokenizer from the k=8 toy to production counts. */
   private[graft] def bpeTrainBatchedOn(d: DataFrame, k: Int,
@@ -1885,9 +1848,8 @@ object TextOps {
     * against the loop's 9.4 s at ×100 (500k docs): the driver round-trip
     * is 1 row per round, while the in-plan state costs a
     * BroadcastNestedLoopJoin per training row per round. */
-  private[graft] def qualityLrFit(feats: DataFrame, labels: DataFrame,
-      iters: Int = QualityLrIters, etaNum: Long = QualityLrEtaNum,
-      etaDen: Long = QualityLrEtaDen): (Array[Long], Array[Long]) = {
+  private[graft] def qualityLrFit(feats: DataFrame,
+      labels: DataFrame): (Array[Long], Array[Long]) = {
     val half = feats.join(labels, Seq("doc_id"))
       .filter(col("doc_id") % 2 === 0)
       .localCheckpoint()
@@ -1901,7 +1863,7 @@ object TextOps {
         greatest(least(col(f) - lit(mu(i)), lit(10000L)), lit(-10000L)).as(f)
       }: _*)
     val w = Array.fill(QualityFeatNames.size + 1)(0L)
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to QualityLrIters) {
       val z = QualityFeatNames.zipWithIndex
         .map { case (f, i) => col(f) * lit(w(i + 1)) }
         .reduce(_ + _) + lit(w(0) * 10000L)
@@ -1916,7 +1878,7 @@ object TextOps {
       if (n > 0) {
         var j = 0
         while (j < w.length) {
-          w(j) += (etaNum * row.getLong(j + 1)) / (etaDen * n * 10000L)
+          w(j) += (QualityLrEtaNum * row.getLong(j + 1)) / (QualityLrEtaDen * n * 10000L)
           j += 1
         }
       }
@@ -2007,12 +1969,12 @@ object TextOps {
     * 1e6 for every document and the logit bound is length-independent.
     * One corpus scan, one token-bounded shuffle (the dsirOcc shape); ng
     * rides the group keys (doc_id determines it) so no second pass. */
-  private[graft] def ftOcc6(d: DataFrame, buckets: Long = FtBuckets): DataFrame = {
+  private[graft] def ftOcc6(d: DataFrame): DataFrame = {
     val toks = wsTokens(col("text"))
     d.select(col("doc_id"), (size(toks) * 2 - 1).cast("long").as("ng"),
         explode(concat(toks, wordShingles(toks, 2))).as("g"))
       .select(col("doc_id"), col("ng"),
-        pmod(hash52(col("g")), lit(buckets)).as("b"))
+        pmod(hash52(col("g")), lit(FtBuckets)).as("b"))
       .groupBy("doc_id", "ng", "b").agg(count(lit(1)).as("occ"))
       .select(col("doc_id"), col("b"), expr("occ * 1000000 DIV ng").as("x6"))
   }
@@ -2028,15 +1990,13 @@ object TextOps {
     * are truncating integer division on the 1e6 grid — the oracle
     * replays the identical trajectory. Train half = even doc_ids joined
     * to the Gopher-seed labels, the shared convention. */
-  private[graft] def qualityFtFit(occ6: DataFrame, labels: DataFrame,
-      buckets: Long = FtBuckets, iters: Int = FtIters,
-      etaNum: Long = FtEtaNum, etaDen: Long = FtEtaDen): Array[Long] = {
+  private[graft] def qualityFtFit(occ6: DataFrame, labels: DataFrame): Array[Long] = {
     val half = occ6.join(labels, Seq("doc_id"))
       .filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("b"), col("x6"), col("cls"))
       .localCheckpoint()
-    val w = Array.fill(buckets.toInt + 1)(0L)
-    for (_ <- 1 to iters) {
+    val w = Array.fill(FtBuckets.toInt + 1)(0L)
+    for (_ <- 1 to FtIters) {
       val zb = sum(col("x6") * element_at(typedLit(w.drop(1).toSeq), col("b").cast("int") + 1))
       val z = (zb + lit(w(0) * 1000000L)).cast("long")
       val p6 = floor(lit(1000000.0) /
@@ -2054,7 +2014,7 @@ object TextOps {
         .getOrElse(0L)
       // BigInt headroom (ADVICE r15): the per-bucket gradient g can reach
       // ~1e12 per training doc (|resid| ≤ 1e6 × Σ x6 ≤ 1e6), so a Long
-      // etaNum·g product left int64 at ~1.1e6 training docs and SILENTLY
+      // FtEtaNum·g product left int64 at ~1.1e6 training docs and SILENTLY
       // wrapped while the oracle raised. BigInt division truncates toward
       // zero exactly like Long `/`, so every in-range trajectory is
       // unchanged; the oracle's update runs in HUGEINT, so the two
@@ -2066,8 +2026,8 @@ object TextOps {
       // orders of magnitude below it.
       if (n > 0) rows.foreach { r =>
         val j = if (r.getLong(0) == -1L) 0 else r.getLong(0).toInt + 1
-        w(j) += ((BigInt(etaNum) * r.getLong(1)) /
-          (BigInt(etaDen) * n * 1000000L)).toLong
+        w(j) += ((BigInt(FtEtaNum) * r.getLong(1)) /
+          (BigInt(FtEtaDen) * n * 1000000L)).toLong
       }
     }
     w

@@ -1125,16 +1125,6 @@ class AnnModelsSpec extends SparkSpec {
     }
   }
 
-  test("non-default training parameters bypass the artifact store") {
-    AnnModels.withRoot(freshRoot("bypass")) {
-      val t0 = AnnModels.ivfCentroids.builds
-      // iters=0 (the untrained-init recall baseline) must not read or
-      // write the default-keyed artifact
-      Similarity.annIvfIters(spark, sf, 0).collect()
-      assert(AnnModels.ivfCentroids.builds == t0, "non-default variant touched the registry")
-    }
-  }
-
   // --- r16 optimization round: the five new served relations ---------------
 
   test("minhash candidate pairs build once; served pairs are bit-identical " +

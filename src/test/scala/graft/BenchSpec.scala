@@ -132,6 +132,23 @@ class BenchSpec extends AnyFunSuite {
     assert(names.size == 50)
   }
 
+  test("a query that throws is recorded as failed and timed nowhere") {
+    var heavyRuns = 0
+    val pass = Bench.timePass(Seq(
+      "boom" -> (() => throw new IllegalStateException("fails at once")),
+      "slow" -> (() => { heavyRuns += 1; Thread.sleep(20) }),
+      "late" -> { var n = 0; () => { n += 1; if (n == 4) sys.error("fails on its 4th run") } }),
+      heavyN = 3)
+    assert(pass.failed == Seq("boom", "late"))
+    assert(pass.results.map(_._1) == Seq("slow"),
+      s"a failing query must not be timed: ${pass.results}")
+    assert(pass.medians.map(_._1) == Seq("slow"))
+    assert(heavyRuns == 4, "the heavy tail gets a third warm sample")
+    val (cold, warm) = pass.results.head._2
+    assert(cold >= 0.02 && warm >= 0.02 && pass.medians.head._2 >= 0.02)
+    assert(Bench.timed(throw new RuntimeException("x")).isEmpty)
+  }
+
   test("existingLoadAvg parses the stamped field and tolerates garbage") {
     val dir = java.nio.file.Files.createTempDirectory("benchspec")
     val p = dir.resolve("a.json")

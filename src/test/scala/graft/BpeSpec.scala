@@ -126,10 +126,14 @@ class BpeSpec extends SparkSpec {
     //  iter2: aaab=|aa;|a;|b; -> (aa,a)=2, (a,b)=2+1=3    -> merge (a,b)
     //  iter3: aaab=|aa;|ab;   -> (aa,ab)=2                -> merge (aa,ab)
     //  iter4: no adjacent pairs left -> early stop at 3 of 8 rules
+    // bpeTrain's loop is the batched trainer at batch 1: one merge per
+    // round, so 3 merging rounds plus the round that finds no pair
     val toy = Seq((0L, "aaab aaab ab")).toDF("doc_id", "text")
-    val got = TextOps.bpeTrainOn(toy, 8).orderBy("rank")
+    val (table, rounds) = TextOps.bpeTrainBatchedOn(toy, 8, 1)
+    val got = table.orderBy("rank")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     assert(got == Seq((1, "a", "a", 4L), (2, "a", "b", 3L), (3, "aa", "ab", 2L)))
+    assert(rounds == 4, s"batch 1 must merge once per round: $rounds rounds")
   }
 
   test("trained merges satisfy the operand invariant and drive the native encoder") {
@@ -152,17 +156,55 @@ class BpeSpec extends SparkSpec {
     }
   }
 
+  /** Driver-side sequential learn_bpe over a word-frequency vocab: each
+    * iteration counts every adjacent pair (overlaps included), merges the
+    * (count desc, lhs, rhs) winner greedily left-to-right, and stops at
+    * `k` rules or when no pair is left. Strings order by code point, as
+    * Spark orders them. */
+  private def sequentialBpe(vocab: Seq[(String, Long)], k: Int): Seq[(Int, String, String, Long)] = {
+    val (o, c) = (TextOps.BpeOpen, TextOps.BpeClose)
+    val sym = s"\\Q$o\\E([^$c]*)\\Q$c\\E".r
+    var words = vocab.map { case (w, f) =>
+      (w.codePoints.toArray.map(cp => o + new String(Character.toChars(cp)) + c).mkString, f)
+    }
+    def cpOrder(a: String, b: String): Int =
+      java.util.Arrays.compare(a.codePoints.toArray, b.codePoints.toArray)
+    val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
+    var done = false
+    while (merges.size < k && !done) {
+      val counts = scala.collection.mutable.Map.empty[(String, String), Long].withDefaultValue(0L)
+      words.foreach { case (s, f) =>
+        sym.findAllMatchIn(s).map(_.group(1)).sliding(2).filter(_.size == 2)
+          .foreach(p => counts((p(0), p(1))) += f)
+      }
+      if (counts.isEmpty) done = true
+      else {
+        val ((a, b), cnt) = counts.toSeq.sortWith { case (((a1, b1), n1), ((a2, b2), n2)) =>
+          if (n1 != n2) n1 > n2
+          else if (a1 != a2) cpOrder(a1, a2) < 0
+          else cpOrder(b1, b2) < 0
+        }.head
+        merges += ((merges.size + 1, a, b, cnt))
+        words = words.map { case (s, f) => (s.replace(s"$o$a$c$o$b$c", s"$o$a$b$c"), f) }
+      }
+    }
+    merges.toSeq
+  }
+
   test("batched training at batch=1 replays sequential training exactly") {
-    val toy = Seq((0L, "aaab aaab ab")).toDF("doc_id", "text")
     def tbl(df: org.apache.spark.sql.DataFrame) = df.orderBy("rank").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    def vocab(df: org.apache.spark.sql.DataFrame) =
+      df.select(explode(graft.functions.wsTokens(col("text"))).as("w"))
+        .groupBy("w").count().collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val toy = Seq((0L, "aaab aaab ab")).toDF("doc_id", "text")
     val (batched, _) = TextOps.bpeTrainBatchedOn(toy, 8, 1)
-    assert(tbl(batched) == tbl(TextOps.bpeTrainOn(toy, 8)),
+    assert(tbl(batched) == sequentialBpe(vocab(toy), 8),
       "batch size 1 must degenerate to the sequential trainer")
     val corpus = graft.sources.Tables.load(spark, sf, "documents")
-    val (batchedCorpus, _) = TextOps.bpeTrainBatchedOn(corpus, TextOps.BpeTrainMerges, 1)
-    assert(tbl(batchedCorpus) == tbl(TextOps.bpeTrain(spark, sf)),
-      "batch size 1 must match the gated trainer on the real corpus")
+    assert(tbl(TextOps.bpeTrain(spark, sf)) ==
+      sequentialBpe(vocab(corpus), TextOps.BpeTrainMerges),
+      "batch size 1 must match the sequential trainer on the real corpus")
   }
 
   test("batched training reaches 1,000 merges in O(k/batch) rounds") {

@@ -128,7 +128,9 @@ class DedupSpec extends SparkSpec {
 
   test("simhash block pigeonhole finds EXACTLY the brute-force hamming<=2 pairs (uncapped)") {
     import org.apache.spark.sql.functions._
-    val got = Dedup.simhashPairs(spark, sf, Int.MaxValue)
+    val simhashed = Dedup.simhashed(spark, sf)
+    val census = Dedup.degenOf(Dedup.degenCensusOf(simhashed))
+    val got = Dedup.hammingPairs(simhashed, census, Int.MaxValue)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val h = Dedup.simhash(spark, sf)
     val brute = h.as("a").join(h.as("b"), col("a.doc_id") < col("b.doc_id"))
@@ -144,7 +146,8 @@ class DedupSpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     def cands(df: org.apache.spark.sql.DataFrame, mask: Boolean): Set[(Long, Long)] =
-      Dedup.hammingCandidates(df, maskDegenerate = mask)
+      Dedup.hammingCandidates(df,
+        if (mask) Dedup.degenOf(Dedup.degenCensusOf(df)) else Nil)
         .select("doc_a", "doc_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     // crafted: every doc's b1/b2 blocks are 0 (both buckets hold the whole
@@ -417,27 +420,6 @@ class DedupSpec extends SparkSpec {
     assert(banded(band)._2 > 0L, "banding should still surface some mid-band pairs")
   }
 
-  test("sampled recall audit: full sample IS the gated audit; sampling shrinks the truth side") {
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    // sampleMod = 1 must be byte-identical to the gated query
-    assert(rows(Dedup.lshRecallSampled(spark, sf, 1)) == rows(Dedup.lshRecall(spark, sf)),
-      "full sample must equal the gated audit exactly")
-    assert(rows(Dedup.lshRecallBandedSampled(spark, sf, 1)) ==
-      rows(Dedup.lshRecallBanded(spark, sf)))
-    // a real sample: strictly fewer truth pairs, none invented, still useful
-    val full = Dedup.lshRecall(spark, sf).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val sampled = Dedup.lshRecallSampled(spark, sf, 4).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(sampled.nonEmpty, "a mod-4 hash sample of the corpus must keep some truth pairs")
-    assert(sampled.keySet.subsetOf(full.keySet), "sampling cannot invent similarity bands")
-    sampled.foreach { case (band, n) =>
-      assert(n <= full(band), s"band $band grew under sampling: $n > ${full(band)}")
-    }
-    assert(sampled.values.sum < full.values.sum,
-      "the quadratic truth term must actually shrink under sampling")
-  }
   test("maximal-span audit: covered tokens equal the removal's union, " +
       "abutting windows merge into one span") {
     val sp = spark

@@ -201,8 +201,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("annIvf applies the sizing on an above-threshold generated corpus") {
     // 3200 vectors → K = ceil(√(3200/32)) = 10: the registry must train
-    // the GROWN geometry, and the auto path must equal an explicitly
-    // K=10-sized inline call — proving the gated entry applies the rule
+    // the GROWN geometry — the served centroids equal an explicitly
+    // K=10-sized training run, proving the gated entry applies the rule
     // rather than the fixed floor constant.
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_auto").toString
     graft.Scale.genEmbeddings(spark, 3200, dir)
@@ -211,11 +211,14 @@ class SimilaritySpec extends SparkSpec {
       .select("cent_id").collect().map(_.getInt(0)).toSet
     assert(cents.size > 8 && cents.subsetOf((0 until 10).toSet),
       s"trained geometry $cents is not the grown K=10 one")
-    val auto = pairs(Similarity.annIvf(spark, dir))
-    val explicit = pairs(Similarity.annIvfIters(spark, dir,
-      Similarity.KMeansIters, Similarity.NumProbes, Similarity.TrainMod, 10))
-    assert(auto == explicit,
-      "auto-sized IVF diverges from the explicitly K=10-sized one")
+    def centRows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+    val explicit = Similarity.trainIvfCentroids(spark, dir,
+      Similarity.KMeansIters, Similarity.TrainMod, 10)
+    assert(centRows(graft.operators.AnnModels.ivfCentroids(spark, dir)
+      .select("cent_id", "cent_emb")) == centRows(explicit),
+      "auto-sized IVF centroids diverge from the explicitly K=10-trained ones")
+    assert(pairs(Similarity.annIvf(spark, dir)).nonEmpty)
   }
 
   test("prototype pruning keeps the hard (low-ccos) fraction per cluster, quota met exactly") {
@@ -249,7 +252,13 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("trained IVF centroids do not lose recall vs the untrained init") {
-    val untrained = recallOf(Similarity.annIvfIters(spark, sf, 0))
+    // iters = 0: the untrained init (the first K sample vectors on the
+    // 1/1024 grid), scored through the same probe-and-rank seam
+    val cent0 = Similarity.trainIvfCentroids(spark, sf, 0,
+      Similarity.TrainMod, Similarity.ivfK(spark, sf)).localCheckpoint()
+    val asn0 = Similarity.ivfAssignWith(
+      graft.sources.Tables.load(spark, sf, "embeddings"), cent0)
+    val untrained = recallOf(Similarity.annIvfWith(spark, sf, cent0, asn0))
     val trained = recallOf(Similarity.annIvf(spark, sf))
     info(f"IVF recall@5: untrained=$untrained%.3f trained=$trained%.3f")
     assert(trained >= untrained,
