@@ -179,8 +179,10 @@ object Bench {
       queries.map(_._1).filter(failed))
   }
 
+  /** Args: `<sfDir> <warmupDir>` — the dataset to time, and a small one
+    * the untimed warm-up pass runs first. */
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val (sfDir, warmupDir) = (args(0), args(1))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val spark = GraftSession.local(cpus.toInt)
@@ -193,11 +195,13 @@ object Bench {
     if (loadAvg > 2.0)
       System.err.println(f"[bench] WARNING: load average $loadAvg%.2f at start — " +
         "timings will be contention-polluted; re-run on an idle box")
-    // Warmup pass at the smallest SF: JIT + codegen + shuffle machinery,
+    // Warmup pass at a small SF: JIT + codegen + shuffle machinery,
     // so timed numbers reflect steady-state throughput, not JVM startup.
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
+    SparkEntry.queries.foreach { case (name, fn) =>
+      try fn(spark, warmupDir).count()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up $name failed: ${e.getMessage}")
+      }
     }
     // Cold = first timed pass at the target SF (includes per-query codegen);
     // warm = best-of-2 after it (steady-state throughput, GC/scheduler noise
@@ -244,7 +248,7 @@ object Bench {
     val coldTotal = results.map(_._2._1).sum
     val warmTotal = results.map(_._2._2).sum
     val medTotal = medians.map(_._2).sum
-    val basePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_FULL.json")
+    val basePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
     // Prior clean artifact, read BEFORE this run overwrites it: a demoted
     // run re-emits it (self-defense). NOT the drift anchor — that is the
     // prior round's committed artifact below.

@@ -541,9 +541,8 @@ object AnnModels {
   }
 
   /** The marker records (corpus fingerprint, serving generation name),
-    * newline-separated. Pre-r12 markers carried the fingerprint only —
-    * their generation name is recomputed as `genName(fp)` (the naming
-    * those rounds used), so an existing store keeps serving unchanged. */
+    * newline-separated. A marker without a generation line reads as no
+    * marker, so its artifact retrains. */
   private def readMarker(fs: FileSystem, p: Path): Option[(String, String)] = {
     val m = markerPath(p)
     if (!fs.exists(m)) None
@@ -554,9 +553,10 @@ object AnnModels {
         val buf = new Array[Byte](8192)
         var n = in.read(buf)
         while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        val lines = new String(bytes.toByteArray, "UTF-8").split("\n", 2)
-        val fp = lines(0)
-        Some((fp, if (lines.length > 1 && lines(1).nonEmpty) lines(1) else genName(fp)))
+        new String(bytes.toByteArray, "UTF-8").split("\n", 2) match {
+          case Array(fp, gen) if gen.nonEmpty => Some((fp, gen))
+          case _ => None
+        }
       } finally in.close()
     }
   }
@@ -597,43 +597,6 @@ object AnnModels {
           st.getPath.getName.startsWith("g-") && !keep(st.getPath.getName))
         .foreach(st => fs.delete(st.getPath, true))
 
-  /** Roots already swept by [[migrateLegacy]] this JVM. */
-  private val sweptRoots = scala.collection.mutable.Set.empty[String]
-
-  /** One-time store migration (ADVICE r11): pre-r11 artifact entries were
-    * keyed with the corpus FINGERPRINT in the directory name and gated by
-    * parquet `_SUCCESS` files — the generational restructure orphaned
-    * them (their keys are never generated again, so they are never
-    * served and never GC'd: retained garbage in a long-lived
-    * SPARK_GRAFT_MODEL_DIR). Sweep once per JVM per root: a child
-    * directory that looks like an artifact key (`kind-hexhash`) but has
-    * neither a `_GRAFT_COMPLETE` marker nor any `g-*` generation
-    * subdirectory cannot belong to the current layout — delete it.
-    * The delete requires POSITIVE old-layout evidence — a parquet
-    * `_SUCCESS` file in the entry or one level down — not merely the
-    * absence of current-layout structure: a second JVM mid-first-train
-    * (key dir created, first `g-*` not yet written) or a foreign
-    * directory that happens to match the key pattern in a shared model
-    * dir has neither marker nor generations, and keying the delete on
-    * that absence alone would destroy it. An interrupted current-layout
-    * write leaves `g-*` subdirectories, which the predicate spares (its
-    * generations are collected by the normal GC on the next successful
-    * commit). */
-  private def migrateLegacy(fs: FileSystem, rootPath: Path): Unit =
-    if (sweptRoots.add(rootPath.toString) && fs.exists(rootPath)) {
-      val keyLike = "^[a-z0-9]+-[0-9a-f]{8,}$".r
-      fs.listStatus(rootPath).foreach { st =>
-        if (st.isDirectory && keyLike.matches(st.getPath.getName) &&
-            !fs.exists(markerPath(st.getPath)) &&
-            !fs.listStatus(st.getPath).exists(c =>
-              c.isDirectory && c.getPath.getName.startsWith("g-")) &&
-            (fs.exists(new Path(st.getPath, "_SUCCESS")) ||
-              fs.listStatus(st.getPath).exists(c => c.isDirectory &&
-                fs.exists(new Path(c.getPath, "_SUCCESS")))))
-          fs.delete(st.getPath, true)
-      }
-    }
-
   /** The generation path serving `fp` under stable key `p`, training it
     * first when absent or stale. Single-relation artifacts write the
     * parquet directly at the generation dir; multi-relation artifacts
@@ -649,18 +612,18 @@ object AnnModels {
     // the serving generation, and GC always keeps that generation plus
     // the previous one — so the common case (a fresh artifact exists)
     // never waits behind another artifact's corpus-scale training under
-    // the global monitor. Training, the re-check that guards it, and the
-    // legacy sweep still serialize globally. Test roots stay safe: suites
-    // run sequentially in the forked test JVM, so a withRoot swap can
-    // never interleave with an unlocked read.
+    // the global monitor. Training and the re-check that guards it still
+    // serialize globally. Test roots stay safe: suites run sequentially in
+    // the forked test JVM, so a withRoot swap can never interleave with an
+    // unlocked read.
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val fp0 = fingerprint(s, dir, table)
     readMarker(fs, p) match {
       // Belt-and-braces with the rename-commit: serve lock-free only when
       // the named generation directory actually exists — a marker that
-      // names a collected or never-written generation (torn legacy marker,
-      // foreign tampering) falls through to the locked path, which
-      // re-checks under the monitor and retrains if needed.
+      // names a collected or never-written generation (foreign tampering)
+      // falls through to the locked path, which re-checks under the
+      // monitor and retrains if needed.
       case Some((mfp, gen)) if mfp == fp0 && fs.exists(new Path(p, gen)) =>
         new Path(p, gen)
       case _ => ensureGenLocked(s, fs, p, dir, table, name)(write)
@@ -670,7 +633,6 @@ object AnnModels {
   private def ensureGenLocked(s: SparkSession, fs: FileSystem, p: Path,
       dir: String, table: String, name: String)(write: Path => Unit): Path =
     synchronized {
-      migrateLegacy(fs, p.getParent)
       var fp = fingerprint(s, dir, table)
       readMarker(fs, p) match {
         case Some((mfp, gen)) if mfp == fp && fs.exists(new Path(p, gen)) =>

@@ -34,20 +34,12 @@ object Dedup {
   val ShingleN = 3
   val JaccardThreshold = 0.2
   val CosineThreshold = 0.4
-  /** Default LSH bucket-size cap (gated path AND oracle). A dense bucket —
+  /** Bucket-size cap of the minhash, simhash-block, posting-list and
+    * persisted-index paths under the shared salted-bucket policy
+    * ([[saltedBuckets]]; gated path AND oracle). A dense bucket —
     * boilerplate or empty-ish docs all agreeing on a minhash — expands
-    * quadratically on one task at 100 TB. The shared policy on EVERY
-    * candidate path (minhash r=1/banded, simhash blocks, ngram posting
-    * lists, knn buckets): count bucket sizes with a broadcast aggregate,
-    * then SALT oversized buckets into ceil(n/cap) md5-hash (hash52) groups
-    * — uniform under ANY id distribution, so a strided id layout cannot
-    * collapse a bucket into one oversized group the way raw id-mod salting
-    * could. Per-group quadratic work and collect_list buffers stay
-    * bounded at ~cap while every doc keeps in-group candidates (dropping
-    * the bucket would silently lose exactly the near-dup-dense regions
-    * dedup exists for; see DedupSpec degenerate-corpus spec). 64 is far
-    * above any organic bucket in the test corpora (max observed: 19 at
-    * sf0.1), so salted output == uncapped output on real data. */
+    * quadratically on one task at 100 TB. 64 is far above any organic
+    * bucket in the test corpora (max observed: 19 at sf0.1). */
   val MaxBucket = 64
 
   private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
@@ -84,10 +76,8 @@ object Dedup {
     * Signatures bucket by (band, hash) in one shuffle and pairs expand
     * inside each (bucket, salt) group — no self-join that would reshuffle
     * the signature relation against itself. Bucket sizes are bounded by
-    * LSH design (a bucket == docs agreeing on a minhash) AND by salting:
-    * this is the salted variant by default — the oracle applies the same
-    * salt arithmetic — so one degenerate bucket can never pin a 100 TB run
-    * to a single quadratic task, and its near-dup pairs still surface. */
+    * LSH design (a bucket == docs agreeing on a minhash) AND by the shared
+    * salted-bucket policy ([[saltedBuckets]]), which the oracle replays. */
   def minhashLsh(s: SparkSession, dir: String): DataFrame =
     // r16: the candidate set is a registry artifact (AnnModels.candPairs
     // — the hamming pair-store discipline): its six consumers share one
@@ -110,21 +100,11 @@ object Dedup {
     * all-pairs; the XOR-popcount verification runs only on candidates.
     *
     * Boilerplate-heavy corpora still concentrate organic near-dup clusters
-    * into single buckets, so oversized buckets are SALTED into
-    * ceil(n/MaxBucket) md5-hash groups — pairs expand only
-    * within a group (bounded quadratic work, cross-salt pairs forgone)
-    * rather than dropping the bucket and silently losing exactly the dense
-    * regions dedup exists for.
-    *
-    * The bucket census is a `groupBy(bi, bv).count()` (map-side partial
-    * aggregation → one tiny row per OVERSIZED bucket) broadcast back with a
-    * left join — document rows never move to be counted. The obvious
-    * `count over Window.partitionBy(bucket)` would hash-partition the rows
-    * on the bucket key and buffer each dense bucket on ONE task — i.e.
-    * re-concentrate the very skew the salt exists to defuse — before the
-    * salt is even computed. The census pass recomputes the per-doc simhash
-    * (embarrassingly parallel CPU); that trade is strictly better at scale
-    * than a windowed buffer of the densest buckets. */
+    * into single buckets, so block buckets run under the shared
+    * salted-bucket policy ([[saltedBuckets]]). Its census pass recomputes
+    * the per-doc simhash (embarrassingly parallel CPU); that trade is
+    * strictly better at scale than a windowed buffer of the densest
+    * buckets. */
   def simhashPairs(s: SparkSession, dir: String): DataFrame =
     // the verified pair relation is itself a registry artifact (r15,
     // VERDICT r14 #4's endpoint): the per-invocation cost of the gated
@@ -160,7 +140,7 @@ object Dedup {
   /** Hamming-<= `MaxHamming` pairs over ANY (doc_id, h: 64-bit) relation —
     * the engine behind `simhashPairs`, reused verbatim by the multimodal
     * perceptual-hash pairing (Multimodal.phashPairs): 3-block pigeonhole
-    * candidates under the shared salted-census policy, XOR-popcount verify
+    * candidates under the shared salted-bucket policy, XOR-popcount verify
     * on candidates only. `degen` is the relation's degenerate-block census
     * ([[degenOf]] of [[degenCensusOf]], registry-served on the gated
     * paths); an empty census masks nothing. */
@@ -228,18 +208,7 @@ object Dedup {
             col("b.bi").as("bi"), col("b.bv").as("bv"))
           .localCheckpoint()
       }
-    // Only buckets past the cap need a group count (ceil(bn/cap) = 1
-    // otherwise), so the broadcast side is the dense outliers alone.
-    val dense = blocked.groupBy("bi", "bv").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > maxBucket)
-    blocked.join(broadcast(dense), Seq("bi", "bv"), "left")
-      .withColumn("salt", pmod(hash52(col("doc_id")),
-        coalesce(expr(s"(bn + ${maxBucket - 1L}) DIV ${maxBucket.toLong}"), lit(1L))))
-      .groupBy("bi", "bv", "salt")
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("h")))).as("ds"))
-      // hash splits can still fluctuate; 2x cap is the safety net
-      .filter(size(col("ds")) > 1 && size(col("ds")) <= lit(2L * maxBucket))
-      .select(explode(PairExpressions.orderedPairs(col("ds"))).as("p"))
+    bucketPairs(blocked, Seq("bi", "bv"), "doc_id", struct(col("doc_id"), col("h")), maxBucket)
       .select(col("p.a.doc_id").as("doc_a"), col("p.a.h").as("ha"),
         col("p.b.doc_id").as("doc_b"), col("p.b.h").as("hb"))
       .distinct()
@@ -291,7 +260,7 @@ object Dedup {
     * only pairs sharing >= 1 shingle are scored (never all pairs).
     * Posting lists are the same quadratic hazard as LSH buckets one tier
     * down — a stopword-like shingle's list grows with the corpus — so
-    * oversized lists are salted with the shared broadcast-census policy.
+    * posting lists run under the shared salted-bucket policy.
     * A pair's intersection then counts only shingles where both docs land
     * in the same salt group: for lists under the cap (all organic lists in
     * the test corpora) that is every shared shingle, and for dense lists
@@ -389,17 +358,9 @@ object Dedup {
       .filter(size(col("sh")) > 0)
       .select(col("doc_id"), size(col("sh")).as("n"), explode(col("sh")).as("gRaw"))
       .select(col("doc_id"), col("n"), hash64(col("gRaw")).as("g"))
-    val dense = sh.groupBy("g").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > MaxBucket)
-    // Inverted index: one shuffle of (shingle -> [docs]); pairs expand
-    // within each (posting list, salt) group (sorted, so doc_a < doc_b by
-    // construction), then one aggregation counts shared shingles per pair.
-    sh.join(broadcast(dense), Seq("g"), "left")
-      .withColumn("salt", pmod(hash52(col("doc_id")), saltGroups))
-      .groupBy("g", "salt")
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ds"))
-      .filter(size(col("ds")) > 1 && size(col("ds")) <= lit(2L * MaxBucket))
-      .select(explode(PairExpressions.orderedPairs(col("ds"))).as("p"))
+    // Inverted index: one shuffle of (shingle -> [docs]) pairs each
+    // posting list, then one aggregation counts shared shingles per pair.
+    bucketPairs(sh, Seq("g"), "doc_id", struct(col("doc_id"), col("n")), MaxBucket)
       .groupBy(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         col("p.a.n").as("na"), col("p.b.n").as("nb"))
       .agg(count(lit(1)).as("inter"))
@@ -585,28 +546,16 @@ object Dedup {
   /** Label blocks are COARSE — a block holds corpus/|labels| vectors, so an
     * unsalted label self-join is an unbounded quadratic at 100 TB (think
     * "en" as a label). Cap sized above the organic block sizes of every
-    * test corpus (max observed: 218 at sf0.1) so salting is a no-op on real
-    * test data while still bounding any dense label at scale. */
+    * test corpus (max observed: 218 at sf0.1). */
   val LabelCap = 256
 
   /** Embedding-cosine near-dup pairs, blocked by `label` (stand-in for any
     * coarse clustering key at scale). Double-precision left-to-right dot.
     *
-    * The block self-join runs under the SAME salted-bucket skew policy as
-    * every other candidate path (minhash r=1/banded, simhash blocks, ngram
-    * posting lists, knn buckets): a broadcast census counts label sizes
-    * (map-side partial agg — vector rows never move to be counted), ships
-    * back ONLY oversized labels, and splits them into ceil(n/LabelCap)
-    * salt groups keyed on the md5 hash of the vec_id (hash52) — uniform
-    * regardless of the id distribution, so strided or residue-correlated
-    * ids cannot collapse a dense label into one oversized group the way a
-    * raw vec_id-mod salt could. Pairs expand only within a group, so
-    * per-task quadratic work stays ~LabelCap^2/2. The 2x-cap group census
-    * remains as a safety net, but with a uniform hash the overflow it
-    * guards against needs a ~2x binomial deviation at n >= 256 — vanishing
-    * at any scale, rather than constructible by an adversarial id stride.
-    * Cross-salt pairs are forgone — the same bounded recall trade the LSH
-    * paths make, never a silent full-block loss. */
+    * The block self-join runs over [[boundedBuckets]] at [[LabelCap]] —
+    * the same salted-bucket policy as every other candidate path — so
+    * pairs join only within a (label, salt) group: a self-join, not a
+    * collected list, because each side carries its embedding. */
   def embeddingNearDup(s: SparkSession, dir: String): DataFrame =
     // r17: served (AnnModels.embedPairs) — the embedding near-dup pair
     // table is the SemDeDup-style relation a deployment persists nightly;
@@ -614,16 +563,8 @@ object Dedup {
     AnnModels.embedPairs(s, dir)
 
   private[graft] def embeddingNearDupInline(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.load(s, dir, "embeddings")
-    val dense = e.groupBy("label").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > LabelCap)
-    val salted = e.join(broadcast(dense), Seq("label"), "left")
-      .withColumn("salt", pmod(hash52(col("vec_id")),
-        coalesce(expr(s"(bn + ${LabelCap - 1L}) DIV ${LabelCap.toLong}"), lit(1L))))
-      .select(col("label"), col("salt"), col("vec_id"), col("embedding"))
-    val oversized = salted.groupBy("label", "salt").agg(count(lit(1)).as("gn"))
-      .filter(col("gn") > 2L * LabelCap)
-    val bounded = salted.join(broadcast(oversized), Seq("label", "salt"), "left_anti")
+    val (bounded, _) = boundedBuckets(Tables.load(s, dir, "embeddings"),
+      Seq("label"), "vec_id", LabelCap)
     bounded.as("a")
       .join(bounded.as("b"), col("a.label") === col("b.label") &&
         col("a.salt") === col("b.salt") && col("a.vec_id") < col("b.vec_id"))
@@ -633,29 +574,13 @@ object Dedup {
   }
 
   /** Skew-guarded LSH candidate generation (the implementation behind the
-    * gated `minhashLsh`): buckets above `maxBucket` are SALTED into
-    * ceil(n/maxBucket) md5-hash (hash52) groups — the one skew
-    * policy every candidate path shares (see simhashPairs). Dense buckets
+    * gated `minhashLsh`): (band, h) buckets paired under the shared
+    * salted-bucket policy ([[bucketPairs]]) at `maxBucket`. Dense buckets
     * are exactly the near-dup-dense regions dedup exists for; dropping
     * them (the round-1/2 policy here) silently disconnected the densest
-    * duplicate clusters from `clusterAssign`. Per-group quadratic work
-    * stays bounded at (2*maxBucket)^2/2; cross-salt pairs are forgone
-    * (bounded recall trade, not silent loss — every doc keeps
-    * ~maxBucket in-bucket partners). The census is the same broadcast
-    * aggregate as simhashPairs: count per bucket, keep only oversized
-    * buckets, broadcast back — bucket rows never move to be counted. */
+    * duplicate clusters from `clusterAssign`. */
   def minhashLshCapped(s: SparkSession, dir: String, maxBucket: Int): DataFrame = {
-    val sig = bandedSignatures(s, dir)
-    val dense = sig.groupBy("band", "h").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > maxBucket)
-    sig.join(broadcast(dense), Seq("band", "h"), "left")
-      .withColumn("salt", pmod(hash52(col("doc_id")),
-        coalesce(expr(s"(bn + ${maxBucket - 1L}) DIV ${maxBucket.toLong}"), lit(1L))))
-      .groupBy("band", "h", "salt")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      // hash splits can still fluctuate; 2x cap is the safety net
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= lit(2L * maxBucket))
-      .select(explode(PairExpressions.orderedPairs(col("ids"))).as("p"))
+    bucketPairs(bandedSignatures(s, dir), Seq("band", "h"), "doc_id", col("doc_id"), maxBucket)
       .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
       .distinct()
   }
@@ -692,14 +617,7 @@ object Dedup {
         element_at(col("sig"), 2 * b + 2).as("h2"))): _*)).as("t"))
       .select(col("doc_id"), col("t.band").as("band"),
         col("t.h1").as("h1"), col("t.h2").as("h2"))
-    val dense = bb.groupBy("band", "h1", "h2").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > MaxBucket)
-    bb.join(broadcast(dense), Seq("band", "h1", "h2"), "left")
-      .withColumn("salt", pmod(hash52(col("doc_id")), saltGroups))
-      .groupBy("band", "h1", "h2", "salt")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= lit(2L * MaxBucket))
-      .select(explode(PairExpressions.orderedPairs(col("ids"))).as("p"))
+    bucketPairs(bb, Seq("band", "h1", "h2"), "doc_id", col("doc_id"), MaxBucket)
       .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
       .distinct()
   }
@@ -921,11 +839,11 @@ object Dedup {
     * group. The clustering is the SAME trained coarse quantizer as
     * sim_ann_ivf (one model, two consumers — exactly how production
     * pipelines amortize the k-means); within-cluster pairs run under the
-    * shared salted-census policy (LabelCap groups keyed on hash52, as
-    * dedup_embedding — learned cent_id simply replaces the static label
-    * column); the duplicate groups are connected components over the
-    * thresholded pairs. Output: one row per surviving canonical vector
-    * with its representation count.
+    * shared salted-bucket policy at LabelCap, as dedup_embedding — learned
+    * cent_id simply replaces the static label column; the duplicate
+    * groups are connected components over the thresholded pairs. Output:
+    * one row per surviving canonical vector with its representation
+    * count.
     *
     * The paper deduplicates at cosine ~0.95 on web embeddings; the test
     * corpus shares `CosineThreshold` so the synthetic embeddings yield a
@@ -946,15 +864,7 @@ object Dedup {
     val assign = AnnModels.ivfAssign(s, dir)
       .join(Tables.load(s, dir, "embeddings"), Seq("vec_id"))
       .select(col("vec_id"), col("cent_id"), col("embedding"))
-    val dense = assign.groupBy("cent_id").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > LabelCap)
-    val salted = assign.join(broadcast(dense), Seq("cent_id"), "left")
-      .withColumn("salt", pmod(hash52(col("vec_id")),
-        coalesce(expr(s"(bn + ${LabelCap - 1L}) DIV ${LabelCap.toLong}"), lit(1L))))
-      .select(col("cent_id"), col("salt"), col("vec_id"), col("embedding"))
-    val oversized = salted.groupBy("cent_id", "salt").agg(count(lit(1)).as("gn"))
-      .filter(col("gn") > 2L * LabelCap)
-    val bounded = salted.join(broadcast(oversized), Seq("cent_id", "salt"), "left_anti")
+    val (bounded, _) = boundedBuckets(assign, Seq("cent_id"), "vec_id", LabelCap)
     val pairs = bounded.as("a")
       .join(bounded.as("b"), col("a.cent_id") === col("b.cent_id") &&
         col("a.salt") === col("b.salt") && col("a.vec_id") < col("b.vec_id"))
@@ -1280,34 +1190,89 @@ object Dedup {
       .select(col("doc_id"), col("source"))
   }
 
-  /** ceil(bn/MaxBucket) salt groups of a census-joined bucket row; 1 for
-    * a bucket under the cap (absent from the dense census). */
-  private def saltGroups: Column =
-    coalesce(expr(s"(bn + ${MaxBucket - 1L}) DIV ${MaxBucket.toLong}"), lit(1L))
+  // --- the salted-bucket skew policy ---------------------------------------
 
-  /** The ONE salted-index policy both the batch ([[incrementalLshMatch]])
-    * and streaming (EventStreams.incrementalLshTransform) probe forms
-    * apply, so a degenerate dense bucket is capped identically on both
-    * paths: index rows of an oversized (band, h) bucket salt into
-    * ceil(bn/cap) hash52 groups, and any salt group still above 2x cap
-    * (an adversarial single-hash pile-up hash52 cannot spread) is dropped
-    * from the index side entirely. Returns (bounded index keyed
+  /** ceil(bn/cap) salt groups of a census-joined bucket row; 1 for a
+    * bucket under the cap (absent from the dense census). */
+  private def saltGroups(cap: Int): Column =
+    coalesce(expr(s"(bn + ${cap - 1L}) DIV ${cap.toLong}"), lit(1L))
+
+  /** The largest (keys, salt) group the policy keeps. */
+  private def groupBound(cap: Int): Long = 2L * cap
+
+  /** The ONE salted-bucket skew policy every candidate path shares —
+    * minhash r=1 and banded buckets, simhash/phash/audio pigeonhole
+    * blocks, shingle posting lists, embedding labels and IVF cells,
+    * knn-graph buckets, the persisted LSH and phash indexes. Each expands
+    * a bucket into its pairs, and a dense bucket (boilerplate, empty-ish
+    * docs, a whole embedding cluster) expands quadratically on one task.
+    *  - Census: `groupBy(keys).count()` keeping only buckets over `cap`,
+    *    broadcast back with a left join. Map-side partial aggregation, so
+    *    rows never move to be counted; a `count over
+    *    Window.partitionBy(keys)` would buffer each dense bucket on one
+    *    task before the salt exists, re-concentrating the skew it defuses.
+    *  - Salt: a bucket of bn > cap rows splits into ceil(bn/cap) groups by
+    *    `pmod(hash52(id), ceil(bn/cap))`; a bucket under the cap is one
+    *    group. hash52 is uniform under any id layout, so strided ids cannot
+    *    collapse a bucket into one group the way raw id-mod salting could.
+    *  - 2×cap net: hash splits still fluctuate, and a single-hash pile-up
+    *    cannot be spread at all, so a (keys, salt) group above 2×cap rows
+    *    is dropped ([[boundedBuckets]], [[bucketPairs]]).
+    * Pairs expand only within a group: per-group quadratic work stays
+    * under (2·cap)²/2 and every doc of a dense bucket keeps ~cap in-group
+    * partners. Cross-salt pairs are forgone — a bounded recall trade,
+    * never a silent loss of the near-dup-dense regions dedup exists for.
+    * Each cap sits above every organic bucket of the test corpora, so
+    * salted output == uncapped output there. Group counts and bounds are
+    * Long: a cap of Int.MaxValue means uncapped. The DuckDB oracles mirror
+    * the policy in SQL.
+    *
+    * Returns `df` with a `salt` column, and the dense census (keys, bn) a
+    * probe side fans out over ([[saltedProbeSide]]). */
+  private[graft] def saltedBuckets(df: DataFrame, keys: Seq[String], id: String,
+      cap: Int): (DataFrame, DataFrame) = {
+    val dense = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("bn"))
+      .filter(col("bn") > cap)
+    (df.join(broadcast(dense), keys, "left")
+      .withColumn("salt", pmod(hash52(col(id)), saltGroups(cap))), dense)
+  }
+
+  /** [[saltedBuckets]] minus every (keys, salt) group over 2×cap rows —
+    * the form for paths that self-join or probe the salted rows — and
+    * the dense census. */
+  private[graft] def boundedBuckets(df: DataFrame, keys: Seq[String], id: String,
+      cap: Int): (DataFrame, DataFrame) = {
+    val (salted, dense) = saltedBuckets(df, keys, id, cap)
+    val groupKeys = keys :+ "salt"
+    val oversized = salted.groupBy(groupKeys.map(col): _*).agg(count(lit(1)).as("gn"))
+      .filter(col("gn") > groupBound(cap))
+    (salted.join(broadcast(oversized), groupKeys, "left_anti"), dense)
+  }
+
+  /** The within-group pairs of `df`'s buckets under the shared policy: one
+    * shuffle collects each (keys, salt) group's sorted `payload`, groups of
+    * 2 to 2×cap rows explode into ordered pairs — column `p` of struct
+    * (a, b), a < b in payload order — with no self-join. */
+  private[graft] def bucketPairs(df: DataFrame, keys: Seq[String], id: String,
+      payload: Column, cap: Int): DataFrame =
+    saltedBuckets(df, keys, id, cap)._1
+      .groupBy((keys :+ "salt").map(col): _*)
+      .agg(sort_array(collect_list(payload)).as("ds"))
+      .filter(size(col("ds")) > 1 && size(col("ds")) <= lit(groupBound(cap)))
+      .select(explode(PairExpressions.orderedPairs(col("ds"))).as("p"))
+
+  /** The index side of a persisted-index probe under the shared policy at
+    * [[MaxBucket]], used by both the batch ([[incrementalLshMatch]]) and
+    * streaming (EventStreams.incrementalLshTransform) forms so a dense
+    * bucket is capped identically on both. Returns (bounded index keyed
     * (band, h, salt) -> corpus_id, dense-bucket census for the probe side).
     * `keep` rides extra columns (e.g. the full 64-bit hash a pigeonhole
     * probe must verify against) through the policy untouched. */
   private[graft] def saltedIndexSide(index: DataFrame,
       keep: Seq[String] = Nil): (DataFrame, DataFrame) = {
-    val dense = index.groupBy("band", "h").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > MaxBucket)
-    val idxSalted = index.join(broadcast(dense), Seq("band", "h"), "left")
-      .withColumn("salt", pmod(hash52(col("doc_id")), saltGroups))
-    val oversized = idxSalted.groupBy("band", "h", "salt")
-      .agg(count(lit(1)).as("gn")).filter(col("gn") > 2L * MaxBucket)
-    val idxBounded = idxSalted
-      .join(broadcast(oversized), Seq("band", "h", "salt"), "left_anti")
-      .select(Seq(col("band"), col("h"), col("salt"),
-        col("doc_id").as("corpus_id")) ++ keep.map(col): _*)
-    (idxBounded, dense)
+    val (bounded, dense) = boundedBuckets(index, Seq("band", "h"), "doc_id", MaxBucket)
+    (bounded.select(Seq(col("band"), col("h"), col("salt"),
+      col("doc_id").as("corpus_id")) ++ keep.map(col): _*), dense)
   }
 
   /** Probe-side half of the shared policy: each probe signature row fans
@@ -1317,7 +1282,7 @@ object Dedup {
   private[graft] def saltedProbeSide(sigs: DataFrame, dense: DataFrame,
       keep: Seq[String] = Nil): DataFrame =
     sigs.join(broadcast(dense), Seq("band", "h"), "left")
-      .withColumn("salt", explode(sequence(lit(0L), saltGroups - 1)))
+      .withColumn("salt", explode(sequence(lit(0L), saltGroups(MaxBucket) - 1)))
       .select(Seq(col("band"), col("h"), col("salt"),
         col("doc_id")) ++ keep.map(col): _*)
 
@@ -1328,15 +1293,13 @@ object Dedup {
     * a nightly batch costs |batch| signature passes + one join against the
     * index, never a corpus recompute (plan-asserted in DedupSpec).
     *
-    * Skew policy is the shared salted census, adapted to a two-relation
-    * join: INDEX rows of an oversized (band, h) bucket salt into
-    * ceil(bn/cap) hash52 groups (2x-cap net as everywhere), and each BATCH
-    * row probes EVERY salt group of its bucket — replication lands on the
-    * small batch side only and only for dense buckets, so per-task join
-    * work stays ~cap x |batch bucket| while recall within the bounded
-    * groups is total (a batch doc can never miss an index partner because
-    * of the salt). Output: per batch doc, the distinct-corpus-match count
-    * and a novelty flag. */
+    * Skew policy is the shared salted-bucket policy, adapted to a
+    * two-relation join: INDEX rows are salted and bounded
+    * ([[saltedIndexSide]]), and each BATCH row probes EVERY salt group of
+    * its bucket ([[saltedProbeSide]]) — so per-task join work stays
+    * ~cap x |batch bucket| while recall within the bounded groups is
+    * total. Output: per batch doc, the distinct-corpus-match count and a
+    * novelty flag. */
   def incrementalLshMatch(batch: DataFrame, index: DataFrame): DataFrame = {
     val (idxBounded, dense) = saltedIndexSide(index)
     val probes = saltedProbeSide(lshIndexOf(batch), dense)

@@ -119,16 +119,10 @@ object Extras {
     * Unlike HLL, KMV over md5 is engine-portable: estimate =
     * (k-1) / (h_k / 16^13) where h_k is the k-th smallest 52-bit hash of
     * the distinct 3-shingles, so the oracle replays it bit for bit.
-    *
-    * Scale shape: the k-th smallest is found in two bounded phases — rank
-    * within (source, h%256) salt buckets keeps only k rows per bucket
-    * (no task ever sorts a whole source), then the global rank runs over
-    * <= 256k survivors per source. Exact min-k: a global top-k member is
-    * within the top-k of its own salt bucket by construction. The exact
-    * distinct count rides along for the accuracy audit (spec asserts the
-    * 1/sqrt(k) error band); the sketch is the product. */
+    * The k-th smallest comes from [[kmvKth]]. The exact distinct count
+    * rides along for the accuracy audit (spec asserts the 1/sqrt(k) error
+    * band); the sketch is the product. */
   def sketchDistinct(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // ONE corpus explode + distinct for BOTH consumers (r17, VERDICT r16
     // #7): without the materialization the kth chain and the exact count
     // each re-scan and re-aggregate the full (source, g) relation — the
@@ -138,24 +132,37 @@ object Extras {
     val hashed = Tables.load(s, dir, "documents")
       .select(col("source"), explode(ShingleExpressions.shingles(col("text"), 3)).as("g"))
       .distinct()
-      .select(col("source"), col("g"),
-        conv(substring(md5(col("g").cast("binary")), 1, 13), 16, 10).cast("long").as("h"))
+      .select(col("source"), col("g"), hash52(col("g")).as("h"))
       .localCheckpoint()
-    val wSalt = Window.partitionBy(col("source"), pmod(col("h"), lit(256)))
-      .orderBy(col("h").asc, col("g").asc)
-    val wGlobal = Window.partitionBy(col("source")).orderBy(col("h").asc, col("g").asc)
-    val kth = hashed
+    val exact = hashed.groupBy("source").agg(count(lit(1)).as("n_exact"))
+    kmvKth(hashed, "source", "g").join(exact, Seq("source"))
+      .select(col("source"), col("n_exact"), col("h_k"), kmvEstimate(col("h_k")).as("est_distinct"))
+  }
+
+  /** (key, h_k): the k-th smallest 52-bit hash `h` per `key` of a
+    * (key, item, h) relation, ties ordered by `item`; a key holding fewer
+    * than [[KmvK]] items has no row. Found in two bounded phases — rank
+    * within (key, h%256) salt buckets keeps only k rows per bucket (no
+    * task ever sorts a whole key), then the global rank runs over <= 256k
+    * survivors per key. Exact min-k: a global top-k member is within the
+    * top-k of its own salt bucket by construction. */
+  private[graft] def kmvKth(hashed: DataFrame, key: String, item: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wSalt = Window.partitionBy(col(key), pmod(col("h"), lit(256)))
+      .orderBy(col("h").asc, col(item).asc)
+    val wGlobal = Window.partitionBy(col(key)).orderBy(col("h").asc, col(item).asc)
+    hashed
       .withColumn("rs", row_number().over(wSalt)).filter(col("rs") <= KmvK)
       .withColumn("rn", row_number().over(wGlobal)).filter(col("rn") === KmvK)
-      .select(col("source"), col("h").as("h_k"))
-    val exact = hashed.groupBy("source").agg(count(lit(1)).as("n_exact"))
-    // floor(x*1e6+0.5), not round(): engine round() implementations
-    // disagree on .5e-7 half-way quotients; floor over identical IEEE
-    // doubles cannot.
-    kth.join(exact, Seq("source"))
-      .select(col("source"), col("n_exact"), col("h_k"),
-        (floor(lit((KmvK - 1) * Two52) / col("h_k") * 1e6 + 0.5) / 1e6).as("est_distinct"))
+      .select(col(key), col("h").as("h_k"))
   }
+
+  /** The KMV distinct estimate (k-1)·2^52/h_k on the 1e-6 grid.
+    * floor(x*1e6+0.5), not round(): engine round() implementations
+    * disagree on .5e-7 half-way quotients; floor over identical IEEE
+    * doubles cannot. */
+  private[graft] def kmvEstimate(hk: Column): Column =
+    floor(lit((KmvK - 1) * Two52) / hk * 1e6 + 0.5) / 1e6
 
   val CmsDepth = 4
   val CmsWidth = 256

@@ -468,11 +468,10 @@ object Similarity {
     * bucket, so bucket population must track corpus/buckets as data grows
     * (the PlanesPerTable ~ log2(N / targetBucketSize) rule). Clustered
     * embeddings concentrate whole clusters into single buckets regardless,
-    * so oversized buckets are SALTED — split into ceil(n/cap) deterministic
-    * md5-hash (hash52) groups, pairs expanding only within a group — instead of
-    * dropped: every vector keeps neighbors (dropping a dense bucket
-    * disconnects exactly the vectors that most need dedup) while per-group
-    * quadratic work stays bounded. */
+    * so buckets run under the shared salted-bucket policy
+    * (Dedup.saltedBuckets) at [[GraphBucketCap]] instead of dropping dense
+    * ones: dropping a dense bucket disconnects exactly the vectors that
+    * most need dedup. */
   val GraphPlanesPerTable = 5
   val GraphBucketCap = 192
 
@@ -565,16 +564,6 @@ object Similarity {
           shiftright(col("sig"), t * planesPerTable).bitwiseAND(lit(mask)).as("bucket"))): _*)).as("tb"))
       .select(col("vec_id"), col("embedding"),
         col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-    // Bucket census as a groupBy(...).count() broadcast back — map-side
-    // partial aggregation means vector rows never move to be counted, and
-    // the broadcast side holds ONLY the oversized buckets (ceil(bn/cap) = 1
-    // below the cap, so sparse buckets need no count at all). A
-    // `count over Window.partitionBy(t, bucket)` here would buffer each
-    // dense bucket on one task BEFORE the salt exists — re-concentrating
-    // the skew this salting defuses. Census recomputes the signature scan
-    // (parallel CPU) — strictly cheaper at scale than a windowed buffer.
-    val dense = sigd.groupBy("t", "bucket").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > bucketCap)
     // pairs explode WITH both embeddings in the row, cosine fuses into
     // the same projection, and only then are cross-table duplicates
     // dropped — the distinct runs on the NARROW (src, dst, cos) relation
@@ -582,14 +571,8 @@ object Similarity {
     // every candidate with a 64-float array attached. Cosine is exactly
     // symmetric (per-element products commute, dim-order accumulation),
     // so one score serves both edge directions.
-    val half = sigd.join(broadcast(dense), Seq("t", "bucket"), "left")
-      .withColumn("salt", pmod(hash52(col("vec_id")),
-        coalesce(expr(s"(bn + ${bucketCap - 1}) DIV $bucketCap"), lit(1L))))
-      .groupBy("t", "bucket", "salt")
-      .agg(sort_array(collect_list(struct(col("vec_id"), col("embedding")))).as("ds"))
-      // hash splits can still fluctuate; 2x cap is the safety net
-      .filter(size(col("ds")) > 1 && size(col("ds")) <= 2 * bucketCap)
-      .select(explode(PairExpressions.orderedPairs(col("ds"))).as("p"))
+    val half = Dedup.bucketPairs(sigd, Seq("t", "bucket"), "vec_id",
+        struct(col("vec_id"), col("embedding")), bucketCap)
       .select(col("p.a.vec_id").as("src"), col("p.b.vec_id").as("dst"),
         round(cosineSim(col("p.a.embedding"), col("p.b.embedding")), 4).as("cos"))
       .distinct()

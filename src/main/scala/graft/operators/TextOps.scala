@@ -1638,7 +1638,6 @@ object TextOps {
     qualityModelWith(d, perplexityOf(d))
 
   private[graft] def qualityModelWith(d: DataFrame, ppl: DataFrame): DataFrame = {
-    def q4(c: Column): Column = floor(c * 1e4 + 0.5).cast("long")
     // Deliberately the FEATURE-JOIN form, not one fused [[logitBaseCol]]
     // projection: the fused expression falls out of whole-stage codegen
     // (HOF-heavy) and interpreted eval gets no common-subexpression
@@ -1668,21 +1667,18 @@ object TextOps {
         when(logit8 >= 0, 1).otherwise(0).as("model_keep"))
   }
 
-  /** The six quality features as exact fixed-point longs (q4 ratios on
-    * the 0..10000 grid, NLL in 1e4 nats, length as a 0..10000 fraction of
-    * [[QmLenCap]]) — the ONE feature relation both sides of the trained
-    * quality gate consume, so train-time and score-time features can
-    * never drift. */
-  private[graft] def qualityFeaturesOf(d: DataFrame, ppl: DataFrame): DataFrame = {
-    def q4(c: Column): Column = floor(c * 1e4 + 0.5).cast("long")
-    // ONE corpus scan (r14): the quality ratios and the 3-gram repetition
-    // signal are all per-row expressions over `text`, so they fuse into a
-    // single codegen'd projection — the previous qualityOf ⋈ repetitionOf
-    // form paid a second full scan plus a corpus-sized equijoin for what
-    // is row-local arithmetic (measured at ×100: the feature checkpoint
-    // dominated the whole LR chain). Each feature replays the EXACT
-    // rounding steps of its source relation (round-4 → q4 grid), so the
-    // fused column values are bit-identical to the join form.
+  /** A ratio on the exact 0..10000 fixed-point grid (half-up). */
+  private def q4(c: Column): Column = floor(c * 1e4 + 0.5).cast("long")
+
+  /** The five per-row quality features over `text` — stopword, unigram
+    * repetition, punctuation and 3-gram repetition ratios as q4 longs, and
+    * the token count capped at [[QmLenCap]] — the ONE definition the
+    * feature relation ([[qualityFeaturesOf]]) and the streaming logit
+    * ([[logitBaseCol]]) both read. Each replays the EXACT rounding steps
+    * of its source relation (qualityOf's round-4 ratios, repetitionOf's
+    * 1e-6 rep_ratio, then q4), so the values are bit-identical to the
+    * feature-join form of [[qualityModelWith]]. */
+  private def rowQualityFeatures: (Column, Column, Column, Column, Column) = {
     val toks = wsTokens(col("text"))
     val nTok = size(toks).cast("double")
     val punct = (length(col("text")) -
@@ -1693,12 +1689,25 @@ object TextOps {
     val rep3 = when(size(sh) > 0,
       floor((size(sh) - size(array_distinct(sh))).cast("double") / size(sh) * 1e6 + 0.5) / 1e6)
       .otherwise(lit(0.0))
-    d.select(col("doc_id"),
-        q4(round(stop, 4)).as("f_stop"),
-        q4(round(rep, 4)).as("f_rep"),
-        q4(round(punct, 4)).as("f_punct"),
-        q4(rep3).as("f_rep3"),
-        least(size(toks), lit(QmLenCap)).cast("long").as("len_capped"))
+    (q4(round(stop, 4)), q4(round(rep, 4)), q4(round(punct, 4)), q4(rep3),
+      least(size(toks), lit(QmLenCap)).cast("long"))
+  }
+
+  /** The six quality features as exact fixed-point longs (q4 ratios on
+    * the 0..10000 grid, NLL in 1e4 nats, length as a 0..10000 fraction of
+    * [[QmLenCap]]) — the ONE feature relation both sides of the trained
+    * quality gate consume, so train-time and score-time features can
+    * never drift. */
+  private[graft] def qualityFeaturesOf(d: DataFrame, ppl: DataFrame): DataFrame = {
+    // ONE corpus scan (r14): the quality ratios and the 3-gram repetition
+    // signal are all per-row expressions over `text`, so they fuse into a
+    // single codegen'd projection — the previous qualityOf ⋈ repetitionOf
+    // form paid a second full scan plus a corpus-sized equijoin for what
+    // is row-local arithmetic (measured at ×100: the feature checkpoint
+    // dominated the whole LR chain).
+    val (stop, rep, punct, rep3, lenCapped) = rowQualityFeatures
+    d.select(col("doc_id"), stop.as("f_stop"), rep.as("f_rep"), punct.as("f_punct"),
+        rep3.as("f_rep3"), lenCapped.as("len_capped"))
       .join(ppl.select(col("doc_id"), col("avg_nll")), Seq("doc_id"), "left")
       .select(col("doc_id"), col("f_stop"), col("f_rep"), col("f_punct"),
         col("f_rep3"),
@@ -2062,30 +2071,19 @@ object TextOps {
 
   /** The per-row (non-LM) part of the quality logit as ONE column over
     * `text` — every term of [[qualityModelWith]]'s logit8 except the
-    * QmNll surprise term, computed from the row itself with the SAME
-    * rounding steps as the feature-join path (round to 4dp, then q4).
-    * This is what lets the STREAMING admission gate score a document in
-    * one pass: per-row base rides the bigram explode, and only the nll
-    * aggregate needs state. Equality with the batch chain is
-    * spec-asserted per document. */
+    * QmNll surprise term, computed from the row's features
+    * ([[rowQualityFeatures]]). This is what lets the STREAMING admission
+    * gate score a document in one pass: per-row base rides the bigram
+    * explode, and only the nll aggregate needs state. Equality with the
+    * batch chain is spec-asserted per document. */
   private[graft] def logitBaseCol: Column = {
-    def q4(c: Column): Column = floor(c * 1e4 + 0.5).cast("long")
-    val toks = wsTokens(col("text"))
-    val nTok = size(toks).cast("double")
-    val punct = (length(col("text")) -
-      length(regexp_replace(col("text"), "[^a-z0-9 ]", ""))).cast("double") / length(col("text"))
-    val stop = markerCount(toks, AllStopwords).cast("double") / nTok
-    val rep = lit(1.0) - size(array_distinct(toks)).cast("double") / nTok
-    val sh = wordShingles(toks, 3)
-    val rep3 = when(size(sh) > 0,
-      floor((size(sh) - size(array_distinct(sh))).cast("double") / size(sh) * 1e6 + 0.5) / 1e6)
-      .otherwise(lit(0.0))
+    val (stop, rep, punct, rep3, lenCapped) = rowQualityFeatures
     lit(QmBias) * lit(10000L) +
-      lit(QmStop) * q4(round(stop, 4)) +
-      lit(QmRepUni) * q4(round(rep, 4)) +
-      lit(QmPunct) * q4(round(punct, 4)) +
-      lit(QmRep3) * q4(rep3) +
-      lit(QmLenPerTok) * least(size(toks), lit(QmLenCap)).cast("long") * lit(10000L)
+      lit(QmStop) * stop +
+      lit(QmRepUni) * rep +
+      lit(QmPunct) * punct +
+      lit(QmRep3) * rep3 +
+      lit(QmLenPerTok) * lenCapped * lit(10000L)
   }
 
   /** (doc_id, logit8) of `d` scored against a supplied (possibly foreign)

@@ -627,29 +627,6 @@ class AnnModelsSpec extends SparkSpec {
     }
   }
 
-  test("legacy pre-generational store entries are swept on first access") {
-    val root = freshRoot("sweep")
-    // a pre-r11 artifact: fingerprint-keyed dir gated by parquet _SUCCESS,
-    // no _GRAFT_COMPLETE marker, no g-* generations — permanently orphaned
-    // under the generational layout (ADVICE r11: retained garbage)
-    val legacy = new java.io.File(root, "lm-0123456789abcdef")
-    assert(legacy.mkdirs())
-    java.nio.file.Files.write(new java.io.File(legacy, "_SUCCESS").toPath, Array[Byte]())
-    java.nio.file.Files.write(new java.io.File(legacy, "part-00000.parquet").toPath,
-      "stale".getBytes("UTF-8"))
-    // a non-artifact directory must be left alone (defensive: the sweep
-    // only touches names shaped like artifact keys)
-    val bystander = new java.io.File(root, "user-notes")
-    assert(bystander.mkdirs())
-    AnnModels.withRoot(root) {
-      AnnModels.ivfCentroids(spark, sf).collect()
-      assert(!legacy.exists(), "legacy _SUCCESS-gated entry must be swept")
-      assert(bystander.exists(), "non-key-shaped directories must survive the sweep")
-      // the freshly-trained current-layout artifact must of course survive
-      assert(new java.io.File(root).listFiles().exists(_.getName.startsWith("ivf-")))
-    }
-  }
-
   test("logistic margins: registry-served, bit-identical to inline, one " +
       "fit across the gate and build consumers") {
     AnnModels.withRoot(freshRoot("qlr")) {
@@ -1074,26 +1051,6 @@ class AnnModelsSpec extends SparkSpec {
     gen(4096)
     assert(Similarity.ivfK(spark, dir) == 12, // ceil(sqrt(4096/32))
       "an in-place corpus edit crossing a sizing boundary must re-derive K")
-  }
-
-  test("sweep spares key-shaped dirs without old-layout evidence") {
-    val root = freshRoot("sweep2")
-    // the two shapes the absence-only predicate would have destroyed
-    // (ADVICE r12): a second writer mid-FIRST-train — key dir created,
-    // first g-* generation not yet written — and a foreign directory
-    // that happens to match the key pattern in a shared model dir
-    val midTrain = new java.io.File(root, "lm-feedfacefeedface")
-    assert(midTrain.mkdirs())
-    val foreign = new java.io.File(root, "backup-0123456789ab")
-    assert(foreign.mkdirs())
-    java.nio.file.Files.write(new java.io.File(foreign, "data.bin").toPath,
-      "not ours".getBytes("UTF-8"))
-    AnnModels.withRoot(root) {
-      AnnModels.ivfCentroids(spark, sf).collect()
-      assert(midTrain.exists(),
-        "a marker-less, generation-less, _SUCCESS-less key dir must survive the sweep")
-      assert(foreign.exists(), "foreign key-shaped dirs without old-layout markers must survive")
-    }
   }
 
   test("marker commit is atomic (rename), and a marker naming a missing " +

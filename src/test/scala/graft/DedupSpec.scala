@@ -75,6 +75,56 @@ class DedupSpec extends SparkSpec {
       s"strided ids must keep within-salt-group pairs (got ${salted.size}, want ${expected.size})")
   }
 
+  test("salted-bucket policy: ceil(n/cap) hash groups, one pair set for both forms, 2x cap net, uncapped at Int.MaxValue") {
+    import org.apache.spark.sql.functions._
+    val s = spark
+    import s.implicits._
+    val cap = 4
+    // bucket 1: 3*cap+1 distinct ids (dense); bucket 2: 3 ids (under the
+    // cap); bucket 3: one id repeated 3*cap+1 times — a single-hash
+    // pile-up no salt can spread, so only the 2x-cap net bounds it
+    val dense = (100L until 113L).map(i => (1, i))
+    val sparse = (200L until 203L).map(i => (2, i))
+    val pile = Seq.fill(3 * cap + 1)((3, 300L))
+    val df = (dense ++ sparse ++ pile).toDF("k", "id")
+    val groups = ((dense.size + cap - 1) / cap).toLong // also the pile-up's
+
+    val (salted, census) = Dedup.saltedBuckets(df, Seq("k"), "id", cap)
+    assert(census.collect().map(r => (r.getInt(0), r.getLong(1))).toSet ==
+      Set((1, dense.size.toLong), (3, pile.size.toLong)), "census holds exactly the buckets over cap")
+    val saltOf = salted.collect().map(r => (r.getAs[Int]("k"), r.getAs[Long]("id")) -> r.getAs[Long]("salt"))
+    saltOf.foreach { case ((k, id), salt) =>
+      val want = if (k == 2) 0L else salt52(id, groups)
+      assert(salt == want, s"row ($k, $id): salt $salt, want $want")
+    }
+    assert(saltOf.collect { case ((1, _), salt) => salt }.toSet == (0L until groups).toSet,
+      s"the dense bucket must split into ceil(n/cap) = $groups salt groups")
+
+    def pairSet(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+    val collected = pairSet(Dedup.bucketPairs(df, Seq("k"), "id", struct(col("k"), col("id")), cap)
+      .select(col("p.a.k"), col("p.a.id"), col("p.b.id")))
+    val (bounded, _) = Dedup.boundedBuckets(df, Seq("k"), "id", cap)
+    val joined = pairSet(bounded.as("a").join(bounded.as("b"), col("a.k") === col("b.k") &&
+        col("a.salt") === col("b.salt") && col("a.id") < col("b.id"))
+      .select(col("a.k"), col("a.id"), col("b.id")))
+    assert(collected == joined, "collect-and-pair and bounded self-join must give one pair set")
+    val expected = (for {
+      (k, a) <- dense ++ sparse; (k2, b) <- dense ++ sparse
+      if k == k2 && a < b && (k == 2 || salt52(a, groups) == salt52(b, groups))
+    } yield (k, a, b)).toSet
+    assert(collected == expected, "pairs are exactly the within-salt-group pairs")
+    assert(!bounded.collect().exists(_.getAs[Int]("k") == 3),
+      "a salt group over 2x cap is dropped")
+
+    val (uncapped, noCensus) = Dedup.saltedBuckets(df, Seq("k"), "id", Int.MaxValue)
+    assert(noCensus.isEmpty && uncapped.collect().forall(_.getAs[Long]("salt") == 0L),
+      "Int.MaxValue must not salt")
+    val n = dense.size * (dense.size - 1) / 2 + 3 + pile.size * (pile.size - 1) / 2
+    assert(Dedup.bucketPairs(df, Seq("k"), "id", col("id"), Int.MaxValue).count() == n,
+      "Int.MaxValue must keep every bucket whole (a 2x-cap Int bound would overflow)")
+  }
+
   test("semantic dedup conserves vectors and only ever merges within a learned cluster") {
     val survivors = Dedup.semanticDedup(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
