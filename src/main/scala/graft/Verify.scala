@@ -14,10 +14,9 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Queries are independent — run them on a small worker pool so one
     // query's stragglers overlap the next query's planning/IO instead of
-    // serializing 80 jobs end to end. Spark job submission is thread-safe;
+    // serializing every query end to end. Spark job submission is thread-safe;
     // 4 in flight keeps local[32] saturated without queue thrash.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val futs = SparkEntry.queries.toSeq

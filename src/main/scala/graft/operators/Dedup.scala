@@ -214,12 +214,6 @@ object Dedup {
       .distinct()
   }
 
-  /** 3-block pigeonhole rows of ANY (doc_id, h: 64-bit) relation, keyed
-    * for the shared salted-index policy (band = block index, h = block
-    * value) with the full 64-bit hash riding along for the candidate
-    * XOR-popcount verify — the persisted-index form of [[hammingPairs]]'s
-    * candidate generation (Multimodal's perceptual-hash ingest probe
-    * builds its index and probe sides from exactly these rows). */
   /** The DEGENERATE-block census of ANY (doc_id, h: 64-bit) relation —
     * the ≤ 9 (bi, bv) bucket values holding more than a 1/[[DegenShare]]
     * corpus share (each of the 3 blocks admits at most DegenShare−1 = 3
@@ -248,6 +242,12 @@ object Dedup {
     * string). Must describe exactly what [[hammingBlocked]] computes. */
   private[graft] val BlockLayout = "22/21/21"
 
+  /** 3-block pigeonhole rows of ANY (doc_id, h: 64-bit) relation, keyed
+    * for the shared salted-index policy (band = block index, h = block
+    * value) with the full 64-bit hash riding along for the candidate
+    * XOR-popcount verify — the persisted-index form of [[hammingPairs]]'s
+    * candidate generation (Multimodal's perceptual-hash ingest probe
+    * builds its index and probe sides from exactly these rows). */
   private[graft] def hammingBlocked(hashed: DataFrame): DataFrame =
     hashed
       .select(col("doc_id"), col("h").as("full"), explode(array(
@@ -495,6 +495,25 @@ object Dedup {
       d.join(touched, Seq("doc_id"), "left_anti")
         .withColumn("cluster_id", col("doc_id")))
   }
+
+  /** The cluster report of a (doc_id, cluster_id) labeling: one row per
+    * cluster, its `cluster_id` (the smallest member id, which is the
+    * canonical survivor) named `idCol`, with `n_repr`, the number of
+    * members it represents. */
+  private[graft] def clusterReport(labels: DataFrame, idCol: String): DataFrame =
+    labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_repr"))
+      .select(col("cluster_id").as(idCol), col("n_repr"))
+
+  /** The keep-best-copy report of a (doc_id, cluster_id, `key`) labeling:
+    * per cluster the member with the largest integer `key`, ties to the
+    * smallest doc_id. The argmax is `max(struct(key, -doc_id))`, one hash
+    * aggregate with no per-cluster window sort. One row per cluster: the
+    * kept id named `idCol`, its `key` and the cluster's `n_repr`. */
+  private[graft] def keepBest(labeled: DataFrame, key: String, idCol: String): DataFrame =
+    labeled.groupBy(col("cluster_id"))
+      .agg(count(lit(1)).as("n_repr"),
+        max(struct(col(key), (-col("doc_id")).as("nv"))).as("k"))
+      .select((-col("k.nv")).as(idCol), col(s"k.$key").as(key), col("n_repr"))
 
   /** The pre-r12 min-label propagation engine, RETAINED AS THE PARITY
     * REFERENCE for [[ccLabels]]'s star rewrite (spec-only): per round
@@ -808,9 +827,7 @@ object Dedup {
     * density. `clusterAssign` stays the candidate-graph view; this is the
     * verified corpus-level answer. */
   def survivors(s: SparkSession, dir: String): DataFrame =
-    AnnModels.survivorLabels(s, dir)
-      .groupBy(col("cluster_id")).agg(count(lit(1)).as("n_repr"))
-      .select(col("cluster_id").as("doc_id"), col("n_repr"))
+    clusterReport(AnnModels.survivorLabels(s, dir), "doc_id")
 
   /** The verified-graph CC labeling behind [[survivors]] — (doc_id,
     * cluster_id) for every document, edges = verified near-dup pairs ∪
@@ -849,9 +866,7 @@ object Dedup {
     * corpus shares `CosineThreshold` so the synthetic embeddings yield a
     * non-trivial pair set for the oracle parity check. */
   def semanticDedup(s: SparkSession, dir: String): DataFrame =
-    AnnModels.semanticLabels(s, dir)
-      .groupBy(col("cluster_id")).agg(count(lit(1)).as("n_repr"))
-      .select(col("cluster_id").as("vec_id"), col("n_repr"))
+    clusterReport(AnnModels.semanticLabels(s, dir), "vec_id")
 
   /** The SemDeDup labeling trainer — CC labels over within-cluster
     * verified near-dup pairs. Gated queries serve the registry artifact
@@ -882,20 +897,15 @@ object Dedup {
     * NEAREST its assigned centroid (not `semanticDedup`'s min-id canonical
     * — that variant is the CC-canonical view; this one is citation-exact).
     * Proximity reuses the `ccos` the quantizer's assignment pass already
-    * computed (one model, one assignment, three consumers). The argmax is
-    * a hash-aggregate `max(struct(...))` — no per-cluster window sort —
-    * on an INTEGER key (ccos is round(cos,4); x1e4 half-up makes the
-    * ordering engine-portable, no -0.0/double-comparator edge), ties to
-    * the smallest vec_id via the negated id. */
-  def semanticDedupKeep(s: SparkSession, dir: String): DataFrame = {
-    AnnModels.semanticLabels(s, dir).join(
+    * computed (one model, one assignment, three consumers). The
+    * [[keepBest]] key is an INTEGER (ccos is round(cos,4); x1e4 half-up
+    * makes the ordering engine-portable, no -0.0/double-comparator edge). */
+  def semanticDedupKeep(s: SparkSession, dir: String): DataFrame =
+    keepBest(AnnModels.semanticLabels(s, dir).join(
       AnnModels.ivfAssign(s, dir).select(col("vec_id").as("doc_id"),
-        floor(col("ccos") * 1e4 + 0.5).cast("long").as("cc4")), Seq("doc_id"))
-      .groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("n_repr"),
-        max(struct(col("cc4"), (-col("doc_id")).as("nv"))).as("k"))
-      .select((-col("k.nv")).as("vec_id"), col("n_repr"))
-  }
+        floor(col("ccos") * 1e4 + 0.5).cast("long").as("cc4")), Seq("doc_id")),
+      "cc4", "vec_id")
+      .select(col("vec_id"), col("n_repr"))
 
   /** Word-window size for the repeated-passage audit (Lee et al. 2022 use
     * 50-BPE-token windows at corpus scale; 5 words fits the test corpus'

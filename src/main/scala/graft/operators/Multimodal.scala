@@ -294,25 +294,16 @@ object Multimodal {
     * count (the [[phashDedup]] shape on the fingerprint column): CC over
     * the verified hamming pairs, labels registry-served. */
   def audioDedup(s: SparkSession, dir: String): DataFrame =
-    graft.operators.AnnModels.audioLabels(s, dir)
-      .groupBy(col("cluster_id")).agg(count(lit(1)).as("n_repr"))
-      .select(col("cluster_id").as("doc_id"), col("n_repr"))
+    Dedup.clusterReport(graft.operators.AnnModels.audioLabels(s, dir), "doc_id")
 
   /** [[audioDedup]] with the keep-best-copy rule: within each perceptual
     * cluster keep the LONGEST recording (max fingerprint windows — the
     * most audio content survives, the byte-domain "highest bitrate"
-    * stand-in), ties to the smallest doc_id. Hash-aggregate argmax on
-    * integer keys — no per-cluster sort. */
-  def audioKeep(s: SparkSession, dir: String): DataFrame = {
-    val lab = graft.operators.AnnModels.audioLabels(s, dir)
-    lab.join(audioFingerprint(s, dir).select(col("doc_id"), col("n_windows")),
-        Seq("doc_id"))
-      .groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("n_repr"),
-        max(struct(col("n_windows"), (-col("doc_id")).as("nv"))).as("k"))
-      .select((-col("k.nv")).as("doc_id"), col("k.n_windows").as("n_windows"),
-        col("n_repr"))
-  }
+    * stand-in), by [[Dedup.keepBest]]. */
+  def audioKeep(s: SparkSession, dir: String): DataFrame =
+    Dedup.keepBest(graft.operators.AnnModels.audioLabels(s, dir)
+      .join(audioFingerprint(s, dir).select(col("doc_id"), col("n_windows")), Seq("doc_id")),
+      "n_windows", "doc_id")
 
   /** aHash-style perceptual fingerprint over the payload (the image-dedup
     * primitive): the payload is cut into 64 equal byte segments and bit j
@@ -509,9 +500,7 @@ object Multimodal {
     * (singleton images never enter the iteration), and the output is one
     * row per cluster. */
   def phashDedup(s: SparkSession, dir: String): DataFrame =
-    graft.operators.AnnModels.phashLabels(s, dir)
-      .groupBy(col("cluster_id")).agg(count(lit(1)).as("n_repr"))
-      .select(col("cluster_id").as("doc_id"), col("n_repr"))
+    Dedup.clusterReport(graft.operators.AnnModels.phashLabels(s, dir), "doc_id")
 
   /** The perceptual CC labeling (doc_id, cluster_id) — ONE hash pass,
     * hamming pairs, the shared star-contraction CC engine; persisted per
@@ -529,21 +518,14 @@ object Multimodal {
     * quality; the survivor should be the best available copy, not an
     * arbitrary id): within each perceptual cluster keep the LARGEST
     * asset (max payload bytes — the byte-domain stand-in for highest
-    * resolution), ties to the smallest doc_id. The argmax is a
-    * hash-aggregate `max(struct(...))` on integer keys — no per-cluster
-    * window sort — exactly the `dedup_semantic_keep` recipe applied to
-    * the perceptual column. */
-  def phashKeep(s: SparkSession, dir: String): DataFrame = {
+    * resolution), by [[Dedup.keepBest]] — the `dedup_semantic_keep` rule
+    * applied to the perceptual column. */
+  def phashKeep(s: SparkSession, dir: String): DataFrame =
     // Labels come from the registry (one CC run per corpus state); only
     // the cheap partition-parallel n_bytes pass runs in-query.
-    val lab = graft.operators.AnnModels.phashLabels(s, dir)
-    lab.join(phash(s, dir).select(col("doc_id"), col("n_bytes")), Seq("doc_id"))
-      .groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("n_repr"),
-        max(struct(col("n_bytes"), (-col("doc_id")).as("nv"))).as("k"))
-      .select((-col("k.nv")).as("doc_id"), col("k.n_bytes").as("n_bytes"),
-        col("n_repr"))
-  }
+    Dedup.keepBest(graft.operators.AnnModels.phashLabels(s, dir)
+      .join(phash(s, dir).select(col("doc_id"), col("n_bytes")), Seq("doc_id")),
+      "n_bytes", "doc_id")
 
   /** The 3-block pigeonhole INDEX rows of a corpus's perceptual hashes —
     * (band = block index, h = block value, doc_id, phash) — the relation
