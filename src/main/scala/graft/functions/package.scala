@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.UnscaledValue
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge
 
 /** Column-level building blocks shared across operators.
   *
@@ -116,4 +118,41 @@ package object functions {
 
   /** Exact decimal sum surfaced as double (schema parity with the oracle). */
   def dsum(c: Column): Column = sum(c).cast("double")
+
+  /** [[dec]] as its unscaled long: the same rounded decimal, counted in
+    * units of 10^-s (cents at s = 2). Long arithmetic on it is exact until
+    * it overflows, and under ANSI an overflow raises ARITHMETIC_OVERFLOW
+    * instead of wrapping. Mirror: CAST(CAST(c AS DECIMAL(p,s)) * 10^s AS
+    * BIGINT). */
+  def unscaled(c: Column, p: Int = 12, s: Int = 2): Column = {
+    require(p <= 18, s"unscaled($p,$s): a long holds at most 18 digits")
+    CatalystBridge.column(UnscaledValue(CatalystBridge.expression(dec(c, p, s))))
+  }
+
+  /** [[dsum]] over long partials of unscaled values at scale `s`: the
+    * partials merge as DECIMAL(38,0) and become a double once, through
+    * `sum / 10^s`, so the result equals `dsum` over the decimals bit for
+    * bit. A caller sums per input split first (one long per split and
+    * group) and merges those here; one long per group would overflow long
+    * before the decimal sum does. */
+  def dsumUnscaled(partials: Column, s: Int): Column =
+    (sum(partials.cast("decimal(38,0)")) /
+      lit(new java.math.BigDecimal(java.math.BigInteger.TEN.pow(s)))).cast("double")
+
+  /** A group's non-null values as ascending doubles: the input of
+    * [[percentileSorted]]. One list per group replaces `percentile`'s
+    * value-to-count map, which costs more when most values are distinct. */
+  def sortedDoubles(c: Column): Column = sort_array(collect_list(c.cast("double")))
+
+  /** Spark `percentile(x, p)` over [[sortedDoubles]] `a`, bit for bit:
+    * pos = (size(a) - 1) * p; the element at pos when pos is integral or
+    * its two neighbours are equal, else (ceil - pos) * lo + (pos - floor)
+    * * hi. Null for an empty group. Oracle: quantile_cont(x, p), compared
+    * after round(_, 6). */
+  def percentileSorted(a: Column, p: Double): Column = {
+    val pos = (size(a) - 1) * lit(p)
+    val (f, c) = (floor(pos), ceil(pos))
+    val (lo, hi) = (get(a, f.cast("int")), get(a, c.cast("int")))
+    when(f === c || lo === hi, lo).otherwise((c - pos) * lo + (pos - f) * hi)
+  }
 }

@@ -22,26 +22,51 @@ object Analytics {
 
   private def t(s: SparkSession, dir: String, n: String) = Tables.load(s, dir, n)
 
-  /** TPC-H Q1-shaped pricing summary; DECIMAL math, exact. */
+  /** TPC-H Q1-shaped pricing summary; DECIMAL math, exact.
+    *
+    * Every input is rounded by the same `dec` cast as the oracle's, then
+    * summed as its unscaled long (`unscaled`): prices and quantities in
+    * cents, `price * (1 - disc)` at scale 4 and the charge at scale 6, both
+    * as ANSI long multiplies. A per-row DECIMAL(22+) sum buffer is bytes
+    * and BigDecimal arithmetic; a long buffer is one word. The longs are
+    * summed per input split (`spark_partition_id`), so no single long
+    * holds more than one split's total, and `dsumUnscaled` merges the
+    * splits as DECIMAL(38,0) into the doubles `dsum` gives over the
+    * decimals, bit for bit. */
   def pricingSummary(s: SparkSession, dir: String): DataFrame = {
-    val one = lit(1).cast("decimal(12,2)")
+    val price = unscaled(col("l_extendedprice"))
+    val discPrice = price * (lit(100L) - unscaled(col("l_discount")))
     t(s, dir, "lineitem")
       .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp_ntz"))
       .select(
         col("l_returnflag"), col("l_linestatus"),
-        dec(col("l_quantity")).as("qty"),
-        dec(col("l_extendedprice")).as("price"),
-        dec(col("l_discount")).as("disc"),
-        dec(col("l_tax")).as("tax"))
+        spark_partition_id().as("split"),
+        unscaled(col("l_quantity")).as("qty"),
+        price.as("price"),
+        discPrice.as("disc_price"),
+        (discPrice * (lit(100L) + unscaled(col("l_tax")))).as("charge"))
+      .groupBy("l_returnflag", "l_linestatus", "split")
+      .agg(
+        sum(col("qty")).as("qty"),
+        sum(col("price")).as("price"),
+        sum(col("disc_price")).as("disc_price"),
+        sum(col("charge")).as("charge"),
+        count(lit(1)).as("n"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
-        dsum(col("qty")).as("sum_qty"),
-        dsum(col("price")).as("sum_base_price"),
-        dsum(col("price") * (one - col("disc"))).as("sum_disc_price"),
-        dsum(col("price") * (one - col("disc")) * (one + col("tax"))).as("sum_charge"),
-        (sum(col("qty")).cast("double") / count(lit(1))).as("avg_qty"),
-        (sum(col("price")).cast("double") / count(lit(1))).as("avg_price"),
-        count(lit(1)).as("count_order"))
+        dsumUnscaled(col("qty"), 2).as("sum_qty"),
+        dsumUnscaled(col("price"), 2).as("sum_base_price"),
+        dsumUnscaled(col("disc_price"), 4).as("sum_disc_price"),
+        dsumUnscaled(col("charge"), 6).as("sum_charge"),
+        // a group has rows, so this sum is never null; coalesce keeps
+        // count_order the non-nullable column count(*) was
+        coalesce(sum(col("n")), lit(0L)).as("count_order"))
+      .select(
+        col("l_returnflag"), col("l_linestatus"), col("sum_qty"),
+        col("sum_base_price"), col("sum_disc_price"), col("sum_charge"),
+        (col("sum_qty") / col("count_order")).as("avg_qty"),
+        (col("sum_base_price") / col("count_order")).as("avg_price"),
+        col("count_order"))
   }
 
   /** TPC-H Q3-shaped shipping priority: 3-way join, agg, deterministic top-10. */
@@ -262,15 +287,20 @@ object Analytics {
       .select(col("event_id"), col("user_id"), col("ts"), col("prev_view_ts"))
   }
 
-  /** Exact per-group quantiles (p25/p50/p75 of order totals per priority). */
+  /** Exact per-group quantiles (p25/p50/p75 of order totals per priority):
+    * one sorted list per group, read three times by `percentileSorted`
+    * (Spark `percentile`'s interpolation), instead of three `percentile`
+    * count maps built and shuffled per group. */
   def percentiles(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "orders")
       .groupBy("o_orderpriority")
-      .agg(
-        round(expr("percentile(o_totalprice, 0.25)"), 6).as("p25"),
-        round(expr("percentile(o_totalprice, 0.5)"), 6).as("p50"),
-        round(expr("percentile(o_totalprice, 0.75)"), 6).as("p75"),
-        count(lit(1)).as("n"))
+      .agg(sortedDoubles(col("o_totalprice")).as("v"), count(lit(1)).as("n"))
+      .select(
+        col("o_orderpriority"),
+        round(percentileSorted(col("v"), 0.25), 6).as("p25"),
+        round(percentileSorted(col("v"), 0.5), 6).as("p50"),
+        round(percentileSorted(col("v"), 0.75), 6).as("p75"),
+        col("n"))
 
   /** TPC-H Q9-shaped: profit by supplier nation and year for parts matching
     * a name pattern (retail price stands in for supply cost — the schema has

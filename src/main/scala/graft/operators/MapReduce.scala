@@ -110,6 +110,10 @@ object MapReduce {
         max(col("word")).as("max_word"),
         max(length(col("word"))).as("max_len"))
 
+  /** Token-length summary. The median stays Spark's count-map
+    * `percentile`, unlike `Analytics.percentiles`' sorted list: word
+    * lengths take about 20 distinct values, so the map holds 20 counts
+    * while a sorted list would hold every token. */
   def wordStats(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
       .select(explode(wsTokens(col("text"))).as("word"))

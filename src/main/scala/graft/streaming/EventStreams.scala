@@ -224,7 +224,7 @@ object EventStreams {
       col("user_id"),
       col("event_id"),
       unix_micros(col("ts").cast("timestamp")).as("us"),
-      (dec(col("value"), 10, 2) * 100).cast("long").as("cents")).as[Ev]
+      unscaled(col("value"), 10, 2).as("cents")).as[Ev]
     typed
       .groupByKey(_.user_id)
       .flatMapGroups((k: Long, it: Iterator[Ev]) => buildSessions(k, it, gapUs))
@@ -287,7 +287,7 @@ object EventStreams {
     val gapMs = gapUs / 1000
     events
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
-        (dec(col("value"), 10, 2) * 100).cast("long").as("cents"), col("ts").as("ets"))
+        unscaled(col("value"), 10, 2).as("cents"), col("ts").as("ets"))
       .as[EvW]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {

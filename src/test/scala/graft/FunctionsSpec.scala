@@ -413,4 +413,112 @@ class FunctionsSpec extends SparkSpec {
       .map("%02x".format(_)).mkString
     assert(graft.operators.Multimodal.md5OfHex(bytes) == viaHex)
   }
+
+  private def bits(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+    if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+
+  test("percentileSorted equals Spark percentile bit for bit, before rounding") {
+    val groups: Seq[(String, Seq[Option[Double]])] = Seq(
+      "one" -> Seq(Some(5.5)),
+      "two" -> Seq(Some(3.0), Some(1.0)),
+      "even" -> Seq(Some(0.7), Some(10.3), Some(0.1), Some(0.2)),
+      "odd" -> Seq(Some(0.3), Some(2.9), Some(1.1), Some(7.7), Some(0.01)),
+      "ties" -> Seq(Some(2.0), Some(1.0), Some(3.0), Some(2.0), Some(3.0), Some(2.0)),
+      "equal" -> Seq.fill(3)(Some(7.25)),
+      "negative" -> Seq(Some(-3.5), Some(-1.25), Some(-10.0), Some(2.0), Some(-0.1)),
+      "nulls" -> Seq(None, Some(2.0), None, Some(1.0), Some(4.5), None),
+      "all_null" -> Seq(None, None))
+    val rnd = new scala.util.Random(17)
+    val random = (1 to 40).map { g =>
+      s"r$g" -> Seq.fill(1 + rnd.nextInt(30))(
+        Some(if (g % 2 == 0) rnd.nextInt(5).toDouble else rnd.nextDouble() * 1e4 - 5e3))
+    }
+    val df = (groups ++ random)
+      .flatMap { case (g, xs) => xs.map(x => (g, x)) }.toDF("g", "x")
+    // the quartile points plus 0.1 and 0.9: only there are the interpolation
+    // weights inexact, so only there does the equal-neighbour rule show
+    val ps = Seq(0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 1.0)
+    val got = df.groupBy("g")
+      .agg(sortedDoubles(col("x")).as("v"),
+        ps.indices.map(i => expr(s"percentile(x, ${ps(i)})").as(s"spark_$i")): _*)
+      .select(col("g") +: size(col("v")).as("n") +:
+        ps.indices.flatMap(i => Seq(col(s"spark_$i"), percentileSorted(col("v"), ps(i)))): _*)
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(got.size == groups.size + random.size)
+    got.foreach { case (g, r) =>
+      ps.indices.foreach { i =>
+        assert(bits(r, 2 + 2 * i) == bits(r, 3 + 2 * i),
+          s"group $g p=${ps(i)}: percentile ${r.get(2 + 2 * i)} vs sorted list ${r.get(3 + 2 * i)}")
+      }
+    }
+    def sorted(g: String, p: Double): Double = got(g).getDouble(3 + 2 * ps.indexOf(p))
+    assert(got("nulls").getInt(1) == 3, "size(a) counts only the non-null values")
+    assert(sorted("nulls", 0.5) == 2.0)
+    assert(got("all_null").getInt(1) == 0 && got("all_null").isNullAt(3))
+    // both branches are live: an interpolated value, and an equal pair that
+    // interpolation would perturb ((1 - 0.2) * 7.25 + 0.2 * 7.25 != 7.25)
+    assert(sorted("even", 0.25) != 0.2 && sorted("even", 0.25) != 0.7)
+    assert(sorted("equal", 0.1) == 7.25)
+  }
+
+  /** lineitem with the pricing summary's columns, `files` parquet files. */
+  private def lineitem(rows: Seq[(String, Option[Double], Option[Double], Double, Double)],
+      files: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_money").toString
+    rows.toDF("l_returnflag", "l_quantity", "l_extendedprice", "l_discount", "l_tax")
+      .withColumn("l_linestatus", lit("O"))
+      .withColumn("l_shipdate", lit("1998-01-01").cast("timestamp_ntz"))
+      .repartition(files)
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
+  test("pricing summary's long money sums equal dsum(dec(...)) bit for bit") {
+    val rnd = new scala.util.Random(23)
+    val limit = 9999999999.99 // the largest DECIMAL(12,2)
+    val ties = Seq(0.005, 1.005, 2.675, 0.125)
+    val rows =
+      Seq.fill(2000)(("R", Some(rnd.nextDouble() * 50), Some(rnd.nextDouble() * 1e5),
+        rnd.nextDouble() * 0.1, rnd.nextDouble() * 0.08)) ++
+      ties.flatMap(v => Seq(("T", Some(v), Some(v), v, v), ("T", Some(-v), Some(v * 1000), -v, v))) ++
+      Seq.fill(200)(("N", Some(-rnd.nextDouble() * 50), Some(-rnd.nextDouble() * 1e5),
+        -rnd.nextDouble() * 0.1, -rnd.nextDouble() * 0.08)) ++
+      // sums past 2^53 units, where a double sum of the longs rounds twice
+      (0 until 800).map(i => (s"B${i % 8}", Some(rnd.nextDouble() * 50),
+        Some(limit - rnd.nextDouble() * 1e9), rnd.nextDouble() * 0.1, rnd.nextDouble() * 0.08)) ++
+      Seq(("L", Some(limit), Some(limit), 0.05, 0.08), ("L", Some(-limit), Some(limit), 0.99, 0.99),
+        ("L", Some(limit - 0.01), Some(-limit), -0.99, -0.99), ("L", None, None, 0.0, 0.0))
+    val dir = lineitem(rows, 3)
+    val one = lit(1).cast("decimal(12,2)")
+    val want = graft.sources.Tables.load(ss, dir, "lineitem")
+      .select(col("l_returnflag"), dec(col("l_quantity")).as("qty"),
+        dec(col("l_extendedprice")).as("price"), dec(col("l_discount")).as("disc"),
+        dec(col("l_tax")).as("tax"))
+      .groupBy("l_returnflag")
+      .agg(dsum(col("qty")), dsum(col("price")),
+        dsum(col("price") * (one - col("disc"))),
+        dsum(col("price") * (one - col("disc")) * (one + col("tax"))),
+        (sum(col("qty")).cast("double") / count(lit(1))),
+        (sum(col("price")).cast("double") / count(lit(1))), count(lit(1)))
+      .collect().map(r => r.getString(0) -> r).toMap
+    val got = graft.operators.Analytics.pricingSummary(ss, dir).drop("l_linestatus")
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(got.keySet == Set("R", "T", "N", "L") ++ (0 until 8).map(i => s"B$i"))
+    got.foreach { case (g, r) =>
+      (1 to 6).foreach { i =>
+        assert(bits(r, i) == bits(want(g), i), s"group $g column $i: ${r.get(i)} vs ${want(g).get(i)}")
+      }
+      assert(r.getLong(7) == want(g).getLong(7))
+    }
+  }
+
+  test("a long money partial that overflows raises ARITHMETIC_OVERFLOW instead of wrapping") {
+    // charge at scale 6: 999999999999 * 199 * 199 ~ 3.96e16 units per row;
+    // 300 rows in one split sum past Long.MaxValue (9.22e18)
+    val dir = lineitem(Seq.fill(300)(("O", Some(1.0), Some(9999999999.99), -0.99, 0.99)), 1)
+    val e = intercept[Exception](
+      graft.operators.Analytics.pricingSummary(ss, dir).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("ARITHMETIC_OVERFLOW")), e)
+  }
 }

@@ -31,6 +31,33 @@ class PlansSpec extends SparkSpec {
     assert(!p.contains("l_linenumber"), "scan not pruned")
   }
 
+  test("pricing summary sums bigint partials: no per-row decimal sum before the first exchange") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.{DecimalType, LongType}
+    val root = Analytics.pricingSummary(spark, sf).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    // the map side: what runs under the exchange with no exchange below it
+    val first = root.collect { case e: ShuffleExchangeExec => e }
+      .filter(_.child.collectFirst { case e: ShuffleExchangeExec => e }.isEmpty)
+    assert(first.size == 1, root)
+    val sums = first.head.child.collect { case h: HashAggregateExec => h }
+      .flatMap(_.aggregateExpressions.map(_.aggregateFunction))
+      .collect { case s: Sum => s.child.dataType }
+    assert(sums.size == 4 && sums.forall(_ == LongType), s"map-side sums over $sums:\n$root")
+    assert(!sums.exists(_.isInstanceOf[DecimalType]), root)
+  }
+
+  test("percentiles read one sorted list per group, no percentile count maps") {
+    val p = plan(Analytics.percentiles(spark, sf))
+    assert(!p.contains("percentile("), p)
+    assert(p.contains("collect_list("), p)
+  }
+
   test("map-side join broadcasts both dimension tables") {
     val p = plan(MapReduce.joinMapSide(spark, sf))
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 2, p)

@@ -9,6 +9,9 @@ each:
   dup:    80% exact duplicates over five texts (census/dedup saturation)
   sparse: 1-3 token docs, single chars, rare bigrams ('und' paths)
   rep:    heavy token repetition, '#'/'...'-dense docs, MULTI-LINE docs
+  money:  lineitem/orders money columns with half-cent ties, negatives,
+          nulls, duplicate totals and a one-row priority group (the
+          exact-decimal sums and sorted-list percentiles)
 
 The rep corpus caught two real parity families on first run: regex '.'
 skipping '\n' in the BPE char-wrap seeds (fixed with (?s) on both
@@ -196,8 +199,63 @@ def gen_unicode(base):
     print(f'wrote {base}/uni')
 
 
+def gen_money(base):
+    """Money-column corpus: `lineitem` and `orders` from sf0.001 with
+    every sixth row's money perturbed. Half-cent ties (0.005, 1.005, 2.675,
+    0.125: binary doubles just off the tie, so decimal rounding is
+    exercised on both sides of it), negative amounts, nulls in
+    l_quantity/l_extendedprice/o_totalprice, every fifth order total
+    duplicated from its neighbour, and one order in a priority group of
+    its own. Other tables are copied unchanged."""
+    ties = [0.005, 1.005, 2.675, 0.125, 10.015, 99999.995]
+    d = f'{base}/money'
+    if os.path.exists(d):
+        shutil.rmtree(d)
+    os.makedirs(d)
+    for f in os.listdir(SRC):
+        s = os.path.join(SRC, f)
+        if f in ('lineitem.parquet', 'orders.parquet'):
+            continue
+        if os.path.isdir(s):
+            shutil.copytree(s, os.path.join(d, f))
+        else:
+            shutil.copy(s, os.path.join(d, f))
+
+    def money(v, i, k):
+        if i % 6 != 0:
+            return v
+        j = (i // 6 + k) % 8
+        if j == 0:
+            return None
+        if j < 4:
+            return ties[(i // 6) % len(ties)] * (1 if j < 3 else -1)
+        return -v if j == 4 else v
+    li = pq.read_table(os.path.join(SRC, 'lineitem.parquet'))
+    cols = {c: li.column(c).to_pylist() for c in li.schema.names}
+    for c, k in [('l_quantity', 0), ('l_extendedprice', 3),
+                 ('l_discount', 5), ('l_tax', 6)]:
+        vals = [money(v, i, k) for i, v in enumerate(cols[c])]
+        if c in ('l_discount', 'l_tax'):  # nulls only where the corpus promises them
+            vals = [0.0 if m is None else m for m in vals]
+        cols[c] = vals
+    pq.write_table(pa.table({c: pa.array(cols[c], li.schema.field(c).type)
+                             for c in li.schema.names}),
+                   os.path.join(d, 'lineitem.parquet'))
+    o = pq.read_table(os.path.join(SRC, 'orders.parquet'))
+    cols = {c: o.column(c).to_pylist() for c in o.schema.names}
+    tot = [money(v, i, 1) for i, v in enumerate(cols['o_totalprice'])]
+    cols['o_totalprice'] = [tot[i - 1] if i % 5 == 0 and i > 0 else v
+                            for i, v in enumerate(tot)]
+    cols['o_orderpriority'][7] = '0-SOLO'
+    pq.write_table(pa.table({c: pa.array(cols[c], o.schema.field(c).type)
+                             for c in o.schema.names}),
+                   os.path.join(d, 'orders.parquet'))
+    print(f'wrote {d}')
+
+
 if __name__ == '__main__':
     base = sys.argv[1] if len(sys.argv) > 1 else '/tmp/graft_fuzz'
     gen(base)
     gen_embeddings(base)
     gen_unicode(base)
+    gen_money(base)
