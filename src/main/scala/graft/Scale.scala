@@ -278,7 +278,7 @@ object Scale {
     // so an x100-only run doesn't charge JIT to its first-touch rows
     ensureCorpus(s"$outBase/x1", 5000L, 2000L)
     ops.foreach { case (n, fn) =>
-      if (selected(n)) fn(spark, s"$outBase/x1").count() }
+      if (selected(n)) Bench.materialize(fn(spark, s"$outBase/x1")) }
     for ((tag, mult, nDocs, nVecs) <- scales) {
       val dir = s"$outBase/$tag"
       ensureCorpus(dir, nDocs, nVecs)
@@ -297,9 +297,13 @@ object Scale {
         // the SERVED re-run is the deployment shape. Comparing x1-served
         // against x100-first-touch overstates growth; the pair makes both
         // trends readable (the r8 curriculum hand-split, now systematic).
+        // Each sample ends at a full `noop` write (`Bench.materialize`),
+        // as Bench and perfbench time; the row count is read after the
+        // timer, from the now-served artifacts.
         val t0 = System.nanoTime()
-        val rows = fn(spark, dir).count()
+        Bench.materialize(fn(spark, dir))
         val secs = (System.nanoTime() - t0) / 1e9
+        val rows = fn(spark, dir).count()
         val line = s"""{"scale":"$tag","mult":$mult,"op":"$name","rows":$rows,"sec":${r3(secs)}}"""
         println(line)
         results += line
@@ -312,7 +316,7 @@ object Scale {
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
         System.gc()
         val t1 = System.nanoTime()
-        fn(spark, dir).count()
+        Bench.materialize(fn(spark, dir))
         val secs2 = (System.nanoTime() - t1) / 1e9
         val line2 = s"""{"scale":"$tag","mult":$mult,"op":"${name}_served","rows":$rows,"sec":${r3(secs2)}}"""
         println(line2)

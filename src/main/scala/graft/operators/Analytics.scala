@@ -779,13 +779,17 @@ object Analytics {
         "SELECT t.decile, c.v AS boundary, t.target, t.n FROM t " +
         "JOIN c ON c.cum >= t.target AND c.cum - c.cnt < t.target"),
     "q_pricing_summary" ->
+      // Each exact decimal sum goes to DOUBLE through its decimal text:
+      // DuckDB's DECIMAL -> DOUBLE cast divides a double by 10^scale and so
+      // rounds twice once a sum passes 2^53 units; the text cast rounds
+      // once, correctly, as Spark's does.
       ("SELECT l_returnflag, l_linestatus, " +
-        "CAST(sum(qty) AS DOUBLE) AS sum_qty, " +
-        "CAST(sum(price) AS DOUBLE) AS sum_base_price, " +
-        "CAST(sum(price * (1 - disc)) AS DOUBLE) AS sum_disc_price, " +
-        "CAST(sum(price * (1 - disc) * (1 + tax)) AS DOUBLE) AS sum_charge, " +
-        "CAST(sum(qty) AS DOUBLE) / count(*) AS avg_qty, " +
-        "CAST(sum(price) AS DOUBLE) / count(*) AS avg_price, " +
+        "CAST(CAST(sum(qty) AS VARCHAR) AS DOUBLE) AS sum_qty, " +
+        "CAST(CAST(sum(price) AS VARCHAR) AS DOUBLE) AS sum_base_price, " +
+        "CAST(CAST(sum(price * (1 - disc)) AS VARCHAR) AS DOUBLE) AS sum_disc_price, " +
+        "CAST(CAST(sum(price * (1 - disc) * (1 + tax)) AS VARCHAR) AS DOUBLE) AS sum_charge, " +
+        "CAST(CAST(sum(qty) AS VARCHAR) AS DOUBLE) / count(*) AS avg_qty, " +
+        "CAST(CAST(sum(price) AS VARCHAR) AS DOUBLE) / count(*) AS avg_price, " +
         "count(*) AS count_order " +
         "FROM (SELECT l_returnflag, l_linestatus, CAST(l_quantity AS DECIMAL(12,2)) AS qty, CAST(l_extendedprice AS DECIMAL(12,2)) AS price, CAST(l_discount AS DECIMAL(12,2)) AS disc, CAST(l_tax AS DECIMAL(12,2)) AS tax FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00') " +
         "GROUP BY l_returnflag, l_linestatus"),

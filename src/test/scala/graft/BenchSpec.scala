@@ -34,6 +34,15 @@ class BenchSpec extends SparkSpec {
     assert(Bench.timed(throw new RuntimeException("x")).isEmpty)
   }
 
+  test("warm compiles count the generated classes the warm samples compile") {
+    // A literal is inlined in the generated code, so a new constant per
+    // run is a new class to compile; a repeated plan is served its class.
+    var n = 0
+    assert(timePass("same" -> ((s, _) => s.range(8).selectExpr("id * 7919 AS x"))).warmCompiles == 0)
+    val fresh = timePass("fresh" -> ((s, _) => { n += 1; s.range(8).selectExpr(s"id * ${7919 + n} AS x") }))
+    assert(n == 3 && fresh.warmCompiles >= 2, s"${fresh.warmCompiles} compiles in 2 warm samples")
+  }
+
   test("a query whose projected column throws is recorded as failed") {
     // Integer division by zero under ANSI throws only when the column is
     // computed; a `.count()` prunes the projection and would pass.

@@ -11,6 +11,9 @@ class ExtensionsSpec extends AnyFunSuite {
       .appName("graft-ext-spec")
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
+      // the first session in the JVM fixes the codegen cache size for
+      // every suite after it, so it must carry graft's setting
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toString)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     try {
