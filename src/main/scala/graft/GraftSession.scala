@@ -7,13 +7,6 @@ import org.apache.spark.sql.SparkSession
   * Scale posture: AQE on (runtime coalesce + skew-join splitting), shuffle
   * partitions sized to the local core count (a cluster deploy overrides via
   * `spark.sql.shuffle.partitions`), UTC so results are oracle-stable.
-  *
-  * Scheduling surface: the reference repo's delta is an FCFS flow manager for
-  * DataNode transfers (reference: hadoop-hdfs-project/.../datanode/
-  * FCFSManager.java:47, fcfsGateKeeper at :214). Spark's own FIFO scheduler is
-  * the in-engine analog; `withPool` exposes fair-scheduler pool tagging so a
-  * workload manager can segregate flows the way FCFSManager segregates block
-  * transfers by priority.
   */
 object GraftSession {
 
@@ -59,15 +52,5 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.VectorExpressions.register(spark)
     spark
-  }
-
-  /** Run `body` inside a named scheduler pool (FIFO within a pool, fair across
-    * pools) — the engine-level counterpart of the reference's FCFS flow
-    * priorities (FCFSManager.java:912 `getPriority`). */
-  def withPool[T](spark: SparkSession, pool: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    sc.setLocalProperty("spark.scheduler.pool", pool)
-    try body
-    finally sc.setLocalProperty("spark.scheduler.pool", null)
   }
 }

@@ -203,15 +203,14 @@ object Scale {
     // the one-time encode
     "sim_ann_pq",
     "sim_ann_ivfpq_rerank",
-    // round 15 (VERDICT r14 #7): the r14 additions' scale rows — all
+    // the audio, span and funnel scale rows — all
     // ride served artifacts (audio CC labels, the dupSpans relation,
     // the funnelFlags spine), so anything non-flat is a finding
     "mm_audio_dedup",
     "mm_audio_keep",
     "dedup_substring_rm_spans",
     "pipeline_funnel_source",
-    // round 17 (VERDICT r16 #9): the d91d04c/r17 serving wave's heaviest
-    // reads — the raw-candidate CC labeling, both minhash verifiers and
+    // the heaviest served reads of the dedup family — the raw-candidate CC labeling, both minhash verifiers and
     // the banded variant; all artifact reads now, so anything non-flat
     // ×1→×100 is a finding (first-touch carries the one-time build)
     "dedup_clusters",
@@ -232,7 +231,7 @@ object Scale {
 
   def main(args: Array[String]): Unit = {
     val outBase = args.headOption.getOrElse("/tmp/graft_scale")
-    // "=N" runs ONLY scale xN in this JVM (r16, VERDICT r15 #7): the
+    // "=N" runs ONLY scale xN in this JVM: the
     // shared-JVM sweep accumulated heap/GC debris across scale points —
     // the x100 re-run band read up to 2x its own first run — so the
     // sweep recipe is now one fresh JVM per point (SCALE.md), each
@@ -308,7 +307,7 @@ object Scale {
         println(line)
         results += line
         // Release the FIRST run's localCheckpoint blocks before timing the
-        // served re-run (r14, VERDICT r13 #7): a fresh invocation rebuilds
+        // served re-run: a fresh invocation rebuilds
         // its own checkpoints, so the first run's blocks are garbage that
         // squeezed the re-run's execution memory — at x100 a re-run could
         // time SLOWER than its own first touch (the SCALE.md r13 caveat),

@@ -97,8 +97,8 @@ case class BigramBucketCountsExpr(child: Expression, buckets: Int)
   * aggregate/zip_with candidate per language into a single projection, so
   * the expression tree grew linearly in |langs| and a model-sized language
   * set (fastText ships 176) would hit Catalyst codegen limits and fall
-  * back to interpreted eval — the exact blow-up the BPE replace-chain had
-  * (ADVICE r8). Here the whole |langs|×buckets weight matrix rides along
+  * back to interpreted eval — the exact blow-up the BPE replace-chain had.
+  * Here the whole |langs|×buckets weight matrix rides along
   * as a referenced object and scoring is a nested long loop in
   * [[LangidBytes.argmax]]; the tree is one node at ANY language count. */
 case class LangidArgmaxExpr(child: Expression, langs: Seq[String],

@@ -649,7 +649,7 @@ object Analytics {
   /** EXCLUSIVE prefix offsets over a CONSTANT-BOUNDED (blk, cnt) block
     * census — (blk, off) with off = Σ cnt of all strictly-smaller blocks
     * — as a single triangular broadcast join: no window at all, so no
-    * unpartitioned-window single task (r17, VERDICT r16 #8). ONLY for
+    * unpartitioned-window single task. ONLY for
     * censuses bounded by a code constant (≤ ~10⁴ rows — the
     * [[EquidepthBlocks]] = 4096 value census): the join compares
     * bound² / 2 pairs, trivial at 4096 but not at a corpus-growing census
@@ -664,8 +664,8 @@ object Analytics {
 
   /** EXCLUSIVE prefix offsets over a (blk, cnt) block census whose block
     * ids are bounded by construction but too many for [[blockOffsetsSmall]]
-    * — using NO unpartitioned window (r17, VERDICT r16 #8: the previous
-    * Window.orderBy(blk) cumsum ran the whole census through ONE task;
+    * — using NO unpartitioned window (a Window.orderBy(blk) cumsum runs
+    * the whole census through ONE task;
     * bounded at test SFs, but e.g. the ShuffleBlock census is ≤ 2²⁴ rows
     * — all of them through one partition at 100 TB). Two levels:
     *  1. superblock (blk DIV 4096) subtotals; their exclusive prefix is a
@@ -704,7 +704,7 @@ object Analytics {
           ((col("vmax").cast("double") - col("vmin").cast("double")) / EquidepthBlocks)))
         .otherwise(lit(0)).cast("long"))
       .select(col("v"), col("cnt"), col("blk"))
-    // r17 (VERDICT r16 #8): block offsets via the no-window triangular
+    // block offsets via the no-window triangular
     // join — the block census is ≤ EquidepthBlocks = 4096 rows by
     // construction, exactly blockOffsetsSmall's contract
     val offs = blockOffsetsSmall(vc.groupBy("blk").agg(sum(col("cnt")).as("cnt")))

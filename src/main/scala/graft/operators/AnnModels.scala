@@ -69,6 +69,10 @@ object AnnModels {
   private val buildCounts = new ConcurrentHashMap[String, Integer]()
   private[graft] def builds(name: String): Int = buildCounts.getOrDefault(name, 0)
 
+  /** The serve record: reads per artifact name, built or not. */
+  private val serveCounts = new ConcurrentHashMap[String, Integer]()
+  private[graft] def serves(name: String): Int = serveCounts.getOrDefault(name, 0)
+
   /** (building artifact, artifact it served) pairs observed during builds —
     * what a build actually reads, to check against its declared deps. */
   private val observed = ConcurrentHashMap.newKeySet[(String, String)]()
@@ -99,6 +103,7 @@ object AnnModels {
       closure(this).toSeq.collect { case Source(t) => t }.sorted
 
     protected def serve(s: SparkSession, dir: String)(write: Path => Unit): Path = {
+      serveCounts.merge(name, 1, (a, b) => a + b)
       building.get.headOption.foreach(b => observed.add((b, name)))
       val p = new Path(root(s), s"$name-${keyOf(this, dir, c => c.material(s, dir))}")
       ensureGen(s, p, dir, tables.mkString(","), name)(write)
@@ -219,19 +224,19 @@ object AnnModels {
       Similarity.KMeansIters, Similarity.TrainMod, Similarity.ivfK(s, dir)))
   val pqCodebook: Relation =
     Artifact("pq", "", Seq(Emb, PqGeom), coalesce1 = true)(Similarity.trainPqCodebook)
-  val pqCodes: Relation = Artifact("pqcodes", "round=4", Seq(pqCodebook))(Similarity.pqCodesInline)
+  val pqCodes: Relation = Artifact("pqcodes", "round=4", Seq(pqCodebook))(Similarity.pqCodesOf)
   val ivfAssign: Relation = Artifact("ivfasn", "round=4", Seq(ivfCentroids))(
     (s, dir) => Similarity.ivfAssignWith(Tables.load(s, dir, "embeddings"), ivfCentroids(s, dir)))
   val semanticLabels: Relation =
-    Artifact("semlab", "", Seq(ivfAssign, Cosine))(Dedup.semanticLabInline)
+    Artifact("semlab", "", Seq(ivfAssign, Cosine))(Dedup.semanticLabelsOf)
   val embedPairs: Relation =
-    Artifact("embpairs", "", Seq(Emb, Cosine))(Dedup.embeddingNearDupInline)
+    Artifact("embpairs", "", Seq(Emb, Cosine))(Dedup.embedPairsOf)
   val knnGraph: Relation = Artifact("knng", "", Seq(GraphGeom)) { (s, dir) =>
     val (tables, planes) = Similarity.graphSize(s, dir)
     Similarity.knnGraphTuned(s, dir, tables, planes, Similarity.GraphBucketCap)
   }
   val alignScores: Relation =
-    Artifact("align", "dims=64,round=4,bar=ceilhalf", Seq(Docs, Emb))(Multimodal.textAlignInline)
+    Artifact("align", "dims=64,round=4,bar=ceilhalf", Seq(Docs, Emb))(Multimodal.alignScoresOf)
 
   // --- language models and their scores ----------------------------------
 
@@ -255,8 +260,14 @@ object AnnModels {
       } finally corpus.unpersist(false)
   }
 
-  val pplScores: Relation = Artifact("ppl", "", Seq(trigramLm))(TextOps.perplexityInline)
-  val ppl5Scores: Relation = Artifact("ppl5", "", Seq(kn5Lm))(TextOps.perplexityKn5Inline)
+  val pplScores: Relation = Artifact("ppl", "", Seq(trigramLm)) { (s, dir) =>
+    val Seq(c3, c2, u) = trigramLm(s, dir)
+    TextOps.perplexityScore(docs(s, dir), c3, c2, u)
+  }
+  val ppl5Scores: Relation = Artifact("ppl5", "", Seq(kn5Lm)) { (s, dir) =>
+    val Seq(c5, c4, c3, c2, u) = kn5Lm(s, dir)
+    TextOps.kn5Score(docs(s, dir), c5, c4, c3, c2, u)
+  }
 
   /** The corpus-side ingest admission model: the LM of source <> 'src0'
     * (c3, c2, u) and the calibrated logit8 bar (thr, NULL on an empty
@@ -295,17 +306,22 @@ object AnnModels {
   val qualityCentroids: Relation = Artifact("qualcent", "",
     Seq(pplScores, QualityFeatures, GopherSeed), coalesce1 = true)(TextOps.trainQualityCentroids)
   val trainedMargins: Relation = Artifact("qtm", "fit=rocchio",
-    Seq(pplScores, qualityCentroids, QualityFeatures))(TextOps.qualityTrainedInline)
+    Seq(pplScores, qualityCentroids, QualityFeatures))((s, dir) => TextOps.qualityTrainedWith(
+      TextOps.qualityFeaturesOf(docs(s, dir), pplScores(s, dir)), qualityCentroids(s, dir).collect()))
   val lrMargins: Relation = Artifact("qlr", "fit=lr",
-    Seq(pplScores, QualityFeatures, GopherSeed, LrFit))(TextOps.qualityLrInline)
+    Seq(pplScores, QualityFeatures, GopherSeed, LrFit)) { (s, dir) =>
+    val feats = TextOps.qualityFeaturesOf(docs(s, dir), pplScores(s, dir)).localCheckpoint()
+    val (mu, w) = TextOps.qualityLrFit(feats, TextOps.gopherSeedOf(docs(s, dir)))
+    TextOps.qualityLrScoreWith(feats, mu, w)
+  }
   val lrGate: Relation = Artifact("qlrg", "fit=lr,excl=src0",
-    Seq(ingestGate, QualityFeatures, GopherSeed, LrFit), coalesce1 = true)(TextOps.qualityLrGateInline)
+    Seq(ingestGate, QualityFeatures, GopherSeed, LrFit), coalesce1 = true)(TextOps.qualityLrGateOf)
   val ftMargins: Relation = Artifact("qft",
     s"fit=lr-hash,b=${TextOps.FtBuckets},k=${TextOps.FtIters}," +
       s"eta=${TextOps.FtEtaNum}/${TextOps.FtEtaDen},grams=1+2,half=even,norm=1e6",
-    Seq(Docs, GopherSeed))((s, dir) => TextOps.qualityFtInlineOf(docs(s, dir)))
+    Seq(Docs, GopherSeed))((s, dir) => TextOps.qualityFtOf(docs(s, dir)))
   val dirtyGrams: Relation =
-    Artifact("dirty", "g=5,bench=lt10", Seq(Docs))(Pipeline.decontaminateInline)
+    Artifact("dirty", "g=5,bench=lt10", Seq(Docs))(Pipeline.dirtyGramsOf)
   val tokenTotals: Relation = Artifact("toktot", "tok=ws", Seq(Docs), coalesce1 = true)(
     // the ONE token counter the pack family budgets in, so chunk-id
     // continuity between census, delta pack and full pack cannot drift
@@ -359,7 +375,7 @@ object AnnModels {
   val bpeStaticIdStream: Relation = Artifact("bids", "", Seq(Docs, BpeStatic))(
     (s, dir) => TextOps.bpeIdsWith(docs(s, dir), TextOps.BpeMerges))
   val bpeDecodeAudit: Relation =
-    Artifact("bdec", "", Seq(bpeStaticVocab, bpeStaticIdStream))(TextOps.bpeDecodeInline)
+    Artifact("bdec", "", Seq(bpeStaticVocab, bpeStaticIdStream))(TextOps.bpeDecodeOf)
   val bpeTrainedIdStream: Relation = Artifact("btids", "", Seq(bpeMergeTable))(
     (s, dir) => TextOps.bpeIdsWith(docs(s, dir), TextOps.trainedMerges(s, dir)))
   val bpeTrainedIdStreamBig: Relation = Artifact("btidsbig", "", Seq(bpeMergeTableBig))(
@@ -381,21 +397,21 @@ object AnnModels {
   val candPairs: Relation = Artifact("mhcand", "", Seq(Docs, Minhash))(
     (s, dir) => Dedup.minhashLshCapped(s, dir, Dedup.MaxBucket))
   val bandedPairs: Relation = Artifact("mhband", s"r=${Dedup.BandRows}", Seq(Docs, Minhash))(
-    Dedup.minhashLshBandedInline)
+    Dedup.bandedPairsOf)
   val shinglePairs: Relation = Artifact("shpairs", "", Seq(Docs, Minhash))(
-    (s, dir) => Dedup.shingleInterPairsInline(s, dir))
-  val candSigs: Relation = Artifact("mhsig", "", Seq(candPairs))(Dedup.candSigsInline)
-  val candGramCounts: Relation = Artifact("mhgc", "", Seq(candPairs))(Dedup.candGramCountsInline)
+    Dedup.shinglePairsOf)
+  val candSigs: Relation = Artifact("mhsig", "", Seq(candPairs))(Dedup.candSigsOf)
+  val candGramCounts: Relation = Artifact("mhgc", "", Seq(candPairs))(Dedup.candGramCountsOf)
   val candLabels: Relation = Artifact("ccraw", "", Seq(candPairs))(
     (s, dir) => Dedup.ccLabels(docs(s, dir).select(col("doc_id")), candPairs(s, dir)))
   val verifiedPairs: Relation = Artifact("vpairs", s"j=${Dedup.JaccardThreshold}",
-    Seq(candPairs))(Dedup.minhashVerifiedInline)
+    Seq(candPairs))(Dedup.verifiedPairsOf)
   val survivorLabels: Relation =
     Artifact("cclab", "exact=md5", Seq(verifiedPairs))(Dedup.survivorLabelsOf)
-  val substrStats: Relation = Artifact("substat", "", Seq(Docs, Substr))(Dedup.substringDupInline)
-  val dupStarts: Relation = Artifact("dupstart", "", Seq(Docs, Substr))(Dedup.dupStartsInline)
+  val substrStats: Relation = Artifact("substat", "", Seq(Docs, Substr))(Dedup.substrStatsOf)
+  val dupStarts: Relation = Artifact("dupstart", "", Seq(Docs, Substr))(Dedup.dupStartsOf)
   val boilerTop: Relation = Artifact("boiltop", s"k=${Dedup.BoilerplateK}", Seq(Docs, Substr),
-    coalesce1 = true)(Dedup.boilerplateTopKInline)
+    coalesce1 = true)(Dedup.boilerTopOf)
 
   /** Degenerate-block censuses (≤ 9 rows) and verified hamming pairs of
     * the three 64-bit hash families: simhash, image phash, audio print. */
@@ -405,37 +421,48 @@ object AnnModels {
     (s, dir) => Dedup.degenCensusOf(Multimodal.phashed(s, dir)))
   val audioDegen: Relation = Artifact("dgau", "", Seq(Docs, Hamming), coalesce1 = true)(
     (s, dir) => Dedup.degenCensusOf(Multimodal.audioHashed(s, dir)))
-  val simhashPairs: Relation =
-    Artifact("hpsim", "", Seq(simhashDegen))((s, dir) => Dedup.simhashPairsInline(s, dir))
-  val phashPairs: Relation = Artifact("hpph", "", Seq(phashDegen))(Multimodal.phashPairsInline)
-  val audioPairs: Relation = Artifact("hpau", "", Seq(audioDegen))(Multimodal.audioPairsInline)
+  val simhashPairs: Relation = Artifact("hpsim", "", Seq(simhashDegen))((s, dir) =>
+    Dedup.hammingPairs(Dedup.simhashed(s, dir), Dedup.degenOf(simhashDegen(s, dir))))
+  val phashPairs: Relation = Artifact("hpph", "", Seq(phashDegen))((s, dir) =>
+    Dedup.hammingPairs(Multimodal.phashed(s, dir), Multimodal.phashDegen(s, dir)))
+  val audioPairs: Relation = Artifact("hpau", "", Seq(audioDegen))((s, dir) =>
+    Dedup.hammingPairs(Multimodal.audioHashed(s, dir), Multimodal.audioDegen(s, dir)))
   val phashLabels: Relation = Artifact("phlab", "", Seq(phashPairs))(Multimodal.phashLabelsOf)
   val audioLabels: Relation = Artifact("aulab", "", Seq(audioPairs))(Multimodal.audioLabelsOf)
   val phashIndex: Relation = Artifact("phidx", "blocks=3,excl=src0", Seq(Docs))(
     (s, dir) => Multimodal.phashIndexOf(docs(s, dir).filter(col("source") =!= "src0")))
   val resampleIndex: Relation = Artifact("rsmp", s"side=${Multimodal.MaxSide},pool=lum,h=md5",
-    Seq(Docs))(Multimodal.resizeSampleInline)
+    Seq(Docs))(Multimodal.resampleIndexOf)
 
   // --- curation, build manifests and loader orders -------------------------
 
   val funnelFlags: Relation = Artifact("funfl", "",
     Seq(langidScores, qualityScores, semanticLabels, alignScores, CurateGates))(
-    Pipeline.funnelFlagsInline)
+    Pipeline.funnelFlagsOf)
   val curateManifest: Relation = Artifact("curheur", "",
-    Seq(langidScores, qualityScores, CurateGates))(Pipeline.curateInline)
+    Seq(langidScores, qualityScores, CurateGates))((s, dir) => Pipeline.curateGated(s, dir,
+    TextOps.quality(s, dir).filter(col("quality_score") >= Pipeline.QualityThreshold)
+      .select(col("doc_id"), col("quality_score"))))
   val curateModelManifest: Relation = Artifact("curmod", "rule=model0",
-    Seq(langidScores, qualityLogits, CurateGates))(Pipeline.curateModelInline)
-  val curateNearDupManifest: Relation =
-    Artifact("curnd", "", Seq(curateManifest, survivorLabels))(Pipeline.curateNearDupInline)
-  val curateSemanticManifest: Relation =
-    Artifact("cursem", "", Seq(curateManifest, semanticLabels))(Pipeline.curateSemanticInline)
+    Seq(langidScores, qualityLogits, CurateGates))((s, dir) => Pipeline.curateGated(s, dir,
+    TextOps.qualityModel(s, dir).filter(col("model_keep") === 1)
+      .select(col("doc_id"), col("logit"))))
+  val curateNearDupManifest: Relation = Artifact("curnd", "",
+    Seq(curateManifest, survivorLabels))((s, dir) => Pipeline.curate(s, dir)
+    .join(Dedup.survivors(s, dir).select(col("doc_id")), Seq("doc_id"), "left_semi"))
+  val curateSemanticManifest: Relation = Artifact("cursem", "",
+    Seq(curateManifest, semanticLabels))((s, dir) => Pipeline.curate(s, dir)
+    .join(Dedup.semanticDedupKeep(s, dir).select(col("vec_id").as("doc_id")),
+      Seq("doc_id"), "left_semi"))
   val curateAlignedManifest: Relation = Artifact("curalg", "",
-    Seq(curateSemanticManifest, alignScores))(Pipeline.curateAlignedInline)
+    Seq(curateSemanticManifest, alignScores))((s, dir) => Pipeline.curateSemantic(s, dir)
+    .join(Multimodal.textAlign(s, dir).filter(col("align_keep") === 1).select(col("doc_id")),
+      Seq("doc_id"), "left_semi"))
   val srcStats: Relation = Artifact("srcst", "ntok=ws", Seq(gopherFlags, survivorLabels),
-    coalesce1 = true)(TextOps.sourceStatsInline)
+    coalesce1 = true)(TextOps.sourceStatsOf)
   val curateSourceManifest: Relation = Artifact("cursrc",
     s"slack=${Pipeline.SourceDupSlackPpm},rule=half/2x",
-    Seq(srcStats, gopherFlags, survivorLabels))(Pipeline.curateSourceInline)
+    Seq(srcStats, gopherFlags, survivorLabels))(Pipeline.curateSourceOf)
 
   /** Build manifests: the Gopher / near-dup / contamination gates, the
     * model-gate slot and the two-level pack over the qsc token spine. */
@@ -454,9 +481,9 @@ object AnnModels {
     lrMargins +: buildGates, coalesce1 = true)((s, dir) => Pipeline.buildWith(s, dir,
       TextOps.qualityLr(s, dir).filter(col("lr_keep") === 1).select("doc_id")))
   val interleaveOrder: Relation = Artifact("ilv", "temper=sqrt1e6,key=1e9div",
-    Seq(Docs, Shuffle))(Pipeline.interleaveInline)
+    Seq(Docs, Shuffle))(Pipeline.interleaveOf)
   val curriculumOrder: Relation =
-    Artifact("curric", "tiers=tertile", Seq(pplScores, Shuffle))(Pipeline.curriculumInline)
+    Artifact("curric", "tiers=tertile", Seq(pplScores, Shuffle))(Pipeline.curriculumOf)
 
   // --- store protocol --------------------------------------------------------
 
@@ -483,10 +510,7 @@ object AnnModels {
     * (comma-separated) concatenate their fingerprints. Exposed for
     * corpus-derived memos that must share this freshness discipline
     * (Similarity.embCount). */
-  private[graft] def tableFingerprint(s: SparkSession, dir: String,
-      table: String): String = fingerprint(s, dir, table)
-
-  private def fingerprint(s: SparkSession, dir: String, table: String): String =
+  private[graft] def fingerprint(s: SparkSession, dir: String, table: String): String =
     if (table.indexOf(',') >= 0)
       table.split(",").map(t => fingerprintOne(s, dir, t)).mkString("||")
     else fingerprintOne(s, dir, table)
@@ -530,7 +554,7 @@ object AnnModels {
     * already exists. Uniqueness per retrain matters when a corpus REVERTS
     * to an earlier fingerprint (A→B→A): a name reuse would retrain by
     * overwriting gen(A) in place — the very directory kept as 'previous'
-    * that a live handle may still reference (ADVICE r11). The marker
+    * that a live handle may still reference. The marker
     * records which name actually serves, so lookup never recomputes it. */
   private def freshGenName(fs: FileSystem, p: Path, fp: String): String = {
     val base = genName(fp)
@@ -607,7 +631,7 @@ object AnnModels {
     * stays uncommitted, so the next access retrains. */
   private def ensureGen(s: SparkSession, p: Path, dir: String, table: String, name: String)
       (write: Path => Unit): Path = {
-    // LOCK-FREE serve path (r12 review): the marker protocol makes an
+    // LOCK-FREE serve path: the marker protocol makes an
     // unlocked freshness check safe — the marker is written LAST, names
     // the serving generation, and GC always keeps that generation plus
     // the previous one — so the common case (a fresh artifact exists)

@@ -79,7 +79,7 @@ object Dedup {
     * LSH design (a bucket == docs agreeing on a minhash) AND by the shared
     * salted-bucket policy ([[saltedBuckets]]), which the oracle replays. */
   def minhashLsh(s: SparkSession, dir: String): DataFrame =
-    // r16: the candidate set is a registry artifact (AnnModels.candPairs
+    // the candidate set is a registry artifact (AnnModels.candPairs
     // — the hamming pair-store discipline): its six consumers share one
     // signature + census + salt + explode chain per corpus state.
     AnnModels.candPairs(s, dir)
@@ -106,14 +106,12 @@ object Dedup {
     * strictly better at scale than a windowed buffer of the densest
     * buckets. */
   def simhashPairs(s: SparkSession, dir: String): DataFrame =
-    // the verified pair relation is itself a registry artifact (r15,
-    // VERDICT r14 #4's endpoint): the per-invocation cost of the gated
-    // query is one artifact read — the minhashVerified serving discipline
-    // applied to the hamming family.
+    // the verified pair relation is itself a registry artifact
+    // (hammingPairs over the served degenerate census): the pair relation
+    // is a pure function of corpus + constants, so the per-invocation
+    // cost of the gated query is one artifact read — the minhashVerified
+    // serving discipline applied to the hamming family.
     AnnModels.simhashPairs(s, dir)
-
-  private[graft] def simhashPairsInline(s: SparkSession, dir: String): DataFrame =
-    hammingPairs(simhashed(s, dir), degenOf(AnnModels.simhashDegen(s, dir)))
 
   /** The (doc_id, h) simhash relation the hamming engine pairs. */
   private[graft] def simhashed(s: SparkSession, dir: String): DataFrame =
@@ -180,7 +178,7 @@ object Dedup {
     // by construction — masked candidates == unmasked candidates
     // generated via clean buckets (spec).
     //
-    // r15 (VERDICT r14 #4): the census is a per-CORPUS-STATE value, not a
+    // the census is a per-CORPUS-STATE value, not a
     // per-invocation one — every gated corpus path passes it in
     // REGISTRY-SERVED (AnnModels.simhashDegen etc.: ≤ 9 rows, trained once,
     // fingerprint-fresh), so the hot path pays one tiny artifact read
@@ -238,8 +236,8 @@ object Dedup {
     * registry-key token — part of the AnnModels `Hamming` constant group,
     * so a layout change here re-keys (and therefore rebuilds) the
     * degenerate censuses and pair relations downstream of it instead of
-    * serving stale ones (ADVICE r15: the keys used to hardcode the
-    * string). Must describe exactly what [[hammingBlocked]] computes. */
+    * serving stale ones (a key that hardcodes the layout string would
+    * not re-key when the layout changes). Must describe exactly what [[hammingBlocked]] computes. */
   private[graft] val BlockLayout = "22/21/21"
 
   /** 3-block pigeonhole rows of ANY (doc_id, h: 64-bit) relation, keyed
@@ -343,14 +341,14 @@ object Dedup {
     * even self-pair a document); 2^-64 per pair keeps the ratios exact
     * modulo vanishing probability. The oracle hashes identically. */
   private def shingleInterPairs(s: SparkSession, dir: String): DataFrame =
-    // the pair store is REGISTRY-SERVED (r12 — one posting-list expansion
-    // per corpus state; four gated consumers: jaccard, containment, both
+    // the pair store is REGISTRY-SERVED (one posting-list expansion per
+    // corpus state; four gated consumers: jaccard, containment, both
     // recall audits)
     AnnModels.shinglePairs(s, dir)
 
   /** The posting-list pair-verification engine — what
     * AnnModels.shinglePairs runs ONCE per corpus state. */
-  private[graft] def shingleInterPairsInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def shinglePairsOf(s: SparkSession, dir: String): DataFrame = {
     val sh = docs(s, dir)
       .repartition(col("doc_id"))
       .select(col("doc_id"),
@@ -377,16 +375,16 @@ object Dedup {
     * the same alternating-join shape GraphX/connected-components runs at
     * cluster scale. The driver-side loop only reads a convergence count. */
   def clusterAssign(s: SparkSession, dir: String): DataFrame =
-    // r16: served (AnnModels.candLabels) — the survivorLabels discipline
-    // on the candidate graph; the star-contraction loop runs once per
-    // corpus state instead of on every read of the suite's heaviest query.
+    // served (AnnModels.candLabels), the survivorLabels discipline on the
+    // candidate graph: the star-contraction loop runs once per corpus
+    // state instead of on every read of the suite's heaviest query.
     AnnModels.candLabels(s, dir)
 
   /** Min-label connected components over an undirected candidate-pair list
     * (the engine behind `clusterAssign` and `survivors`; Multimodal's
     * phash dedup runs the same engine over perceptual-hash pairs).
     *
-    * r12 (VERDICT r11 #5): the engine is now the two-phase
+    * The engine is the two-phase
     * LARGE-STAR / SMALL-STAR alternation (Kiveris et al. 2014, "Connected
     * Components in MapReduce and Beyond") instead of min-label
     * propagation. The structural difference that fixes the measured ×100
@@ -576,12 +574,12 @@ object Dedup {
     * pairs join only within a (label, salt) group: a self-join, not a
     * collected list, because each side carries its embedding. */
   def embeddingNearDup(s: SparkSession, dir: String): DataFrame =
-    // r17: served (AnnModels.embedPairs) — the embedding near-dup pair
-    // table is the SemDeDup-style relation a deployment persists nightly;
-    // the salted block self-join re-ran per invocation.
+    // served (AnnModels.embedPairs): the embedding near-dup pair table is
+    // the SemDeDup-style relation a deployment persists nightly, so the
+    // salted block self-join does not re-run per invocation.
     AnnModels.embedPairs(s, dir)
 
-  private[graft] def embeddingNearDupInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def embedPairsOf(s: SparkSession, dir: String): DataFrame = {
     val (bounded, _) = boundedBuckets(Tables.load(s, dir, "embeddings"),
       Seq("label"), "vec_id", LabelCap)
     bounded.as("a")
@@ -618,12 +616,12 @@ object Dedup {
     * salted sets are not nested. Same single-scan, salted-bucket,
     * pairs-only shape as the r=1 path. */
   def minhashLshBanded(s: SparkSession, dir: String): DataFrame =
-    // r17: served (AnnModels.bandedPairs) — the candPairs discipline on
-    // the b×r banding: the signature pass + bucket census + pair explode
-    // re-ran per invocation for a pure function of corpus + constants.
+    // served (AnnModels.bandedPairs), the candPairs discipline on the b×r
+    // banding: the signature pass + bucket census + pair explode are a
+    // pure function of corpus + constants, not per-invocation work.
     AnnModels.bandedPairs(s, dir)
 
-  private[graft] def minhashLshBandedInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def bandedPairsOf(s: SparkSession, dir: String): DataFrame = {
     val nBands = MinhashPerms / BandRows
     val bb = docs(s, dir)
       .repartition(col("doc_id"))
@@ -653,11 +651,11 @@ object Dedup {
     AnnModels.verifiedPairs(s, dir)
 
   /** The verification chain itself — what AnnModels.verifiedPairs runs
-    * ONCE per corpus state (r13: the relation is multi-consumer — the
-    * gated verified query, the source-overlap matrix, and the
-    * survivor-label trainer all read it — so it joined the served set
-    * per the SURVEY §16.8 invariant). */
-  private[graft] def minhashVerifiedInline(s: SparkSession, dir: String): DataFrame = {
+    * ONCE per corpus state (the relation is multi-consumer — the gated
+    * verified query, the source-overlap matrix, and the survivor-label
+    * trainer all read it — so it is served per the SURVEY §16.8
+    * invariant). */
+  private[graft] def verifiedPairsOf(s: SparkSession, dir: String): DataFrame = {
     // Candidate pairs are bounded by LSH design — materialize them once
     // (localCheckpoint, like ccLabels' edge list) so the id set and the two
     // verification joins don't re-run candidate generation.
@@ -708,12 +706,12 @@ object Dedup {
     * The spec asserts the binomial error band against the exact verified
     * Jaccard on the shared candidate set. */
   def minhashEstimate(s: SparkSession, dir: String): DataFrame = {
-    val p = minhashLsh(s, dir) // r16: an artifact scan now - no recompute
+    val p = minhashLsh(s, dir) // an artifact scan - no recompute
     // risk for the multi-branch plan, and skipping the checkpoint saves a
     // materialization job per invocation (re-reads are parquet scans)
-    // r17: the candidate signature relation is served too — the per-
-    // invocation text re-scan + minhash re-hash was the query's remaining
-    // cost for a relation that changes only with the corpus (the candPairs
+    // the candidate signature relation is served too: the per-invocation
+    // text re-scan + minhash re-hash would be the query's remaining cost
+    // for a relation that changes only with the corpus (the candPairs
     // discipline one layer down).
     val sigs = AnnModels.candSigs(s, dir)
     val matches = aggregate(
@@ -730,7 +728,7 @@ object Dedup {
     * [[graft.operators.AnnModels.candSigs]] builds once per corpus state:
     * semi-join reduction first (minhashVerified's discipline), so only
     * candidate documents' signatures materialize and shuffle. */
-  private[graft] def candSigsInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def candSigsOf(s: SparkSession, dir: String): DataFrame = {
     val p = minhashLsh(s, dir)
     val candIds = p.select(col("doc_a").as("doc_id"))
       .unionAll(p.select(col("doc_b").as("doc_id"))).distinct()
@@ -747,7 +745,7 @@ object Dedup {
     * corpus state: the multiset verifier's per-doc counts, materialized
     * only for candidate documents (semi-join reduction). Elements ship as
     * full 64-bit hashes — same collision budget as the set verifier. */
-  private[graft] def candGramCountsInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def candGramCountsOf(s: SparkSession, dir: String): DataFrame = {
     val p = minhashLsh(s, dir)
     val candIds = p.select(col("doc_a").as("doc_id"))
       .unionAll(p.select(col("doc_b").as("doc_id"))).distinct()
@@ -781,12 +779,12 @@ object Dedup {
     * same asymptotic bill as shipping the hashed arrays. Elements ship as
     * full 64-bit hashes for the same collision budget as the set verifier. */
   def weightedJaccard(s: SparkSession, dir: String): DataFrame = {
-    val p = minhashLsh(s, dir) // r16: an artifact scan now - no recompute
+    val p = minhashLsh(s, dir) // an artifact scan - no recompute
     // risk for the multi-branch plan, and skipping the checkpoint saves a
     // materialization job per invocation (re-reads are parquet scans)
-    // r17: the per-doc count relation is served too (VERDICT r16 #4) — the
-    // candidate-bounded text re-shingle + hash + count re-ran per
-    // invocation for a relation that changes only with the corpus; the
+    // the per-doc count relation is served too: the candidate-bounded
+    // text re-shingle + hash + count would re-run per invocation for a
+    // relation that changes only with the corpus; the
     // three consumers below (Σmin, tot_a, tot_b) are artifact scans now,
     // so the localCheckpoint goes with it.
     val cnt = AnnModels.candGramCounts(s, dir)
@@ -870,12 +868,12 @@ object Dedup {
 
   /** The SemDeDup labeling trainer — CC labels over within-cluster
     * verified near-dup pairs. Gated queries serve the registry artifact
-    * ([[AnnModels.semanticLabels]], r13 — the survivorLabels pattern on
-    * the embedding column): this chain is the trainer, spec-pinned
-    * bit-identical to the served form. The salted pair join reads the
-    * SERVED assignment (narrow — no embedding column) and re-attaches
-    * vectors by id-equijoin only where the cosine needs them. */
-  private[graft] def semanticLabInline(s: SparkSession, dir: String): DataFrame = {
+    * ([[AnnModels.semanticLabels]] — the survivorLabels pattern on the
+    * embedding column), which this chain builds. The salted pair join
+    * reads the SERVED assignment (narrow — no embedding column) and
+    * re-attaches vectors by id-equijoin only where the cosine needs
+    * them. */
+  private[graft] def semanticLabelsOf(s: SparkSession, dir: String): DataFrame = {
     val assign = AnnModels.ivfAssign(s, dir)
       .join(Tables.load(s, dir, "embeddings"), Seq("vec_id"))
       .select(col("vec_id"), col("cent_id"), col("embedding"))
@@ -928,12 +926,12 @@ object Dedup {
     * windowed-buffer hazard anywhere (contrast the pair-generating paths
     * above, which need salting because they EXPAND buckets). */
   def substringDup(s: SparkSession, dir: String): DataFrame =
-    // r17: served (AnnModels.substrStats) — the per-doc duplicated-window
-    // stats are the audit a dedup deployment persists next to its pair
-    // tables; the full-corpus window explode re-ran per invocation.
+    // served (AnnModels.substrStats): the per-doc duplicated-window stats
+    // are the audit a dedup deployment persists next to its pair tables,
+    // so the full-corpus window explode does not re-run per invocation.
     AnnModels.substrStats(s, dir)
 
-  private[graft] def substringDupInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def substrStatsOf(s: SparkSession, dir: String): DataFrame = {
     val g = docs(s, dir)
       .repartition(col("doc_id"))
       .select(col("doc_id"),
@@ -987,12 +985,12 @@ object Dedup {
     * on the driver, never a full sort of the census. Ranking ties break
     * on the hash, so the report is deterministic. */
   def boilerplateTopK(s: SparkSession, dir: String): DataFrame =
-    // r17: served (AnnModels.boilerTop) — the K-row boilerplate report is
+    // served (AnnModels.boilerTop): the K-row boilerplate report is
     // exactly the artifact a data engineer reads before substringRemove
-    // runs; the full census pass re-ran per invocation.
+    // runs, so the full census pass does not re-run per invocation.
     AnnModels.boilerTop(s, dir)
 
-  private[graft] def boilerplateTopKInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def boilerTopOf(s: SparkSession, dir: String): DataFrame = {
     // K rows; localCheckpoint so the exemplar-id read and the final join
     // share ONE census execution
     val top = boilerplateCensusTop(s, dir).localCheckpoint()
@@ -1045,7 +1043,7 @@ object Dedup {
     * corpus state: posexplode windows, xxhash64 group keys
     * (group-defining only — see substringDup), the >= 2-docs census, and
     * the semi-join back to positions. */
-  private[graft] def dupStartsInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def dupStartsOf(s: SparkSession, dir: String): DataFrame = {
     val g = docs(s, dir)
       .repartition(col("doc_id"))
       .select(col("doc_id"),
@@ -1063,9 +1061,9 @@ object Dedup {
 
   def substringRemove(s: SparkSession, dir: String): DataFrame = {
     val w = SubstrGram
-    // r17: the duplicated-start relation is served (AnnModels.dupStarts)
-    // — the full-corpus window explode + census re-ran per invocation in
-    // all four substring consumers; only the text rebuild scans documents.
+    // the duplicated-start relation is served (AnnModels.dupStarts), so
+    // the full-corpus window explode + census run once for all four
+    // substring consumers; only the text rebuild scans documents.
     val dps = AnnModels.dupStarts(s, dir)
       .groupBy("doc_id").agg(sort_array(collect_set(col("pos"))).as("dps"))
     // token j (1-based) survives iff no duplicated window start i covers it.
@@ -1129,7 +1127,7 @@ object Dedup {
     * bounded by the doc's own window count, never corpus-sized. */
   private[graft] def dupSpans(s: SparkSession, dir: String): DataFrame = {
     val w = SubstrGram
-    // r17: rides the served duplicated-start relation (see substringRemove)
+    // rides the served duplicated-start relation (see substringRemove)
     // — the span merge below runs over positions only, never text.
     val dps = AnnModels.dupStarts(s, dir)
     val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("pos"))

@@ -123,8 +123,7 @@ object Extras {
     * rides along for the accuracy audit (spec asserts the 1/sqrt(k) error
     * band); the sketch is the product. */
   def sketchDistinct(s: SparkSession, dir: String): DataFrame = {
-    // ONE corpus explode + distinct for BOTH consumers (r17, VERDICT r16
-    // #7): without the materialization the kth chain and the exact count
+    // ONE corpus explode + distinct for BOTH consumers: without the materialization the kth chain and the exact count
     // each re-scan and re-aggregate the full (source, g) relation — the
     // plan showed two Generate+Exchange(source, g) subtrees over two text
     // scans. The checkpointed rows are the distinct (source, g, h)
@@ -251,7 +250,7 @@ object Extras {
       .filter(col("nhit") === k)
       .select(col("key"))
       .localCheckpoint()
-    // TWO audit passes, not four (r17, VERDICT r16 #7): probed/members
+    // TWO audit passes, not four: probed/members
     // fold into one flag-join aggregate over prb, pass/false-positives
     // into one over pass — the semi/anti pairs re-scanned each relation
     // twice for counts one membership flag carries. distinct() keeps the

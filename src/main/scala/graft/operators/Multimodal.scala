@@ -264,9 +264,6 @@ object Multimodal {
     // (the minhashVerified discipline)
     graft.operators.AnnModels.audioPairs(s, dir)
 
-  private[graft] def audioPairsInline(s: SparkSession, dir: String): DataFrame =
-    Dedup.hammingPairs(audioHashed(s, dir), audioDegen(s, dir))
-
   /** The audio hash family's registry-served degenerate census (shared
     * by the pairing query and the CC-label trainer). */
   private[operators] def audioDegen(s: SparkSession, dir: String): Seq[(Int, Long)] =
@@ -354,7 +351,7 @@ object Multimodal {
     * as the byte stub). Because it runs on DECODED pixels, the same image
     * re-encoded (different PNG filter/compression settings) produces the
     * SAME 64-bit hash — the property byte-domain segmentation lacks and
-    * the one image-dedup actually needs (VERDICT r8 #4; spec-asserted on a
+    * the one image-dedup actually needs (spec-asserted on a
     * twice-encoded image). Cells with no pixels (degenerate <8px images)
     * contribute 0 bits, deterministically. */
   /** The BT.601 luminance plane (1000-scaled ints, row-major) of a decoded
@@ -362,7 +359,7 @@ object Multimodal {
     * (TYPE_3BYTE_BGR / TYPE_4BYTE_ABGR with a packed pixel-interleaved
     * byte raster) read the raster's backing byte array DIRECTLY — zero
     * per-pixel dispatches, zero color-model conversions, the ~5-10x
-    * multi-megapixel win (VERDICT r9 #1); every other layout goes through
+    * multi-megapixel win; every other layout goes through
     * ONE bulk `getRGB(0,0,w,h,...)` call, keeping getRGB's color-model
     * semantics exactly (gray and indexed images CONVERT under getRGB —
     * e.g. TYPE_BYTE_GRAY maps through linear-to-sRGB — so a raw-raster
@@ -474,9 +471,6 @@ object Multimodal {
     // (the minhashVerified discipline)
     graft.operators.AnnModels.phashPairs(s, dir)
 
-  private[graft] def phashPairsInline(s: SparkSession, dir: String): DataFrame =
-    Dedup.hammingPairs(phashed(s, dir), phashDegen(s, dir))
-
   /** The image hash family's registry-served degenerate census (shared
     * by the pairing query and the CC-label trainer). */
   private[operators] def phashDegen(s: SparkSession, dir: String): Seq[(Int, Long)] =
@@ -531,7 +525,7 @@ object Multimodal {
     * (band = block index, h = block value, doc_id, phash) — the relation
     * AnnModels.phashIndex persists once per corpus state and every
     * nightly/streaming ingest batch probes (the lshIndex deployment shape
-    * applied to the perceptual column; VERDICT r11 #2). Blocked at build
+    * applied to the perceptual column). Blocked at build
     * time so the probe is a bare equijoin: 3 rows per asset, corpus-sized,
     * natural partitioning. */
   def phashIndexOf(d: DataFrame): DataFrame =
@@ -576,7 +570,7 @@ object Multimodal {
   }
 
   /** CROSS-MODAL image-text ALIGNMENT gate (the LAION/DataComp CLIP-score
-    * filter shape; VERDICT r11 #3): score each asset by the cosine
+    * filter shape): score each asset by the cosine
     * between a deterministic 64-dim ±1 image direction — the asset's
     * perceptual-hash bits, the in-engine stand-in for an image-encoder
     * embedding (a real CLIP image tower swaps in at exactly this
@@ -598,9 +592,8 @@ object Multimodal {
     * avoidable per-query stage in the engine, it is corpus-state-keyed
     * (documents × embeddings), and it feeds two gated consumers — so it
     * scores once per corpus state and reads many, like every other
-    * multi-consumer corpus-scored relation. This inline chain is the
-    * trainer (spec-pinned bit-identical to the served form). */
-  private[graft] def textAlignInline(s: SparkSession, dir: String): DataFrame = {
+    * multi-consumer corpus-scored relation; this chain is its build. */
+  private[graft] def alignScoresOf(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.cosineSim
     val pvec = array((0 until 64).map(j =>
       when(shiftright(col("phash"), j).bitwiseAND(lit(1L)) === lit(1L), lit(1.0d))
@@ -622,7 +615,7 @@ object Multimodal {
         when(col("align4") >= col("thr"), 1).otherwise(0).as("align_keep"))
   }
 
-  /** Registry-served [[textAlignInline]] — see that chain's Scaladoc. */
+  /** Registry-served [[alignScoresOf]] — see that chain's Scaladoc. */
   def textAlign(s: SparkSession, dir: String): DataFrame =
     AnnModels.alignScores(s, dir)
 
@@ -800,17 +793,17 @@ object Multimodal {
       case None => resampleStub(a)
     }
 
-  /** Resampled-content fingerprints. r17: served
-    * (AnnModels.resampleIndex) — the decode + pooled-luminance resample is
-    * the preprocessing product a vision pipeline MATERIALIZES (the resized
-    * asset store); the typed-closure decode pass re-ran per invocation.
-    * Ints + hex strings: bit-identical round-trip. */
+  /** Resampled-content fingerprints, served (AnnModels.resampleIndex):
+    * the decode + pooled-luminance resample is the preprocessing product a
+    * vision pipeline MATERIALIZES (the resized asset store), so the
+    * typed-closure decode pass does not re-run per invocation. Ints + hex
+    * strings: bit-identical round-trip. */
   def resizeSample(s: SparkSession, dir: String): DataFrame =
     AnnModels.resampleIndex(s, dir)
 
   /** The decode+resample pass itself, partition-parallel (no shuffle) —
     * what the artifact build runs once per corpus state. */
-  private[graft] def resizeSampleInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def resampleIndexOf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     assets(s, dir).mapPartitions(_.map(resampleAsset))
       .toDF("doc_id", "out_w", "out_h", "resample_md5")

@@ -18,30 +18,19 @@ object Pipeline {
 
   val QualityThreshold = 0.35
 
-  /** REGISTRY-SERVED (r17 batch 3): the curated manifest is the product a
+  /** Registry-served ([[AnnModels.curateManifest]]: [[curateGated]] over
+    * the heuristic quality bar): the curated manifest is the product a
     * curation deployment materializes (the buildManifest discipline one
-    * stage earlier); each read was re-composing the id-sized gate joins
-    * per invocation. The inline chain below is what the registry runs
-    * once per corpus state. */
+    * stage earlier), so reads do not re-compose the id-sized gate joins. */
   def curate(s: SparkSession, dir: String): DataFrame =
     AnnModels.curateManifest(s, dir)
-
-  private[graft] def curateInline(s: SparkSession, dir: String): DataFrame =
-    curateGated(s, dir, TextOps.quality(s, dir)
-      .filter(col("quality_score") >= QualityThreshold)
-      .select(col("doc_id"), col("quality_score")))
 
   /** `curate` with the LEARNED quality gate (TextOps.qualityModel) in
     * place of the heuristic threshold — the DCLM/FineWeb-Edu shape, where
     * a trained classifier decides what passes. Same fused plan; only the
-    * gate relation changes. Served (r17 batch 3, see [[curate]]). */
+    * gate relation changes. Served like [[curate]]. */
   def curateModel(s: SparkSession, dir: String): DataFrame =
     AnnModels.curateModelManifest(s, dir)
-
-  private[graft] def curateModelInline(s: SparkSession, dir: String): DataFrame =
-    curateGated(s, dir, TextOps.qualityModel(s, dir)
-      .filter(col("model_keep") === 1)
-      .select(col("doc_id"), col("logit")))
 
   /** The curation chain parameterized on its quality gate: `gate` is any
     * (doc_id, score...) relation of survivors — heuristic threshold,
@@ -62,11 +51,7 @@ object Pipeline {
     * cluster's canonical doc is also its own hash group's canonical, so
     * this strictly refines `curate`; the semi-join ships bare doc_ids. */
   def curateNearDup(s: SparkSession, dir: String): DataFrame =
-    AnnModels.curateNearDupManifest(s, dir) // r17 batch 3, see curate
-
-  private[graft] def curateNearDupInline(s: SparkSession, dir: String): DataFrame =
-    curate(s, dir)
-      .join(Dedup.survivors(s, dir).select(col("doc_id")), Seq("doc_id"), "left_semi")
+    AnnModels.curateNearDupManifest(s, dir) // served like curate
 
   /** Deterministic train/val/test split: md5 of the doc id buckets every
     * document reproducibly — no RNG, stable under re-runs and re-partitions,
@@ -88,15 +73,15 @@ object Pipeline {
     * overlap check every training pipeline runs before a data release.
     * The benchmark side is tiny and broadcasts. */
   def decontaminate(s: SparkSession, dir: String): DataFrame =
-    // r16: served (AnnModels.dirtyGrams): the distinct-5-gram explode +
-    // benchmark join re-ran per invocation in the gated query and all
-    // five build capstones for a relation that changes only with the
+    // served (AnnModels.dirtyGrams): otherwise the distinct-5-gram explode
+    // + benchmark join re-runs per invocation in the gated query and all
+    // five build capstones, for a relation that changes only with the
     // documents table.
     graft.operators.AnnModels.dirtyGrams(s, dir)
 
   /** The contamination chain itself — what AnnModels.dirtyGrams runs
     * once per corpus state. */
-  private[graft] def decontaminateInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def dirtyGramsOf(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ShingleExpressions
     val d = graft.sources.Tables.load(s, dir, "documents")
     def grams(df: DataFrame) = df
@@ -121,12 +106,7 @@ object Pipeline {
     * semi-join's inner semantics. The survivor side ships bare ids; the
     * quantizer comes from the shared persisted model. */
   def curateSemantic(s: SparkSession, dir: String): DataFrame =
-    AnnModels.curateSemanticManifest(s, dir) // r17 batch 3, see curate
-
-  private[graft] def curateSemanticInline(s: SparkSession, dir: String): DataFrame =
-    curate(s, dir).join(
-      Dedup.semanticDedupKeep(s, dir).select(col("vec_id").as("doc_id")),
-      Seq("doc_id"), "left_semi")
+    AnnModels.curateSemanticManifest(s, dir) // served like curate
 
   /** [[curateSemantic]] plus the CROSS-MODAL alignment gate
     * (Multimodal.textAlign — the CLIP-score keep rule of LAION/DataComp
@@ -135,13 +115,7 @@ object Pipeline {
     * curation chain: language → quality → exact dedup → semantic dedup →
     * alignment, every stage an id-only semi-join. */
   def curateAligned(s: SparkSession, dir: String): DataFrame =
-    AnnModels.curateAlignedManifest(s, dir) // r17 batch 3, see curate
-
-  private[graft] def curateAlignedInline(s: SparkSession, dir: String): DataFrame =
-    curateSemantic(s, dir).join(
-      graft.operators.Multimodal.textAlign(s, dir)
-        .filter(col("align_keep") === 1).select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
+    AnnModels.curateAlignedManifest(s, dir) // served like curate
 
   /** CURATION FUNNEL — the per-stage retention report of the full
     * multimodal capstone chain (corpus → language → quality → exact dedup
@@ -165,21 +139,20 @@ object Pipeline {
     * rows (e.g. empty-token docs). Shared by [[funnel]] (corpus rollup)
     * and [[funnelSource]] (per-feed report), so the two can never drift.
     *
-    * REGISTRY-SERVED (r16, VERDICT r15 #1 — the round's one perf-weak
-    * item): f3/f4/f5 already rode served artifacts, but the langid and
-    * heuristic-quality flags re-scanned corpus TEXT on every funnel
-    * invocation — 24.1 s *served* at ×100 for a report whose output is
-    * O(sources × 6) rows. The whole flag relation is now a per-corpus-
-    * state artifact (AnnModels.funnelFlags — the ftMargins/pqCodes
-    * discipline, one layer up): five integer columns, bit-identical
-    * round-trip, corpus-sized so it keeps natural partitioning, and both
-    * funnel queries read it as a bare scan + one aggregate. */
+    * Registry-served: f3/f4/f5 ride served artifacts, but the langid and
+    * heuristic-quality flags scan corpus TEXT, and unserved they re-ran
+    * on every funnel invocation — 24.1 s at ×100 for a report whose
+    * output is O(sources × 6) rows. The whole flag relation is therefore
+    * a per-corpus-state artifact (AnnModels.funnelFlags — the
+    * ftMargins/pqCodes discipline, one layer up): five integer columns,
+    * bit-identical round-trip, corpus-sized so it keeps natural
+    * partitioning, and both funnel queries read it as a bare scan + one
+    * aggregate. */
   private[graft] def funnelFlags(s: SparkSession, dir: String): DataFrame =
     AnnModels.funnelFlags(s, dir)
 
-  /** The inline flag build — what the registry runs once per corpus
-    * state. */
-  private[graft] def funnelFlagsInline(s: SparkSession, dir: String): DataFrame = {
+  /** The flag build — what the registry runs once per corpus state. */
+  private[graft] def funnelFlagsOf(s: SparkSession, dir: String): DataFrame = {
     val d = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"))
     val lang = TextOps.langid(s, dir)
@@ -263,11 +236,11 @@ object Pipeline {
     * documents flow through one broadcast semi-join — no corpus-sized
     * shuffle. */
   def curateSource(s: SparkSession, dir: String): DataFrame =
-    AnnModels.curateSourceManifest(s, dir) // r17 batch 3, see curate
+    AnnModels.curateSourceManifest(s, dir) // served like curate
 
-  private[graft] def curateSourceInline(s: SparkSession, dir: String): DataFrame = {
-    // sourceStats is itself a served |sources|-row artifact (r17 batch 3),
-    // so the two consumers below are cheap re-reads — no localCheckpoint
+  private[graft] def curateSourceOf(s: SparkSession, dir: String): DataFrame = {
+    // sourceStats is itself a served |sources|-row artifact, so the two
+    // consumers below are cheap re-reads — no localCheckpoint
     // needed (the candSigs precedent: artifact reads are re-read-safe).
     val st = TextOps.sourceStats(s, dir)
     val bars = st.agg(
@@ -338,15 +311,14 @@ object Pipeline {
     size(graft.functions.wsTokens(col("text"))).cast("long")
 
   /** The corpus (source, doc_id, n_tok) spine read from the served
-    * heuristic-quality relation — r16: `AnnModels.qualityScores.n_tokens`
-    * is the SAME `size(split(text,' '))` expression the pack family
-    * budgets in. r17: the artifact now carries `source` too (one row per
-    * document by construction of TextOps.qualityOf — coverage is the
-    * artifact's contract), so the spine is ONE id-sized artifact scan:
-    * no documents scan, no doc_id join, no Exchange before the pack
-    * family's own (source, blk) shuffle. r16 traded the corpus text read
-    * for an id join; this removes the join as well — packFfd is back to
-    * its one-shuffle plan contract. */
+    * heuristic-quality relation: `AnnModels.qualityScores.n_tokens` is
+    * the SAME `size(split(text,' '))` expression the pack family budgets
+    * in, and the artifact carries `source` (one row per document by
+    * construction of TextOps.qualityOf — coverage is the artifact's
+    * contract), so the spine is ONE id-sized artifact scan: no documents
+    * scan, no doc_id join, no Exchange before the pack family's own
+    * (source, blk) shuffle — packFfd keeps its one-shuffle plan
+    * contract. */
   private[graft] def docTokens(s: SparkSession, dir: String): DataFrame =
     graft.operators.AnnModels.qualityScores(s, dir)
       .select(col("source"), col("doc_id"), col("n_tokens").cast("long").as("n_tok"))
@@ -355,8 +327,8 @@ object Pipeline {
     packOf(docTokens(s, dir))
 
   /** The (source, doc_id, n_tok) spine under an ARBITRARY per-row token
-    * counter — the inline build behind the served subword-budget
-    * spines (AnnModels.bpeDocTokens and the trained-table twins). */
+    * counter — the build behind the served subword-budget spines
+    * (AnnModels.bpeDocTokens and its two trained-table siblings). */
   private[graft] def docTokensWith(s: SparkSession, dir: String, tc: Column): DataFrame =
     graft.sources.Tables.load(s, dir, "documents")
       .select(col("source"), col("doc_id"), tc.as("n_tok"))
@@ -416,10 +388,10 @@ object Pipeline {
     * a sequence-packing writer would actually fit into a context window.
     * Same two-level prefix-sum plan; only the per-row counter changes. */
   def packBpe(s: SparkSession, dir: String): DataFrame =
-    // r17: the per-doc BPE token budget is served (AnnModels.bpeDocTokens)
-    // — the merge-table replay over every document re-ran per pack
-    // invocation for a relation that changes only with the corpus and the
-    // merge table; the pack planner reads the id-sized spine.
+    // the per-doc BPE token budget is served (AnnModels.bpeDocTokens): the
+    // merge-table replay over every document would otherwise re-run per
+    // pack invocation for a relation that changes only with the corpus and
+    // the merge table; the pack planner reads the id-sized spine.
     packOf(graft.operators.AnnModels.bpeDocTokens(s, dir))
 
   /** Docs per id-window shard of the FFD packer. Wider than PackBlock on
@@ -505,7 +477,7 @@ object Pipeline {
       .withColumn("oversize", (col("n_tok") > CtxTokens).cast("int"))
   }
 
-  /** WRITER-side execution of the FFD manifest (§2E, VERDICT r13 #5):
+  /** WRITER-side execution of the FFD manifest (§2E):
     * materialize the packed corpus as one output group per bin —
     * `dst/source=…/oversize=…/bin_id=…/` each holding EXACTLY ONE file
     * (the training-shard layout a sequence-packing run hands the loader),
@@ -535,7 +507,7 @@ object Pipeline {
     * zero shared constants (the `text_bpe_trained_ids` backbone feeding
     * the pack cumsum). Same two-level prefix-sum plan as every pack. */
   def packTrained(s: SparkSession, dir: String): DataFrame =
-    packOf(graft.operators.AnnModels.trainedDocTokens(s, dir)) // r17: served, see packBpe
+    packOf(graft.operators.AnnModels.trainedDocTokens(s, dir)) // served, see packBpe
 
   /** [[packTrained]] at PRODUCTION merge count: the pack budget from the
     * registry-persisted 256-rule batched-trainer table — with the k=8
@@ -543,7 +515,7 @@ object Pipeline {
     * trained-tokenizer consumer. Same one-scan pack; only the rank map
     * inside the single BpeCountExpr node grows. */
   def packTrainedBig(s: SparkSession, dir: String): DataFrame =
-    packOf(graft.operators.AnnModels.trainedDocTokensBig(s, dir)) // r17: served, see packBpe
+    packOf(graft.operators.AnnModels.trainedDocTokensBig(s, dir)) // served, see packBpe
 
   /** Output shard fan-out for the balanced-shard writer. */
   val NumShards = 16
@@ -704,7 +676,7 @@ object Pipeline {
     * bound. Scale: one map-side-combined groupBy over the corpus; the rest
     * runs on the |sources|-row relation with the totals broadcast. */
   def tokenBudget(s: SparkSession, dir: String): DataFrame = {
-    // r16: the per-source totals are exactly the served tokenTotals
+    // the per-source totals are exactly the served tokenTotals
     // artifact (the one counter the pack family budgets in) — a |sources|-
     // row parquet read replaces the corpus scan + groupBy, and re-reading
     // it on both sides of the crossJoin costs nothing (no checkpoint job).
@@ -739,7 +711,7 @@ object Pipeline {
     * deployment's manifest converges to the from-scratch one while paying
     * O(delta + sources), not O(corpus), per night. */
   def packDelta(s: SparkSession, dir: String): DataFrame = {
-    // one id-sized pass (r16: n_tok rides the served artifact join, no
+    // one id-sized pass (n_tok rides the served artifact join, no
     // text scan at all): the compact (source, doc_id, n_tok) relation
     // feeds the split point, the per-source base totals AND the delta
     // cumsum
@@ -876,8 +848,9 @@ object Pipeline {
     val d = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), graft.functions.hash64(col("doc_id")).as("h"))
       .withColumn("blk", expr(s"h DIV $ShuffleBlock"))
-    // r17 (VERDICT r16 #8): block offsets via the partitioned superblock
-    // hierarchy, not an unpartitioned Window.orderBy(blk) cumsum
+    // block offsets via the partitioned superblock hierarchy, not an
+    // unpartitioned Window.orderBy(blk) cumsum, which runs the whole
+    // census through one task
     val offs = Analytics.blockOffsets(
       d.groupBy("blk").agg(count(lit(1)).as("cnt")))
     val wLocal = Window.partitionBy(col("blk")).orderBy(col("h"), col("doc_id"))
@@ -896,9 +869,9 @@ object Pipeline {
     * offset window runs over the (tier, block) histogram — never a global
     * sort, never a corpus-sized window partition. */
   def curriculum(s: SparkSession, dir: String): DataFrame =
-    AnnModels.curriculumOrder(s, dir) // r17 batch 3: a persisted loader order
+    AnnModels.curriculumOrder(s, dir) // a persisted loader order
 
-  private[graft] def curriculumInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def curriculumOf(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tier = when(col("ppl_bucket") === "head", 0)
       .when(col("ppl_bucket") === "middle", 1).otherwise(2)
@@ -909,9 +882,9 @@ object Pipeline {
         graft.functions.hash64(col("doc_id")).as("h"))
       .withColumn("blk", expr(s"h DIV $ShuffleBlock"))
       .localCheckpoint()
-    // r17 (VERDICT r16 #8): the (tier, blk) histogram offsets run through
-    // the partitioned superblock hierarchy (Analytics.blockOffsets), not
-    // an unpartitioned Window.orderBy(tier, blk) cumsum. The combined key
+    // the (tier, blk) histogram offsets run through the partitioned
+    // superblock hierarchy (Analytics.blockOffsets), not an unpartitioned
+    // (one-task) Window.orderBy(tier, blk) cumsum. The combined key
     // tier·2²⁵ + blk is strictly lexicographic: |blk| = |h DIV 2⁴⁰| ≤ 2²³,
     // so tier bands (stride 2²⁵) can never overlap.
     val cblk = col("tier").cast("long") * lit(1L << 25) + col("blk")
@@ -943,9 +916,9 @@ object Pipeline {
     * (monotone truncation-division again) — no global sort, no
     * corpus-sized window anywhere. */
   def interleave(s: SparkSession, dir: String): DataFrame =
-    AnnModels.interleaveOrder(s, dir) // r17 batch 3: a persisted loader order
+    AnnModels.interleaveOrder(s, dir) // a persisted loader order
 
-  private[graft] def interleaveInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def interleaveOf(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val d = graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"), graft.functions.hash64(col("doc_id")).as("h"))
@@ -980,7 +953,7 @@ object Pipeline {
       posName: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val keyed = df.withColumn("kblk", expr("key DIV 1000000000"))
-    // r17 (VERDICT r16 #8): block offsets via Analytics.blockOffsets — the
+    // block offsets via Analytics.blockOffsets — the
     // partitioned superblock hierarchy — instead of an unpartitioned
     // Window.orderBy(kblk) cumsum over a census that grows with the corpus
     val offs = Analytics.blockOffsets(
@@ -1020,9 +993,9 @@ object Pipeline {
     "r_word_count", "r_mean_len", "r_symbol", "r_alpha", "r_bullet", "r_ellipsis")
 
   def build(s: SparkSession, dir: String): DataFrame =
-    // r17: served (AnnModels.buildManifest) — the calibManifest rationale
-    // applied to the default-gate capstone: every gate already served, the
-    // composition + pack re-ran per invocation.
+    // served (AnnModels.buildManifest), the calibManifest rationale
+    // applied to the default-gate capstone: every gate is served, so only
+    // the composition + pack would re-run per invocation.
     graft.operators.AnnModels.buildManifest(s, dir)
 
   /** [[build]] with the CORPUS-CALIBRATED model gate — the variant that
@@ -1032,8 +1005,8 @@ object Pipeline {
     * half of the corpus's own logit distribution, so the composed manifest
     * is non-empty on ANY corpus where the other gates pass documents. */
   def buildCalibrated(s: SparkSession, dir: String): DataFrame =
-    // r17 (VERDICT r16 #5): served (AnnModels.calibManifest) — the gates
-    // all served already, but the composition + two-level pack re-ran per
+    // served (AnnModels.calibManifest): the gates are all served, and
+    // the composition + two-level pack would otherwise re-run per
     // invocation here AND inside buildOrdered; the manifest is
     // chunk-count-sized and a pure function of corpus + constants.
     graft.operators.AnnModels.calibManifest(s, dir)
@@ -1045,7 +1018,7 @@ object Pipeline {
     * coefficients (weights from the corpus; the calibrated variant's
     * threshold likewise). Same plan contract as [[build]]. */
   def buildTrained(s: SparkSession, dir: String): DataFrame =
-    graft.operators.AnnModels.trainedManifest(s, dir) // r17: served, see build
+    graft.operators.AnnModels.trainedManifest(s, dir) // served, see build
 
   /** [[build]] with the LOGISTIC quality gate (r13): the model slot holds
     * `text_quality_lr` — a fixed-K batch-gradient logistic fit against
@@ -1053,7 +1026,7 @@ object Pipeline {
     * classifier shape (CCNet/DataComp/FineWeb train a linear classifier
     * on labeled seeds). Same plan contract as [[build]]. */
   def buildLr(s: SparkSession, dir: String): DataFrame =
-    graft.operators.AnnModels.lrManifest(s, dir) // r17: served, see build
+    graft.operators.AnnModels.lrManifest(s, dir) // served, see build
 
   /** The manifest composition over a model-gate slot — what the
     * AnnModels build manifests run once per corpus state. */
@@ -1080,7 +1053,7 @@ object Pipeline {
   }
 
   /** The END-TO-END ORDERED dataset — the last mile a training job
-    * actually consumes (VERDICT r9 #8): [[buildCalibrated]]'s chunk
+    * actually consumes: [[buildCalibrated]]'s chunk
     * manifest composed with [[interleave]]'s tempered-mixture loader order
     * in a SINGLE output. Each manifest chunk takes the interleave priority
     * key at CHUNK granularity. chunk_id is the chunk's TOKEN-POSITION

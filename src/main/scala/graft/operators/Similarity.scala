@@ -137,7 +137,7 @@ object Similarity {
     * graph geometry), memoized per (applicationId, dir, corpus
     * fingerprint) so those keys pay ONE footer-stats count job per corpus
     * STATE, not one per key construction. The fingerprint in the key
-    * (ADVICE r15) is the same file-listing hash the registry's completion
+    * is the same file-listing hash the registry's completion
     * markers use: an in-place embeddings edit — which the artifact
     * markers already catch and retrain on — re-keys the memo too, so key
     * and content can never disagree on a geometry after an edit that
@@ -148,7 +148,7 @@ object Similarity {
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), Long]()
   private[graft] def embCount(s: SparkSession, dir: String): Long =
     embCountMemo.computeIfAbsent((s.sparkContext.applicationId, dir,
-        AnnModels.tableFingerprint(s, dir, "embeddings")),
+        AnnModels.fingerprint(s, dir, "embeddings")),
       _ => emb(s, dir).count())
 
   /** The auto-sized K of `dir`'s embeddings corpus. */
@@ -338,13 +338,12 @@ object Similarity {
   private def pqSubDist: Column = VectorExpressions.gridL2(col("sub"), col("cent"))
 
   private def pqParts(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // Codes from the persisted model artifact (r15 — the r14 verdict's one
-    // perf-weak item): the corpus-sized encoding pass (full embeddings
-    // scan, 16-way subspace expansion, broadcast-codebook argmin) ran on
-    // EVERY PQ-family invocation while every other registry-backed
-    // consumer served flat; now it encodes once per corpus state, the
-    // ivfAssign recipe. The per-QUERY ADC table stays inline — it is
-    // NumQueries x 16 x 32 rows, broadcast-sized by construction.
+    // Codes from the persisted model artifact: unserved, the corpus-sized
+    // encoding pass (full embeddings scan, 16-way subspace expansion,
+    // broadcast-codebook argmin) would run on EVERY PQ-family invocation;
+    // served, it encodes once per corpus state, the ivfAssign recipe. The
+    // per-QUERY ADC table stays in the query — it is NumQueries x 16 x 32
+    // rows, broadcast-sized by construction.
     val codes = AnnModels.pqCodes(s, dir)
     val cent = AnnModels.pqCodebook(s, dir)
     val lut = pqSubs(pqBase(s, dir).filter(col("vec_id") < NumQueries))
@@ -354,13 +353,13 @@ object Similarity {
     (codes, lut)
   }
 
-  /** Inline trainer for [[AnnModels.pqCodes]] — every corpus vector's 16
+  /** The build of [[AnnModels.pqCodes]] — every corpus vector's 16
     * subspace codes (vec_id, m, cent_id) under the persisted codebook:
     * one broadcast pass, deterministic argmin as a hash aggregate
     * (min(struct(round-4 d, cent_id)) — no per-(vector, subspace) window
     * sort). Narrow (three integer columns, ~10 bytes/vector at 1-byte
     * codes): the compressed store IS this relation at 100 TB. */
-  private[graft] def pqCodesInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def pqCodesOf(s: SparkSession, dir: String): DataFrame = {
     val cent = AnnModels.pqCodebook(s, dir)
     pqSubs(pqBase(s, dir)).join(broadcast(cent), Seq("m"))
       .select(col("vec_id"), col("m"), col("cent_id"), round(pqSubDist, 4).as("d"))
@@ -493,7 +492,7 @@ object Similarity {
   val GraphSizeTarget = 64
 
   def graphSizing(n: Long): (Int, Int) = {
-    // INTEGER-EXACT ceil(log2(n / target)) (r16, VERDICT r15 #5): the
+    // INTEGER-EXACT ceil(log2(n / target)): the
     // smallest p with target·2^p >= n, i.e. 2^p >= ceil(n / target) —
     // mathematically identical to the double formulation, but replayable
     // in ANY engine as a shift comparison instead of trusting two libm
@@ -524,7 +523,7 @@ object Similarity {
     * so the gated path is scale-correct by default instead of only when a
     * caller hand-applies the rule. */
   def knnGraph(s: SparkSession, dir: String): DataFrame =
-    // REGISTRY-SERVED (r16, VERDICT r15 #2): the graph is a per-corpus-
+    // REGISTRY-SERVED: the graph is a per-corpus-
     // state product (the hamming pair-store shape on the embedding
     // column) — built once via the auto-sized geometry, then every read
     // (the gated query, diversity sampling, embedding-dedup precursors)
@@ -878,8 +877,7 @@ object Similarity {
         "(PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank FROM ex) " +
         s"WHERE rank <= $TopK"),
     "sim_knn_graph" ->
-      // GEOMETRY-MIRRORED oracle (r16, VERDICT r15 #5 — the ivfk
-      // discipline): (tables, planes) derive from a COUNT(*) CTE with
+      // GEOMETRY-MIRRORED oracle (the ivfK discipline): (tables, planes) derive from a COUNT(*) CTE with
       // the same integer shift rule as [[graphSizing]], and the
       // signature/bucket expressions read the derived geometry instead
       // of interpolated compile-time constants — so Spark and DuckDB

@@ -31,11 +31,11 @@ object TextOps {
   /** n-gram-marker language ID: argmax of per-language stopword hits,
     * ties broken by Markers order, zero hits → "und".
     *
-    * REGISTRY-SERVED (r16): the prediction relation is a pure function
-    * of the corpus, but it gates the ENTIRE curation family (curate /
+    * REGISTRY-SERVED: the prediction relation is a pure function of the
+    * corpus, but it gates the ENTIRE curation family (curate /
     * curate_model / curate_semantic / curate_aligned / curate_neardup,
-    * the funnel flag build, the build capstones) — each invocation was
-    * one full corpus-text scan. Scored once per corpus state (the
+    * the funnel flag build, the build capstones) — unserved, each
+    * invocation is one full corpus-text scan. Scored once per corpus state (the
     * pplScores discipline on the gate's input side), every consumer
     * reads a (doc_id, pred_lang) artifact scan. Strings/longs only:
     * bit-identical round-trip. */
@@ -176,7 +176,7 @@ object TextOps {
     // as a referenced object (graft.functions.LangidArgmaxExpr) — the
     // per-language inlined-aggregate formulation grew the expression tree
     // linearly in |langs| and would abandon codegen on a fastText-sized
-    // language set (ADVICE r8; spec-asserted equal on a 128-language model)
+    // language set (spec-asserted equal on a 128-language model)
     feat.select(col("doc_id"), col("lang"),
         graft.functions.LangidExpressions.argmaxLang(col("cnt"), langs, weights)
           .as("pred_lang"))
@@ -185,7 +185,7 @@ object TextOps {
 
   /** Quality scoring: token stats + punctuation + stopword + repetition
     * ratios, equal-weight composite. All ratios of exact ints → bit-stable.
-    * REGISTRY-SERVED (r16, the langid rationale): the heuristic score
+    * REGISTRY-SERVED (the langid rationale): the heuristic score
     * relation gates the whole curation family per invocation; scored
     * once per corpus state. Round-4 doubles + exact decimals: parquet
     * round-trips bit-identically. */
@@ -268,9 +268,9 @@ object TextOps {
     * hits; <= 90% of lines bullet-started (removal only at MORE than 90%);
     * <= 30% of lines ellipsis-ended. */
   def gopherRules(s: SparkSession, dir: String): DataFrame =
-    // r16: served (AnnModels.gopherFlags — the langidScores/qualityScores
+    // served (AnnModels.gopherFlags — the langidScores/qualityScores
     // discipline): the battery is a pure per-document text function read
-    // by seven consumers, each of which paid the full text scan per
+    // by seven consumers, each of which would pay the full text scan per
     // invocation.
     AnnModels.gopherFlags(s, dir)
 
@@ -810,7 +810,7 @@ object TextOps {
     * global rank window orders a handful of rows); the merge side is the
     * table constant itself. */
   def bpeVocab(s: SparkSession, dir: String): DataFrame =
-    AnnModels.bpeStaticVocab(s, dir) // r17 batch 3: model-sized, one file
+    AnnModels.bpeStaticVocab(s, dir) // served: model-sized, one file
 
   private[graft] def bpeVocabWith(d: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
@@ -820,7 +820,7 @@ object TextOps {
       .select(explode(split(regexp_replace(col("text"), " ", ""), "")).as("token"))
       .filter(length(col("token")) > 0)
       .distinct()
-    // r17 (VERDICT r16 #8 family): char ids via a triangular broadcast
+    // char ids via a triangular broadcast
     // count over the alphabet-sized distinct-char relation (id = number
     // of strictly-smaller tokens — identical to the former
     // row_number(orderBy token) − 1 on a distinct set) — no unpartitioned
@@ -857,7 +857,7 @@ object TextOps {
     * encoder can emit is a corpus character or a merge product, so the
     * lookup is total by construction (spec-asserted). */
   def bpeIds(s: SparkSession, dir: String): DataFrame =
-    AnnModels.bpeStaticIdStream(s, dir) // r17 batch 3: the tokenized corpus
+    AnnModels.bpeStaticIdStream(s, dir) // served: the tokenized corpus
 
   private[graft] def bpeIdsWith(d: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
@@ -891,8 +891,8 @@ object TextOps {
     * holds by construction. The oracle replays the ENTIRE chain — train
     * loop, vocab ids, encode — from the raw corpus. */
   def bpeTrainedIds(s: SparkSession, dir: String): DataFrame =
-    // r17: served (AnnModels.bpeTrainedIdStream) — the per-invocation
-    // merge replay over every document is the tokenized-corpus relation a
+    // served (AnnModels.bpeTrainedIdStream): the per-invocation merge
+    // replay over every document is the tokenized-corpus relation a
     // deployment persists once per tokenizer release; strings/ints
     // round-trip bit-identically and the oracle replays the whole
     // train → encode chain from the raw corpus.
@@ -905,7 +905,7 @@ object TextOps {
     * codegen pass — only the oracle's replay had to change shape
     * (recursive CTE instead of per-rule unrolling) to follow k. */
   def bpeTrainedIdsBig(s: SparkSession, dir: String): DataFrame =
-    AnnModels.bpeTrainedIdStreamBig(s, dir) // r17: served, see bpeTrainedIds
+    AnnModels.bpeTrainedIdStreamBig(s, dir) // served, see bpeTrainedIds
 
   /** Rank-ordered collect of the production-count trained merge table —
     * [[trainedMerges]]'s contract at [[BpeTrainMergesBig]]. */
@@ -935,9 +935,9 @@ object TextOps {
     * one shuffle-free codegen pass (the [[bpeIds]] scale shape: the model
     * is alphabet+merges-sized, never corpus-sized). */
   def bpeDecode(s: SparkSession, dir: String): DataFrame =
-    AnnModels.bpeDecodeAudit(s, dir) // r17 batch 3: the round-trip audit table
+    AnnModels.bpeDecodeAudit(s, dir) // the persisted round-trip audit table
 
-  private[graft] def bpeDecodeInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def bpeDecodeOf(s: SparkSession, dir: String): DataFrame = {
     // the vocab collect reads the served model-sized artifact — one small
     // file, not a corpus scan (the trainedMerges accessor pattern)
     val vocab = bpeVocab(s, dir).select(col("token"), col("token_id")).collect()
@@ -987,8 +987,8 @@ object TextOps {
   def bpeFertility(s: SparkSession, dir: String): DataFrame =
     bpeFertilityWith(docs(s, dir), BpeMerges)
 
-  /** [[bpeFertility]] under the TRAINED production-count merge table
-    * (r16, VERDICT r15 #4): the BUDGET-MATCHED side of the tokenizer-
+  /** [[bpeFertility]] under the TRAINED production-count merge table:
+    * the BUDGET-MATCHED side of the tokenizer-
     * family comparison — the static audit counts under the 8-merge toy
     * table, so pinning the 256-piece unigram family against it compared
     * budgets, not algorithms. This audit rides the registry-served
@@ -1089,20 +1089,14 @@ object TextOps {
     * five hash joins of the per-doc trigram stream against the count
     * relations (gram-key shuffles, token-bounded) with the (V, N) scalars
     * broadcast. Nothing is driver-side. */
-  /** Gated path: the whole scored relation is REGISTRY-SERVED (r12 —
-    * CCNet's actual deployment persists exactly this: the LM scores the
-    * corpus once and the head/middle/tail consumers read the scores).
-    * avg_nll is a 6-decimal-grid double and the counts are longs, so the
-    * parquet round-trip is bit-identical. */
+  /** Gated path: the whole scored relation is REGISTRY-SERVED (CCNet's
+    * actual deployment persists exactly this: the LM scores the corpus
+    * once and the head/middle/tail consumers read the scores; the build
+    * is [[perplexityScore]] against the persisted LM trio). avg_nll is a
+    * 6-decimal-grid double and the counts are longs, so the parquet
+    * round-trip is bit-identical. */
   def perplexity(s: SparkSession, dir: String): DataFrame =
     AnnModels.pplScores(s, dir)
-
-  /** The full scoring pass against the persisted LM trio — what
-    * AnnModels.pplScores runs ONCE per corpus state. */
-  private[graft] def perplexityInline(s: SparkSession, dir: String): DataFrame = {
-    val Seq(c3, c2, u) = AnnModels.trigramLm(s, dir)
-    perplexityScore(docs(s, dir), c3, c2, u)
-  }
 
   private[graft] def perplexityOf(d: DataFrame): DataFrame = {
     val (c3, c2, u) = trainNgramLmOf(d)
@@ -1261,13 +1255,6 @@ object TextOps {
           .as("avg_nll"))
   }
 
-  /** The full KN5 chain (persisted LM relations + the eight-join scoring
-    * pass) — what AnnModels.ppl5Scores runs ONCE per corpus state. */
-  private[graft] def perplexityKn5Inline(s: SparkSession, dir: String): DataFrame = {
-    val Seq(c5, c4, c3, c2, u) = AnnModels.kn5Lm(s, dir)
-    kn5Score(docs(s, dir), c5, c4, c3, c2, u)
-  }
-
   /** Gated 5-gram KN perplexity — registry-served scores (the pplScores
     * pattern at order 5). */
   def perplexityKn5(s: SparkSession, dir: String): DataFrame =
@@ -1371,7 +1358,7 @@ object TextOps {
     * relation broadcastable while still separating the test corpora. */
   val DsirBuckets = 256L
 
-  /** Realistic hashed feature width (VERDICT r11 #4) — the paper's ~10^4
+  /** Realistic hashed feature width — the paper's ~10^4
     * bucket regime, gated as `text_importance_dsir_8k`. The plan is
     * width-independent: the model relation grows to 8192 rows × 16 B —
     * still trivially broadcastable — and every other step is unchanged,
@@ -1419,8 +1406,8 @@ object TextOps {
     * bit-identical to the inline fit (spec) and the oracle replays the
     * whole train→weight→select chain from the raw corpus. */
   def importanceDsir(s: SparkSession, dir: String): DataFrame =
-    // r17: the SCORED relation is served too (AnnModels.dsirScored) — the
-    // model already persisted, but every read re-ran the corpus token
+    // the SCORED relation is served too (AnnModels.dsirScored): with only
+    // the model persisted, every read would re-run the corpus token
     // explode + bucket shuffle; CCNet's deployment persists exactly these
     // per-document scores. Longs/ints only: bit-identical round-trip.
     AnnModels.dsirScored(s, dir)
@@ -1437,7 +1424,7 @@ object TextOps {
     * width — its own registry artifact (keyed on b=8192, so the two
     * widths never shadow each other), same serving plan. */
   def importanceDsir8k(s: SparkSession, dir: String): DataFrame =
-    AnnModels.dsirScored8k(s, dir) // r17: served, see importanceDsir
+    AnnModels.dsirScored8k(s, dir) // served, see importanceDsir
 
   private[graft] def importanceDsirServe8k(s: SparkSession, dir: String): DataFrame = {
     val Seq(lr, thr) = AnnModels.dsirModel8k(s, dir)
@@ -1629,13 +1616,10 @@ object TextOps {
     * shuffles are perplexity's LM aggregates and the doc_id feature joins
     * — at 100 TB the join keys are (doc_id, three longs), never text. */
   def qualityModel(s: SparkSession, dir: String): DataFrame =
-    // gated path: the whole scored relation is REGISTRY-SERVED (r12 —
-    // one LM-joined scoring pass per corpus state; five gated consumers
-    // read the artifact). The trainer below is the inline chain.
+    // gated path: the whole scored relation is REGISTRY-SERVED (one
+    // LM-joined scoring pass per corpus state; five gated consumers read
+    // the artifact). Its build is qualityModelWith below.
     AnnModels.qualityLogits(s, dir)
-
-  private[graft] def qualityModelOf(d: DataFrame): DataFrame =
-    qualityModelWith(d, perplexityOf(d))
 
   private[graft] def qualityModelWith(d: DataFrame, ppl: DataFrame): DataFrame = {
     // Deliberately the FEATURE-JOIN form, not one fused [[logitBaseCol]]
@@ -1780,15 +1764,9 @@ object TextOps {
     * (deterministic, oracle-mirrored via coalesced aggregates). */
   def qualityTrained(s: SparkSession, dir: String): DataFrame =
     // gated path: the trained gate's scored relation is REGISTRY-SERVED
-    // like the learned gate's (AnnModels.trainedMargins, r12)
+    // like the learned gate's (AnnModels.trainedMargins: qualityTrainedWith
+    // over the features and the persisted centroids)
     AnnModels.trainedMargins(s, dir)
-
-  /** The full trained-gate chain (features + persisted centroids) — what
-    * AnnModels.trainedMargins runs ONCE per corpus state. */
-  private[graft] def qualityTrainedInline(s: SparkSession, dir: String): DataFrame =
-    qualityTrainedWith(
-      qualityFeaturesOf(docs(s, dir), perplexity(s, dir)),
-      AnnModels.qualityCentroids(s, dir).collect())
 
   private[graft] def qualityTrainedWith(feats: DataFrame,
       cent: Array[org.apache.spark.sql.Row]): DataFrame = {
@@ -1909,14 +1887,6 @@ object TextOps {
       when(z >= 0, 1).otherwise(0).as("lr_keep"))
   }
 
-  /** The full LR-gate chain (features + seed labels + K-round fit +
-    * scoring) — what AnnModels.lrMargins runs ONCE per corpus state. */
-  private[graft] def qualityLrInline(s: SparkSession, dir: String): DataFrame = {
-    val feats = qualityFeaturesOf(docs(s, dir), perplexity(s, dir)).localCheckpoint()
-    val (mu, w) = qualityLrFit(feats, gopherSeedOf(docs(s, dir)))
-    qualityLrScoreWith(feats, mu, w)
-  }
-
   /** The TRAINED LOGISTIC quality gate — registry-served scores
     * (AnnModels.lrMargins): the trained-margin family's third member
     * (heuristic coefficients → Rocchio centroids → logistic fit). */
@@ -1951,8 +1921,7 @@ object TextOps {
         expr("CASE WHEN n = 0 THEN 0 ELSE (tp + fp) * 1000000 DIV n END")
           .as("keep_ppm"))
 
-  // ---- HASHED-NGRAM learned gate (the fastText shape) — r15, VERDICT
-  // r14 #3: the 6-feature LR reads SURFACE statistics only, so a
+  // ---- HASHED-NGRAM learned gate (the fastText shape): the 6-feature LR reads SURFACE statistics only, so a
   // topically-junk document with clean length/punct/stopword ratios
   // passes every trained gate. CCNet/DataComp's production classifier
   // trains on hashed bag-of-ngram features instead — word identity, not
@@ -2021,7 +1990,7 @@ object TextOps {
         .collect()
       val n = rows.collectFirst { case r if r.getLong(0) == -1L => r.getLong(2) }
         .getOrElse(0L)
-      // BigInt headroom (ADVICE r15): the per-bucket gradient g can reach
+      // BigInt headroom: the per-bucket gradient g can reach
       // ~1e12 per training doc (|resid| ≤ 1e6 × Σ x6 ≤ 1e6), so a Long
       // FtEtaNum·g product left int64 at ~1.1e6 training docs and SILENTLY
       // wrapped while the oracle raised. BigInt division truncates toward
@@ -2054,7 +2023,7 @@ object TextOps {
   /** The full hashed-ngram gate chain over an arbitrary documents
     * relation — what AnnModels.ftMargins runs ONCE per corpus state, and
     * what the junk-topic separation spec runs on crafted corpora. */
-  private[graft] def qualityFtInlineOf(d: DataFrame): DataFrame = {
+  private[graft] def qualityFtOf(d: DataFrame): DataFrame = {
     val occ = ftOcc6(d).localCheckpoint()
     qualityFtScoreWith(occ, qualityFtFit(occ, gopherSeedOf(d)))
   }
@@ -2127,9 +2096,9 @@ object TextOps {
     * and the comparison is a long compare — bit-replayable by the oracle's
     * single-window cumsum. */
   def qualityCalibrated(s: SparkSession, dir: String): DataFrame =
-    // r16: served (AnnModels.calibKeep): the logits already served, but
-    // the census + rank-target threshold selection re-ran per read of
-    // the three consumers; the flag relation is a pure function of the
+    // served (AnnModels.calibKeep): the logits are served, and the
+    // census + rank-target threshold selection would otherwise re-run per
+    // read of the three consumers; the flag relation is a pure function of the
     // served logits and the ceil(N/2) rule, so it persists alongside.
     AnnModels.calibKeep(s, dir)
 
@@ -2208,9 +2177,9 @@ object TextOps {
     * then one partial-aggregated groupBy over source keys — a giant
     * source is map-side-combined, never a single-task hotspot. */
   def sourceStats(s: SparkSession, dir: String): DataFrame =
-    AnnModels.srcStats(s, dir) // r17 batch 3: the persisted report card
+    AnnModels.srcStats(s, dir) // the persisted report card
 
-  private[graft] def sourceStatsInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def sourceStatsOf(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val base = d.select(col("doc_id"), col("source"),
       size(wsTokens(col("text"))).cast("long").as("n_tok"))
@@ -2253,11 +2222,10 @@ object TextOps {
     "text_tokens" -> (tokens _),
     "text_bpe_fertility" -> (bpeFertility _),
     "text_bpe_fertility_256" -> (bpeFertilityBig _),
-    // r16: served from the registry like the _256 sibling below — the
-    // inline trainer (bpeTrain) re-ran k collect-driven merge rounds per
-    // invocation while bpeTrainedIds et al. already read the persisted
-    // table; the gated query now reads the same artifact (served ≡ inline
-    // spec-pinned; one-train counter shared with every other consumer).
+    // served from the registry like the _256 sibling below: the trainer
+    // (bpeTrain) runs k collect-driven merge rounds, and bpeTrainedIds et
+    // al. read the persisted table, so the gated query reads the same
+    // artifact and shares its one training.
     "text_bpe_train" -> ((s: SparkSession, dir: String) => AnnModels.bpeMergeTable(s, dir)),
     "text_bpe_encode" -> (bpeEncode _),
     "text_bpe_vocab" -> (bpeVocab _),
@@ -2884,8 +2852,8 @@ object TextOps {
     * given hashed feature width: hashed unigram buckets, add-one smoothed
     * target/raw log-ratios (6-dec DECIMAL), census threshold. One
     * function of the bucket count — the 256 and 8192 gates share every
-    * byte of arithmetic (VERDICT r11 #4: the oracle bump for realistic
-    * width is a constant, by construction). */
+    * byte of arithmetic (the oracle bump for realistic width is a
+    * constant, by construction). */
   private def dsirSelectSql(buckets: Long): String =
     s"WITH g AS (${gopherSeedSelSql(gopherSql, as = "tgt")}), " +
       "tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents), " +
@@ -3012,13 +2980,13 @@ object TextOps {
   }
 
   /** The LR admission-model trainer — what AnnModels.lrGate runs ONCE per
-    * corpus state: the qualityLrInline fit re-based on the ingest
+    * corpus state: the AnnModels.lrMargins fit re-based on the ingest
     * convention (train on source <> 'src0'; the nll feature scores under
     * the SAME registry-served corpus LM the trigram admission gate uses),
     * emitted as the 7-row (j, mu, w) model relation batch admission
     * scores against — j = 0 is the bias (mu 0), j = 1..6 the
     * QualityFeatNames order. */
-  private[graft] def qualityLrGateInline(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def qualityLrGateOf(s: SparkSession, dir: String): DataFrame = {
     val Seq(c3, c2, u, _) = AnnModels.ingestGate(s, dir)
     val corpus = docs(s, dir).filter(col("source") =!= "src0")
     val feats = qualityFeaturesOf(corpus, perplexityScore(corpus, c3, c2, u))
@@ -3030,7 +2998,7 @@ object TextOps {
       .toDF("j", "mu", "w")
   }
 
-  /** SQL mirror of [[qualityModelOf]]: the SAME coefficient constants
+  /** SQL mirror of [[qualityModelWith]]: the SAME coefficient constants
     * interpolated over the composed feature CTEs, so the weights can never
     * drift between engines. The perplexity CTE nests its own WITH — DuckDB
     * scopes it inside the parenthesized subquery. */

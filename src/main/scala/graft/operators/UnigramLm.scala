@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
-/** UNIGRAM-LM tokenizer (the SentencePiece default algorithm, r15 —
-  * VERDICT r14 #6): the second tokenizer family next to the BPE loop.
+/** UNIGRAM-LM tokenizer (the SentencePiece default algorithm): the second tokenizer family next to the BPE loop.
   * Kudo 2018's construction, made deterministic and oracle-replayable
   * with the engine's integer discipline:
   *
@@ -55,8 +54,7 @@ object UnigramLm {
   /** Hard-EM rounds (the oracle replays each as a recursive CTE). */
   val UniIters = 2
 
-  /** PRODUCTION-budget constants (r16, VERDICT r15 #6 — the
-    * bpe_train_256 pattern: the trainer and the recursive-CTE oracle are
+  /** PRODUCTION-budget constants (the bpe_train_256 pattern: the trainer and the recursive-CTE oracle are
     * budget-parametric, so the production variant is a constant bump,
     * not a rewrite): ≥ 1024 final pieces, a wider seed pool, one more
     * hard-EM round. The `text_unigram_vocab_1k` / `text_unigram_ids_1k`
@@ -170,7 +168,7 @@ object UnigramLm {
       .unionByName(topMulti(cand, uniVocab))
       .localCheckpoint()
     val c6 = costsOf(kept)
-    // r17 (VERDICT r16 #8 family): token ids via a triangular broadcast
+    // token ids via a triangular broadcast
     // count over the vocab-budget-sized kept relation (distinct pieces by
     // construction: the char and multi-char sides are disjoint) — id =
     // number of strictly-smaller pieces, identical to the former

@@ -98,7 +98,8 @@ object EventStreams {
     * at-least-once — a crash between the sink write and the checkpoint
     * commit replays the micro-batch on restart — so a replayed batch
     * REPLACES its own partition instead of appending a second copy,
-    * making the sink exactly-once end to end (ADVICE r10). The partition
+    * making the sink exactly-once end to end (an appended copy would double
+    * every row of a re-run night). The partition
     * column doubles as provenance: which nightly trigger wrote a row. */
   private def writeBatchPartition(rows: DataFrame, batchId: Long, outPath: String): Unit =
     rows.withColumn("batch", lit(batchId))
@@ -135,7 +136,7 @@ object EventStreams {
 
   /** True iff `dropDir` exists and holds at least one file matching
     * `glob` — the nightly steps' pre-flight (a night with no drops must
-    * no-op, not throw from the schema probe; ADVICE r10). RECURSIVE, and
+    * no-op, not throw from the schema probe). RECURSIVE, and
     * matched on the file NAME, mirroring exactly what the streaming file
     * source's `pathGlobFilter` would discover — a partitioned drop
     * layout (files under date=.../ subdirectories) counts as drops, not
@@ -389,8 +390,8 @@ object EventStreams {
     * users. The exact count rides along as the accuracy audit. */
   def windowDistinctSketch(events: DataFrame): DataFrame = {
     import graft.operators.Extras.{kmvEstimate, kmvKth}
-    // ONE events scan + distinct for BOTH consumers (r17, VERDICT r16 #7
-    // — the corpus KMV's fix applied to the windowed analog): kth and the
+    // ONE events scan + distinct for BOTH consumers (the corpus KMV's fix
+    // applied to the windowed analog): kth and the
     // exact audit otherwise each re-scan and re-distinct the events.
     val du = events
       .select(window(col("ts"), "1 hour").as("w"), col("user_id")).distinct()
@@ -567,7 +568,7 @@ object EventStreams {
 
   /** INCREMENTAL perceptual ingest probe vs the PERSISTED phash index —
     * [[incrementalVsIndex]] on the multimodal column (the missing half of
-    * the nightly ingest story, VERDICT r11 #2): the corpus's pigeonhole
+    * the nightly ingest story): the corpus's pigeonhole
     * index rows were decoded + hashed once at index-build time and persist
     * as a parquet artifact (AnnModels.phashIndex); each ingest batch
     * hashes only its OWN assets and equijoins the artifact under the
@@ -775,7 +776,8 @@ object EventStreams {
     * prior drops left off — the append-only concat-and-chunk model
     * (Pipeline.packDelta's batch semantics, made restartable).
     *
-    * Prior-drop totals are O(|sources|), not O(history) (ADVICE r11):
+    * Prior-drop totals are O(|sources|), not O(history), so a night's
+    * cost does not grow with the number of nights already packed:
     * each batch folds its per-source token sums into a CUMULATIVE
     * `<outPath>.totals/batch=<id>` sidecar (|sources| rows), and the next
     * batch reads the newest sidecar generation with batch < batchId — one
@@ -851,8 +853,8 @@ object EventStreams {
     * it), and its predecessor is what a crashed replay falls back to. */
   val CompactKeepNights = 2
 
-  /** RESTARTABLE nightly COMPACTION of a `batch=`-partitioned sink (r13,
-    * VERDICT r12 #7): the gate/dsir/phash verdict sinks and the delta-pack
+  /** RESTARTABLE nightly COMPACTION of a `batch=`-partitioned sink: the
+    * gate/dsir/phash verdict sinks and the delta-pack
     * manifest each grow one partition per night forever; this rewrites
     * every partition older than the [[CompactKeepNights]] newest into ONE
     * consolidated partition (named for the newest id it covers — so the

@@ -3,8 +3,9 @@ package graft.tools
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev-only: write `.explain("formatted")` for named gated queries to
-  * `<outDir>/<query>_<suffix>.txt` — the plan evidence the optimization
-  * rounds commit under plans/rNN/. Args: sfDir outDir suffix query... */
+  * `<outDir>/<query>_<suffix>.txt`, the before/after plan evidence of a
+  * change (diff two dumps with expression ids masked). Args: sfDir outDir
+  * suffix query... */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)

@@ -1,19 +1,22 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.operators.{AnnModels, Dedup, Similarity}
+import graft.operators.{AnnModels, Similarity}
 
 /** The persisted-model contract: every registry artifact builds at most
   * ONCE per (dataset, constants) across all consumers, later consumers read
   * the parquet artifact, served relations are bit-identical to their builds
   * (the oracle replays training from scratch, so parity here is what keeps
   * the correctness gate meaningful), and every key covers every constant
-  * and artifact its content depends on.
+  * and artifact its content depends on. The table loop and the consumer
+  * map below prove this for every entry; the other tests cover what the
+  * table cannot: corpus mutation, the marker protocol, generations, and
+  * comparisons against independent references.
   */
 class AnnModelsSpec extends SparkSpec {
 
   // sorted multiset, not Set: a duplicate-row multiplicity divergence
-  // between the artifact and the inline chain must fail parity (ADVICE r16)
+  // between an artifact and its build must fail parity
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
@@ -23,20 +26,6 @@ class AnnModelsSpec extends SparkSpec {
     d.toString
   }
 
-  test("all five model consumers share one IVF training pass and one PQ training pass") {
-    AnnModels.withRoot(freshRoot("share")) {
-      val (i0, p0) = (AnnModels.ivfCentroids.builds, AnnModels.pqCodebook.builds)
-      Similarity.annIvf(spark, sf).collect()
-      Similarity.annPq(spark, sf).collect()
-      Similarity.annIvfPq(spark, sf).collect()
-      Dedup.semanticDedup(spark, sf).collect()
-      Dedup.semanticDedupKeep(spark, sf).collect()
-      assert(AnnModels.ivfCentroids.builds == i0 + 1,
-        s"expected ONE IVF training pass across consumers, got ${AnnModels.ivfCentroids.builds - i0}")
-      assert(AnnModels.pqCodebook.builds == p0 + 1,
-        s"expected ONE PQ training pass across consumers, got ${AnnModels.pqCodebook.builds - p0}")
-    }
-  }
 
   test("trigram LM trains once per dataset and artifact scores are bit-identical") {
     AnnModels.withRoot(freshRoot("lm")) {
@@ -228,7 +217,7 @@ class AnnModelsSpec extends SparkSpec {
       graft.operators.Multimodal.phashKeep(spark, sf).collect()
       assert(AnnModels.phashLabels.builds == b0 + 1,
         "the second consumer must serve the same artifact")
-      // served labels are bit-identical to the inline CC run
+      // served labels are bit-identical to the CC run itself
       val inline = graft.operators.Multimodal.phashLabelsOf(spark, sf).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val served = AnnModels.phashLabels(spark, sf).collect()
@@ -239,84 +228,12 @@ class AnnModelsSpec extends SparkSpec {
     }
   }
 
-  test("quality logits and trained margins: registry-served, bit-identical to inline") {
-    val T = graft.operators.TextOps
-    AnnModels.withRoot(freshRoot("qlog")) {
-      val a0 = AnnModels.qualityLogits.builds
-      val served = rows(T.qualityModel(spark, sf))
-      assert(AnnModels.qualityLogits.builds == a0 + 1, "first consumer must score the corpus")
-      assert(served == rows(AnnModels.qualityLogits.build(spark, sf)),
-        "artifact-served logits diverged from the inline scoring chain")
-      T.qualityCalibrated(spark, sf).collect()
-      graft.operators.Pipeline.curateModel(spark, sf).collect()
-      assert(AnnModels.qualityLogits.builds == a0 + 1,
-        "calibrated gate and curation must serve the one scored relation")
-      val b0 = AnnModels.trainedMargins.builds
-      val servedT = rows(T.qualityTrained(spark, sf))
-      assert(AnnModels.trainedMargins.builds == b0 + 1)
-      assert(servedT == rows(T.qualityTrainedInline(spark, sf)),
-        "artifact-served margins diverged from the inline trained chain")
-      graft.operators.Pipeline.buildTrained(spark, sf).collect()
-      assert(AnnModels.trainedMargins.builds == b0 + 1,
-        "the build capstone must serve the trained relation")
-    }
-  }
-
-  test("shingle-pair store: one posting-list expansion serves all four verifiers") {
-    AnnModels.withRoot(freshRoot("shpairs")) {
-      val b0 = AnnModels.shinglePairs.builds
-      val jac = rows(Dedup.ngramJaccard(spark, sf))
-      assert(AnnModels.shinglePairs.builds == b0 + 1, "first consumer must build the store")
-      Dedup.containment(spark, sf).collect()
-      Dedup.lshRecall(spark, sf).collect()
-      Dedup.lshRecallBanded(spark, sf).collect()
-      assert(AnnModels.shinglePairs.builds == b0 + 1,
-        "all verifiers must serve the one pair store")
-      // served pairs are bit-identical to the inline expansion
-      assert(rows(AnnModels.shinglePairs(spark, sf)) ==
-        rows(Dedup.shingleInterPairsInline(spark, sf)),
-        "artifact-served pair store diverged from the inline expansion")
-      assert(jac.nonEmpty, "construction check: the corpus has jaccard pairs")
-    }
-  }
-
-  test("verified pairs: one candidate+verify chain serves the gated query, the overlap matrix and the CC trainer") {
-    AnnModels.withRoot(freshRoot("vpairs")) {
-      val v0 = AnnModels.verifiedPairs.builds
-      val served = rows(Dedup.minhashVerified(spark, sf))
-      assert(AnnModels.verifiedPairs.builds == v0 + 1, "first consumer must run the chain")
-      assert(served == rows(Dedup.minhashVerifiedInline(spark, sf)),
-        "artifact-served verified pairs diverged from the inline chain")
-      assert(served.nonEmpty, "construction check: the corpus has verified pairs")
-      Dedup.sourceOverlap(spark, sf).collect()
-      Dedup.survivors(spark, sf).collect()
-      assert(AnnModels.verifiedPairs.builds == v0 + 1,
-        "the overlap matrix and the survivor trainer must serve the one pair relation")
-    }
-  }
-
-  test("perplexity scores: one scoring pass serves the bucket, curriculum and gate consumers") {
-    val T = graft.operators.TextOps
-    AnnModels.withRoot(freshRoot("ppl")) {
-      val p0 = AnnModels.pplScores.builds
-      val served = rows(T.perplexity(spark, sf))
-      assert(AnnModels.pplScores.builds == p0 + 1, "first consumer must score the corpus")
-      assert(served == rows(T.perplexityInline(spark, sf)),
-        "artifact-served scores diverged from the inline scoring pass")
-      T.perplexityBucket(spark, sf).collect()
-      graft.operators.Pipeline.curriculum(spark, sf).collect()
-      T.qualityModel(spark, sf).collect()
-      assert(AnnModels.pplScores.builds == p0 + 1,
-        "bucket, curriculum and quality consumers must serve the one scored relation")
-    }
-  }
-
   test("nested partitioned corpus layout: an in-place partition rewrite invalidates") {
     val sp = spark
     import sp.implicits._
     // documents.parquet as a PARTITIONED directory — leaf files live under
-    // source=*/ subdirectories. A non-recursive fingerprint (ADVICE r10)
-    // sees only the top-level entries and misses a nested rewrite.
+    // source=*/ subdirectories. A non-recursive fingerprint sees only the
+    // top-level entries and misses a nested rewrite.
     val base = java.nio.file.Files.createTempDirectory("graft-nested").toString
     val dir = s"$base/corpus"
     val table = s"$dir/documents.parquet"
@@ -384,7 +301,7 @@ class AnnModelsSpec extends SparkSpec {
       // next retrain (generational store: live readers survive one swap)
       val held = AnnModels.lshIndex(spark, dir)
       // three successive corpus edits: a fingerprint-keyed store would now
-      // hold three full index copies (ADVICE r10 unbounded growth)
+      // hold three full index copies (unbounded growth under churn)
       for (i <- 2 to 4) {
         writeDocs(Seq(
           (1L, "srcA", "alpha beta gamma delta epsilon zeta eta theta iota"),
@@ -421,7 +338,7 @@ class AnnModelsSpec extends SparkSpec {
       assert(AnnModels.ingestGate.builds == t0 + 1)
       // simulate a crash after the relations were written but before the
       // completion marker: a partially-committed artifact must retrain,
-      // never serve (the mixed-state guard — ADVICE r10 atomicity)
+      // never serve (the mixed-state guard)
       val ig = new java.io.File(root).listFiles().find(_.getName.startsWith("ig-")).get
       val marker = new java.io.File(ig, "_GRAFT_COMPLETE")
       assert(marker.exists(), "training must leave a completion marker")
@@ -436,21 +353,6 @@ class AnnModelsSpec extends SparkSpec {
       val parts = gens.head.listFiles().filter(_.isDirectory).map(_.getName).toSet
       assert(parts == Set("c3", "c2", "u", "thr"),
         s"all gate relations share one generation directory: $parts")
-    }
-  }
-
-  test("survivor labeling trains once; all curation consumers serve the artifact") {
-    AnnModels.withRoot(freshRoot("cclab")) {
-      val b0 = AnnModels.survivorLabels.builds
-      val first = rows(Dedup.survivors(spark, sf))
-      assert(AnnModels.survivorLabels.builds == b0 + 1, "first access must run the CC chain")
-      // every other consumer of the canonical set serves the artifact
-      graft.operators.Pipeline.curateNearDup(spark, sf).collect()
-      graft.operators.Pipeline.build(spark, sf).collect()
-      val second = rows(Dedup.survivors(spark, sf))
-      assert(AnnModels.survivorLabels.builds == b0 + 1,
-        s"curation consumers re-ran CC: ${AnnModels.survivorLabels.builds - b0} passes")
-      assert(second == first, "artifact round-trip changed the survivor set")
     }
   }
 
@@ -627,93 +529,6 @@ class AnnModelsSpec extends SparkSpec {
     }
   }
 
-  test("logistic margins: registry-served, bit-identical to inline, one " +
-      "fit across the gate and build consumers") {
-    AnnModels.withRoot(freshRoot("qlr")) {
-      val t0 = AnnModels.lrMargins.builds
-      val served = rows(graft.operators.TextOps.qualityLr(spark, sf))
-      assert(AnnModels.lrMargins.builds == t0 + 1, "first access must fit")
-      graft.SparkEntry.queries("pipeline_build_lr")(spark, sf).collect()
-      assert(AnnModels.lrMargins.builds == t0 + 1,
-        "the build consumer must serve the artifact, not refit")
-      assert(served == rows(graft.operators.TextOps.qualityLrInline(spark, sf)),
-        "served logistic margins diverge from inline")
-    }
-  }
-
-  test("ivf assignment and semantic labels: registry-served, bit-identical " +
-      "to inline, one training pass across all consumers") {
-    AnnModels.withRoot(freshRoot("semserve")) {
-      val (a0, l0) = (AnnModels.ivfAssign.builds, AnnModels.semanticLabels.builds)
-      // consumers: the dedup pair, both narrow assignment readers, a sampler
-      Dedup.semanticDedup(spark, sf).collect()
-      Dedup.semanticDedupKeep(spark, sf).collect()
-      Similarity.prototypePrune(spark, sf).collect()
-      Similarity.annIvf(spark, sf).collect()
-      assert(AnnModels.ivfAssign.builds == a0 + 1,
-        s"expected ONE assignment pass, got ${AnnModels.ivfAssign.builds - a0}")
-      assert(AnnModels.semanticLabels.builds == l0 + 1,
-        s"expected ONE semantic labeling, got ${AnnModels.semanticLabels.builds - l0}")
-      assert(rows(AnnModels.ivfAssign(spark, sf)) ==
-        rows(AnnModels.ivfAssign.build(spark, sf)),
-        "served assignment diverges from inline")
-      assert(rows(AnnModels.semanticLabels(spark, sf)) ==
-        rows(Dedup.semanticLabInline(spark, sf)),
-        "served semantic labels diverge from inline")
-    }
-  }
-
-  test("hamming pairs + degenerate census: registry-served, bit-identical " +
-      "to inline, ONE build per hash family across all consumers") {
-    AnnModels.withRoot(freshRoot("hamserve")) {
-      def pairBuilds = AnnModels.simhashPairs.builds + AnnModels.phashPairs.builds +
-        AnnModels.audioPairs.builds
-      def degenBuilds = AnnModels.simhashDegen.builds + AnnModels.phashDegen.builds +
-        AnnModels.audioDegen.builds
-      val (p0, d0) = (pairBuilds, degenBuilds)
-      // the three gated pairing queries + the CC-label consumers that
-      // must ride the SAME served pair artifacts
-      graft.operators.Dedup.simhashPairs(spark, sf).collect()
-      graft.operators.Multimodal.phashPairs(spark, sf).collect()
-      graft.operators.Multimodal.audioPairs(spark, sf).collect()
-      graft.operators.Multimodal.audioDedup(spark, sf).collect()
-      graft.operators.Multimodal.phashDedup(spark, sf).collect()
-      assert(pairBuilds == p0 + 3,
-        s"expected ONE pair build per hash family (sim/ph/au), got ${pairBuilds - p0}")
-      assert(degenBuilds == d0 + 3,
-        s"expected ONE degenerate census per hash family, got ${degenBuilds - d0}")
-      assert(rows(graft.operators.Dedup.simhashPairs(spark, sf)) ==
-        rows(graft.operators.Dedup.simhashPairsInline(spark, sf)),
-        "served simhash pairs diverge from inline")
-      assert(rows(graft.operators.Multimodal.audioPairs(spark, sf)) ==
-        rows(graft.operators.Multimodal.audioPairsInline(spark, sf)),
-        "served audio pairs diverge from inline")
-      assert(rows(graft.operators.Multimodal.phashPairs(spark, sf)) ==
-        rows(graft.operators.Multimodal.phashPairsInline(spark, sf)),
-        "served phash pairs diverge from inline")
-      assert(pairBuilds == p0 + 3,
-        "re-reading the artifacts must not rebuild the pair relations")
-    }
-  }
-
-  test("PQ corpus codes: registry-served, bit-identical to inline, ONE " +
-      "encoding pass across the whole PQ family") {
-    AnnModels.withRoot(freshRoot("pqcodes")) {
-      val c0 = AnnModels.pqCodes.builds
-      // all three PQ-family consumers: compressed scan, IVFADC, rerank
-      Similarity.annPq(spark, sf).collect()
-      Similarity.annIvfPq(spark, sf).collect()
-      Similarity.annIvfPqRerank(spark, sf).collect()
-      assert(AnnModels.pqCodes.builds == c0 + 1,
-        s"expected ONE corpus encoding pass, got ${AnnModels.pqCodes.builds - c0}")
-      assert(rows(AnnModels.pqCodes(spark, sf)) ==
-        rows(Similarity.pqCodesInline(spark, sf)),
-        "served PQ codes diverge from inline encoding")
-      assert(AnnModels.pqCodes.builds == c0 + 1,
-        "re-reading the artifact must not re-encode")
-    }
-  }
-
   test("alignment scores: registry-served, bit-identical to inline; an " +
       "embeddings-table edit alone retrains (two-table fingerprint)") {
     val sp = spark
@@ -731,7 +546,7 @@ class AnnModelsSpec extends SparkSpec {
       val t0 = AnnModels.alignScores.builds
       val served = rows(graft.operators.Multimodal.textAlign(spark, dir))
       assert(AnnModels.alignScores.builds == t0 + 1, "first access must train")
-      assert(served == rows(graft.operators.Multimodal.textAlignInline(spark, dir)),
+      assert(served == rows(AnnModels.alignScores.build(spark, dir)),
         "served alignment scores diverge from inline")
       graft.SparkEntry.queries("pipeline_curate_aligned")(spark, dir).collect()
       assert(AnnModels.alignScores.builds == t0 + 1,
@@ -745,266 +560,6 @@ class AnnModelsSpec extends SparkSpec {
       graft.operators.Multimodal.textAlign(spark, dir).collect()
       assert(AnnModels.alignScores.builds == t0 + 2,
         "an embeddings-only edit must invalidate the alignment artifact")
-    }
-  }
-
-  test("funnel flags: registry-served, bit-identical to inline, ONE build " +
-      "across both funnel queries") {
-    AnnModels.withRoot(freshRoot("funfl")) {
-      val b0 = AnnModels.funnelFlags.builds
-      graft.operators.Pipeline.funnel(spark, sf).collect()
-      graft.operators.Pipeline.funnelSource(spark, sf).collect()
-      assert(AnnModels.funnelFlags.builds == b0 + 1,
-        s"expected ONE flag build across both funnels, got ${AnnModels.funnelFlags.builds - b0}")
-      assert(rows(AnnModels.funnelFlags(spark, sf)) ==
-        rows(graft.operators.Pipeline.funnelFlagsInline(spark, sf)),
-        "served funnel flags diverge from the inline build")
-      assert(AnnModels.funnelFlags.builds == b0 + 1,
-        "re-reading the artifact must not rebuild the flags")
-    }
-  }
-
-  test("langid + quality score relations: registry-served, bit-identical " +
-      "to inline, ONE text scan each across the whole curate battery") {
-    AnnModels.withRoot(freshRoot("scores")) {
-      val (l0, q0) = (AnnModels.langidScores.builds, AnnModels.qualityScores.builds)
-      // the heaviest per-invocation consumers: three curate variants +
-      // both funnels + the gated scoring queries themselves
-      graft.operators.TextOps.langid(spark, sf).collect()
-      graft.operators.TextOps.quality(spark, sf).collect()
-      graft.operators.Pipeline.curate(spark, sf).collect()
-      graft.operators.Pipeline.curateNearDup(spark, sf).collect()
-      graft.operators.Pipeline.funnel(spark, sf).collect()
-      assert(AnnModels.langidScores.builds == l0 + 1,
-        s"expected ONE langid scan, got ${AnnModels.langidScores.builds - l0}")
-      assert(AnnModels.qualityScores.builds == q0 + 1,
-        s"expected ONE quality scan, got ${AnnModels.qualityScores.builds - q0}")
-      assert(rows(graft.operators.TextOps.langid(spark, sf)) ==
-        rows(AnnModels.langidScores.build(spark, sf)),
-        "served langid predictions diverge from inline")
-      // the artifact carries a trailing source column (the pack family's
-      // spine); full-width parity against the inline chain, and the gated
-      // 7-column relation is exactly the projection
-      assert(rows(AnnModels.qualityScores(spark, sf)) ==
-        rows(AnnModels.qualityScores.build(spark, sf)),
-        "served quality scores diverge from inline")
-      assert(rows(graft.operators.TextOps.quality(spark, sf)) ==
-        rows(AnnModels.qualityScores.build(spark, sf).drop("source")),
-        "gated quality relation diverges from the inline projection")
-      // coverage contract (ADVICE r16): docTokens IS the artifact, so the
-      // pack family counts exactly one spine row per document — a future
-      // filter in the quality chain must fail here, not silently shrink
-      // pack manifests
-      assert(graft.operators.Pipeline.docTokens(spark, sf).count() ==
-        graft.sources.Tables.load(spark, sf, "documents").count(),
-        "docTokens must cover every document 1:1")
-      assert(AnnModels.langidScores.builds == l0 + 1 &&
-        AnnModels.qualityScores.builds == q0 + 1,
-        "re-reads must not re-scan")
-    }
-  }
-
-  test("candidate signatures + weighted gram counts: registry-served, " +
-      "bit-identical to inline, ONE build each across both verifiers") {
-    AnnModels.withRoot(freshRoot("candsig")) {
-      val (s0, g0) = (AnnModels.candSigs.builds, AnnModels.candGramCounts.builds)
-      Dedup.minhashEstimate(spark, sf).collect()
-      Dedup.weightedJaccard(spark, sf).collect()
-      assert(AnnModels.candSigs.builds == s0 + 1,
-        s"expected ONE signature build, got ${AnnModels.candSigs.builds - s0}")
-      assert(AnnModels.candGramCounts.builds == g0 + 1,
-        s"expected ONE gram-count build, got ${AnnModels.candGramCounts.builds - g0}")
-      assert(rows(AnnModels.candSigs(spark, sf)) ==
-        rows(Dedup.candSigsInline(spark, sf)),
-        "served candidate signatures diverge from inline")
-      assert(rows(AnnModels.candGramCounts(spark, sf)) ==
-        rows(Dedup.candGramCountsInline(spark, sf)),
-        "served gram counts diverge from inline")
-      assert(AnnModels.candSigs.builds == s0 + 1 &&
-        AnnModels.candGramCounts.builds == g0 + 1,
-        "re-reads must not rebuild")
-    }
-  }
-
-  test("calibrated build manifest: registry-served, bit-identical to " +
-      "inline, ONE composition across calibrated + ordered builds") {
-    AnnModels.withRoot(freshRoot("bldcal")) {
-      val m0 = AnnModels.calibManifest.builds
-      graft.operators.Pipeline.buildCalibrated(spark, sf).collect()
-      graft.operators.Pipeline.buildOrdered(spark, sf).collect()
-      assert(AnnModels.calibManifest.builds == m0 + 1,
-        s"expected ONE manifest composition, got ${AnnModels.calibManifest.builds - m0}")
-      assert(rows(graft.operators.Pipeline.buildCalibrated(spark, sf)) ==
-        rows(AnnModels.calibManifest.build(spark, sf)),
-        "served manifest diverges from the inline composition")
-      assert(AnnModels.calibManifest.builds == m0 + 1,
-        "re-reads must not re-compose")
-    }
-  }
-
-  test("r17 served dedup relations: bit-identical to inline, ONE build " +
-      "each across all consumers") {
-    AnnModels.withRoot(freshRoot("r17dedup")) {
-      val (s0, d0, b0, e0, n0) = (AnnModels.substrStats.builds,
-        AnnModels.dupStarts.builds, AnnModels.boilerTop.builds,
-        AnnModels.embedPairs.builds, AnnModels.bandedPairs.builds)
-      Dedup.substringDup(spark, sf).collect()
-      Dedup.substringRemove(spark, sf).collect()
-      Dedup.substringSpans(spark, sf).collect()
-      Dedup.substringRemoveSpans(spark, sf).collect()
-      Dedup.boilerplateTopK(spark, sf).collect()
-      Dedup.embeddingNearDup(spark, sf).collect()
-      Dedup.minhashLshBanded(spark, sf).collect()
-      assert(AnnModels.substrStats.builds == s0 + 1, "ONE substring-stat build")
-      assert(AnnModels.dupStarts.builds == d0 + 1,
-        s"ONE dup-start census across rm/spans/rm_spans, got ${AnnModels.dupStarts.builds - d0}")
-      assert(AnnModels.boilerTop.builds == b0 + 1, "ONE boilerplate census")
-      assert(AnnModels.embedPairs.builds == e0 + 1, "ONE embedding pair build")
-      assert(AnnModels.bandedPairs.builds == n0 + 1, "ONE banded pair build")
-      assert(rows(Dedup.substringDup(spark, sf)) ==
-        rows(Dedup.substringDupInline(spark, sf)),
-        "served substring stats diverge from inline")
-      assert(rows(AnnModels.dupStarts(spark, sf)) ==
-        rows(Dedup.dupStartsInline(spark, sf)),
-        "served dup starts diverge from inline")
-      assert(rows(Dedup.boilerplateTopK(spark, sf)) ==
-        rows(Dedup.boilerplateTopKInline(spark, sf)),
-        "served boilerplate report diverges from inline")
-      assert(rows(Dedup.embeddingNearDup(spark, sf)) ==
-        rows(Dedup.embeddingNearDupInline(spark, sf)),
-        "served embedding pairs diverge from inline")
-      assert(rows(Dedup.minhashLshBanded(spark, sf)) ==
-        rows(Dedup.minhashLshBandedInline(spark, sf)),
-        "served banded pairs diverge from inline")
-    }
-  }
-
-  test("r17 served build manifests + subword budgets + id streams + DSIR " +
-      "scores: bit-identical to inline, ONE build each") {
-    AnnModels.withRoot(freshRoot("r17build")) {
-      assert(rows(graft.operators.Pipeline.build(spark, sf)) ==
-        rows(AnnModels.buildManifest.build(spark, sf)),
-        "served default build manifest diverges from inline")
-      assert(rows(graft.operators.Pipeline.buildTrained(spark, sf)) ==
-        rows(AnnModels.trainedManifest.build(spark, sf)),
-        "served trained build manifest diverges from inline")
-      assert(rows(graft.operators.Pipeline.buildLr(spark, sf)) ==
-        rows(AnnModels.lrManifest.build(spark, sf)),
-        "served lr build manifest diverges from inline")
-      val (p0, t0, g0) = (AnnModels.bpeDocTokens.builds,
-        AnnModels.trainedDocTokens.builds, AnnModels.trainedDocTokensBig.builds)
-      assert(rows(graft.operators.Pipeline.packBpe(spark, sf)) ==
-        rows(graft.operators.Pipeline.packOf(
-          AnnModels.bpeDocTokens.build(spark, sf))),
-        "served BPE pack diverges from the inline budget")
-      assert(rows(graft.operators.Pipeline.packTrained(spark, sf)) ==
-        rows(graft.operators.Pipeline.packOf(
-          AnnModels.trainedDocTokens.build(spark, sf))),
-        "served trained pack diverges from the inline budget")
-      assert(rows(graft.operators.Pipeline.packTrainedBig(spark, sf)) ==
-        rows(graft.operators.Pipeline.packOf(
-          AnnModels.trainedDocTokensBig.build(spark, sf))),
-        "served 256-rule pack diverges from the inline budget")
-      graft.operators.Pipeline.packBpe(spark, sf).collect()
-      graft.operators.Pipeline.packTrained(spark, sf).collect()
-      graft.operators.Pipeline.packTrainedBig(spark, sf).collect()
-      assert(AnnModels.bpeDocTokens.builds == p0 + 1 &&
-        AnnModels.trainedDocTokens.builds == t0 + 1 &&
-        AnnModels.trainedDocTokensBig.builds == g0 + 1,
-        "re-reads must not re-count token budgets")
-      assert(rows(graft.operators.TextOps.bpeTrainedIds(spark, sf)) ==
-        rows(AnnModels.bpeTrainedIdStream.build(spark, sf)),
-        "served trained id stream diverges from inline")
-      assert(rows(graft.operators.TextOps.bpeTrainedIdsBig(spark, sf)) ==
-        rows(AnnModels.bpeTrainedIdStreamBig.build(spark, sf)),
-        "served 256-rule id stream diverges from inline")
-      assert(rows(graft.operators.TextOps.importanceDsir(spark, sf)) ==
-        rows(graft.operators.TextOps.importanceDsirServe(spark, sf)),
-        "served DSIR scores diverge from the serving chain")
-      assert(rows(graft.operators.TextOps.importanceDsir8k(spark, sf)) ==
-        rows(graft.operators.TextOps.importanceDsirServe8k(spark, sf)),
-        "served 8k DSIR scores diverge from the serving chain")
-      assert(rows(graft.operators.Multimodal.resizeSample(spark, sf)) ==
-        rows(graft.operators.Multimodal.resizeSampleInline(spark, sf)),
-        "served resample index diverges from the inline decode pass")
-    }
-  }
-
-  test("r17 batch-3 served curate manifests + source report: bit-identical " +
-      "to inline, ONE build each across all consumers") {
-    AnnModels.withRoot(freshRoot("r17curate")) {
-      val (c0, m0, n0, se0, al0, so0, st0) = (AnnModels.curateManifest.builds,
-        AnnModels.curateModelManifest.builds, AnnModels.curateNearDupManifest.builds,
-        AnnModels.curateSemanticManifest.builds, AnnModels.curateAlignedManifest.builds,
-        AnnModels.curateSourceManifest.builds, AnnModels.srcStats.builds)
-      import graft.operators.{Pipeline, TextOps}
-      assert(rows(Pipeline.curate(spark, sf)) ==
-        rows(Pipeline.curateInline(spark, sf)),
-        "served curate manifest diverges from inline")
-      assert(rows(Pipeline.curateModel(spark, sf)) ==
-        rows(Pipeline.curateModelInline(spark, sf)),
-        "served model-gate manifest diverges from inline")
-      assert(rows(Pipeline.curateNearDup(spark, sf)) ==
-        rows(Pipeline.curateNearDupInline(spark, sf)),
-        "served near-dup manifest diverges from inline")
-      assert(rows(Pipeline.curateSemantic(spark, sf)) ==
-        rows(Pipeline.curateSemanticInline(spark, sf)),
-        "served semantic manifest diverges from inline")
-      assert(rows(Pipeline.curateAligned(spark, sf)) ==
-        rows(Pipeline.curateAlignedInline(spark, sf)),
-        "served aligned manifest diverges from inline")
-      assert(rows(Pipeline.curateSource(spark, sf)) ==
-        rows(Pipeline.curateSourceInline(spark, sf)),
-        "served source manifest diverges from inline")
-      assert(rows(TextOps.sourceStats(spark, sf)) ==
-        rows(TextOps.sourceStatsInline(spark, sf)),
-        "served source report diverges from inline")
-      // re-reads serve; every stage built exactly once despite the
-      // layered consumers (nearDup/semantic inline compose the served
-      // curate; aligned composes the served semantic)
-      Pipeline.curateAligned(spark, sf).collect()
-      Pipeline.curateNearDup(spark, sf).collect()
-      assert(AnnModels.curateManifest.builds == c0 + 1, "ONE curate build")
-      assert(AnnModels.curateModelManifest.builds == m0 + 1, "ONE model-gate build")
-      assert(AnnModels.curateNearDupManifest.builds == n0 + 1, "ONE near-dup build")
-      assert(AnnModels.curateSemanticManifest.builds == se0 + 1, "ONE semantic build")
-      assert(AnnModels.curateAlignedManifest.builds == al0 + 1, "ONE aligned build")
-      assert(AnnModels.curateSourceManifest.builds == so0 + 1, "ONE source build")
-      assert(AnnModels.srcStats.builds == st0 + 1,
-        "ONE source-stat build across the report + source-curation reads")
-    }
-  }
-
-  test("r17 batch-3 served tokenizer artifacts + loader orders: " +
-      "bit-identical to inline, ONE build each") {
-    AnnModels.withRoot(freshRoot("r17tok")) {
-      val (v0, i0, d0, il0, cu0) = (AnnModels.bpeStaticVocab.builds,
-        AnnModels.bpeStaticIdStream.builds, AnnModels.bpeDecodeAudit.builds,
-        AnnModels.interleaveOrder.builds, AnnModels.curriculumOrder.builds)
-      import graft.operators.{Pipeline, TextOps}
-      assert(rows(TextOps.bpeVocab(spark, sf)) ==
-        rows(AnnModels.bpeStaticVocab.build(spark, sf)),
-        "served static vocab diverges from inline")
-      assert(rows(TextOps.bpeIds(spark, sf)) ==
-        rows(AnnModels.bpeStaticIdStream.build(spark, sf)),
-        "served static id stream diverges from inline")
-      assert(rows(TextOps.bpeDecode(spark, sf)) ==
-        rows(TextOps.bpeDecodeInline(spark, sf)),
-        "served decode audit diverges from inline")
-      assert(rows(Pipeline.interleave(spark, sf)) ==
-        rows(Pipeline.interleaveInline(spark, sf)),
-        "served interleave order diverges from inline")
-      assert(rows(Pipeline.curriculum(spark, sf)) ==
-        rows(Pipeline.curriculumInline(spark, sf)),
-        "served curriculum order diverges from inline")
-      TextOps.bpeDecode(spark, sf).collect()
-      TextOps.bpeIds(spark, sf).collect()
-      assert(AnnModels.bpeStaticVocab.builds == v0 + 1,
-        "ONE vocab build across the vocab read + decode-audit build")
-      assert(AnnModels.bpeStaticIdStream.builds == i0 + 1, "ONE id-stream build")
-      assert(AnnModels.bpeDecodeAudit.builds == d0 + 1, "ONE decode-audit build")
-      assert(AnnModels.interleaveOrder.builds == il0 + 1, "ONE interleave build")
-      assert(AnnModels.curriculumOrder.builds == cu0 + 1, "ONE curriculum build")
     }
   }
 
@@ -1082,103 +637,195 @@ class AnnModelsSpec extends SparkSpec {
     }
   }
 
-  // --- r16 optimization round: the five new served relations ---------------
-
-  test("minhash candidate pairs build once; served pairs are bit-identical " +
-      "to the inline LSH chain and feed the CC labeling without a rebuild") {
-    AnnModels.withRoot(freshRoot("mhcand")) {
-      val (c0, l0) = (AnnModels.candPairs.builds, AnnModels.candLabels.builds)
-      val served = rows(Dedup.minhashLsh(spark, sf))
-      assert(AnnModels.candPairs.builds == c0 + 1, "first access must build")
-      assert(served == rows(AnnModels.candPairs.build(spark, sf)),
-        "artifact-served candidate pairs diverged from the inline LSH chain")
-      assert(served.nonEmpty, "construction check: the corpus has candidates")
-      // every minhash-family consumer rides the ONE pair build
-      Dedup.weightedJaccard(spark, sf).collect()
-      Dedup.minhashEstimate(spark, sf).collect()
-      val labels = rows(Dedup.clusterAssign(spark, sf))
-      assert(AnnModels.candPairs.builds == c0 + 1,
-        s"expected ONE candidate build across consumers, got ${AnnModels.candPairs.builds - c0}")
-      assert(AnnModels.candLabels.builds == l0 + 1, "labels must build once")
-      assert(labels == rows(AnnModels.candLabels.build(spark, sf)),
-        "artifact-served CC labeling diverged from the inline star loop")
-      assert(AnnModels.candLabels.builds == l0 + 1,
-        "the inline parity run must not write the registry")
+  test("docTokens covers every document 1:1, and the gated quality relation " +
+      "is the qsc artifact without its source column") {
+    AnnModels.withRoot(freshRoot("qsc")) {
+      // docTokens IS the qsc artifact, so the pack family counts exactly
+      // one spine row per document: a future filter in the quality chain
+      // must fail here, not silently shrink pack manifests
+      assert(graft.operators.Pipeline.docTokens(spark, sf).count() ==
+        graft.sources.Tables.load(spark, sf, "documents").count(),
+        "docTokens must cover every document 1:1")
+      assert(rows(graft.operators.TextOps.quality(spark, sf)) ==
+        rows(AnnModels.qualityScores(spark, sf).drop("source")),
+        "gated quality relation diverges from the artifact's projection")
     }
   }
 
-  test("gopher flags, contamination hits and calibrated keeps: " +
-      "registry-served, bit-identical to inline, one build each") {
-    AnnModels.withRoot(freshRoot("curation")) {
-      val T = graft.operators.TextOps
-      val P = graft.operators.Pipeline
-      val (g0, d0, k0) = (AnnModels.gopherFlags.builds, AnnModels.dirtyGrams.builds,
-        AnnModels.calibKeep.builds)
-      assert(rows(T.gopherRules(spark, sf)) == rows(AnnModels.gopherFlags.build(spark, sf)),
-        "artifact-served gopher flags diverged from the inline battery")
-      assert(rows(P.decontaminate(spark, sf)) == rows(P.decontaminateInline(spark, sf)),
-        "artifact-served contamination hits diverged from the inline explode")
-      assert(rows(T.qualityCalibrated(spark, sf)) ==
-        rows(T.qualityCalibratedOf(T.qualityModel(spark, sf))),
-        "artifact-served calibrated keeps diverged from the inline census")
-      // the build capstone reads all three — no rebuild on a second pass
-      P.build(spark, sf).collect()
-      P.buildCalibrated(spark, sf).collect()
-      assert(AnnModels.gopherFlags.builds == g0 + 1,
-        s"expected ONE gopher build, got ${AnnModels.gopherFlags.builds - g0}")
-      assert(AnnModels.dirtyGrams.builds == d0 + 1,
-        s"expected ONE contamination build, got ${AnnModels.dirtyGrams.builds - d0}")
-      assert(AnnModels.calibKeep.builds == k0 + 1,
-        s"expected ONE calibrated build, got ${AnnModels.calibKeep.builds - k0}")
-    }
+  // --- the declarative table: keys, builds, declared deps and readers ------
+
+  /** One store for the table loop and the consumer pass. */
+  private lazy val tableRoot = freshRoot("table")
+
+  private def serveAll(a: AnnModels.Artifact): Seq[DataFrame] = a match {
+    case r: AnnModels.Relation => Seq(r(spark, sf))
+    case p: AnnModels.Parts => p(spark, sf)
   }
 
-  // --- the declarative table: keys, builds and declared deps ---------------
+  /** Declared deps a build does not read itself. Each one's own deps are
+    * covered by another declared dep, so the key is complete without it;
+    * dropping it would re-key the entry and everything downstream. */
+  private val unreadDeps: Map[(String, String), String] = Map(
+    ("bdec", "bids") -> ("the decode audit keeps word boundaries, which the flat " +
+      "id stream drops, so it re-encodes the corpus under the served vocabulary"),
+    ("cursrc", "gflags") -> "read through the served srcst report",
+    ("cursrc", "cclab") -> "read through the served srcst report")
 
   test("every registry artifact builds once on first serve, not on the second, " +
       "and serves exactly its build's rows") {
-    val root = freshRoot("table")
-    AnnModels.withRoot(root) {
+    AnnModels.withRoot(tableRoot) {
       def record = AnnModels.table.map(a => a.name -> a.builds).toMap
       // table order is dependency order: each first serve builds ONLY its
       // own artifact, because everything it reads was served before it
       AnnModels.table.foreach { a =>
         val b0 = record
-        val served = a match {
-          case r: AnnModels.Relation => Seq(rows(r(spark, sf)))
-          case p: AnnModels.Parts => p(spark, sf).map(rows)
-        }
+        val served = serveAll(a).map(rows)
         val built = record.collect { case (n, c) if c != b0(n) => n -> (c - b0(n)) }
         assert(built == Map(a.name -> 1), s"${a.name}: first serve built $built")
-        val again = a match {
-          case r: AnnModels.Relation => r(spark, sf).inputFiles.toSeq
-          case p: AnnModels.Parts => p(spark, sf).flatMap(_.inputFiles)
-        }
+        val again = serveAll(a).flatMap(_.inputFiles)
         assert(record == b0.updated(a.name, b0(a.name) + 1),
           s"${a.name}: second serve rebuilt")
         assert(again.nonEmpty && again.forall(_.contains("graft-annmodels-table")),
           s"${a.name}: a serve must scan the model store, got ${again.mkString(",")}")
-        val inline = a match {
+        val rebuilt = a match {
           case r: AnnModels.Relation => Seq(rows(r.build(spark, sf)))
           case p: AnnModels.Parts =>
             val out = new org.apache.hadoop.fs.Path(freshRoot(s"parts-${p.name}"), "g")
             p.write(spark, sf, out)
             p.parts.map(part => rows(spark.read.parquet(s"$out/$part")))
         }
-        assert(served == inline, s"${a.name}: served rows diverge from its build")
+        assert(served == rebuilt, s"${a.name}: served rows diverge from its build")
       }
     }
-    // every artifact a build served is one its key covers
+    // a build reads exactly what its key covers: every artifact it served
+    // is in its declared closure, and every artifact dep it declares is
+    // one it served (a build that recomputes a dep inline fails here)
+    val reads = AnnModels.readsWhileBuilding
     val byName = AnnModels.table.map(a => a.name -> a).toMap
-    val undeclared = AnnModels.readsWhileBuilding.filterNot { case (b, read) =>
+    val undeclared = reads.filterNot { case (b, read) =>
       AnnModels.closure(byName(b)).exists {
         case a: AnnModels.Artifact => a.name == read
         case _ => false
       }
     }
-    assert(AnnModels.readsWhileBuilding.contains(("calib", "qlog")),
+    assert(reads.contains(("calib", "qlog")),
       "construction check: the build record observes what builds read")
     assert(undeclared.isEmpty, s"builds read undeclared artifacts: $undeclared")
+    val unread = AnnModels.table.flatMap(a => a.deps.collect {
+      case d: AnnModels.Artifact if !reads((a.name, d.name)) => (a.name, d.name)
+    }).toSet
+    assert(unread == unreadDeps.keySet,
+      s"declared deps their builds do not read: ${unread -- unreadDeps.keySet}; " +
+        s"exempt but now read: ${unreadDeps.keySet -- unread}")
+  }
+
+  /** The gated queries (`SparkEntry.queries` names) that read each artifact
+    * directly: they serve it while the query is built, not through another
+    * artifact's build. */
+  private val consumers: Map[String, Seq[String]] = Map(
+    "ivf" -> Seq("sim_ann_ivf", "sim_ann_ivfpq", "sim_ann_ivfpq_rerank"),
+    "pq" -> Seq("sim_ann_ivfpq", "sim_ann_ivfpq_rerank", "sim_ann_pq"),
+    "pqcodes" -> Seq("sim_ann_ivfpq", "sim_ann_ivfpq_rerank", "sim_ann_pq"),
+    "ivfasn" -> Seq("dedup_semantic_keep", "pipeline_sample_cluster",
+      "pipeline_sample_stratified", "sim_ann_ivf", "sim_ann_ivfpq", "sim_ann_ivfpq_rerank",
+      "sim_prototype_prune"),
+    "semlab" -> Seq("dedup_semantic", "dedup_semantic_keep"),
+    "embpairs" -> Seq("dedup_embedding"),
+    "knng" -> Seq("sim_knn_graph"),
+    "align" -> Seq("mm_text_align"),
+    "ppl" -> Seq("text_perplexity", "text_perplexity_bucket"),
+    "ppl5" -> Seq("text_perplexity_kn5"),
+    "ig" -> Seq("stream_ingest_gate", "stream_ingest_lr"),
+    "langid" -> Seq("text_langid_model", "text_langid_model_confusion"),
+    "lidsc" -> Seq("text_langid", "text_langid_confusion"),
+    "qsc" -> Seq("pipeline_pack", "pipeline_pack_delta", "pipeline_pack_ffd", "text_quality"),
+    "gflags" -> Seq("text_corpus_stats", "text_gopher_rules"),
+    "qlog" -> Seq("text_quality_model"),
+    "calib" -> Seq("text_quality_calibrated"),
+    "qtm" -> Seq("text_quality_trained"),
+    "qlr" -> Seq("text_quality_lr", "text_quality_lr_audit"),
+    "qlrg" -> Seq("stream_ingest_lr"),
+    "qft" -> Seq("text_quality_ft"),
+    "dirty" -> Seq("pipeline_decontaminate"),
+    "toktot" -> Seq("pipeline_token_budget"),
+    "dsirig" -> Seq("stream_ingest_dsir"),
+    "dsirsc" -> Seq("text_importance_dsir"),
+    "dsirsc8k" -> Seq("text_importance_dsir_8k"),
+    "bpe" -> Seq("text_bpe_train"),
+    "bpebig" -> Seq("text_bpe_fertility_256", "text_bpe_train_256"),
+    "uni" -> Seq("text_unigram_fertility", "text_unigram_ids", "text_unigram_vocab"),
+    "unibig" -> Seq("text_unigram_fertility_1k", "text_unigram_ids_1k", "text_unigram_vocab_1k"),
+    "bvoc" -> Seq("text_bpe_vocab"),
+    "bids" -> Seq("text_bpe_ids"),
+    "bdec" -> Seq("text_bpe_decode"),
+    "btids" -> Seq("text_bpe_trained_ids"),
+    "btidsbig" -> Seq("text_bpe_trained_ids_256"),
+    "bdtok" -> Seq("pipeline_pack_bpe"),
+    "bdtok-t" -> Seq("pipeline_pack_trained"),
+    "bdtok-tb" -> Seq("pipeline_pack_trained_256"),
+    "lshidx" -> Seq("stream_dedup_incremental"),
+    "mhcand" -> Seq("dedup_jaccard_weighted", "dedup_lsh_recall", "dedup_minhash_estimate",
+      "dedup_minhash_lsh"),
+    "mhband" -> Seq("dedup_lsh_recall_banded", "dedup_minhash_banded"),
+    "shpairs" -> Seq("dedup_containment", "dedup_lsh_recall", "dedup_lsh_recall_banded",
+      "dedup_ngram_jaccard"),
+    "mhsig" -> Seq("dedup_minhash_estimate"),
+    "mhgc" -> Seq("dedup_jaccard_weighted"),
+    "ccraw" -> Seq("dedup_clusters"),
+    "vpairs" -> Seq("dedup_minhash_verified", "dedup_source_overlap"),
+    "cclab" -> Seq("dedup_survivors"),
+    "substat" -> Seq("dedup_substring"),
+    "dupstart" -> Seq("dedup_substring_rm", "dedup_substring_rm_spans", "dedup_substring_spans"),
+    "boiltop" -> Seq("dedup_boilerplate"),
+    "hpsim" -> Seq("dedup_simhash_pairs"),
+    "hpph" -> Seq("mm_phash_pairs"),
+    "hpau" -> Seq("mm_audio_pairs"),
+    "phlab" -> Seq("mm_phash_dedup", "mm_phash_keep"),
+    "aulab" -> Seq("mm_audio_dedup", "mm_audio_keep"),
+    "phidx" -> Seq("stream_ingest_phash"),
+    "rsmp" -> Seq("mm_resize_sample"),
+    "funfl" -> Seq("pipeline_funnel", "pipeline_funnel_source"),
+    "curheur" -> Seq("pipeline_curate"),
+    "curmod" -> Seq("pipeline_curate_model"),
+    "curnd" -> Seq("pipeline_curate_neardup"),
+    "cursem" -> Seq("pipeline_curate_semantic"),
+    "curalg" -> Seq("pipeline_curate_aligned"),
+    "srcst" -> Seq("text_source_stats"),
+    "cursrc" -> Seq("pipeline_curate_source"),
+    "bldmod" -> Seq("pipeline_build"),
+    "bldcal" -> Seq("pipeline_build_calibrated", "pipeline_build_ordered"),
+    "bldqtm" -> Seq("pipeline_build_trained"),
+    "bldqlr" -> Seq("pipeline_build_lr"),
+    "ilv" -> Seq("pipeline_interleave"),
+    "curric" -> Seq("pipeline_curriculum"))
+
+  test("every declared consumer serves its artifacts and builds nothing, " +
+      "and every artifact has a consumer or a reading build") {
+    val names = AnnModels.table.map(_.name)
+    assert(consumers.keySet.subsetOf(names.toSet),
+      s"not in the table: ${consumers.keySet -- names}")
+    val byQuery = consumers.toSeq.flatMap { case (a, qs) => qs.map(_ -> a) }
+      .groupBy(_._1).map { case (q, as) => q -> as.map(_._2) }
+    assert(byQuery.keySet.subsetOf(SparkEntry.queries.keySet),
+      s"not gated queries: ${byQuery.keySet -- SparkEntry.queries.keySet}")
+    AnnModels.withRoot(tableRoot) {
+      AnnModels.table.foreach(serveAll) // builds only what the loop has not
+      def record(f: String => Int) = names.map(n => n -> f(n)).toMap
+      val b0 = record(AnnModels.builds)
+      byQuery.toSeq.sortBy(_._1).foreach { case (q, as) =>
+        val s0 = record(AnnModels.serves)
+        Bench.materialize(SparkEntry.queries(q)(spark, sf))
+        val s1 = record(AnnModels.serves)
+        val bypassed = as.filterNot(a => s1(a) > s0(a))
+        assert(bypassed.isEmpty, s"$q did not serve ${bypassed.mkString(",")}")
+      }
+      val rebuilt = record(AnnModels.builds).collect { case (n, c) if c != b0(n) => n }
+      assert(rebuilt.isEmpty, s"the consumer pass built ${rebuilt.mkString(",")}")
+    }
+    // a new artifact must come with a reader: a gated query or another build
+    val readByBuilds = AnnModels.readsWhileBuilding.collect { case (b, r) if b != r => r }
+    val orphans = names.filterNot(n => consumers.contains(n) || readByBuilds(n))
+    assert(orphans.isEmpty, s"artifacts nothing reads: ${orphans.mkString(",")}")
   }
 
   test("key spec: editing a constant group re-keys exactly its transitive " +

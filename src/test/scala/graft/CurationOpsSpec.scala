@@ -379,7 +379,7 @@ class CurationOpsSpec extends SparkSpec {
     // doc uses occurs in the corpus with the SAME counts as the fluent
     // docs' bigrams, but its TRIPLE never occurs — the spam shape (slot-
     // filled templates over fluent word pairs) that motivated the r12
-    // bigram→trigram upgrade (VERDICT r11 #1).
+    // bigram→trigram upgrade.
     val corpus = Seq(
       (1L, "srcA", "a m b"),
       (2L, "srcA", "b m c"),
@@ -418,7 +418,7 @@ class CurationOpsSpec extends SparkSpec {
     // "a m n o c" shares every trigram AND every 4-gram type (with the
     // same counts) with the fluent docs — only its 5-gram never occurs.
     // This is the order-5 analog of the r12 bigram→trigram probe, and the
-    // measured strict gain is what gates the kn5 query (VERDICT r12 #6).
+    // measured strict gain is what gates the kn5 query.
     val corpus = Seq(
       (1L, "srcA", "a m n o b"),
       (2L, "srcA", "b m n o c"),
@@ -642,7 +642,7 @@ class CurationOpsSpec extends SparkSpec {
 
   test("hashed-ngram gate separates junk TOPIC that the surface-statistics " +
       "LR provably passes") {
-    // The documented failure mode of every surface gate (VERDICT r14 #3):
+    // The documented failure mode of every surface gate:
     // a junk-topic document with clean length/punct/stopword statistics.
     // Construction: clean-surface docs over a GOOD vocabulary and over a
     // SPAM vocabulary are built by the same template (identical surface
@@ -701,7 +701,7 @@ class CurationOpsSpec extends SparkSpec {
         "surface features by construction; if this fails the corpus no " +
         "longer demonstrates the failure mode")
     // the hashed-ngram gate separates on word identity
-    val ft = TextOps.qualityFtInlineOf(docs)
+    val ft = TextOps.qualityFtOf(docs)
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     assert(goodTest.forall(ft(_) == 1),
       s"ft gate must keep every good test doc: ${goodTest.filter(ft(_) == 0)}")

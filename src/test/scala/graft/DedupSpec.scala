@@ -398,7 +398,7 @@ class DedupSpec extends SparkSpec {
     // Independent JVM-side replay: from the labeling and the assignment's
     // own ccos, the expected keeper per cluster is argmax on
     // (floor(ccos*1e4+0.5), then min vec_id) — exactly the paper's rule.
-    val lab = Dedup.semanticLabInline(spark, sf)
+    val lab = graft.operators.AnnModels.semanticLabels.build(spark, sf)
     val ccos = graft.operators.AnnModels.ivfAssign.build(spark, sf)
       .select("vec_id", "ccos").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap

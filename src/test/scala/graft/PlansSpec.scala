@@ -80,8 +80,8 @@ class PlansSpec extends SparkSpec {
       TextOps.repetition(spark, sf), TextOps.pii(spark, sf),
       TextOps.piiRedact(spark, sf), TextOps.gopherRules(spark, sf),
       TextOps.bpeEncode(spark, sf), graft.operators.AnnModels.bpeStaticIdStream.build(spark, sf)).foreach { df =>
-      // bpeIds is pinned on the INLINE chain (r17 batch 3 serves the gated
-      // entry as an artifact read — itself Exchange-free, asserted below)
+      // bpeIds is pinned on the build chain (the gated entry serves it as
+      // an artifact read — itself Exchange-free, asserted below)
       val p = plan(df)
       assert(!p.contains("Exchange"), s"unexpected shuffle in text op:\n$p")
     }
@@ -104,9 +104,9 @@ class PlansSpec extends SparkSpec {
   }
 
   test("curriculum rank keeps the two-level shape: tiered block windows, no raw doc window") {
-    // pinned on the INLINE chain — the gated entry serves the persisted
-    // loader order as a bare artifact read (r17 batch 3, asserted below)
-    val p = plan(graft.operators.Pipeline.curriculumInline(spark, sf))
+    // pinned on the artifact's build — the gated entry serves the persisted
+    // loader order as a bare artifact read (asserted below)
+    val p = plan(AnnModels.curriculumOrder.build(spark, sf))
     assert(!p.contains("rangepartitioning"),
       s"curriculum must not rely on sampled range bounds:\n$p")
     assert(p.contains("windowspecdefinition(tier#"),
@@ -151,9 +151,9 @@ class PlansSpec extends SparkSpec {
   }
 
   test("decontamination broadcasts the benchmark side") {
-    // the gated entry serves AnnModels.dirtyGrams since r16; the broadcast
-    // discipline is pinned on the inline chain the artifact build runs
-    val p = plan(graft.operators.Pipeline.decontaminateInline(spark, sf))
+    // the gated entry serves AnnModels.dirtyGrams; the broadcast
+    // discipline is pinned on the artifact's build
+    val p = plan(AnnModels.dirtyGrams.build(spark, sf))
     assert(p.contains("BroadcastHashJoin"), p)
     val served = plan(graft.operators.Pipeline.decontaminate(spark, sf))
     assert(served.contains("FileScan") && !served.contains("Exchange"),
@@ -161,9 +161,9 @@ class PlansSpec extends SparkSpec {
   }
 
   test("embedding near-dup runs the fused codegen cosine") {
-    // gated entry serves AnnModels.embedPairs since r17; the fused-cosine
-    // discipline is pinned on the inline chain the artifact build runs
-    val p = plan(Dedup.embeddingNearDupInline(spark, sf))
+    // gated entry serves AnnModels.embedPairs; the fused-cosine
+    // discipline is pinned on the artifact's build
+    val p = plan(AnnModels.embedPairs.build(spark, sf))
     assert(p.contains("graft_cosine"), p)
     val served = plan(Dedup.embeddingNearDup(spark, sf))
     assert(served.contains("FileScan") && !served.contains("Exchange"),
@@ -196,13 +196,13 @@ class PlansSpec extends SparkSpec {
     val c = plan(Dedup.boilerplateCensusTop(spark, sf))
     assert(c.contains("TakeOrderedAndProject"),
       s"census top-k must plan as bounded heaps, not a global sort:\n$c")
-    // gated entry serves AnnModels.boilerTop since r17; the resolution
-    // discipline is pinned on the inline chain the artifact build runs
-    val p = plan(Dedup.boilerplateTopKInline(spark, sf))
+    // gated entry serves AnnModels.boilerTop; the resolution
+    // discipline is pinned on the artifact's build
+    val p = plan(AnnModels.boilerTop.build(spark, sf))
     // the K winning hashes broadcast back against the window stream — the
     // census relation itself must never sort-merge against raw windows
     assert(p.contains("BroadcastHashJoin"), s"text resolution must broadcast:\n$p")
-    // one-pass contract (VERDICT r12 #1): the final join reads the
+    // one-pass contract: the final join reads the
     // materialized census plus exactly ONE documents scan (the <=K
     // exemplar re-shingle) — the corpus is never re-shingled per branch
     assert("FileScan parquet".r.findAllIn(p).size == 1,
@@ -282,9 +282,9 @@ class PlansSpec extends SparkSpec {
   }
 
   test("substring dedup is pure aggregation over window hashes — no window op, no pair expansion") {
-    // gated entry serves AnnModels.substrStats since r17; the aggregation
-    // discipline is pinned on the inline chain the artifact build runs
-    val p = plan(Dedup.substringDupInline(spark, sf))
+    // gated entry serves AnnModels.substrStats; the aggregation
+    // discipline is pinned on the artifact's build
+    val p = plan(AnnModels.substrStats.build(spark, sf))
     assert(!p.contains("Window"), s"cross-doc occurrence must aggregate, not window:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"substring audit must never expand pairs:\n$p")
@@ -691,12 +691,11 @@ class PlansSpec extends SparkSpec {
     // A `count over Window.partitionBy(bucket)` ships every row of a dense
     // bucket to ONE task before the salt exists — the 100 TB anti-pattern
     // this guards against. The census must be a groupBy count broadcast back.
-    // dedup_simhash_pairs is the INLINE chain here: the gated entry serves
-    // the registry pair artifact since r15 (asserted below), so the
-    // census-broadcast discipline is pinned on the trainer it rides.
-    Seq("dedup_simhash_pairs (inline)" -> plan(Dedup.simhashPairsInline(spark, sf)),
-        "sim_knn_graph (inline)" -> plan(graft.operators.AnnModels.knnGraph.build(spark, sf)),
-        "dedup_embedding (inline)" -> plan(Dedup.embeddingNearDupInline(spark, sf))).foreach { case (name, p) =>
+    // The gated entries serve the registry pair artifacts, so the
+    // census-broadcast discipline is pinned on the builds they ride.
+    Seq("dedup_simhash_pairs (build)" -> plan(AnnModels.simhashPairs.build(spark, sf)),
+        "sim_knn_graph (build)" -> plan(AnnModels.knnGraph.build(spark, sf)),
+        "dedup_embedding (build)" -> plan(AnnModels.embedPairs.build(spark, sf))).foreach { case (name, p) =>
       assert(!p.contains("Window"), s"$name plans a windowed bucket census:\n$p")
       assert(p.contains("BroadcastHashJoin"), s"$name bucket counts are not broadcast back:\n$p")
     }
@@ -754,8 +753,8 @@ class PlansSpec extends SparkSpec {
       // selection: the 256-row log-ratio table joins as a BROADCAST side
       // and the 1-row bar rides a broadcast nested-loop crossJoin — never
       // a CartesianProduct, never a sampled global sort
-      // the gated entry serves AnnModels.dsirScored since r17; the
-      // scoring-plan contract is pinned on the serving chain the build runs
+      // the gated entry serves AnnModels.dsirScored; the scoring-plan
+      // contract is pinned on the serving chain the build runs
       val p = plan(graft.operators.TextOps.importanceDsirServe(spark, sf))
       assert(p.contains("BroadcastHashJoin"),
         s"the log-ratio model must broadcast into the scoring join:\n${p.take(2000)}")

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.Similarity
 
-/** ANN quality gate (VERDICT r1 #4): an ANN path that is never measured for
+/** ANN quality gate: an ANN path that is never measured for
   * recall is not an ANN feature. Recall@k here = |ann-top-k ∩ exact-top-k| /
   * |exact-top-k| summed over all queries, with sim_topk_bruteforce as ground
   * truth on the same data.

@@ -716,7 +716,8 @@ class StreamingSpec extends SparkSpec {
       // simulate the at-least-once window: the sink write committed but the
       // checkpoint commit was lost (crash in between). A fresh checkpoint
       // re-delivers the same file as the same batchId; the partitioned
-      // overwrite must replace, not append (ADVICE r10).
+      // overwrite must replace, not append (a re-run night must not
+      // double its rows).
       EventStreams.runIngestGateStep(spark, corpusDir, dropDir, s"$base/cp_replay", out)
       val replayed = spark.read.parquet(out).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -807,7 +808,7 @@ class StreamingSpec extends SparkSpec {
       // leave the manifest unchanged (no double-write, no double-count)
       EventStreams.runPackDeltaStep(spark, corpusDir, dropDir, cpSnap, out)
       assert(manifest() == m2, s"replay must not change the manifest: ${manifest()}")
-      // the cumulative running-totals sidecar (ADVICE r11: prior offsets
+      // the cumulative running-totals sidecar (prior offsets
       // are O(|sources|) per night, not O(history)) exists and is bounded
       // to two generations
       val totDir = new java.io.File(out + ".totals")
@@ -835,7 +836,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("the nightly quintet composes: five restartable steps share one drop feed and one model store") {
-    // The production shape end to end (VERDICT r11 #8 lineage): ONE drop
+    // The production shape end to end: ONE drop
     // directory feeds admission gate + DSIR gate + text-LSH probe + phash
     // probe + delta pack, each with its own checkpoint and sink, all
     // serving the SAME registry artifacts — two nights, no re-scoring,

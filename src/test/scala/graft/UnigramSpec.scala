@@ -24,7 +24,7 @@ class UnigramSpec extends SparkSpec {
         .distinct().collect().map(_.getString(0)).toSet
       assert(chars.subsetOf(pieces),
         s"missing character pieces: ${(chars -- pieces).take(5)}")
-      // the PRUNE budget itself (ADVICE r15: the seed-budget bound also
+      // the PRUNE budget itself (the seed-budget bound also
       // passed when the 256-cap stopped applying): beyond the mandatory
       // single characters, at most UniVocab − |chars| multi-char pieces
       val nMulti = vocab.count(_.getString(1).length > 1)
